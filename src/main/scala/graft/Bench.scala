@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. Each query gets one warm run + `runs` measured
@@ -58,7 +59,7 @@ object Bench {
         }
         name -> median(times)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
           failures += name -> msg.linesIterator.take(1).mkString
           System.err.println(s"[bench] FAILED $name: $msg")
@@ -73,21 +74,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // fixture vintages that ship events.ts as TIMESTAMP(NANOS) read as
-      // raw longs under this conf (Tables.normalizeEventTs converts); the
-      // current micros fixtures ignore it
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = SparkEntry.session("graft-bench", SparkEntry.envCpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     // warm the JVM/codegen path once so the first measured query doesn't
     // absorb session startup (order below is name-sorted and deterministic)
-    try force(SparkEntry.entry(spark)) catch { case _: Throwable => }
+    try force(SparkEntry.entry(spark)) catch { case NonFatal(_) => }
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     // optional comma-separated key filter for focused local iteration
     // (the driver runs unfiltered — same convention as GRAFT_VERIFY_ONLY)
@@ -160,7 +152,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     val skewCompact = skewed.take(8).map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"total","unit":"sec","value":$total,"sf":"$sfDir","n_queries":${results.size},"n_failed":${failures.size},"skewed":$skewCompact,"baseline_r01_keys_subtotal":$baselineSubtotal,"baseline_r01_keys_counted":$baselineCounted,"queries_in":"$outPath"}""")

@@ -2,139 +2,124 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
-import graft.functions.{CosineSim, Fingerprint64, NfcNormalize, SimHash64, UnicodeNormalize, VectorDot}
+import graft.functions._
 
 /** SparkSessionExtensions hook — the analogue of the reference's addon
   * system (`src/htsql/core/addon.py`): drop-in registration of the engine's
   * native functions into any Spark session, including plain `spark.sql`.
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  * val spark = SparkEntry.session("app", cpus = 4) // applies this extension
   * spark.sql("SELECT cosine_sim(a.embedding, b.embedding) FROM ...")
   * }}}
   *
   * Also registrable via config:
   * `spark.sql.extensions=graft.GraftExtensions`.
+  *
+  * The functions themselves live in ONE table, [[GraftExtensions.functions]],
+  * with two installers: this extension injects every entry when a session
+  * is built, and `VectorFunctions.ensureRegistered` adds only the entries a
+  * session built without the extension lacks — it never replaces one.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(e.injectFunction)
+}
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[VectorDot].getName, null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf")
+object GraftExtensions {
 
-  /** Shape arguments arrive as whatever literal the SQL author typed —
+  /** The arguments of one call, named for its error messages.
+    *
+    * Shape arguments arrive as whatever literal the SQL author typed —
     * `42` binds as IntegerType where the kernel wants a Long, `array(1.0,
     * 0.0)` can carry DECIMAL elements — so raw asInstanceOf would throw
-    * bare ClassCastExceptions on perfectly natural spellings (and a wrong
-    * argument count a raw IndexOutOfBounds mid-analysis). Each shape arg
-    * is therefore checked foldable and COERCED through Cast at bind time;
-    * violations raise a message that names the function and position.
+    * bare ClassCastExceptions on perfectly natural spellings. Each shape
+    * arg is therefore checked foldable and COERCED through Cast at bind
+    * time; violations raise a message that names the function and
+    * position.
     */
-  private def checkArity(name: String, args: Seq[Expression], n: Int): Unit =
-    if (args.length != n)
-      throw new IllegalArgumentException(
-        s"$name expects $n arguments, got ${args.length}")
+  private final class Args(name: String, args: Seq[Expression]) {
+    def apply(pos: Int): Expression = args(pos)
 
-  private def foldTo(name: String, args: Seq[Expression], pos: Int,
-      dt: DataType): Any = {
-    val arg = args(pos)
-    if (!arg.foldable)
-      throw new IllegalArgumentException(
-        s"$name argument ${pos + 1} must be a literal (shape args are " +
-          "evaluated once at bind time)")
-    val v = Cast(arg, dt).eval()
-    if (v == null)
-      throw new IllegalArgumentException(
-        s"$name argument ${pos + 1} is not castable to ${dt.simpleString}")
-    v
+    private def fold(pos: Int, dt: DataType): Any = {
+      if (!args(pos).foldable)
+        throw new IllegalArgumentException(
+          s"$name argument ${pos + 1} must be a literal (shape args are " +
+            "evaluated once at bind time)")
+      val v = Cast(args(pos), dt).eval()
+      if (v == null)
+        throw new IllegalArgumentException(
+          s"$name argument ${pos + 1} is not castable to ${dt.simpleString}")
+      v
+    }
+
+    def int(pos: Int): Int = fold(pos, IntegerType).asInstanceOf[Int]
+    def long(pos: Int): Long = fold(pos, LongType).asInstanceOf[Long]
+    def doubles(pos: Int): Array[Double] =
+      fold(pos, ArrayType(DoubleType)).asInstanceOf[ArrayData].toDoubleArray()
+    def ints(pos: Int): Array[Int] =
+      fold(pos, ArrayType(IntegerType)).asInstanceOf[ArrayData].toIntArray()
   }
 
-  private def foldInt(name: String, args: Seq[Expression], pos: Int): Int =
-    foldTo(name, args, pos, IntegerType).asInstanceOf[Int]
-
-  private def foldLong(name: String, args: Seq[Expression], pos: Int): Long =
-    foldTo(name, args, pos, LongType).asInstanceOf[Long]
-
-  private def foldDoubleArray(name: String, args: Seq[Expression],
-      pos: Int): Array[Double] =
-    foldTo(name, args, pos, ArrayType(DoubleType))
-      .asInstanceOf[ArrayData].toDoubleArray()
-
-  private def foldIntArray(name: String, args: Seq[Expression],
-      pos: Int): Array[Int] =
-    foldTo(name, args, pos, ArrayType(IntegerType))
-      .asInstanceOf[ArrayData].toIntArray()
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("vector_dot"),
-      info("vector_dot", "vector_dot(a, b) - dot product of two double arrays"),
-      (args: Seq[Expression]) => VectorDot(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two double arrays"),
-      (args: Seq[Expression]) => CosineSim(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(hashes) - 64-bit SimHash of an array of token hashes"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    e.injectFunction((
-      FunctionIdentifier("fingerprint64"),
-      info("fingerprint64", "fingerprint64(text) - rolling-hash document fingerprint mod 1e9+7"),
-      (args: Seq[Expression]) => Fingerprint64(args.head)))
-    e.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize", "nfc_normalize(text) - Unicode NFC canonical composition"),
-      (args: Seq[Expression]) => NfcNormalize(args.head)))
-    e.injectFunction((
-      FunctionIdentifier("nfkc_normalize"),
-      info("nfkc_normalize", "nfkc_normalize(text) - Unicode NFKC compatibility composition"),
-      (args: Seq[Expression]) => UnicodeNormalize(args.head, "NFKC")))
-    // shape-arg kernels (the temp-function registry's remaining entries,
-    // mirrored here so pure-SQL sessions get the FULL native kit): shape
-    // args must be foldable literals, evaluated once at bind time
-    e.injectFunction((
-      FunctionIdentifier("hyperplane_sigs"),
-      info("hyperplane_sigs",
-        "hyperplane_sigs(vec, dim, numPlanes, numTables, seed) - per-table LSH signature array"),
+  /** One table entry. A wrong argument count raises a message that names
+    * the function, not a raw IndexOutOfBounds mid-analysis. */
+  private def fn(name: String, cls: Class[_], arity: Int, usage: String)(
+      build: Args => Expression): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(cls.getName, null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf"),
       (args: Seq[Expression]) => {
-        val n = "hyperplane_sigs"
-        checkArity(n, args, 5)
-        graft.functions.HyperplaneSigs(args(0),
-          foldInt(n, args, 1),
-          foldInt(n, args, 2),
-          foldInt(n, args, 3),
-          foldLong(n, args, 4))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("centroid_top_cells"),
-      info("centroid_top_cells",
-        "centroid_top_cells(vec, flatCentroids, dim, r) - top-r nearest-centroid cell ids"),
-      (args: Seq[Expression]) => {
-        val n = "centroid_top_cells"
-        checkArity(n, args, 4)
-        graft.functions.CentroidTopCells(args(0),
-          foldDoubleArray(n, args, 1),
-          foldInt(n, args, 2),
-          foldInt(n, args, 3))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("centroid_top_cells_nested"),
-      info("centroid_top_cells_nested",
-        "centroid_top_cells_nested(vec, groups, cells, offsets, ids, dim, probes, r) - two-level top-r cells"),
-      (args: Seq[Expression]) => {
-        val n = "centroid_top_cells_nested"
-        checkArity(n, args, 8)
-        graft.functions.CentroidTopCellsNested(args(0),
-          foldDoubleArray(n, args, 1),
-          foldDoubleArray(n, args, 2),
-          foldIntArray(n, args, 3),
-          foldIntArray(n, args, 4),
-          foldInt(n, args, 5),
-          foldInt(n, args, 6),
-          foldInt(n, args, 7))
-      }))
-  }
+        if (args.length != arity)
+          throw new IllegalArgumentException(
+            s"$name expects $arity arguments, got ${args.length}")
+        build(new Args(name, args))
+      })
+
+  /** The engine's native functions; column entry points are in
+    * `VectorFunctions` and `BloomFunctions`. */
+  private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("vector_dot", classOf[VectorDot], 2,
+      "vector_dot(a, b) - dot product of two double arrays")(
+      a => VectorDot(a(0), a(1))),
+    fn("cosine_sim", classOf[CosineSim], 2,
+      "cosine_sim(a, b) - cosine similarity of two double arrays")(
+      a => CosineSim(a(0), a(1))),
+    fn("simhash64", classOf[SimHash64], 1,
+      "simhash64(hashes) - 64-bit SimHash of an array of token hashes")(
+      a => SimHash64(a(0))),
+    fn("fingerprint64", classOf[Fingerprint64], 1,
+      "fingerprint64(text) - rolling-hash document fingerprint mod 1e9+7")(
+      a => Fingerprint64(a(0))),
+    fn("nfc_normalize", classOf[UnicodeNormalize], 1,
+      "nfc_normalize(text) - Unicode NFC canonical composition")(
+      a => UnicodeNormalize(a(0), "NFC")),
+    fn("nfkc_normalize", classOf[UnicodeNormalize], 1,
+      "nfkc_normalize(text) - Unicode NFKC compatibility composition")(
+      a => UnicodeNormalize(a(0), "NFKC")),
+    // shape-arg kernels: shape args must be foldable literals, evaluated
+    // once at bind time
+    fn("hyperplane_sigs", classOf[HyperplaneSigs], 5,
+      "hyperplane_sigs(vec, dim, numPlanes, numTables, seed) - per-table LSH signature array")(
+      a => HyperplaneSigs(a(0), a.int(1), a.int(2), a.int(3), a.long(4))),
+    // the trained centroid matrix arrives as ONE foldable array literal
+    // (nlist×dim flat) and becomes a codegen reference object — the plan
+    // carries it once, never per-centroid
+    fn("centroid_top_cells", classOf[CentroidTopCells], 4,
+      "centroid_top_cells(vec, flatCentroids, dim, r) - top-r nearest-centroid cell ids")(
+      a => CentroidTopCells(a(0), a.doubles(1), a.int(2), a.int(3))),
+    fn("centroid_top_cells_nested", classOf[CentroidTopCellsNested], 8,
+      "centroid_top_cells_nested(vec, groups, cells, offsets, ids, dim, probes, r) - two-level top-r cells")(
+      a => CentroidTopCellsNested(a(0), a.doubles(1), a.doubles(2), a.ints(3),
+        a.ints(4), a.int(5), a.int(6), a.int(7))),
+    // Spark's own Bloom-filter pair over 64-bit hashes (see BloomFunctions)
+    fn("bloom_agg", classOf[BloomFilterAggregate], 3,
+      "bloom_agg(hash, estimatedItems, numBits) - serialized Bloom filter over 64-bit hashes")(
+      a => new BloomFilterAggregate(a(0), a(1), a(2))),
+    fn("bloom_might_contain", classOf[BloomFilterMightContain], 2,
+      "bloom_might_contain(filterBytes, hash) - Bloom-filter membership of a 64-bit hash")(
+      a => BloomFilterMightContain(a(0), a(1))))
 }

@@ -3,7 +3,6 @@ package graft
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.SparkSession
 
 /** HTTP entry point — the reference's PRIMARY user-facing mode
   * (`src/htsql/ctl/server.py` (ServeRoutine), `src/htsql/core/wsgi.py`):
@@ -148,7 +147,10 @@ final class GraftServer(engine: Graft, port: Int = 0, host: String = "127.0.0.1"
           Option(e.getMessage).getOrElse(e.getClass.getName))
       } finally ex.close()
   })
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  // non-daemon workers: stop() must shut the pool down, or an embedding
+  // JVM never exits
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+  server.setExecutor(pool)
 
   private def respond(ex: HttpExchange, status: Int, fmt: String, body: String): Unit = {
     val bytes = body.getBytes(UTF_8)
@@ -160,7 +162,7 @@ final class GraftServer(engine: Graft, port: Int = 0, host: String = "127.0.0.1"
   }
 
   def start(): GraftServer = { server.start(); this }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
 
   /** The actually-bound port (useful when constructed with port 0). */
   def boundPort: Int = server.getAddress.getPort
@@ -178,15 +180,7 @@ object GraftHttp {
     val dir = args(0)
     val port = args.lift(1).flatMap(_.toIntOption).getOrElse(8080)
     val host = args.lift(2).getOrElse("127.0.0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-http")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = SparkEntry.session("graft-http", SparkEntry.envCpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     val srv = new GraftServer(Graft(spark, dir), port, host).start()
     println(s"graft http server on $host:${srv.boundPort} over $dir")

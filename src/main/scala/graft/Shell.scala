@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.io.StdIn
 
 /** Interactive / one-shot query shell — the analogue of the reference's
@@ -25,15 +24,7 @@ object Shell {
       sys.exit(2)
     }
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-shell")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = SparkEntry.session("graft-shell", SparkEntry.envCpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     // tweak.autolimit analogue: implicit LIMIT on every query
     val autoLimit = sys.env.get("GRAFT_AUTOLIMIT").flatMap { v =>

@@ -37,4 +37,26 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     modules.flatMap(_.oracleSql).toMap
+
+  /** The one session builder of every main and the test suites: `local`
+    * with `cpus` cores and as many shuffle partitions, the engine's native
+    * functions injected ([[GraftExtensions]]), UTC session time, no UI.
+    * Fixture vintages that ship `events.ts` as TIMESTAMP(NANOS) read as
+    * raw longs under `nanosAsLong` (`Tables.normalizeEventTs` converts);
+    * the current micros fixtures ignore it.
+    */
+  def session(appName: String, cpus: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+
+  /** Cores for [[session]] from `SPARK_GRAFT_CPUS`, else `default`. */
+  def envCpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{call_function, lit}
 
 /** Column entry points for Spark's native Bloom-filter expressions
@@ -17,24 +15,14 @@ import org.apache.spark.sql.functions.{call_function, lit}
   * outgrows exact-set memory. One-sided error: NO false negatives, so
   * "definitely absent" decisions are exact; presence decisions carry fpp.
   *
-  * Same wiring as [[VectorFunctions]]: Spark 4 keeps Expression→Column
-  * plumbing private, so registration + `call_function` is the public
-  * route. Values must arrive as 64-bit hashes (`xxhash64(...)`) — the
-  * aggregate and the probe both operate on LongType, exactly like the
-  * optimizer's own `InjectRuntimeFilter` usage.
+  * Same wiring as [[VectorFunctions]]: `bloom_agg` and
+  * `bloom_might_contain` are rows of [[graft.GraftExtensions.functions]],
+  * installed by the extension or `VectorFunctions.ensureRegistered`, and
+  * reached through `call_function`. Values must arrive as 64-bit hashes
+  * (`xxhash64(...)`) — the aggregate and the probe both operate on
+  * LongType, exactly like the optimizer's own `InjectRuntimeFilter` usage.
   */
 object BloomFunctions {
-
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // (hash, estimatedItems, numBits) → serialized filter (BinaryType)
-    reg.createOrReplaceTempFunction("bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-    // (filterBytes, hash) → boolean
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
-  }
 
   /** Aggregate: build a Bloom filter over a column of 64-bit hashes.
     * `numBits` from [[optimalNumBits]]; both bounds are subject to the

@@ -75,7 +75,3 @@ case class UnicodeNormalize(child: Expression, formName: String)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
-
-object NfcNormalize {
-  def apply(child: Expression): UnicodeNormalize = UnicodeNormalize(child, "NFC")
-}

@@ -118,55 +118,25 @@ case class CosineSim(left: Expression, right: Expression)
 /** Column-level entry points for the native kernels.
   *
   * Spark 4 keeps Expression→Column plumbing private, so the public route
-  * is function-registry registration + `call_function` (or the
-  * `GraftExtensions` session extension for SQL users). `ensureRegistered`
-  * is idempotent and called by `graft.operators.Similarity`.
+  * is function-registry registration + `call_function`. The functions are
+  * the rows of [[graft.GraftExtensions.functions]]: a session built with
+  * `GraftExtensions` (every `SparkEntry.session`) has them all, and
+  * `ensureRegistered` installs the same rows into any other session.
   */
 object VectorFunctions {
 
+  /** Registers the table's entries the session lacks and leaves every
+    * existing one alone — so an injected function is never replaced, and
+    * the per-request call from `graft.model.Tables` costs one lookup per
+    * entry. The registry's own lock makes check-and-register atomic for
+    * concurrent callers on one session. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vector_dot",
-      exprs => VectorDot(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("fingerprint64",
-      exprs => Fingerprint64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      exprs => UnicodeNormalize(exprs.head, "NFC"), "scala_udf")
-    reg.createOrReplaceTempFunction("nfkc_normalize",
-      exprs => UnicodeNormalize(exprs.head, "NFKC"), "scala_udf")
-    // shape args arrive as foldable literals; evaluated once at bind time
-    reg.createOrReplaceTempFunction("hyperplane_sigs",
-      exprs => HyperplaneSigs(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int],
-        exprs(3).eval().asInstanceOf[Int],
-        exprs(4).eval().asInstanceOf[Long]), "scala_udf")
-    // the trained centroid matrix arrives as ONE foldable array literal
-    // (nlist×dim flat) and becomes a codegen reference object — the plan
-    // carries it once, never per-centroid
-    reg.createOrReplaceTempFunction("centroid_top_cells",
-      exprs => CentroidTopCells(exprs(0),
-        exprs(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toDoubleArray(),
-        exprs(2).eval().asInstanceOf[Int],
-        exprs(3).eval().asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction("centroid_top_cells_nested",
-      exprs => CentroidTopCellsNested(exprs(0),
-        exprs(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toDoubleArray(),
-        exprs(2).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toDoubleArray(),
-        exprs(3).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toIntArray(),
-        exprs(4).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toIntArray(),
-        exprs(5).eval().asInstanceOf[Int],
-        exprs(6).eval().asInstanceOf[Int],
-        exprs(7).eval().asInstanceOf[Int]), "scala_udf")
+    reg.synchronized {
+      graft.GraftExtensions.functions.foreach { case (id, info, builder) =>
+        if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+      }
+    }
   }
 
   /** Requires `ensureRegistered` (or GraftExtensions) on the session. */

@@ -120,8 +120,9 @@ object Catalog {
   */
 final class Tables(val spark: SparkSession, val dir: String,
     val format: String = "parquet") {
-  // Native-kernel registration is idempotent and cheap; doing it here means
-  // every query path that touches data has the engine's functions in scope.
+  // Installs only the native functions the session lacks (none on a session
+  // built with GraftExtensions), so every query path that touches data has
+  // them in scope at the cost of one lookup per function.
   graft.functions.VectorFunctions.ensureRegistered(spark)
 
   private val cache = scala.collection.mutable.HashMap.empty[String, DataFrame]

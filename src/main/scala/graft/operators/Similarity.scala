@@ -94,8 +94,9 @@ object Similarity {
     * drops the whole stage to interpreted execution (found at the sf1
     * bench); the kernel ships the plane matrix as a codegen reference
     * object instead, so the generated code is three small loops at any
-    * width. Callers must have run `VectorFunctions.ensureRegistered`
-    * (every public entry point here does).
+    * width. The kernel is a row of `GraftExtensions.functions`: sessions
+    * built with the extension have it, and every public entry point here
+    * calls `VectorFunctions.ensureRegistered` for sessions built without.
     */
   def bucketTables(vec: Column, dim: Int, numPlanes: Int, numTables: Int,
       seed: Long): Column =
@@ -788,19 +789,7 @@ object Similarity {
       if (candidateBudget > 0) candidateBudget
       else if (auto) math.max(4.0e7, 2.0 * expectedCandidates(n, repl, k))
       else 0.0
-    // env-gated stage profile (stderr) — the same diagnostic pattern as
-    // GRAFT_INGEST_PROFILE; driver-synchronous stages only, the lazy pair
-    // plan's cost is the caller's total minus these
-    def timed[A](label: String)(f: => A): A =
-      if (!sys.env.contains("GRAFT_SEM_PROFILE")) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[sem] $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
-    var centroids = timed(s"train k=$k")(trainCentroids(c, k, iters))
+    var centroids = trainCentroids(c, k, iters)
     if (centroids.isEmpty) // empty corpus: empty pair frame, nothing to train
       return (c.select(col("n_id").as("id_a"), col("n_id").as("id_b"),
         lit(0d).as("cos")).limit(0), 0)
@@ -825,9 +814,7 @@ object Similarity {
           .first()
         if (row.isNullAt(0)) 0.0 else row.getDouble(0)
       }
-      var cand = timed(s"probe k=$k")(candidates())
-      if (sys.env.contains("GRAFT_SEM_PROFILE"))
-        System.err.println(f"[sem] candidates=$cand%.3g budget=$budget%.3g")
+      var cand = candidates()
       var tries = 0
       var futile = false
       while (!futile && tries < maxEscalations && cand > budget && k < (1 << 16)) {
@@ -842,11 +829,9 @@ object Similarity {
           futile = true
         } else {
           k = kNext
-          centroids = timed(s"train k=$k")(trainCentroids(c, k, iters))
+          centroids = trainCentroids(c, k, iters)
           cells = cellsFor(centroids)
-          cand = timed(s"probe k=$k")(candidates())
-          if (sys.env.contains("GRAFT_SEM_PROFILE"))
-            System.err.println(f"[sem] candidates=$cand%.3g budget=$budget%.3g")
+          cand = candidates()
           tries += 1
         }
       }

@@ -72,11 +72,6 @@ object Staging {
     * (repartitioning afterwards would shuffle results the slow way).
     */
   def widen(df: DataFrame): DataFrame = {
-    if (sys.env.contains("GRAFT_WIDEN_DISABLE")) return df // A/B diagnostic
-    if (sys.env.contains("GRAFT_WIDEN_FORCE")) { // A/B diagnostic: pre-floor r8 behavior
-      val cores0 = df.sparkSession.sparkContext.defaultParallelism
-      return df.repartition(cores0)
-    }
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
     // Cheap split estimate from catalog stats + the leaf-file count — the

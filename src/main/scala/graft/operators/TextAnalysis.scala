@@ -214,9 +214,10 @@ object TextAnalysis {
     * Delegates to the native codegen'd kernel
     * [[graft.functions.Fingerprint64]] (one loop over UTF8String bytes) —
     * bit-identical to the former `split(text,"")` + `aggregate` fold, minus
-    * the per-character array explosion and interpreted lambda. Requires
-    * `VectorFunctions.ensureRegistered` (done by `graft.model.Tables`) or
-    * `GraftExtensions` on the session.
+    * the per-character array explosion and interpreted lambda. The kernel
+    * is a row of `GraftExtensions.functions`: a session needs the
+    * extension or `VectorFunctions.ensureRegistered` (done by
+    * `graft.model.Tables`), which installs only the rows it lacks.
     */
   def fingerprint(text: Column): Column =
     graft.functions.VectorFunctions.fingerprint64(text)

@@ -296,7 +296,6 @@ object CorpusIngest {
       lineage: String = "",
       autoCompact: graft.operators.IndexMaintenance.AutoCompactPolicy =
         graft.operators.IndexMaintenance.AutoCompactPolicy()): Unit = {
-    val t00 = System.nanoTime()
     // the BANNED-CONTENT door first: retracted-and-banned bytes drop
     // before the needle check, the dedup, the sink, and every index —
     // identity when no ban was ever issued
@@ -334,22 +333,10 @@ object CorpusIngest {
           .parquet(s"$sinkPath/batch=$batchId")
       Staging.releaseAll(); return
     }
-    if (sys.env.contains("GRAFT_INGEST_PROFILE"))
-      System.err.println(
-        f"[ingest] batch=$batchId isEmpty      ${(System.nanoTime() - t00) / 1e9}%6.2f s")
     val spark = batch.sparkSession
     val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(indexPath, "params")))
       IncrementalDedup.buildIndex(batch.limit(0), idCol, textCol, indexPath, params)
-    def timed[A](label: String)(f: => A): A =
-      if (!sys.env.contains("GRAFT_INGEST_PROFILE")) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[ingest] batch=$batchId $label%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
     try {
       // the batch signs ONCE: the staged (id, sh, sig) frame feeds the
       // pair search, and the survivor append reuses it — a standalone
@@ -359,17 +346,13 @@ object CorpusIngest {
       // params mtime); a same-JVM rebuild is picked up via the mtime key
       val p = cachedParams(spark, indexPath)
       val base = IncrementalDedup.signed(batch, idCol, textCol, p)
-      timed("sign")(if (sys.env.contains("GRAFT_INGEST_PROFILE")) base.count())
       // staged: the keep-list derivation consumes the pair set three
       // times (both drop directions + the batch-internal exemption) —
       // unpersisted, the exact-Jaccard verify join would re-run for each
       val pairs = IncrementalDedup.newBatchPairsFrom(base, indexPath, p,
         jaccardThreshold).stagePersist()
-      timed("pairs")(if (sys.env.contains("GRAFT_INGEST_PROFILE")) pairs.count())
-      timed("keep+sink") {
-        IncrementalDedup.keepListFromPairs(batch, idCol, pairs)
-          .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-      }
+      IncrementalDedup.keepListFromPairs(batch, idCol, pairs)
+        .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
       // append the survivors' already-staged rows, identified from the
       // sink read-back (the write above is the materialization point —
       // measured: broadcasting a CACHED keep list instead re-derives the
@@ -386,11 +369,9 @@ object CorpusIngest {
       // INTERNAL heal → build-if-missing → append order is preserved
       // inside its thunk — those orderings are crash-recovery invariants.
       val appends = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-      appends += (() => timed("append") {
-        IncrementalDedup.appendSigned(
-          base.join(broadcast(keptIds), Seq("id"), "left_semi"),
-          indexPath, p)
-      })
+      appends += (() => IncrementalDedup.appendSigned(
+        base.join(broadcast(keptIds), Seq("id"), "left_semi"),
+        indexPath, p))
       // keep the configured standing indices current with the same
       // survivors (sink text, so canonical when the ingest is). Skipped
       // for a batch with no survivors — an append that CREATES a store
@@ -402,12 +383,12 @@ object CorpusIngest {
         // the auto-compaction below folds the triggering batch before a
         // crash-and-replay
         maintain.postingsPath.foreach { mp =>
-          appends += (() => timed("postings")(graft.operators.Retrieval
+          appends += (() => graft.operators.Retrieval
             .appendToPostingsIndexKeyed(kept, idCol, textCol, mp, batchId,
-              lineage)))
+              lineage))
         }
         maintain.gramPostingsPath.foreach { mp =>
-          appends += (() => timed("grams") {
+          appends += (() => {
             if (!fs.exists(new Path(mp, "gparams")))
               graft.operators.Decontaminate.buildGramPostingsIndex(
                 kept, idCol, textCol, mp, maintain.gramN)
@@ -417,8 +398,8 @@ object CorpusIngest {
           })
         }
         maintain.positionsPath.foreach { mp =>
-          appends += (() => timed("positions")(graft.operators.Retrieval
-            .appendToPositionalIndex(kept, idCol, textCol, mp)))
+          appends += (() => graft.operators.Retrieval
+            .appendToPositionalIndex(kept, idCol, textCol, mp))
         }
         // the COUNTED stores append batch-id-KEYED (overwrite-own-delta,
         // lineage-namespaced), so an at-least-once replay cannot
@@ -429,7 +410,7 @@ object CorpusIngest {
         // would misread a full store as unbuilt — the empty build's
         // overwrite would then WIPE the history heal just restored.
         maintain.termStatsPath.foreach { mp =>
-          appends += (() => timed("termstats") {
+          appends += (() => {
             graft.operators.IndexMaintenance.heal(spark, mp, "terms")
             if (!fs.exists(new Path(mp, "terms")))
               graft.operators.Retrieval.buildTermStatsIndex(
@@ -439,7 +420,7 @@ object CorpusIngest {
           })
         }
         maintain.driftGramsPath.foreach { mp =>
-          appends += (() => timed("driftgrams") {
+          appends += (() => {
             graft.operators.IndexMaintenance.heal(spark, mp, "grams")
             if (!fs.exists(new Path(mp, "grams")))
               graft.operators.CorpusCompare.buildGramIndex(
@@ -458,9 +439,8 @@ object CorpusIngest {
       // idempotently (the keyed stores' folded ledger keeps counts exact
       // across the replay). Each family probes its own representative
       // store so a threshold policy only pays for the family over it.
-      if (autoCompact.enabled) timed("autocompact") {
+      if (autoCompact.enabled)
         maybeCompactSuite(spark, batchId, indexPath, maintain, autoCompact)
-      }
     } finally
       // staging frames (shingles, signatures, candidates) die with the
       // batch — a 10k-batch ingest must not accumulate 10k persists

@@ -173,15 +173,6 @@ object EmbeddingIngest {
     if (!fs.exists(new Path(indexPath, "params")))
       IncrementalAnn.buildIndex(batch0.limit(0), idCol, vecCol, dim,
         indexPath, numPlanes = numPlanes, numTables = numTables)
-    def timed[A](label: String)(f: => A): A =
-      if (!sys.env.contains("GRAFT_INGEST_PROFILE")) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[eingest] batch=$batchId $label%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
     try {
       // the batch projects ONCE: the staged (id, vec) + full-width
       // signature frames feed the pair search AND the survivor append
@@ -194,11 +185,8 @@ object EmbeddingIngest {
       // document ingest (it only consumes (id_a, id_b) pairs)
       val pairs = IncrementalAnn.newBatchPairsFromSigs(d, sigsFull,
         indexPath, p, threshold).stagePersist()
-      timed("pairs")(if (sys.env.contains("GRAFT_INGEST_PROFILE")) pairs.count())
-      timed("keep+sink") {
-        IncrementalDedup.keepListFromPairs(batch0, idCol, pairs)
-          .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-      }
+      IncrementalDedup.keepListFromPairs(batch0, idCol, pairs)
+        .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
       // survivors re-read from the sink (the materialization point — the
       // document ingest's measured rule); schema pinned from the batch so
       // the read skips footer inference
@@ -209,10 +197,10 @@ object EmbeddingIngest {
         // leases — mutually order-free appends overlap (the §2.6 rule the
         // document ingest's suite appends use)
         graft.operators.IndexMaintenance.inParallelAll(Seq(
-          () => timed("append")(IncrementalAnn.appendStaged(d, sigsFull,
-            kept.select(col(idCol).as("id")), indexPath))) ++
+          () => IncrementalAnn.appendStaged(d, sigsFull,
+            kept.select(col(idCol).as("id")), indexPath)) ++
           ivfPath.map(p2 => () =>
-            timed("ivf")(IvfIndex.appendBatch(kept, idCol, vecCol, p2))))
+            IvfIndex.appendBatch(kept, idCol, vecCol, p2)))
       }
       // automatic maintenance, mirroring the document ingest: fold the
       // appended deltas when the policy fires, after this batch's appends

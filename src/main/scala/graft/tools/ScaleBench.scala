@@ -861,14 +861,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/scale/sf0.1")
     val keys = if (args.length > 1) args.drop(1).toSeq else defaultKeys
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.SparkEntry.session("graft-scalebench", graft.SparkEntry.envCpus(32))
     spark.sparkContext.setLogLevel("ERROR")
     val stats = new TaskStats
     spark.sparkContext.addSparkListener(stats)

@@ -117,52 +117,77 @@ class FunctionSpec extends AnyFunSuite {
     }
   }
 
-  test("injected kernels resolve in a FRESH session via pure SQL") {
-    // spark.newSession() drops temp-function registrations but keeps the
-    // GraftExtensions injections — this pins that a pure-SQL user gets the
-    // full native kit (the shape-arg kernels included), not just the
-    // operators' temp-registered path
-    val spark = SparkTestSession.get
-    val fresh = spark.newSession()
-    assert(fresh.sql(
+  /** The shape-arg kernels resolve in pure SQL on `s`, coerce natural
+    * literal spellings, and reject a wrong arity or a non-literal shape
+    * arg with a message that names the function. */
+  private def assertShapeArgKernels(s: SparkSession): Unit = {
+    assert(s.sql(
       "SELECT vector_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .collect()(0).getDouble(0) == 11.0)
     // 2 centroids in dim 2: vec (1,0) is nearer cell 1
-    assert(fresh.sql(
+    assert(s.sql(
       """SELECT element_at(centroid_top_cells(array(1.0d, 0.0d),
         |  array(1.0d, 0.0d, 0.0d, 1.0d), 2, 1), 1) AS cell""".stripMargin)
       .collect()(0).getInt(0) == 1)
-    val sigs = fresh.sql(
+    val sigs = s.sql(
       "SELECT hyperplane_sigs(array(1.0d, 0.0d), 2, 4, 2, 42L) AS s")
       .collect()(0).getSeq[Long](0)
     assert(sigs.length == 2)
     // shape-arg coercion: integer seed `42` (IntegerType) casts to the
     // kernel's Long and yields the same signatures as the 42L spelling;
     // a DECIMAL-element centroid array casts to array<double>
-    assert(fresh.sql(
+    assert(s.sql(
       "SELECT hyperplane_sigs(array(1.0d, 0.0d), 2, 4, 2, 42) AS s")
       .collect()(0).getSeq[Long](0) == sigs)
-    assert(fresh.sql(
+    assert(s.sql(
       """SELECT element_at(centroid_top_cells(array(1.0d, 0.0d),
         |  array(1.0, 0.0, 0.0, 1.0), 2, 1), 1) AS cell""".stripMargin)
       .collect()(0).getInt(0) == 1)
     // wrong arity: a clear named message, not a raw IndexOutOfBounds
     val arity = intercept[Exception] {
-      fresh.sql("SELECT centroid_top_cells(array(1.0d), array(1.0d), 1)")
+      s.sql("SELECT centroid_top_cells(array(1.0d), array(1.0d), 1)")
         .collect()
     }
     assert(arity.getMessage.contains("centroid_top_cells expects 4 arguments"),
       s"unexpected arity error: ${arity.getMessage}")
     // non-literal shape arg: named position, bind-time contract stated
-    fresh.range(1).createOrReplaceTempView("r_shape")
     val nonLit = intercept[Exception] {
-      fresh.sql(
+      s.sql(
         """SELECT hyperplane_sigs(array(1.0d, 0.0d), 2, 4, 2, id)
-          |FROM r_shape""".stripMargin).collect()
+          |FROM range(1)""".stripMargin).collect()
     }
     assert(nonLit.getMessage.contains("hyperplane_sigs argument 5 must be a literal"),
       s"unexpected non-literal error: ${nonLit.getMessage}")
-    assert(fresh.sql("SELECT nfc_normalize('café') AS t")
+    assert(s.sql("SELECT nfc_normalize('café') AS t")
       .collect()(0).getString(0) == "café")
+  }
+
+  test("injected kernels resolve in a FRESH session via pure SQL") {
+    // a pure-SQL user of a new session gets the full native kit, the
+    // shape-arg kernels included
+    assertShapeArgKernels(SparkTestSession.get.newSession())
+  }
+
+  test("Tables and ensureRegistered keep the injected builders on the shared session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier("hyperplane_sigs")
+    val before = reg.lookupFunctionBuilder(id)
+    assert(before.isDefined)
+    // every HTSQL query constructs a Tables, whose constructor installs
+    // the native functions; it must not replace the injected builders
+    new graft.model.Tables(spark, "/root/testdata/sf0.001")
+    graft.functions.VectorFunctions.ensureRegistered(spark)
+    assertShapeArgKernels(spark)
+    assert(reg.lookupFunctionBuilder(id).exists(_ eq before.get))
+  }
+
+  test("the Bloom-filter pair resolves in pure SQL on a fresh session") {
+    val fresh = spark.newSession()
+    val hit = fresh.sql(
+      """SELECT bloom_might_contain(
+        |  (SELECT bloom_agg(xxhash64(id), 100L, 1024L) FROM range(10)),
+        |  xxhash64(3L)) AS hit""".stripMargin)
+    assert(hit.collect()(0).getBoolean(0))
   }
 }

@@ -971,21 +971,9 @@ class LangSpec extends AnyFunSuite {
 /** One shared local session for all suites. */
 object SparkTestSession {
   lazy val get: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // native functions registered at build time so no suite depends on
-      // another suite having constructed a Graft first (order-independence)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fixture vintages that ship events.ts as TIMESTAMP(NANOS) read as
-      // raw longs under this conf (Tables.normalizeEventTs converts); the
-      // conf lives in the session builder (not Tables) so suite order can
-      // never matter
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // native functions and the nanos conf come with the session builder,
+    // so no suite depends on another having constructed a Graft first
+    val s = SparkEntry.session("graft-test", 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -226,4 +226,23 @@ class ServerSpec extends AnyFunSuite {
     val r = get("/customer%7Bc_custkey+1%7D.limit(1)/:json")
     assert(r.statusCode() == 200, r.body())
   }
+
+  test("stop() ends the request threads, so an embedding JVM can exit") {
+    import scala.jdk.CollectionConverters._
+    // the session's own lazily started threads come up before the snapshot
+    assert(get("/region/:json").statusCode() == 200)
+    def started(before: Set[Thread]): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.toSet
+        .filter(t => t.isAlive && !t.isDaemon) -- before
+    val before = started(Set.empty)
+    val srv = new GraftServer(Graft(spark, dir)).start()
+    (1 to 3).foreach(_ => assert(getOn(srv, "/region/:json").statusCode() == 200))
+    assert(started(before).nonEmpty) // the dispatcher and the pool workers
+    srv.stop()
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (started(before).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(started(before).isEmpty,
+      s"non-daemon threads left running: ${started(before).map(_.getName)}")
+  }
 }
