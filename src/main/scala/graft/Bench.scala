@@ -144,15 +144,19 @@ object Bench {
     // because the driver keeps only a ~2000-char tail of stdout and the
     // 148-key line above overflows it, truncating mid-line. Two fixes:
     //   1. the full line is ALSO written to a file
-    //      ($SPARK_GRAFT_BENCH_OUT, default bench_out.json in the cwd),
-    //      so the complete per-query map always survives;
+    //      ($SPARK_GRAFT_BENCH_OUT, default target/bench_out.json under
+    //      the cwd — a build output, so a run leaves the tracked tree
+    //      alone), so the complete per-query map always survives;
     //   2. a COMPACT (< 1 KB guaranteed: no per-query map, failures as a
     //      count) summary line is printed LAST, so whatever parses the
     //      stdout tail always sees one complete JSON line.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (fullLine + "\n").getBytes("UTF-8"))
-    catch { case NonFatal(e) =>
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      "target/bench_out.json")
+    try {
+      val out = java.nio.file.Paths.get(outPath)
+      Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     val skewCompact = skewed.take(8).map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"total","unit":"sec","value":$total,"sf":"$sfDir","n_queries":${results.size},"n_failed":${failures.size},"skewed":$skewCompact,"baseline_r01_keys_subtotal":$baselineSubtotal,"baseline_r01_keys_counted":$baselineCounted,"queries_in":"$outPath"}""")

@@ -252,14 +252,11 @@ object CorpusCompare {
     * gram across files, so the layout is merge-on-read and append crashes
     * leave at worst a missing delta (re-run the append). [[compactGramIndex]]
     * folds accumulated deltas through the `IndexMaintenance` write-ahead-
-    * marker swap; every reader heals first.
+    * marker swap; readers resolve a pending swap through
+    * [[IndexMaintenance.storePath]] and never write.
     */
   def buildGramIndex(docs: DataFrame, text: Column, path: String): Unit =
     IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      // Heal first: a compaction that crashed after publishing its marker
-      // would otherwise roll its STALE staged store forward over the fresh
-      // build on the next read, silently reverting it.
-      IndexMaintenance.heal(docs.sparkSession, path, "grams")
       gramCounts(docs, text).write.mode("overwrite").parquet(s"$path/grams")
     }
 
@@ -268,7 +265,6 @@ object CorpusCompare {
     */
   def appendToGramIndex(delta: DataFrame, text: Column, path: String): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      IndexMaintenance.heal(delta.sparkSession, path, "grams")
       gramCounts(delta, text).write.mode("append").parquet(s"$path/grams")
     }
 
@@ -283,7 +279,6 @@ object CorpusCompare {
   def appendToGramIndexKeyed(delta: DataFrame, text: Column, path: String,
       batchKey: Long, lineage: String = ""): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      IndexMaintenance.heal(delta.sparkSession, path, "grams")
       // folded-ledger skip + lineage namespacing: see
       // Retrieval.appendToTermStatsIndexKeyed (the same two lifecycle
       // hardenings — replay-after-compaction and fresh-lineage reuse)
@@ -304,7 +299,6 @@ object CorpusCompare {
     */
   def retractFromGramIndex(docs: DataFrame, text: Column, path: String): Unit =
     IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      IndexMaintenance.heal(docs.sparkSession, path, "grams")
       gramCounts(docs, text).select(col("gram"), (-col("n")).as("n"))
         .write.mode("append").parquet(s"$path/grams")
     }
@@ -315,14 +309,13 @@ object CorpusCompare {
     * retraction zeroed out drop here, so the merged view is row-identical
     * to a fresh build on the survivors.
     */
-  private def indexCounts(spark: SparkSession, path: String): DataFrame = {
-    IndexMaintenance.heal(spark, path, "grams")
+  private def indexCounts(spark: SparkSession, path: String): DataFrame =
     // recursive: root build/append files + keyed b<id>/ replay-idempotent
     // subdirectories merge as one frame (no partition inference)
-    spark.read.option("recursiveFileLookup", "true").parquet(s"$path/grams")
+    spark.read.option("recursiveFileLookup", "true")
+      .parquet(IndexMaintenance.storePath(spark, path, "grams"))
       .groupBy("gram").agg(sum("n").as("n"))
       .filter(col("n") =!= 0)
-  }
 
   /** [[driftSummary]] of the INDEXED corpus vs a live corpus `b`: the
     * index side reads the vocabulary-sized gram store instead of
@@ -351,16 +344,12 @@ object CorpusCompare {
 
   /** Fold the accumulated append files into one pre-summed store — the
     * same crash-safe protocol as [[IndexMaintenance]] (write staged →
-    * publish marker → swap; a crash at any point heals on the next read:
-    * marker present rolls the swap forward, marker absent discards the
-    * stage). Counts are bit-identical pre/post (sum of sums).
+    * publish marker → swap; a crash at any point heals under the next
+    * writer's lease: marker present rolls the swap forward, marker absent
+    * discards the stage). Counts are bit-identical pre/post (sum of sums).
     */
   def compactGramIndex(spark: SparkSession, path: String): Unit =
     IndexMaintenance.withWriterLease(spark, path) {
-      // Heal BEFORE the read: spark.read.parquet snapshots the file index
-      // at plan time, so it must see the healed store. swapCompacted heals
-      // again (idempotent) and owns the staged-write → marker → swap.
-      IndexMaintenance.heal(spark, path, "grams")
       val folded = spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$path/grams")
         .groupBy("gram").agg(sum("n").as("n"))

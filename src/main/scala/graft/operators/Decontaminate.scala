@@ -275,7 +275,7 @@ object Decontaminate {
     * is a semi-join, and this store makes it one. Cost per audit: one
     * column-pruned 16 B/row store scan against the broadcast benchmark
     * hashes — no corpus read, tokenize, or shingle (where the scan
-    * form's cost lives). Lifecycle: append/compact/heal/tombstone
+    * form's cost lives). Lifecycle: append/compact/tombstone
     * retract/vacuum, like every store.
     */
   def buildGramPostingsIndex(docs: DataFrame, idCol: String,
@@ -284,7 +284,6 @@ object Decontaminate {
     val spark = docs.sparkSession
     import spark.implicits._
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.heal(spark, path, "grams")
       // rebuild = new generation; stale tombstones must not filter it
       IndexMaintenance.dropTombstones(spark, path)
       // grams FIRST, gparams LAST: gparams doubles as the
@@ -319,7 +318,6 @@ object Decontaminate {
   def retractFromGramPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame): Unit =
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.heal(spark, path, "grams")
       IndexMaintenance.addTombstones(path, ids)
     }
 
@@ -329,7 +327,6 @@ object Decontaminate {
   def compactGramPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): Unit =
       IndexMaintenance.withWriterLease(spark, path) {
-    IndexMaintenance.heal(spark, path, "grams")
     val nFiles = IndexMaintenance.targetFileCount(spark, path, "grams",
       targetFileBytes)
     val folded = IndexMaintenance.filterTombstoned(spark, path,
@@ -344,10 +341,8 @@ object Decontaminate {
   }
 
   private def readGramN(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    IndexMaintenance.heal(spark, path, "grams")
+      path: String): Int =
     spark.read.parquet(s"$path/gparams").head().getInt(0)
-  }
 
   private def gramPostingsOf(docs: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame =
@@ -387,7 +382,8 @@ object Decontaminate {
       .select(xxhash64(col("g")).as("gram"))
       .distinct()
     IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/grams"), "doc_id")
+        spark.read.parquet(IndexMaintenance.storePath(spark, path, "grams")),
+        "doc_id")
       .join(broadcast(benchSh), Seq("gram"), "left_semi")
       .dropDuplicates("gram", "doc_id") // crash-replayed append rows
       .groupBy("doc_id")

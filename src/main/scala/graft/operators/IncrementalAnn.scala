@@ -48,11 +48,6 @@ object IncrementalAnn {
     val spark = emb.sparkSession
     import spark.implicits._
     VectorFunctions.ensureRegistered(spark)
-    // heal any committed-but-unswapped compaction FIRST: rebuilding over
-    // a pending marker would let the next reader's healAll roll the STALE
-    // staged store forward over the fresh build (silently reverting it,
-    // with new params validating old-generation rows)
-    IndexMaintenance.healAll(spark, path, Seq("sigs", "vecs"))
     // rebuild = new generation; stale tombstones must not filter it
     IndexMaintenance.dropTombstones(spark, path)
     val c = staged(emb, idCol, vecCol)
@@ -121,14 +116,10 @@ object IncrementalAnn {
     */
   def retract(spark: SparkSession, path: String, ids: DataFrame): Unit =
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.healAll(spark, path, Seq("sigs", "vecs"))
       IndexMaintenance.addTombstones(path, ids)
     }
 
   def readParams(spark: SparkSession, path: String): VecParams = {
-    // a crashed compaction swap rolls forward here, so every query/append
-    // entry point (all read params first) sees a consistent store
-    IndexMaintenance.healAll(spark, path, Seq("sigs", "vecs"))
     val r = spark.read.parquet(s"$path/params").head()
     VecParams(r.getAs[Int]("dim"), r.getAs[Int]("num_tables"),
       r.getAs[Long]("seed"), r.getAs[Int]("full_planes"), r.getAs[Int]("planes"))
@@ -156,8 +147,8 @@ object IncrementalAnn {
     * persisted — the streaming ingest computes the batch's projections
     * ONCE and shares them between the pair search and the survivor
     * append (the document ingest's signed-frame rule): the old
-    * pairs-then-appendBatch sequence re-read params (a second healAll)
-    * and re-projected the survivors against every hyperplane table.
+    * pairs-then-appendBatch sequence re-read params and re-projected the
+    * survivors against every hyperplane table.
     */
   private[graft] def stagedSigs(emb: DataFrame, idCol: String,
       vecCol: String, p: VecParams): (DataFrame, DataFrame) = {
@@ -219,7 +210,8 @@ object IncrementalAnn {
             .as("bucket"))
       }
     val indexBand = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/sigs"), "id")
+        spark.read.parquet(IndexMaintenance.storePath(spark, path, "sigs")),
+        "id")
       .select(col("id").as("n_id"), col("tbl"),
         col("sig").bitwiseAND(mask).as("bucket"))
     val cand = indexBand.join(broadcast(qBand), Seq("tbl", "bucket"))
@@ -229,7 +221,8 @@ object IncrementalAnn {
       .stagePersist()
     val candIds = cand.select(col("n_id").as("id")).distinct()
     // candidate vectors only; dropDuplicates(id) absorbs replayed appends
-    val nVecs = spark.read.parquet(s"$path/vecs")
+    val nVecs = spark.read
+      .parquet(IndexMaintenance.storePath(spark, path, "vecs"))
       .join(broadcast(candIds), Seq("id"), "left_semi")
       .dropDuplicates("id")
     val scored = cand
@@ -278,7 +271,8 @@ object IncrementalAnn {
     // retracted vectors drop before candidate generation (broadcast
     // anti-join, map-side); their raw vectors are then never fetched
     val indexBand = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/sigs"), "id")
+        spark.read.parquet(IndexMaintenance.storePath(spark, path, "sigs")),
+        "id")
       .select(col("id"), col("tbl"), col("sig").bitwiseAND(mask).as("bucket"))
 
     val candsCross = indexBand.alias("c")
@@ -300,7 +294,9 @@ object IncrementalAnn {
       .distinct()
     // dropDuplicates(id): keeps a re-run (crash-recovered) append from
     // duplicating verified pairs — same rationale as IncrementalDedup
-    val needed = spark.read.parquet(s"$path/vecs").unionByName(d)
+    val needed = spark.read
+      .parquet(IndexMaintenance.storePath(spark, path, "vecs"))
+      .unionByName(d)
       .join(broadcast(candIds), Seq("id"), "left_semi")
       .dropDuplicates("id")
       .stagePersist()

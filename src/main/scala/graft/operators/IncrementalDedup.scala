@@ -51,11 +51,6 @@ object IncrementalDedup {
     val spark = docs.sparkSession
     import spark.implicits._
     IndexMaintenance.withWriterLease(spark, path) {
-      // heal any committed-but-unswapped compaction FIRST: rebuilding over
-      // a pending marker would let the next reader's healAll roll the
-      // STALE staged store forward over the fresh build (silently
-      // reverting it, with new params validating old-generation rows)
-      IndexMaintenance.healAll(spark, path, Seq("bands", "shingles"))
       IndexMaintenance.dropTombstones(spark, path)
       // params LAST (the discriminator-last rule): a rebuild that crashes
       // mid-way must leave either the OLD params over old stores (re-run)
@@ -113,14 +108,10 @@ object IncrementalDedup {
     */
   def retract(spark: SparkSession, path: String, ids: DataFrame): Unit =
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.healAll(spark, path, Seq("bands", "shingles"))
       IndexMaintenance.addTombstones(path, ids)
     }
 
   def readParams(spark: SparkSession, path: String): Params = {
-    // a crashed compaction swap rolls forward here, so every query/append
-    // entry point (all read params first) sees a consistent store
-    IndexMaintenance.healAll(spark, path, Seq("bands", "shingles"))
     val r = spark.read.parquet(s"$path/params").head()
     Params(r.getAs[Int]("shingle_size"), r.getAs[Int]("num_hashes"),
       r.getAs[Int]("bands"))
@@ -193,7 +184,7 @@ object IncrementalDedup {
     // a broadcast anti-join on the same map-side pass; their shingle rows
     // are then never fetched (the verify joins by candidate id).
     val indexBanded = IndexMaintenance.filterTombstoned(spark, path,
-      spark.read.parquet(s"$path/bands"), "id")
+      spark.read.parquet(IndexMaintenance.storePath(spark, path, "bands")), "id")
     val candsCross = indexBanded.alias("c")
       .join(broadcast(deltaBanded.alias("d")),
         col("d.band") === col("c.band") && col("d.band_sig") === col("c.band_sig") &&
@@ -219,7 +210,9 @@ object IncrementalDedup {
     // duplicates store rows; duplicate BAND rows are already harmless
     // (candidates dedup), and this keeps duplicate shingle rows from
     // duplicating verified pairs
-    val needed = spark.read.parquet(s"$path/shingles").unionByName(deltaSh)
+    val needed = spark.read
+      .parquet(IndexMaintenance.storePath(spark, path, "shingles"))
+      .unionByName(deltaSh)
       .join(broadcast(candIds), Seq("id"), "left_semi")
       .dropDuplicates("id")
       .stagePersist()

@@ -27,11 +27,22 @@ import org.apache.spark.sql.functions._
   *      commit point;
   *   3. live store deletes, staged renames over it, marker deletes.
   *
-  * [[heal]] makes any crash state consistent: marker present → roll the
-  * swap forward (the staged store is complete by protocol); marker absent
-  * → a stray `.compact` dir is uncommitted debris and deletes. Both
-  * modules' `readParams` heal before reading, so a reader never sees a
-  * half-swapped store; single writer at a time, like the append contract.
+  * The protocol is known HERE only. WRITERS heal: [[withWriterLease]]
+  * lists the index root once after taking the lease and makes every
+  * crash state consistent before the mutation runs. READERS never write:
+  * they resolve a store's directory with [[storePath]] and change
+  * nothing under the root, so a reader running beside a compaction can
+  * never delete the `.compact` store that compaction is still writing
+  * (an HTSQL query is a GET and has no side effects; the same holds
+  * for index reads). The crash states, and what each side does:
+  *
+  * {{{
+  *   marker  staged  live    storePath reads   lease-time heal
+  *   -       -       yes     live              nothing
+  *   -       yes     yes     live              deletes staged (debris)
+  *   yes     yes     either  staged            deletes live, renames staged
+  *   yes     -       yes     live              deletes marker
+  * }}}
   */
 object IndexMaintenance {
 
@@ -66,12 +77,14 @@ object IndexMaintenance {
   // reclaimed: the stale lock is RENAMED aside (atomic — exactly one
   // reclaimer wins a given lock-file instance), the reclaimer re-creates
   // the lock, and a read-back verifies ownership before proceeding —
-  // losers abort loudly. No heal is needed at reclaim time because every
-  // store write is independently crash-safe (the write-ahead-marker
-  // protocol above — readers and the next mutation heal per-store). Like
-  // the ETL lease, a mutation that legitimately outlives `leaseMs` is
-  // exposed to a takeover; size `leaseMs` to the slowest expected
-  // compaction.
+  // losers abort loudly. The crashed writer may have left a compaction
+  // half done; [[withWriterLease]] heals the root after every acquire,
+  // reclaims included, before the mutation body runs. Healing is safe
+  // only under the lease: a compaction holds it for its whole
+  // read-fold-swap, so an unmarked `.compact` store seen there cannot
+  // belong to a compaction still in flight. Like the ETL lease, a
+  // mutation that legitimately outlives `leaseMs` is exposed to a
+  // takeover; size `leaseMs` to the slowest expected compaction.
 
   val LockFile = "_index_lock"
   val GenFile = "_index_gen"
@@ -229,13 +242,15 @@ object IndexMaintenance {
     * the index family (build/append/retract/compact in [[Retrieval]],
     * [[Decontaminate]], [[CorpusCompare]], [[IncrementalDedup]],
     * [[IncrementalAnn]], [[IvfIndex]], and the compactions below) wraps
-    * its body in this.
+    * its body in this. The root heals once, under the lease, before the
+    * body runs, so every body sees consistent stores at their live paths.
     */
   def withWriterLease[A](spark: SparkSession, root: String,
       leaseMs: Long = 10 * 60 * 1000L)(body: => A): A = {
     val writerId = java.util.UUID.randomUUID().toString.take(8)
     acquireLease(spark, root, writerId, leaseMs)
     try {
+      healRoot(spark, root)
       val r = body
       bumpGeneration(spark, root, writerId)
       r
@@ -273,7 +288,7 @@ object IndexMaintenance {
   /** [[inParallel]] for N independent store mutations — the ingest's
     * standing-index suite: each family appends to its OWN root under its
     * OWN lease, so the mutations are mutually order-free and overlap the
-    * same way the paired writes do (each family's INTERNAL heal/build/
+    * same way the paired writes do (each family's INTERNAL build/
     * append sequence stays sequential inside its thunk — those orderings
     * are crash-recovery invariants). The first thunk runs on the caller's
     * thread; every failure is awaited before the first one propagates
@@ -360,7 +375,7 @@ object IndexMaintenance {
     *     / already folded, for the batch-keyed counted stores (0/0 for
     *     plain append stores);
     *   - `pending_compaction`: a committed-but-unswapped compaction
-    *     marker exists (the next heal rolls it forward);
+    *     marker exists (the next writer's lease rolls it forward);
     *   - `params`: the single params row rendered as JSON for `*params`
     *     stores, null elsewhere.
     *
@@ -410,42 +425,59 @@ object IndexMaintenance {
   }
 
   private def stagedPath(root: String, store: String) = new Path(s"$root/$store.compact")
-  private def markerPath(root: String, store: String) = new Path(s"$root/_compact_$store")
+  private val MarkerPrefix = "_compact_"
+  private def markerPath(root: String, store: String) = new Path(s"$root/$MarkerPrefix$store")
 
-  /** Roll forward (marker present) or clean up (marker absent) one
-    * store's interrupted compaction. Idempotent; cheap when idle.
+  /** The directory a reader should read `store` from, resolved without
+    * touching the filesystem's state: the staged `<store>.compact` when
+    * its marker is published (the swap has committed; the live directory
+    * may already be gone), the live `<store>` otherwise (an unmarked
+    * staged directory is either debris or a compaction still writing).
     */
-  def heal(spark: SparkSession, root: String, store: String): Unit = {
+  def storePath(spark: SparkSession, root: String, store: String): String = {
     val f = fsOf(spark, root)
-    val live = new Path(s"$root/$store")
     val staged = stagedPath(root, store)
-    val marker = markerPath(root, store)
-    if (f.exists(marker)) {
-      if (f.exists(staged)) {
-        if (f.exists(live)) f.delete(live, true)
+    if (f.exists(markerPath(root, store)) && f.exists(staged)) staged.toString
+    else s"$root/$store"
+  }
+
+  /** Make every store under `root` consistent: each published marker
+    * rolls its store forward, each `<store>.compact` without a marker is
+    * uncommitted debris and deletes. One listing of the root; runs only
+    * inside [[withWriterLease]], where no compaction can be in flight.
+    */
+  private def healRoot(spark: SparkSession, root: String): Unit = {
+    val f = fsOf(spark, root)
+    val names = f.listStatus(new Path(root)).map(_.getPath.getName).toSet
+    val marked = names.collect {
+      case n if n.startsWith(MarkerPrefix) && !n.endsWith(".tmp") =>
+        n.stripPrefix(MarkerPrefix)
+    }
+    marked.foreach { store =>
+      val live = new Path(s"$root/$store")
+      val staged = stagedPath(root, store)
+      if (names(staged.getName)) {
+        if (names(store)) f.delete(live, true)
         if (!f.rename(staged, live))
           throw new IllegalStateException(s"compaction heal: rename failed for $staged")
       }
-      f.delete(marker, false)
-    } else if (f.exists(staged)) {
-      f.delete(staged, true) // uncommitted debris — commit point never reached
+      f.delete(markerPath(root, store), false)
     }
+    names.filter(n => n.endsWith(".compact") &&
+        !marked(n.stripSuffix(".compact")))
+      .foreach(n => f.delete(new Path(s"$root/$n"), true))
   }
-
-  /** Heal every store of an index directory (called by readers). */
-  def healAll(spark: SparkSession, root: String, stores: Seq[String]): Unit =
-    stores.foreach(heal(spark, root, _))
 
   /** The ONE copy of the crash-safe staged-store swap, shared by every
     * compaction (incl. [[CorpusCompare.compactGramIndex]], which folds by
-    * aggregation rather than dedup): heals any prior interrupted state,
-    * has `writeStaged` materialize the replacement at `<store>.compact`,
-    * then publishes the write-ahead marker and swaps. A crash anywhere
-    * leaves a state [[heal]] makes consistent.
+    * aggregation rather than dedup): has `writeStaged` materialize the
+    * replacement at `<store>.compact`, then publishes the write-ahead
+    * marker and swaps. Runs under the writer lease, whose heal left no
+    * prior interrupted state; a crash anywhere leaves a state the next
+    * lease heals and [[storePath]] resolves.
     */
   def swapCompacted(spark: SparkSession, root: String, store: String)(
       writeStaged: String => Unit): Unit = {
-    heal(spark, root, store)
     val f = fsOf(spark, root)
     val live = new Path(s"$root/$store")
     val staged = stagedPath(root, store)
@@ -457,7 +489,7 @@ object IndexMaintenance {
     try out.writeBytes(store) finally out.close()
     if (!f.rename(tmp, marker))
       throw new IllegalStateException(s"compaction commit: marker rename failed for $store")
-    // roll forward (identical to heal's marker branch)
+    // roll forward (identical to healRoot's marker branch)
     f.delete(live, true)
     if (!f.rename(staged, live))
       throw new IllegalStateException(s"compaction swap: rename failed for $staged")
@@ -623,7 +655,6 @@ object IndexMaintenance {
   private def compactStore(spark: SparkSession, root: String, store: String,
       clusterCols: Seq[Column], sortCols: Seq[Column], dedupCols: Seq[String],
       targetFileBytes: Long): Unit = {
-    heal(spark, root, store)
     val nFiles = targetFileCount(spark, root, store, targetFileBytes)
     val df = filterTombstoned(spark, root,
         spark.read.parquet(s"$root/$store"), "id")

@@ -18,7 +18,7 @@ import graft.functions.VectorFunctions
   *
   * Stores, the established incremental-index lifecycle (writer lease,
   * merge-on-read appends, crash-safe compaction swap, tombstone
-  * retraction, heal-before-read):
+  * retraction, readers that resolve and never write):
   *
   *   - `cells/`    (cell, id, vec) — one row per (vector, assigned cell),
   *     `assignReplicas`-redundant (each vector enters its top-R cells —
@@ -88,7 +88,6 @@ object IvfIndex {
     import spark.implicits._
     VectorFunctions.ensureRegistered(spark)
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.heal(spark, path, "cells")
       IndexMaintenance.dropTombstones(spark, path)
       // an in-place REBUILD retires the old discriminator first: a crash
       // after the cells overwrite but before the new codebook/iparams
@@ -127,7 +126,6 @@ object IvfIndex {
   }
 
   def readParams(spark: SparkSession, path: String): Params = {
-    IndexMaintenance.heal(spark, path, "cells")
     val p = new org.apache.hadoop.fs.Path(s"$path/iparams")
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(f.exists(p),
@@ -160,7 +158,6 @@ object IvfIndex {
     */
   def retract(spark: SparkSession, path: String, ids: DataFrame): Unit =
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.heal(spark, path, "cells")
       IndexMaintenance.addTombstones(path, ids)
     }
 
@@ -172,7 +169,6 @@ object IvfIndex {
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): Unit =
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.heal(spark, path, "cells")
       val nFiles = IndexMaintenance.targetFileCount(spark, path, "cells",
         targetFileBytes)
       val folded = IndexMaintenance.filterTombstoned(spark, path,
@@ -201,7 +197,7 @@ object IvfIndex {
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
     val spark = queries.sparkSession
     VectorFunctions.ensureRegistered(spark)
-    readParams(spark, path) // heals + fails loudly on a torn build
+    readParams(spark, path) // fails loudly on a torn build
     val centroids = Clustering.loadCentroidMatrix(spark, path)
     val q = queries
       .select(col(idCol).as("q_id"), col(vecCol).cast("array<double>").as("q_vec"))
@@ -214,7 +210,7 @@ object IvfIndex {
     // In list is what pushes the filter into the parquet scan
     val probed = qProbes.select("cell").distinct().collect().map(_.getInt(0))
     val cand = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/cells")
+        spark.read.parquet(IndexMaintenance.storePath(spark, path, "cells"))
           .filter(col("cell").isin(probed.toIndexedSeq: _*)), "id")
       .select(col("cell"), col("id").as("n_id"), col("vec").as("n_vec"))
       .withColumn("n_norm", Similarity.norm(col("n_vec")))

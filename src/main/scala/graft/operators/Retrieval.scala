@@ -71,6 +71,54 @@ object Retrieval {
   private def lengthNorm(dl: Column, n: Column, tLen: Column): Column =
     when(tLen > 0d, dl * n / tLen).otherwise(lit(0d))
 
+  /** One query term's contribution floor(idf·sat·1e9) as a long, from the
+    * `tf` and `df` columns named and the shared `n_docs`, `dl` and `t_len`
+    * columns — the one IEEE expression tree every scoring route here
+    * evaluates, mirrored operation for operation by the SQL oracle (IEEE
+    * ops only, no libm).
+    */
+  private def bm25Quantized(tf: String, df: String, k1: Double,
+      b: Double): Column = {
+    val tfD = col(tf).cast("double")
+    val dfD = col(df).cast("double")
+    val n = col("n_docs").cast("double")
+    val dl = col("dl").cast("double")
+    val tLen = col("t_len").cast("double")
+    val idf = (n - dfD + lit(0.5)) / (dfD + lit(0.5))
+    val sat = tfD * lit(k1 + 1.0) /
+      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * lengthNorm(dl, n, tLen)))
+    floor(idf * sat * lit(1e9d)).cast("long")
+  }
+
+  /** The top-k tail over a (doc_id, dl, su) frame: TakeOrdered(k) on
+    * (su desc, doc_id), then the rank over the bounded k-row result only
+    * (a single-partition window on ≤ k rows — never on the corpus), with
+    * the quantized sum replayed to a double score (su / 1e9).
+    */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("su").desc, col("doc_id"))
+      .limit(k)
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .orderBy(col("su").desc, col("doc_id"))).cast("long"))
+      .select(col("doc_id"), col("dl"),
+        (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
+      .orderBy("rank")
+
+  /** The per-query top-k tail over a (query_id, doc_id, dl, su) frame:
+    * the per-group window top-k shape, over CANDIDATE rows only.
+    */
+  private def rankPerQuery(perDoc: DataFrame, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("su").desc, col("doc_id"))
+    perDoc.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("doc_id"), col("dl"),
+        (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
+      .orderBy("query_id", "rank")
+  }
+
   /** Top-k documents by BM25 over `terms`. Output:
     * (doc_id, dl, score, rank) ordered by rank; `score` is the quantized
     * sum replayed to a double (su / 1e9), `rank` dense from 1 with ties
@@ -98,32 +146,10 @@ object Retrieval {
       terms.indices.map(i =>
         sum(when(col(s"tf_$i") > 0L, 1L).otherwise(0L)).as(s"df_$i"))
     val stats = base.agg(statCols.head, statCols.tail: _*)
-    // per-term contribution, quantized; literal arithmetic mirrored
-    // operation-for-operation by the SQL oracle (IEEE ops only, no libm)
-    def contrib(i: Int): Column = {
-      val tf = col(s"tf_$i").cast("double")
-      val df = col(s"df_$i").cast("double")
-      val n = col("n_docs").cast("double")
-      val dl = col("dl").cast("double")
-      val tLen = col("t_len").cast("double")
-      val idf = (n - df + lit(0.5)) / (df + lit(0.5))
-      val sat = tf * lit(k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * lengthNorm(dl, n, tLen)))
-      floor(idf * sat * lit(1e9d)).cast("long")
-    }
-    val su = terms.indices.map(contrib).reduce(_ + _)
-    val top = base.crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("dl"), su.as("su"))
-      .orderBy(col("su").desc, col("doc_id"))
-      .limit(k)
-    // rank over the bounded k-row result only (single-partition window on
-    // ≤ k rows — never on the corpus)
-    top.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("su").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("dl"),
-        (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
-      .orderBy("rank")
+    val su = terms.indices
+      .map(i => bm25Quantized(s"tf_$i", s"df_$i", k1, b)).reduce(_ + _)
+    rankTopK(base.crossJoin(broadcast(stats))
+      .select(col("doc_id"), col("dl"), su.as("su")), k)
   }
 
   /** The INVERTED-INDEX form of [[bm25TopK]] — same scoring contract,
@@ -162,28 +188,12 @@ object Retrieval {
     val scored = tf.join(broadcast(dfT), "token")
       .join(dls, "doc_id")
       .crossJoin(broadcast(nStats))
-    val tfD = col("tf").cast("double")
-    val dfD = col("df").cast("double")
-    val n = col("n_docs").cast("double")
-    val dlD = col("dl").cast("double")
-    val tLen = col("t_len").cast("double")
-    val idf = (n - dfD + lit(0.5)) / (dfD + lit(0.5))
-    val sat = tfD * lit(k1 + 1.0) /
-      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * lengthNorm(dlD, n, tLen)))
     val perDoc = scored
-      .withColumn("q", floor(idf * sat * lit(1e9d)).cast("long"))
+      .withColumn("q", bm25Quantized("tf", "df", k1, b))
       .groupBy("doc_id").agg(sum(col("q")).as("su"))
-    val top = dls.join(perDoc, Seq("doc_id"), "left")
+    rankTopK(dls.join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("dl"),
-        coalesce(col("su"), lit(0L)).as("su"))
-      .orderBy(col("su").desc, col("doc_id"))
-      .limit(k)
-    top.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("su").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("dl"),
-        (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
-      .orderBy("rank")
+        coalesce(col("su"), lit(0L)).as("su")), k)
   }
 
   /** Persisted corpus TERM-STATISTICS index — the incremental-index
@@ -202,13 +212,13 @@ object Retrieval {
     * (oracle-proven: the contract key builds in two batches). Corpus
     * totals ride a SENTINEL row (token = '', impossible for a real token
     * — the tokenizer drops empties): df = doc count, tl = token total;
-    * one write job per batch, same crash posture as the gram store, and
-    * reads heal any pending compaction first (the r9 ADVICE lesson).
+    * one write job per batch, same crash posture as the gram store;
+    * reads resolve a pending compaction through
+    * [[IndexMaintenance.storePath]] and never write.
     */
   def buildTermStatsIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
     IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      IndexMaintenance.heal(docs.sparkSession, path, "terms")
       termStats(docs, idCol, textCol).write.mode("overwrite")
         .parquet(s"$path/terms")
     }
@@ -219,7 +229,6 @@ object Retrieval {
   def appendToTermStatsIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      IndexMaintenance.heal(delta.sparkSession, path, "terms")
       termStats(delta, idCol, textCol).write.mode("append")
         .parquet(s"$path/terms")
     }
@@ -249,7 +258,6 @@ object Retrieval {
       textCol: String, path: String, batchKey: Long,
       lineage: String = ""): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      IndexMaintenance.heal(delta.sparkSession, path, "terms")
       val name = keyedName(batchKey, lineage)
       if (!IndexMaintenance.foldedBatches(delta.sparkSession, path, "terms")
           .contains(name))
@@ -268,7 +276,7 @@ object Retrieval {
   private def readPtotals(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
     spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$path/ptotals")
+      .parquet(IndexMaintenance.storePath(spark, path, "ptotals"))
 
   /** RETRACT docs (takedown) from the term-stats index: append their
     * statistics NEGATED — df and tl are additive, so merge-on-read sums
@@ -289,7 +297,6 @@ object Retrieval {
   def retractFromTermStatsIndex(docs: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
     IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      IndexMaintenance.heal(docs.sparkSession, path, "terms")
       termStats(docs, idCol, textCol)
         .select(col("token"), (-col("df")).as("df"), (-col("tl")).as("tl"))
         .write.mode("append").parquet(s"$path/terms")
@@ -321,14 +328,12 @@ object Retrieval {
 
   /** Fold accumulated append deltas into one summed store — the
     * small-files countermeasure, same write-ahead-marker swap as every
-    * other index ([[IndexMaintenance.swapCompacted]]; readers heal any
-    * crash state). Sums are per token, so the folded store is
+    * other index ([[IndexMaintenance.swapCompacted]]; the writer lease
+    * heals any crash state). Sums are per token, so the folded store is
     * bit-identical to merge-on-read by construction.
     */
   def compactTermStatsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = IndexMaintenance.withWriterLease(spark, path) {
-    // heal BEFORE the read: the parquet file index snapshots at plan time
-    IndexMaintenance.heal(spark, path, "terms")
     val folded = readTermStore(spark, path)
       .groupBy("token")
       .agg(sum(col("df")).as("df"), sum(col("tl")).as("tl"))
@@ -353,7 +358,8 @@ object Retrieval {
     */
   private def readTermStore(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(s"$path/terms")
+    spark.read.option("recursiveFileLookup", "true")
+      .parquet(IndexMaintenance.storePath(spark, path, "terms"))
 
   /** BM25-score a NEW batch against the index — the scan form's exact
     * arithmetic ([[bm25TopK]]'s IEEE tree, quantized-long sums, same tie
@@ -373,7 +379,6 @@ object Retrieval {
     requireDistinctTerms("scoreAgainstTermIndex", terms)
     require(k >= 1, s"k must be positive, got $k")
     val spark = newDocs.sparkSession
-    IndexMaintenance.heal(spark, path, "terms")
     // fail fast on a pathological store: a missing or zero sentinel would
     // otherwise flow null/NaN corpus stats into every score row. The probe
     // is a pushed token='' filter — one row group, one tiny job.
@@ -400,28 +405,10 @@ object Retrieval {
     val base = newDocs.select(
       (col(idCol).as("doc_id") +: tfCols :+
         size(filter(toks, x => x =!= lit(""))).cast("long").as("dl")): _*)
-    def contrib(i: Int): Column = {
-      val tf = col(s"tf_$i").cast("double")
-      val df = col(s"df_$i").cast("double")
-      val n = col("n_docs").cast("double")
-      val dl = col("dl").cast("double")
-      val tLen = col("t_len").cast("double")
-      val idf = (n - df + lit(0.5)) / (df + lit(0.5))
-      val sat = tf * lit(k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * lengthNorm(dl, n, tLen)))
-      floor(idf * sat * lit(1e9d)).cast("long")
-    }
-    val su = terms.indices.map(contrib).reduce(_ + _)
-    val top = base.crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("dl"), su.as("su"))
-      .orderBy(col("su").desc, col("doc_id"))
-      .limit(k)
-    top.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("su").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("dl"),
-        (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
-      .orderBy("rank")
+    val su = terms.indices
+      .map(i => bm25Quantized(s"tf_$i", s"df_$i", k1, b)).reduce(_ + _)
+    rankTopK(base.crossJoin(broadcast(stats))
+      .select(col("doc_id"), col("dl"), su.as("su")), k)
   }
 
   /** Ranking-quality evaluation — MRR and precision@n of a ranked list
@@ -471,7 +458,7 @@ object Retrieval {
     *
     * Two stores, the established incremental-index lifecycle
     * (merge-on-read appends, [[IndexMaintenance.swapCompacted]] crash-safe
-    * compaction, readers heal first):
+    * compaction, readers resolve through [[IndexMaintenance.storePath]]):
     *
     *   - `postings/`: one row per (token, doc_id) with its tf and the
     *     doc's dl — dl DENORMALIZED onto the posting row so scoring a
@@ -511,8 +498,6 @@ object Retrieval {
   def buildPostingsIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
     IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      IndexMaintenance.heal(docs.sparkSession, path, "postings")
-      IndexMaintenance.heal(docs.sparkSession, path, "ptotals")
       // a rebuild starts a new index generation — stale tombstones would
       // silently filter fresh rows the fresh ptotals counts, skewing every
       // query's N vs df (see the IndexMaintenance tombstone contract)
@@ -530,8 +515,6 @@ object Retrieval {
   def appendToPostingsIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      IndexMaintenance.heal(delta.sparkSession, path, "postings")
-      IndexMaintenance.heal(delta.sparkSession, path, "ptotals")
       val (post, tot) = postingsOf(delta, idCol, textCol)
       // order-free pair (replay-tolerant stores) — overlap the writes
       IndexMaintenance.inParallel(
@@ -557,8 +540,6 @@ object Retrieval {
       textCol: String, path: String, batchKey: Long,
       lineage: String = ""): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      IndexMaintenance.heal(delta.sparkSession, path, "postings")
-      IndexMaintenance.heal(delta.sparkSession, path, "ptotals")
       val name = keyedName(batchKey, lineage)
       if (!IndexMaintenance.foldedBatches(delta.sparkSession, path,
           "ptotals").contains(name)) {
@@ -599,8 +580,6 @@ object Retrieval {
       textCol: String, path: String): Unit = {
     val spark = docs.sparkSession
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.heal(spark, path, "postings")
-      IndexMaintenance.heal(spark, path, "ptotals")
       val (_, tot) = postingsOf(docs, idCol, textCol)
       // correction row FIRST: if the tombstone append crashes, a re-run's
       // identical negative row collapses on read — idempotent recovery
@@ -642,8 +621,6 @@ object Retrieval {
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): Unit =
       IndexMaintenance.withWriterLease(spark, path) {
-    IndexMaintenance.heal(spark, path, "postings")
-    IndexMaintenance.heal(spark, path, "ptotals")
     val nFiles = IndexMaintenance.targetFileCount(spark, path, "postings",
       targetFileBytes)
     // the vacuum: tombstoned (retracted) docs leave physically here —
@@ -701,8 +678,6 @@ object Retrieval {
     require(terms.forall(_.nonEmpty), "query terms must be non-empty strings")
     requireDistinctTerms("topKFromIndex", terms)
     require(k >= 1, s"k must be positive, got $k")
-    IndexMaintenance.heal(spark, path, "postings")
-    IndexMaintenance.heal(spark, path, "ptotals")
     val tot = readPtotals(spark, path)
       .dropDuplicates("n_docs", "t_len", "min_id", "max_id")
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),
@@ -710,35 +685,21 @@ object Retrieval {
     // candidate postings: pushed In(token) filter; (token, doc_id) replay
     // duplicates collapse here (exact replays are identical rows);
     // retracted docs drop BEFORE the df derivation (broadcast anti-join
-    // against the tombstones, map-side) so df counts survivors only
-    val cand = Staging.stage(IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/postings")
+    // against the tombstones, map-side) so df counts survivors only. Not
+    // staged: the df aggregate and the scoring join share one plan, and
+    // a read leaves no cached frame behind.
+    val cand = IndexMaintenance.filterTombstoned(spark, path,
+        spark.read.parquet(IndexMaintenance.storePath(spark, path, "postings"))
           .filter(col("token").isin(terms: _*)), "doc_id")
       .groupBy("token", "doc_id")
-      .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl")))
+      .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl"))
     val dfT = cand.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
     val scored = cand.join(broadcast(dfT), "token")
       .crossJoin(broadcast(tot))
-    val tfD = col("tf").cast("double")
-    val dfD = col("df").cast("double")
-    val n = col("n_docs").cast("double")
-    val dlD = col("dl").cast("double")
-    val tLen = col("t_len").cast("double")
-    val idf = (n - dfD + lit(0.5)) / (dfD + lit(0.5))
-    val sat = tfD * lit(k1 + 1.0) /
-      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * lengthNorm(dlD, n, tLen)))
-    val top = scored
-      .withColumn("q", floor(idf * sat * lit(1e9d)).cast("long"))
+    rankTopK(scored
+      .withColumn("q", bm25Quantized("tf", "df", k1, b))
       .groupBy("doc_id")
-      .agg(max(col("dl")).as("dl"), sum(col("q")).as("su"))
-      .orderBy(col("su").desc, col("doc_id"))
-      .limit(k)
-    top.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("su").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("dl"),
-        (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
-      .orderBy("rank")
+      .agg(max(col("dl")).as("dl"), sum(col("q")).as("su")), k)
   }
 
   /** [[bm25TopKBatch]] answered from the POSTINGS STORE — the
@@ -759,8 +720,6 @@ object Retrieval {
       path: String, queries: DataFrame, queryIdCol: String, termCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    IndexMaintenance.heal(spark, path, "postings")
-    IndexMaintenance.heal(spark, path, "ptotals")
     val q = Staging.stage(queries
       .select(col(queryIdCol).as("query_id"), col(termCol).as("token"))
       .filter(col("token") =!= "").distinct())
@@ -773,7 +732,7 @@ object Retrieval {
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),
         sum(col("t_len")).cast("long").as("t_len"))
     val cand = Staging.stage(IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/postings")
+        spark.read.parquet(IndexMaintenance.storePath(spark, path, "postings"))
           .filter(col("token").isin(terms.toIndexedSeq: _*)), "doc_id")
       .groupBy("token", "doc_id")
       .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl")))
@@ -782,26 +741,10 @@ object Retrieval {
       .join(broadcast(q), "token")
       .join(broadcast(dfT), "token")
       .crossJoin(broadcast(tot))
-    val tfD = col("tf").cast("double")
-    val dfD = col("df").cast("double")
-    val n = col("n_docs").cast("double")
-    val dlD = col("dl").cast("double")
-    val tLen = col("t_len").cast("double")
-    val idf = (n - dfD + lit(0.5)) / (dfD + lit(0.5))
-    val sat = tfD * lit(k1 + 1.0) /
-      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * lengthNorm(dlD, n, tLen)))
-    val perDoc = scored
-      .withColumn("qv", floor(idf * sat * lit(1e9d)).cast("long"))
+    rankPerQuery(scored
+      .withColumn("qv", bm25Quantized("tf", "df", k1, b))
       .groupBy("query_id", "doc_id")
-      .agg(max(col("dl")).as("dl"), sum(col("qv")).as("su"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("su").desc, col("doc_id"))
-    perDoc.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("dl"),
-        (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
-      .orderBy("query_id", "rank")
+      .agg(max(col("dl")).as("dl"), sum(col("qv")).as("su")), k)
   }
 
   /** POSITIONAL index — the exact-PHRASE complement of the postings
@@ -831,7 +774,6 @@ object Retrieval {
   def buildPositionalIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
     IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      IndexMaintenance.heal(docs.sparkSession, path, "positions")
       // rebuild = new generation; stale tombstones must not filter it
       IndexMaintenance.dropTombstones(docs.sparkSession, path)
       positionsOf(docs, idCol, textCol).write.mode("overwrite")
@@ -842,7 +784,6 @@ object Retrieval {
   def appendToPositionalIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      IndexMaintenance.heal(delta.sparkSession, path, "positions")
       positionsOf(delta, idCol, textCol).write.mode("append")
         .parquet(s"$path/positions")
     }
@@ -855,7 +796,6 @@ object Retrieval {
   def retractFromPositionalIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame): Unit =
     IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.heal(spark, path, "positions")
       IndexMaintenance.addTombstones(path, ids)
     }
 
@@ -878,7 +818,6 @@ object Retrieval {
   def compactPositionalIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): Unit =
       IndexMaintenance.withWriterLease(spark, path) {
-    IndexMaintenance.heal(spark, path, "positions")
     val nFiles = IndexMaintenance.targetFileCount(spark, path, "positions",
       targetFileBytes)
     val folded = IndexMaintenance.filterTombstoned(spark, path,
@@ -921,10 +860,9 @@ object Retrieval {
     require(phrase.length <= 32,
       s"phrase length ${phrase.length} > 32 — split the needle (an exact " +
         "match of any 32-token window implies containment for longer ones)")
-    IndexMaintenance.heal(spark, path, "positions")
     val distinctToks = phrase.distinct
     val rows = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/positions")
+        spark.read.parquet(IndexMaintenance.storePath(spark, path, "positions"))
           .filter(col("token").isin(distinctToks: _*)), "doc_id")
       .dropDuplicates("doc_id", "pos") // crash-replayed append rows
     // token → the phrase slots it fills, as a literal map (driver-side
@@ -967,7 +905,6 @@ object Retrieval {
   def phraseMatchesBatch(spark: org.apache.spark.sql.SparkSession,
       path: String, phrases: DataFrame, phraseIdCol: String,
       slotCol: String, tokenCol: String): DataFrame = {
-    IndexMaintenance.heal(spark, path, "positions")
     val q = Staging.stage(phrases
       .select(col(phraseIdCol).as("phrase_id"),
         col(slotCol).cast("long").as("slot"), col(tokenCol).as("token"))
@@ -989,7 +926,7 @@ object Retrieval {
     val terms = q.select("token").distinct().collect().map(_.getString(0))
     val lenF = q.groupBy("phrase_id").agg(count(lit(1)).as("len"))
     val rows = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/positions")
+        spark.read.parquet(IndexMaintenance.storePath(spark, path, "positions"))
           .filter(col("token").isin(terms.toIndexedSeq: _*)), "doc_id")
       .dropDuplicates("doc_id", "pos")
     rows
@@ -1054,7 +991,6 @@ object Retrieval {
         org.apache.spark.sql.types.StringType,
       "phraseMatchesBatchAuto needs string phrase ids (the two routes' " +
         "outputs union by name)")
-    IndexMaintenance.heal(spark, path, "positions")
     // the suite is driver-scale by definition — collect and validate once
     val rows = phrases
       .select(col(phraseIdCol).cast("string").as("phrase_id"),
@@ -1079,11 +1015,13 @@ object Retrieval {
     // the index route would read) + the store's total occurrence volume
     // (a footer-only count). Occ counts tombstoned/replayed rows too —
     // an upper bound is exactly what a cost probe wants.
-    val occ = spark.read.parquet(s"$path/positions")
+    val positions = spark.read.parquet(
+      IndexMaintenance.storePath(spark, path, "positions"))
+    val occ = positions
       .filter(col("token").isin(terms: _*))
       .groupBy("token").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val total = spark.read.parquet(s"$path/positions").count()
+    val total = positions.count()
     val budget = math.max(1L, (hotFraction * total).toLong)
     val cost = byPhrase.map { case (pid, toks) =>
       pid -> toks.map(t => occ.getOrElse(t, 0L)).sum
@@ -1270,27 +1208,11 @@ object Retrieval {
       .join(broadcast(q), "token") // fan out to the queries wanting the term
       .join(broadcast(dfT), "token")
       .crossJoin(broadcast(nStats))
-    val tfD = col("tf").cast("double")
-    val dfD = col("df").cast("double")
-    val n = col("n_docs").cast("double")
-    val dlD = col("dl").cast("double")
-    val tLen = col("t_len").cast("double")
-    val idf = (n - dfD + lit(0.5)) / (dfD + lit(0.5))
-    val sat = tfD * lit(k1 + 1.0) /
-      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * lengthNorm(dlD, n, tLen)))
-    val perDoc = scored
-      .withColumn("qv", floor(idf * sat * lit(1e9d)).cast("long"))
-      .groupBy("query_id", "doc_id")
-      .agg(max(col("dl")).as("dl"), sum(col("qv")).as("su"))
     // per-query top-k over candidate rows only (the q_topk_group shape)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("su").desc, col("doc_id"))
-    perDoc.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("dl"),
-        (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
-      .orderBy("query_id", "rank")
+    rankPerQuery(scored
+      .withColumn("qv", bm25Quantized("tf", "df", k1, b))
+      .groupBy("query_id", "doc_id")
+      .agg(max(col("dl")).as("dl"), sum(col("qv")).as("su")), k)
   }
 
   /** Per-query ranking evaluation over a SUITE — [[evalRanking]]'s

@@ -366,8 +366,8 @@ object CorpusIngest {
       // order-free, so they overlap (inParallelAll, the §2.6 rule the
       // paired writes already use) instead of summing up to six
       // job-scheduling + commit latencies per micro-batch. Each family's
-      // INTERNAL heal → build-if-missing → append order is preserved
-      // inside its thunk — those orderings are crash-recovery invariants.
+      // INTERNAL build-if-missing → append order is preserved inside its
+      // thunk — those orderings are crash-recovery invariants.
       val appends = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
       appends += (() => IncrementalDedup.appendSigned(
         base.join(broadcast(keptIds), Seq("id"), "left_semi"),
@@ -404,15 +404,17 @@ object CorpusIngest {
         // the COUNTED stores append batch-id-KEYED (overwrite-own-delta,
         // lineage-namespaced), so an at-least-once replay cannot
         // double-count; bootstrap is an empty build (schema + store
-        // dirs), idempotent under replay too. The bootstrap probe HEALS
-        // first: a compaction crashed mid-swap leaves the live store dir
-        // absent (marker + staged present), and an unhealed exists()
-        // would misread a full store as unbuilt — the empty build's
-        // overwrite would then WIPE the history heal just restored.
+        // dirs), idempotent under replay too. The bootstrap probe checks
+        // the RESOLVED store: a compaction crashed mid-swap leaves the
+        // live store dir absent (marker + staged present), and a plain
+        // exists() would misread a full store as unbuilt — the empty
+        // build's overwrite would then WIPE the history. The keyed
+        // append's own lease rolls the swap forward.
+        def built(root: String, store: String): Boolean = fs.exists(
+          new Path(graft.operators.IndexMaintenance.storePath(spark, root, store)))
         maintain.termStatsPath.foreach { mp =>
           appends += (() => {
-            graft.operators.IndexMaintenance.heal(spark, mp, "terms")
-            if (!fs.exists(new Path(mp, "terms")))
+            if (!built(mp, "terms"))
               graft.operators.Retrieval.buildTermStatsIndex(
                 kept.limit(0), idCol, textCol, mp)
             graft.operators.Retrieval.appendToTermStatsIndexKeyed(
@@ -421,8 +423,7 @@ object CorpusIngest {
         }
         maintain.driftGramsPath.foreach { mp =>
           appends += (() => {
-            graft.operators.IndexMaintenance.heal(spark, mp, "grams")
-            if (!fs.exists(new Path(mp, "grams")))
+            if (!built(mp, "grams"))
               graft.operators.CorpusCompare.buildGramIndex(
                 kept.limit(0), col(textCol), mp)
             graft.operators.CorpusCompare.appendToGramIndexKeyed(

@@ -381,8 +381,8 @@ class CorpusCompareSpec extends AnyFunSuite {
     assert(filesAfter < filesBefore,
       s"expected fewer files after compaction, got $filesBefore -> $filesAfter")
     // crash state: staged store complete + marker published, live deleted
-    // (the window between commit point and swap) — readers must roll the
-    // swap forward and see identical counts
+    // (the window between commit point and swap) — readers must resolve
+    // to the staged store and see identical counts
     val f = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     spark.read.parquet(s"$idx/grams").write.mode("overwrite")
@@ -390,11 +390,11 @@ class CorpusCompareSpec extends AnyFunSuite {
     val out = f.create(new org.apache.hadoop.fs.Path(s"$idx/_compact_grams"), true)
     try out.writeBytes("grams") finally out.close()
     f.delete(new org.apache.hadoop.fs.Path(s"$idx/grams"), true)
-    val healed = CorpusCompare.driftSummaryAgainstIndex(spark, idx,
+    val resolved = CorpusCompare.driftSummaryAgainstIndex(spark, idx,
       docs.filter(col("lang") === "en"), col("text")).head()
     val direct = CorpusCompare.driftSummary(docs,
       docs.filter(col("lang") === "en"), col("text")).head()
-    assert(healed == direct)
+    assert(resolved == direct)
   }
 
   test("buildGramIndex over a pending stale compaction does not get reverted") {
@@ -403,8 +403,9 @@ class CorpusCompareSpec extends AnyFunSuite {
     val newDocs = docs.filter(col("doc_id") % 2 =!= 0)
     CorpusCompare.buildGramIndex(oldDocs, col("text"), idx)
     // Simulate a compaction that crashed AFTER its commit point: the STALE
-    // store sits staged with the marker published. A rebuild must clear it
-    // — otherwise the next reader's heal rolls the stale store forward
+    // store sits staged with the marker published. The rebuild's lease
+    // must settle it BEFORE the build writes — otherwise readers resolve
+    // to the stale staged store (and the next writer rolls it forward)
     // over the fresh build, silently reverting it.
     val f = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Decontaminate, IncrementalDedup, IndexMaintenance, Retrieval}
+import graft.operators.{Decontaminate, IncrementalDedup, IndexMaintenance, Retrieval, Staging}
 
 /** Concurrent-writer protection for the persisted-index family — the ETL
   * `_txn_lock` lease applied to every store mutation. The interleavings
@@ -11,6 +11,8 @@ import graft.operators.{Decontaminate, IncrementalDedup, IndexMaintenance, Retri
   * under test must abort loudly instead of interleaving with it (the
   * silent failure this forecloses: an append landing between a
   * compaction's read snapshot and its swap renames vanishes in the swap).
+  * Readers take no lease and change nothing under the root, so they may
+  * run beside any writer.
   */
 class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
@@ -198,5 +200,68 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val viaScan = Retrieval.bm25TopK(docs, "doc_id", "text",
       Seq("dup", "vector", "batch"), k = 8).collect().map(_.toSeq).toSeq
     assert(viaIndex == viaScan)
+  }
+
+  test("readers beside a running compaction leave its staged store alone") {
+    // The compactor holds the lease and is still writing its staged store
+    // (no marker yet). Readers must answer from the live stores and touch
+    // nothing; only the next writer's lease, taken once the compactor's
+    // is released, may delete the unmarked staged directory as debris.
+    val post = fresh("race_post")
+    val pos = fresh("race_pos")
+    val dedup = fresh("race_dedup")
+    val half = docs.filter(col("doc_id") % 2 === 1)
+    val delta = docs.filter(col("doc_id") % 2 === 0)
+    Retrieval.buildPostingsIndex(half, "doc_id", "text", post)
+    Retrieval.buildPositionalIndex(half, "doc_id", "text", pos)
+    IncrementalDedup.buildIndex(half, "doc_id", "text", dedup)
+    def answers() = (
+      Retrieval.topKFromIndex(spark, post, Seq("dup", "vector"), k = 5)
+        .collect().map(_.toSeq).toSeq,
+      Retrieval.phraseMatches(spark, pos, Seq("batch", "batch"))
+        .collect().map(_.toSeq).toSeq,
+      IncrementalDedup.newBatchPairs(delta, "doc_id", "text", dedup,
+        jaccardThreshold = 0.2).collect().map(_.toSeq).toSet)
+    val before = answers()
+    assert(before._1.nonEmpty && before._2.nonEmpty,
+      s"fixture self-check: ${before._1.size} top-k rows, " +
+        s"${before._2.size} phrase rows")
+    val planted = Seq(post -> "postings", pos -> "positions", dedup -> "bands")
+    def staged(root: String, store: String) =
+      new java.io.File(s"$root/$store.compact")
+    planted.foreach { case (root, store) =>
+      IndexMaintenance.acquireLease(spark, root, "compactor", 600000L)
+      // a partial store: a reader that read it would answer differently
+      spark.read.parquet(s"$root/$store").limit(1)
+        .write.parquet(staged(root, store).toString)
+    }
+    try {
+      assert(answers() == before, "a reader beside a compaction changed its answer")
+      planted.foreach { case (root, store) =>
+        assert(staged(root, store).exists,
+          s"a reader deleted the in-flight $store.compact at $root")
+      }
+    } finally planted.foreach { case (root, _) =>
+      IndexMaintenance.releaseLease(spark, root)
+    }
+    // the next append's lease heals each root: the debris goes
+    Retrieval.appendToPostingsIndex(delta, "doc_id", "text", post)
+    Retrieval.appendToPositionalIndex(delta, "doc_id", "text", pos)
+    IncrementalDedup.appendBatch(delta, "doc_id", "text", dedup)
+    planted.foreach { case (root, store) =>
+      assert(!staged(root, store).exists,
+        s"the next writer left the unmarked $store.compact at $root")
+    }
+  }
+
+  test("an index read leaves no staged frame behind") {
+    val root = fresh("nostage")
+    Retrieval.buildPostingsIndex(docs, "doc_id", "text", root)
+    val live = Staging.liveCount
+    val rows = Retrieval.topKFromIndex(spark, root, Seq("dup", "vector"),
+      k = 10).collect()
+    assert(rows.nonEmpty)
+    assert(Staging.liveCount == live,
+      s"topKFromIndex left ${Staging.liveCount - live} staged frame(s)")
   }
 }

@@ -477,8 +477,9 @@ class IngestSpec extends AnyFunSuite {
 
       // CRASH MID-SWAP: a compaction that died between its two renames
       // leaves marker+staged and NO live store dir — the ingest's
-      // bootstrap probe must heal first, not misread the store as
-      // unbuilt and wipe the restored history with an empty build
+      // bootstrap probe must resolve the staged store as built, not
+      // misread the store as unbuilt and wipe the history with an empty
+      // build; the keyed append's lease then rolls the swap forward
       val live = java.nio.file.Paths.get(s"$terms/terms")
       val staged = java.nio.file.Paths.get(s"$terms/terms.compact")
       java.nio.file.Files.move(live, staged)
@@ -500,7 +501,7 @@ class IngestSpec extends AnyFunSuite {
         r
       }
       assert(score() == ref2,
-        "a mid-swap crash before the bootstrap probe must heal, not wipe")
+        "a mid-swap crash before the bootstrap probe must be read as built, not wiped")
     } finally rmTree(root)
   }
 

@@ -1485,25 +1485,29 @@ class OperatorSpec extends AnyFunSuite {
       assert(shingleIds.length == shingleIds.distinct.length)
 
       // crash state A: staged store + marker present (commit point passed,
-      // swap lost) — reader heals by rolling FORWARD; results unchanged
+      // swap lost) — a reader resolves to the staged store; results
+      // unchanged
       val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       val live = new org.apache.hadoop.fs.Path(s"$work/bands")
       val staged = new org.apache.hadoop.fs.Path(s"$work/bands.compact")
       val marker = new org.apache.hadoop.fs.Path(s"$work/_compact_bands")
       assert(f.rename(live, staged))
       val out = f.create(marker, true); out.writeBytes("bands"); out.close()
-      assert(pairsOf(delta) == before, "heal after crashed swap changed results")
+      assert(pairsOf(delta) == before, "read after crashed swap changed results")
+
+      // compacting an already-compact index is a no-op for results; its
+      // lease rolls crash state A FORWARD first
+      IndexMaintenance.compactDedupIndex(spark, work)
       assert(f.exists(live) && !f.exists(staged) && !f.exists(marker))
+      assert(pairsOf(delta) == before)
 
       // crash state B: staged debris WITHOUT marker (crash before commit
-      // point) — heal deletes it and the live store answers
+      // point) — the live store answers; the next writer's lease deletes it
       val junk = spark.read.parquet(s"$work/bands").limit(1)
       junk.write.parquet(staged.toString)
       assert(pairsOf(delta) == before)
-      assert(!f.exists(staged), "uncommitted staged dir not cleaned")
-
-      // compacting an already-compact index is a no-op for results
       IndexMaintenance.compactDedupIndex(spark, work)
+      assert(!f.exists(staged), "uncommitted staged dir not cleaned")
       assert(pairsOf(delta) == before)
     } finally {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
@@ -2087,22 +2091,22 @@ class OperatorSpec extends AnyFunSuite {
         Retrieval.scoreAgainstTermIndex(fresh, "doc_id", "text",
           Seq("x", ""), s"$work/a", k = 1)
       }
-      // compaction folds deltas bit-identically and heals a crash state
+      // compaction folds deltas bit-identically; reads resolve a crash state
       Retrieval.compactTermStatsIndex(spark, s"$work/b")
       val afterCompact = Retrieval.scoreAgainstTermIndex(fresh, "doc_id",
         "text", Seq("x"), s"$work/b", k = 2).collect()
       assert(afterCompact.map(r => (r.getLong(0), r.getDouble(2))).toSeq ==
         rows.map(r => (r.getLong(0), r.getDouble(2))).toSeq)
       // plant the worst crash state (published marker + staged store from
-      // an interrupted compaction) — the next read must heal and agree
+      // an interrupted compaction) — the next read must resolve and agree
       val stagedDir = java.nio.file.Paths.get(s"$work/b/terms.compact")
       val marker = java.nio.file.Paths.get(s"$work/b/_compact_terms")
       val live = java.nio.file.Paths.get(s"$work/b/terms")
       java.nio.file.Files.move(live, stagedDir)
       java.nio.file.Files.createFile(marker)
-      val healed = Retrieval.scoreAgainstTermIndex(fresh, "doc_id",
+      val resolved = Retrieval.scoreAgainstTermIndex(fresh, "doc_id",
         "text", Seq("x"), s"$work/b", k = 2).collect()
-      assert(healed.map(r => (r.getLong(0), r.getDouble(2))).toSeq ==
+      assert(resolved.map(r => (r.getLong(0), r.getDouble(2))).toSeq ==
         rows.map(r => (r.getLong(0), r.getDouble(2))).toSeq)
     } finally {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
@@ -2142,7 +2146,7 @@ class OperatorSpec extends AnyFunSuite {
       Retrieval.compactPostingsIndex(spark, work)
       assert(rows(Retrieval.topKFromIndex(spark, work, terms, k = 12)) == scan)
       assert(spark.read.parquet(s"$work/ptotals").count() == 1L)
-      // worst crash state: published marker + staged store — reads heal
+      // worst crash state: published marker + staged store — reads resolve
       val staged = java.nio.file.Paths.get(s"$work/postings.compact")
       val marker = java.nio.file.Paths.get(s"$work/_compact_postings")
       java.nio.file.Files.move(java.nio.file.Paths.get(s"$work/postings"), staged)
@@ -2414,7 +2418,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(spark.read.parquet(s"$work/p/positions")
         .filter(col("doc_id") === victim).count() == 0L,
         "vacuum must drop the retracted doc's occurrence rows")
-      // worst crash state: published marker + staged store — reads heal
+      // worst crash state: published marker + staged store — reads resolve
       val staged = java.nio.file.Paths.get(s"$work/p/positions.compact")
       val marker = java.nio.file.Paths.get(s"$work/p/_compact_positions")
       java.nio.file.Files.move(
