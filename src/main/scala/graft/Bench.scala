@@ -50,7 +50,9 @@ object Bench {
       .filter { case (n, _) => subset.isEmpty || subset(n) }
       .map { case (name, fn) =>
       if (failures.contains(name)) name -> -1.0
-      else try {
+      // staging caches live per-query: measured runs reuse the warm
+      // run's blocks, then the next query starts with an empty cache
+      else try graft.operators.Staging.scoped {
         force(fn(spark, sfDir))
         val times = (1 to runs).map { _ =>
           val t0 = System.nanoTime()
@@ -64,11 +66,6 @@ object Bench {
           failures += name -> msg.linesIterator.take(1).mkString
           System.err.println(s"[bench] FAILED $name: $msg")
           name -> -1.0
-      } finally {
-        // staging caches live per-query: measured runs reuse the warm
-        // run's blocks, then the next query starts with an empty cache
-        // (77 queries of staging residue would otherwise accumulate)
-        graft.operators.Staging.releaseAll()
       }
     }.toMap
 

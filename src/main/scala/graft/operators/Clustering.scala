@@ -103,8 +103,9 @@ object Clustering {
   }
 
   /** The staged normalized (n_id, n_vec) frame every training entry point
-    * shares. Callers release via [[Staging.releaseAll]] like every other
-    * staging site.
+    * shares. It belongs to the caller's [[Staging.scoped]] scope like
+    * every other staging site, so a query's warm and measured runs share
+    * it and the scope's exit releases it.
     */
   private def stagedVectors(emb: DataFrame, idCol: String,
       vecCol: String): DataFrame = {

@@ -35,8 +35,8 @@ object Decontaminate {
       .select(col("id").as(idCol), explode(col("sh")).as("shingle"))
     // this persist is a staging BARRIER, not a reuse cache: without it
     // CollapseProject inlines the tokenizer into the shingle lambda and
-    // re-runs it per shingle index (O(len²) per doc). Registered with
-    // Staging, so the harness releases it after the consuming action.
+    // re-runs it per shingle index (O(len²) per doc). Staged into the
+    // caller's scope, which releases it after the consuming action.
     val benchSh = benchmark
       .select(Dedup.tokens(col(benchTextCol)).as("toks"))
       .stagePersist()

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import Staging.Stageable
 
 /** Large-scale text deduplication operators (training-data pipeline block).
@@ -277,70 +276,70 @@ object Dedup {
     * check FOLDS into the round's single job: the next frame is a lazy
     * `localCheckpoint` and the changed-count aggregate is the action that
     * materializes it, so the driver sees one counter per round and no
-    * second pass. Lineage stays O(1) via the checkpoint; the edges cache
-    * releases in `finally`, including on the non-convergence throw.
+    * second pass. Lineage stays O(1) via the checkpoint; the staged edges
+    * belong to a scope of the call's own, released when it returns or
+    * throws (non-convergence).
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 25, jumpAfter: Int = 3): DataFrame = {
+      idB: String = "id_b", maxIter: Int = 25,
+      jumpAfter: Int = 3): DataFrame = Staging.scoped {
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // seed labels with the first propagation fused in (min over self and
-      // direct neighbors) — initial comp(id)=id makes round 1 a plain groupBy
-      var labels = edges.groupBy(col("src").as("id"))
-        .agg(min(col("dst")).as("__m"))
-        .select(col("id"), least(col("id"), col("__m")).as("comp"))
-        .localCheckpoint()
-      var changed = 1L
-      var i = 0
-      while (changed > 0 && i < maxIter) {
-        // fused round: each edge forwards comp(src) to dst (edges are
-        // bidirectional, so neighbor minima flow both ways) and the union
-        // with the self rows min-aggregates — ONE shuffle join + ONE
-        // partial-aggregating groupBy. The self row doubles as the
-        // old-label carrier for the convergence counter; every node has
-        // exactly one (labels are seeded from both edge endpoints).
-        val msgs = edges
-          .join(labels.select(col("id").as("src_id"), col("comp")),
-            col("src") === col("src_id"))
-          .select(col("dst").as("id"), col("comp").as("cand"),
-            // typed to the actual label column so non-long id types don't
-            // get widened (or rejected) by the union
-            lit(null).cast(labels.schema("comp").dataType).as("self_comp"))
-        val self = labels.select(col("id"), col("comp").as("cand"),
-          col("comp").as("self_comp"))
-        val stepped = msgs.union(self).groupBy("id")
-          .agg(min(col("cand")).as("comp"), min(col("self_comp")).as("old_comp"))
-        // pointer jump (comp := comp(comp)) halves label paths, but its
-        // node-sized self-join is pure overhead on the near-clique graphs
-        // dup clusters actually form (done in 2-3 plain rounds) — engage it
-        // only once plain propagation has had `jumpAfter` rounds, after
-        // which chain-shaped graphs still converge in O(log diameter). The
-        // checkpoint lets the join read `stepped` once instead of
-        // recomputing the whole round's lineage per side.
-        val next0 =
-          if (i < jumpAfter) stepped
-          else {
-            val s = stepped.localCheckpoint(eager = false)
-            val byId = s.select(col("id").as("j_id"), col("comp").as("j_comp"))
-            s.join(byId, s("comp") === col("j_id"), "left")
-              .select(s("id"), s("old_comp"),
-                least(s("comp"), coalesce(col("j_comp"), s("comp"))).as("comp"))
-          }
-        val next = next0.localCheckpoint(eager = false)
-        // the ONE action of the round: materializes the checkpoint and
-        // computes the convergence counter in the same pass
-        changed = next.agg(count(when(col("comp") =!= col("old_comp"), 1)))
-          .collect()(0).getLong(0)
-        labels = next.select("id", "comp")
-        i += 1
-      }
-      if (changed > 0)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIter rounds")
-      labels
-    } finally edges.unpersist()
+      .stagePersist()
+    // seed labels with the first propagation fused in (min over self and
+    // direct neighbors) — initial comp(id)=id makes round 1 a plain groupBy
+    var labels = edges.groupBy(col("src").as("id"))
+      .agg(min(col("dst")).as("__m"))
+      .select(col("id"), least(col("id"), col("__m")).as("comp"))
+      .localCheckpoint()
+    var changed = 1L
+    var i = 0
+    while (changed > 0 && i < maxIter) {
+      // fused round: each edge forwards comp(src) to dst (edges are
+      // bidirectional, so neighbor minima flow both ways) and the union
+      // with the self rows min-aggregates — ONE shuffle join + ONE
+      // partial-aggregating groupBy. The self row doubles as the
+      // old-label carrier for the convergence counter; every node has
+      // exactly one (labels are seeded from both edge endpoints).
+      val msgs = edges
+        .join(labels.select(col("id").as("src_id"), col("comp")),
+          col("src") === col("src_id"))
+        .select(col("dst").as("id"), col("comp").as("cand"),
+          // typed to the actual label column so non-long id types don't
+          // get widened (or rejected) by the union
+          lit(null).cast(labels.schema("comp").dataType).as("self_comp"))
+      val self = labels.select(col("id"), col("comp").as("cand"),
+        col("comp").as("self_comp"))
+      val stepped = msgs.union(self).groupBy("id")
+        .agg(min(col("cand")).as("comp"), min(col("self_comp")).as("old_comp"))
+      // pointer jump (comp := comp(comp)) halves label paths, but its
+      // node-sized self-join is pure overhead on the near-clique graphs
+      // dup clusters actually form (done in 2-3 plain rounds) — engage it
+      // only once plain propagation has had `jumpAfter` rounds, after
+      // which chain-shaped graphs still converge in O(log diameter). The
+      // checkpoint lets the join read `stepped` once instead of
+      // recomputing the whole round's lineage per side.
+      val next0 =
+        if (i < jumpAfter) stepped
+        else {
+          val s = stepped.localCheckpoint(eager = false)
+          val byId = s.select(col("id").as("j_id"), col("comp").as("j_comp"))
+          s.join(byId, s("comp") === col("j_id"), "left")
+            .select(s("id"), s("old_comp"),
+              least(s("comp"), coalesce(col("j_comp"), s("comp"))).as("comp"))
+        }
+      val next = next0.localCheckpoint(eager = false)
+      // the ONE action of the round: materializes the checkpoint and
+      // computes the convergence counter in the same pass
+      changed = next.agg(count(when(col("comp") =!= col("old_comp"), 1)))
+        .collect()(0).getLong(0)
+      labels = next.select("id", "comp")
+      i += 1
+    }
+    if (changed > 0)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds")
+    labels
   }
 
   /** Corpus-level repeated-window removal — the substring-dedup step of
@@ -607,21 +606,22 @@ object Dedup {
     *     HERE (the estimate errs toward the direct path — harmless; real
     *     clone groups are byte-identical texts and hash equal), while
     *     [[dupCollapsedPairs]] keeps the exact sorted key;
-    *   - the decision memoizes on the frame's canonicalized plan, released
-    *     with the staging frames ([[Staging.releaseAll]]): the gate
-    *     queries probe the SAME staged shingle frame several times per
-    *     query (twin pair sets, warm + measured bench runs), and a memo
-    *     hit costs zero jobs. Same-canonical-plan ⇒ same source data
-    *     within a release window, and even a stale hit could only pick
-    *     the other output-identical plan.
+    *   - the decision memoizes on the frame's canonicalized plan in the
+    *     current staging scope ([[Staging.probe]]) and is released with
+    *     that scope's frames: the gate queries probe the SAME staged
+    *     shingle frame several times per query (twin pair sets, warm +
+    *     measured bench runs in one harness scope), and a memo hit costs
+    *     zero jobs. Same-canonical-plan ⇒ same source data within one
+    *     scope, and even a stale hit could only pick the other
+    *     output-identical plan.
     */
   private def heavyDupSetMass(sh: DataFrame): Boolean =
-    Staging.probeMemo.getOrElseUpdate(sh.queryExecution.analyzed.canonicalized, {
+    Staging.probe(sh) {
       val r = sh.agg(count(lit(1)).as("n"),
         approx_count_distinct(xxhash64(col("sh"))).as("d")).head()
       val n = r.getLong(0)
       n > 0L && r.getLong(1).toDouble / n <= 0.75
-    })
+    }
 
   /** The sorted per-document shingle-DIGEST array — identical shingle
     * sets (in any order; `sh` is first-occurrence-ordered) produce equal

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Staging.Stageable
 
 /** Compaction for the persisted incremental indices ([[IncrementalDedup]],
   * [[IncrementalAnn]]) — the small-files countermeasure every append-only
@@ -244,6 +245,9 @@ object IndexMaintenance {
     * [[IncrementalAnn]], [[IvfIndex]], and the compactions below) wraps
     * its body in this. The root heals once, under the lease, before the
     * body runs, so every body sees consistent stores at their live paths.
+    * The body runs in a [[Staging.scoped]] scope of its own: the frames
+    * it stages are released once its writes are done, whether or not
+    * the caller has a scope open.
     */
   def withWriterLease[A](spark: SparkSession, root: String,
       leaseMs: Long = 10 * 60 * 1000L)(body: => A): A = {
@@ -251,7 +255,7 @@ object IndexMaintenance {
     acquireLease(spark, root, writerId, leaseMs)
     try {
       healRoot(spark, root)
-      val r = body
+      val r = Staging.scoped(body)
       bumpGeneration(spark, root, writerId)
       r
     } finally releaseLease(spark, root)
@@ -537,19 +541,17 @@ object IndexMaintenance {
     * interrupted retraction appends duplicate rows, which the anti-join
     * read ignores and vacuum drops.
     */
-  def addTombstones(root: String, ids: DataFrame): Unit = {
+  def addTombstones(root: String, ids: DataFrame): Unit = Staging.scoped {
     require(ids.columns.length == 1,
       s"tombstone frame must have exactly one id column, got " +
         ids.columns.mkString("(", ", ", ")"))
     val t = ids.select(col(ids.columns.head).as("id")).distinct()
-      .coalesce(1).persist()
-    try {
-      // an empty retraction is a no-op — writing it would leave a
-      // zero-file parquet dir that breaks every later tombstone read
-      // ("unable to infer schema"), poisoning the whole index
-      if (!t.isEmpty)
-        t.write.mode("append").parquet(tombstonePath(root).toString)
-    } finally t.unpersist(false)
+      .coalesce(1).stagePersist()
+    // an empty retraction is a no-op — writing it would leave a
+    // zero-file parquet dir that breaks every later tombstone read
+    // ("unable to infer schema"), poisoning the whole index
+    if (!t.isEmpty)
+      t.write.mode("append").parquet(tombstonePath(root).toString)
   }
 
   /** The tombstone id set at `root`, if any retraction has happened. */

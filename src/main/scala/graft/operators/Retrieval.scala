@@ -91,19 +91,24 @@ object Retrieval {
   }
 
   /** The top-k tail over a (doc_id, dl, su) frame: TakeOrdered(k) on
-    * (su desc, doc_id), then the rank over the bounded k-row result only
-    * (a single-partition window on ≤ k rows — never on the corpus), with
-    * the quantized sum replayed to a double score (su / 1e9).
+    * (su desc, doc_id), then [[rankBounded]] over the k-row result only,
+    * with the quantized sum replayed to a double score (su / 1e9).
     */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame =
-    scored.orderBy(col("su").desc, col("doc_id"))
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("su").desc, col("doc_id"))).cast("long"))
+    rankBounded(scored.orderBy(col("su").desc, col("doc_id")).limit(k), "rank")
       .select(col("doc_id"), col("dl"),
         (col("su").cast("double") / lit(1e9d)).as("score"), col("rank"))
       .orderBy("rank")
+
+  /** `sorted` (an `orderBy(...).limit(k)` result) with `rankCol`, its
+    * rows' positions from 1. The limit runs as one sorted partition
+    * (TakeOrderedAndProject), so `monotonically_increasing_id` counts the
+    * rows in rank order. A `row_number()` window would give the same
+    * numbers, but with no partition it logs a "No Partition Defined"
+    * warning on every call.
+    */
+  private def rankBounded(sorted: DataFrame, rankCol: String): DataFrame =
+    sorted.withColumn(rankCol, monotonically_increasing_id() + 1L)
 
   /** The per-query top-k tail over a (query_id, doc_id, dl, su) frame:
     * the per-group window top-k shape, over CANDIDATE rows only.
@@ -1293,12 +1298,7 @@ object Retrieval {
     val fused = left.join(right, Seq("id"), "full_outer")
       .select(col("id"),
         (contrib(col("rank_a")) + contrib(col("rank_b"))).as("su"))
-    fused
-      .orderBy(col("su").desc, col("id"))
-      .limit(k)
-      .withColumn("rrf_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("su").desc, col("id"))).cast("long"))
+    rankBounded(fused.orderBy(col("su").desc, col("id")).limit(k), "rrf_rank")
       .select(col("id"), (col("su").cast("double") / lit(1e9d)).as("rrf"),
         col("rrf_rank"))
       .orderBy("rrf_rank")

@@ -3,61 +3,108 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Registry for persisted STAGING frames.
+import scala.jdk.CollectionConverters._
+
+/** Persisted STAGING frames, owned by the scope that staged them.
   *
   * Operators persist narrow projections as a staging BARRIER: Spark
   * re-evaluates non-attribute subexpressions inside higher-order-function
   * lambdas PER ELEMENT, and `CollapseProject` re-inlines a plain
   * `withColumn`/`select` stage, so a persisted projection is the only way
   * to guarantee a token/shingle array is computed once per row. Those
-  * persists are NOT reuse caches — once the query's action has run they
-  * are dead weight, and in a long-lived session (the benchmark harness
-  * runs 77 queries back-to-back) the cached blocks accumulate until the
-  * block manager is all staging residue.
+  * persists are NOT reuse caches: once the query's action has run they
+  * are dead weight, and because Spark keys its cache on the plan, not the
+  * owner, a frame that outlives its query can serve a later query over
+  * the same (since rewritten) path stale data.
   *
-  * Every staging persist therefore routes through [[stage]], and the
-  * harness (Bench / Verify / the embedded API) calls [[releaseAll]] after
-  * the action that consumes the query. `connectedComponents` keeps its own
-  * tighter `finally`-scoped release because its frames die inside the call.
+  * The contract: every staging persist goes through [[stage]], which runs
+  * only inside [[scoped]] and throws with no scope open. A scope owns the
+  * frames staged on its thread while it is the innermost open scope,
+  * together with their [[probe]] memo, and unpersists both when it exits,
+  * normally or by a throw. A method that ends in its own action opens a
+  * scope (index writes through `IndexMaintenance.withWriterLease`, an
+  * ingest micro-batch); a method that returns a lazy DataFrame stages
+  * into its caller's scope, which stays open until that frame's last
+  * action. Bench, Verify and ScaleBench open one scope per query key.
+  *
+  * Scopes are not inherited: the current scope is a plain `ThreadLocal`,
+  * so a pool thread started inside a scope (`IndexMaintenance.inParallelAll`)
+  * never stages into it and opens its own. Other threads may still READ a
+  * scope's frames while it is open.
   */
 object Staging {
 
-  private val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
-
-  /** Persist `df` as a staging frame and register it for release. */
-  def stage(df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    synchronized {
-      val p = df.persist(level)
-      live += p
-      p
-    }
-
-  /** Plan-keyed memo for PROBE decisions (plan-choice booleans computed
-    * by an eager aggregate over a staged frame — `Dedup.heavyDupSetMass`).
-    * Keyed by the frame's canonicalized logical plan, so the twin pair
-    * sets and the warm + measured bench runs of one query hit the same
-    * entry instead of re-running the probe job. Lives and dies with the
-    * staging frames: [[releaseAll]] clears it, so no decision outlives
-    * the query that computed it. A memoized value only ever selects
-    * between output-identical plans — never data.
-    */
-  private[operators] val probeMemo =
-    scala.collection.concurrent.TrieMap
+  /** The frames and probe decisions of one [[scoped]] call. */
+  final class Scope private[Staging] (private[Staging] val outer: Scope) {
+    private[Staging] val owned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    private[Staging] val memo = scala.collection.concurrent.TrieMap
       .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Boolean]
 
-  /** Unpersist every staging frame registered since the last release.
-    * Non-blocking: eviction proceeds in the background while the next
-    * query plans.
-    */
-  def releaseAll(): Unit = synchronized {
-    live.foreach(_.unpersist(false))
-    live.clear()
-    probeMemo.clear()
+    /** The frames this scope persisted and still owns. */
+    private[graft] def frames: Seq[DataFrame] = owned.asScala.toList
+
+    private[graft] def memoSize: Int = memo.size
   }
 
-  /** Number of currently-registered staging frames (for tests). */
-  def liveCount: Int = synchronized(live.size)
+  private val current = new ThreadLocal[Scope]
+  private val open = java.util.concurrent.ConcurrentHashMap.newKeySet[Scope]()
+
+  /** Runs `body` in a new innermost scope on this thread and releases the
+    * scope's frames (non-blocking) and probe memo when `body` exits.
+    */
+  def scoped[T](body: => T): T = {
+    val s = new Scope(current.get)
+    current.set(s)
+    open.add(s)
+    try body
+    finally {
+      current.set(s.outer)
+      open.remove(s)
+      s.owned.asScala.foreach(_.unpersist(false))
+      s.owned.clear()
+      s.memo.clear()
+    }
+  }
+
+  /** The innermost open scope on this thread. */
+  private[graft] def currentScope: Scope = {
+    val s = current.get
+    if (s == null)
+      throw new IllegalStateException("staging needs an open scope: wrap " +
+        "the call and the actions over its result in Staging.scoped { ... }")
+    s
+  }
+
+  /** Persist `df` as a staging frame of the current scope. A plan that is
+    * already cached (by this or an enclosing scope, e.g. the warm run of
+    * the same query) is read from that cache, not persisted again, so
+    * only its owner releases it.
+    */
+  def stage(df: DataFrame,
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+    val s = currentScope
+    if (df.storageLevel == StorageLevel.NONE) s.owned.add(df.persist(level))
+    df
+  }
+
+  /** Memo for PROBE decisions (plan-choice booleans computed by an eager
+    * aggregate over a staged frame — `Dedup.heavyDupSetMass`), keyed by
+    * the frame's canonicalized plan and owned by the current scope: the
+    * twin pair sets and the warm + measured bench runs of one query hit
+    * one entry, and no decision outlives the frames it was computed over.
+    * A memoized value only ever selects between output-identical plans.
+    */
+  private[operators] def probe(df: DataFrame)(compute: => Boolean): Boolean =
+    currentScope.memo.getOrElseUpdate(df.queryExecution.analyzed.canonicalized, compute)
+
+  /** Number of frames owned by all open scopes, on every thread. */
+  def liveCount: Int = open.asScala.toSeq.map(_.owned.size).sum
+
+  /** Releases nothing: every staged frame belongs to a [[scoped]] call,
+    * which releases it. Kept for callers compiled against the old
+    * JVM-global registry.
+    */
+  def releaseAll(): Unit = ()
 
   /** Parallelism floor for NARROW scans feeding per-row heavy compute.
     *
@@ -104,7 +151,7 @@ object Staging {
   }
 
   /** Postfix form: `df.stagePersist()` reads like the `.persist(...)` it
-    * replaces at the ~20 staging sites.
+    * replaces at the staging sites.
     */
   implicit final class Stageable(private val df: DataFrame) extends AnyVal {
     def stagePersist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =

@@ -423,8 +423,8 @@ object TextAnalysis {
     val occ = df.select(docId.as("doc_id"), explode(toks).as("token"))
       .filter(col("token") =!= "")
     // tf feeds BOTH the score join and the df aggregate — stage it so the
-    // (doc, token) shuffle runs once (Staging rule; released by the caller
-    // harness after the action)
+    // (doc, token) shuffle runs once (Staging rule; released by the
+    // caller's scope after the action)
     val tf = Staging.stage(
       occ.groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
     val dft = tf.groupBy("token").agg(count(lit(1)).as("df"))

@@ -129,7 +129,7 @@ object CompareQueries extends QueryModule {
     // hash proves index route == direct route exactly.
     "q_drift_incremental" -> { (s, dir) =>
       val t = new Tables(s, dir)
-      val idx = Scratch.cached("gramidx", dir) { p =>
+      val idx = SessionScratch.cached("gramidx", dir) { p =>
         CorpusCompare.buildGramIndex(
           t.documents.filter(col("doc_id") % 2 === 0), col("text"), p)
         CorpusCompare.appendToGramIndex(
@@ -153,46 +153,6 @@ object CompareQueries extends QueryModule {
         .orderBy("doc_id")
     }
   )
-
-  /** Session-lifetime scratch dirs for standing indices (the
-    * q_dedup_incremental pattern: a daily increment amortizes one build
-    * across every batch, so repeated invocations measure the CHECK).
-    */
-  private object Scratch {
-    private val built = scala.collection.mutable.Set.empty[String]
-
-    /** First 32 hex chars of SHA-256 over the dir path — appended to the
-      * sanitized name (truncated to its LAST 100 chars so a deep fixture
-      * path cannot push the single filename component past the common
-      * 255-byte limit) so the scratch key stays INJECTIVE: the 128-bit
-      * digest carries the injectivity once the readable prefix is lossy.
-      */
-    private def scratchDigest(dir: String): String =
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(16).map(b => f"${b & 0xff}%02x").mkString
-    def cached(tag: String, dir: String)(build: String => Unit): String =
-      synchronized {
-        // sanitized full path, not hashCode — a 32-bit collision between
-        // two data dirs would silently share one scratch store
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(100) + "_" + scratchDigest(dir)
-        if (!built(path)) {
-          rmTree(path)
-          new java.io.File(path).mkdirs()
-          build(path)
-          built += path
-          Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(path)))
-        }
-        path
-      }
-    private def rmTree(p: String): Unit =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(p))) {
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => java.nio.file.Files.delete(x))
-        finally walk.close()
-      }
-  }
 
   /** The planted-drift snapshot: even vec_ids unchanged, odd vec_ids
     * abs()-transformed (sign bit cleared — bit-exact in both engines).

@@ -159,11 +159,9 @@ object CorpusIngest {
     graft.operators.IndexMaintenance.withWriterLease(spark, indexPath) {
       val fp = docs.select(graft.operators.TextAnalysis
           .canonicalFingerprint(col(textCol)).as("fp"))
-        .distinct().coalesce(1).persist()
-      try {
-        if (!fp.isEmpty)
-          fp.write.mode("append").parquet(s"$indexPath/$BannedStore")
-      } finally fp.unpersist(false)
+        .distinct().coalesce(1).stagePersist()
+      if (!fp.isEmpty)
+        fp.write.mode("append").parquet(s"$indexPath/$BannedStore")
     }
   }
 
@@ -273,9 +271,11 @@ object CorpusIngest {
       } else src0
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexPath, sinkPath, idCol, textCol,
-          jaccardThreshold, params, bannedNeedles, maintain,
-          lineage = lineageOf(checkpointPath), autoCompact = autoCompact)
+        // staging frames (shingles, signatures, candidates) die with the
+        // batch — a 10k-batch ingest must not accumulate 10k persists
+        Staging.scoped(ingestBatch(batch, batchId, indexPath, sinkPath,
+          idCol, textCol, jaccardThreshold, params, bannedNeedles, maintain,
+          lineage = lineageOf(checkpointPath), autoCompact = autoCompact))
       }
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.AvailableNow())
@@ -285,8 +285,9 @@ object CorpusIngest {
   }
 
   /** One micro-batch: dedup against the index, publish survivors
-    * idempotently, append them to the index. Package-visible so the spec
-    * can replay a committed batch and pin the at-least-once story.
+    * idempotently, append them to the index. Stages into the caller's
+    * scope (the stream opens one per micro-batch). Package-visible so the
+    * spec can replay a committed batch and pin the at-least-once story.
     */
   private[graft] def ingestBatch(batch0: DataFrame, batchId: Long,
       indexPath: String, sinkPath: String, idCol: String, textCol: String,
@@ -331,21 +332,25 @@ object CorpusIngest {
       if (!batch0.isEmpty)
         batch0.limit(0).write.mode("overwrite")
           .parquet(s"$sinkPath/batch=$batchId")
-      Staging.releaseAll(); return
+      return
     }
     val spark = batch.sparkSession
     val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(indexPath, "params")))
       IncrementalDedup.buildIndex(batch.limit(0), idCol, textCol, indexPath, params)
-    try {
-      // the batch signs ONCE: the staged (id, sh, sig) frame feeds the
-      // pair search, and the survivor append reuses it — a standalone
-      // newKeepList + appendBatch sequence would re-shingle and re-sign
-      // the survivors
-      // params are pinned at build time — one read per index per (path,
-      // params mtime); a same-JVM rebuild is picked up via the mtime key
-      val p = cachedParams(spark, indexPath)
-      val base = IncrementalDedup.signed(batch, idCol, textCol, p)
+    // the batch signs ONCE: the staged (id, sh, sig) frame feeds the
+    // pair search, and the survivor append reuses it — a standalone
+    // newKeepList + appendBatch sequence would re-shingle and re-sign
+    // the survivors
+    // params are pinned at build time — one read per index per (path,
+    // params mtime); a same-JVM rebuild is picked up via the mtime key
+    val p = cachedParams(spark, indexPath)
+    val base = IncrementalDedup.signed(batch, idCol, textCol, p)
+    // the pair search's frames read the index stores the appends below
+    // write, so they get a scope of their own, closed once the keep list
+    // is published: a frame still cached at an append would be recached
+    // by the write for nobody to read
+    Staging.scoped {
       // staged: the keep-list derivation consumes the pair set three
       // times (both drop directions + the batch-internal exemption) —
       // unpersisted, the exact-Jaccard verify join would re-run for each
@@ -353,99 +358,96 @@ object CorpusIngest {
         jaccardThreshold).stagePersist()
       IncrementalDedup.keepListFromPairs(batch, idCol, pairs)
         .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-      // append the survivors' already-staged rows, identified from the
-      // sink read-back (the write above is the materialization point —
-      // measured: broadcasting a CACHED keep list instead re-derives the
-      // keep plan inside the broadcast build and costs 5× the tiny read);
-      // schema pinned from the batch so the read skips footer inference
-      val kept = spark.read.schema(batch.schema)
-        .parquet(s"$sinkPath/batch=$batchId")
-      val keptIds = kept.select(col(idCol).as("id"))
-      // The core index append and every standing-store FAMILY append
-      // mutate DISJOINT roots under their own leases — mutually
-      // order-free, so they overlap (inParallelAll, the §2.6 rule the
-      // paired writes already use) instead of summing up to six
-      // job-scheduling + commit latencies per micro-batch. Each family's
-      // INTERNAL build-if-missing → append order is preserved inside its
-      // thunk — those orderings are crash-recovery invariants.
-      val appends = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-      appends += (() => IncrementalDedup.appendSigned(
-        base.join(broadcast(keptIds), Seq("id"), "left_semi"),
-        indexPath, p))
-      // keep the configured standing indices current with the same
-      // survivors (sink text, so canonical when the ingest is). Skipped
-      // for a batch with no survivors — an append that CREATES a store
-      // from an empty frame could leave an unreadable zero-file dir.
-      if (maintain.any && !kept.isEmpty) {
-        // KEYED append: the postings ptotals row is a count with no
-        // replay identity once a compaction has summed it — the
-        // batch-keyed form keeps the at-least-once window safe even when
-        // the auto-compaction below folds the triggering batch before a
-        // crash-and-replay
-        maintain.postingsPath.foreach { mp =>
-          appends += (() => graft.operators.Retrieval
-            .appendToPostingsIndexKeyed(kept, idCol, textCol, mp, batchId,
-              lineage))
-        }
-        maintain.gramPostingsPath.foreach { mp =>
-          appends += (() => {
-            if (!fs.exists(new Path(mp, "gparams")))
-              graft.operators.Decontaminate.buildGramPostingsIndex(
-                kept, idCol, textCol, mp, maintain.gramN)
-            else
-              graft.operators.Decontaminate.appendToGramPostingsIndex(
-                kept, idCol, textCol, mp)
-          })
-        }
-        maintain.positionsPath.foreach { mp =>
-          appends += (() => graft.operators.Retrieval
-            .appendToPositionalIndex(kept, idCol, textCol, mp))
-        }
-        // the COUNTED stores append batch-id-KEYED (overwrite-own-delta,
-        // lineage-namespaced), so an at-least-once replay cannot
-        // double-count; bootstrap is an empty build (schema + store
-        // dirs), idempotent under replay too. The bootstrap probe checks
-        // the RESOLVED store: a compaction crashed mid-swap leaves the
-        // live store dir absent (marker + staged present), and a plain
-        // exists() would misread a full store as unbuilt — the empty
-        // build's overwrite would then WIPE the history. The keyed
-        // append's own lease rolls the swap forward.
-        def built(root: String, store: String): Boolean = fs.exists(
-          new Path(graft.operators.IndexMaintenance.storePath(spark, root, store)))
-        maintain.termStatsPath.foreach { mp =>
-          appends += (() => {
-            if (!built(mp, "terms"))
-              graft.operators.Retrieval.buildTermStatsIndex(
-                kept.limit(0), idCol, textCol, mp)
-            graft.operators.Retrieval.appendToTermStatsIndexKeyed(
-              kept, idCol, textCol, mp, batchId, lineage)
-          })
-        }
-        maintain.driftGramsPath.foreach { mp =>
-          appends += (() => {
-            if (!built(mp, "grams"))
-              graft.operators.CorpusCompare.buildGramIndex(
-                kept.limit(0), col(textCol), mp)
-            graft.operators.CorpusCompare.appendToGramIndexKeyed(
-              kept, col(textCol), mp, batchId, lineage)
-          })
-        }
+    }
+    // append the survivors' already-staged rows, identified from the
+    // sink read-back (the write above is the materialization point —
+    // measured: broadcasting a CACHED keep list instead re-derives the
+    // keep plan inside the broadcast build and costs 5× the tiny read);
+    // schema pinned from the batch so the read skips footer inference
+    val kept = spark.read.schema(batch.schema)
+      .parquet(s"$sinkPath/batch=$batchId")
+    val keptIds = kept.select(col(idCol).as("id"))
+    // The core index append and every standing-store FAMILY append
+    // mutate DISJOINT roots under their own leases — mutually
+    // order-free, so they overlap (inParallelAll, the §2.6 rule the
+    // paired writes already use) instead of summing up to six
+    // job-scheduling + commit latencies per micro-batch. Each family's
+    // INTERNAL build-if-missing → append order is preserved inside its
+    // thunk — those orderings are crash-recovery invariants.
+    val appends = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    appends += (() => IncrementalDedup.appendSigned(
+      base.join(broadcast(keptIds), Seq("id"), "left_semi"),
+      indexPath, p))
+    // keep the configured standing indices current with the same
+    // survivors (sink text, so canonical when the ingest is). Skipped
+    // for a batch with no survivors — an append that CREATES a store
+    // from an empty frame could leave an unreadable zero-file dir.
+    if (maintain.any && !kept.isEmpty) {
+      // KEYED append: the postings ptotals row is a count with no
+      // replay identity once a compaction has summed it — the
+      // batch-keyed form keeps the at-least-once window safe even when
+      // the auto-compaction below folds the triggering batch before a
+      // crash-and-replay
+      maintain.postingsPath.foreach { mp =>
+        appends += (() => graft.operators.Retrieval
+          .appendToPostingsIndexKeyed(kept, idCol, textCol, mp, batchId,
+            lineage))
       }
-      graft.operators.IndexMaintenance.inParallelAll(appends.toSeq)
-      // AUTOMATIC MAINTENANCE: fold the appended deltas when the policy
-      // says so — per family, under each compactor's own lease, after the
-      // batch's appends (so the triggering batch's rows fold too). Runs
-      // inside the foreachBatch: abort-safe by the lease, crash-safe by
-      // the marker swap, and a replayed triggering batch re-compacts
-      // idempotently (the keyed stores' folded ledger keeps counts exact
-      // across the replay). Each family probes its own representative
-      // store so a threshold policy only pays for the family over it.
-      if (autoCompact.enabled)
-        maybeCompactSuite(spark, batchId, indexPath, maintain, autoCompact)
-    } finally
-      // staging frames (shingles, signatures, candidates) die with the
-      // batch — a 10k-batch ingest must not accumulate 10k persists
-      Staging.releaseAll()
+      maintain.gramPostingsPath.foreach { mp =>
+        appends += (() => {
+          if (!fs.exists(new Path(mp, "gparams")))
+            graft.operators.Decontaminate.buildGramPostingsIndex(
+              kept, idCol, textCol, mp, maintain.gramN)
+          else
+            graft.operators.Decontaminate.appendToGramPostingsIndex(
+              kept, idCol, textCol, mp)
+        })
+      }
+      maintain.positionsPath.foreach { mp =>
+        appends += (() => graft.operators.Retrieval
+          .appendToPositionalIndex(kept, idCol, textCol, mp))
+      }
+      // the COUNTED stores append batch-id-KEYED (overwrite-own-delta,
+      // lineage-namespaced), so an at-least-once replay cannot
+      // double-count; bootstrap is an empty build (schema + store
+      // dirs), idempotent under replay too. The bootstrap probe checks
+      // the RESOLVED store: a compaction crashed mid-swap leaves the
+      // live store dir absent (marker + staged present), and a plain
+      // exists() would misread a full store as unbuilt — the empty
+      // build's overwrite would then WIPE the history. The keyed
+      // append's own lease rolls the swap forward.
+      def built(root: String, store: String): Boolean = fs.exists(
+        new Path(graft.operators.IndexMaintenance.storePath(spark, root, store)))
+      maintain.termStatsPath.foreach { mp =>
+        appends += (() => {
+          if (!built(mp, "terms"))
+            graft.operators.Retrieval.buildTermStatsIndex(
+              kept.limit(0), idCol, textCol, mp)
+          graft.operators.Retrieval.appendToTermStatsIndexKeyed(
+            kept, idCol, textCol, mp, batchId, lineage)
+        })
+      }
+      maintain.driftGramsPath.foreach { mp =>
+        appends += (() => {
+          if (!built(mp, "grams"))
+            graft.operators.CorpusCompare.buildGramIndex(
+              kept.limit(0), col(textCol), mp)
+          graft.operators.CorpusCompare.appendToGramIndexKeyed(
+            kept, col(textCol), mp, batchId, lineage)
+        })
+      }
+    }
+    graft.operators.IndexMaintenance.inParallelAll(appends.toSeq)
+    // AUTOMATIC MAINTENANCE: fold the appended deltas when the policy
+    // says so — per family, under each compactor's own lease, after the
+    // batch's appends (so the triggering batch's rows fold too). Runs
+    // inside the foreachBatch: abort-safe by the lease, crash-safe by
+    // the marker swap, and a replayed triggering batch re-compacts
+    // idempotently (the keyed stores' folded ledger keeps counts exact
+    // across the replay). Each family probes its own representative
+    // store so a threshold policy only pays for the family over it.
+    if (autoCompact.enabled)
+      maybeCompactSuite(spark, batchId, indexPath, maintain, autoCompact)
   }
 
   /** Run every due compaction for the document ingest's store families —

@@ -66,11 +66,9 @@ object EmbeddingIngest {
     IndexMaintenance.withWriterLease(spark, indexPath) {
       val fp = vecs
         .select(xxhash64(col(vecCol).cast("array<double>")).as("fp"))
-        .distinct().coalesce(1).persist()
-      try {
-        if (!fp.isEmpty)
-          fp.write.mode("append").parquet(s"$indexPath/$BannedStore")
-      } finally fp.unpersist(false)
+        .distinct().coalesce(1).stagePersist()
+      if (!fp.isEmpty)
+        fp.write.mode("append").parquet(s"$indexPath/$BannedStore")
     }
 
   /** The full vector TAKEDOWN: tombstone the ids out of the signature
@@ -133,8 +131,9 @@ object EmbeddingIngest {
       .parquet(srcDir)
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexPath, sinkPath, idCol, vecCol,
-          dim, threshold, numPlanes, numTables, ivfPath, autoCompact)
+        // the batch's staged projections die with it
+        Staging.scoped(ingestBatch(batch, batchId, indexPath, sinkPath, idCol,
+          vecCol, dim, threshold, numPlanes, numTables, ivfPath, autoCompact))
       }
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.AvailableNow())
@@ -145,7 +144,9 @@ object EmbeddingIngest {
 
   /** One micro-batch: dedup against the signature index, publish
     * survivors idempotently, append them to every maintained store.
-    * Package-visible so the spec can replay a committed batch.
+    * Stages into the caller's scope (the stream opens one per
+    * micro-batch). Package-visible so the spec can replay a committed
+    * batch.
     */
   private[graft] def ingestBatch(batch: DataFrame, batchId: Long,
       indexPath: String, sinkPath: String, idCol: String, vecCol: String,
@@ -173,54 +174,55 @@ object EmbeddingIngest {
     if (!fs.exists(new Path(indexPath, "params")))
       IncrementalAnn.buildIndex(batch0.limit(0), idCol, vecCol, dim,
         indexPath, numPlanes = numPlanes, numTables = numTables)
-    try {
-      // the batch projects ONCE: the staged (id, vec) + full-width
-      // signature frames feed the pair search AND the survivor append
-      // (the document ingest's signed-frame rule — the old appendBatch
-      // re-read params and re-projected survivors against every table)
-      val p = IncrementalAnn.readParams(spark, indexPath)
-      val (d, sigsFull) = IncrementalAnn.stagedSigs(batch0, idCol, vecCol, p)
-      // exact-cosine-verified pairs of the batch vs the index and within
-      // the batch; the greedy keep-list derivation is SHARED with the
-      // document ingest (it only consumes (id_a, id_b) pairs)
+    // the batch projects ONCE: the staged (id, vec) + full-width
+    // signature frames feed the pair search AND the survivor append
+    // (the document ingest's signed-frame rule — the old appendBatch
+    // re-read params and re-projected survivors against every table)
+    val p = IncrementalAnn.readParams(spark, indexPath)
+    val (d, sigsFull) = IncrementalAnn.stagedSigs(batch0, idCol, vecCol, p)
+    // exact-cosine-verified pairs of the batch vs the index and within
+    // the batch; the greedy keep-list derivation is SHARED with the
+    // document ingest (it only consumes (id_a, id_b) pairs). Scoped as in
+    // the document ingest: these frames read the stores appended below.
+    Staging.scoped {
       val pairs = IncrementalAnn.newBatchPairsFromSigs(d, sigsFull,
         indexPath, p, threshold).stagePersist()
       IncrementalDedup.keepListFromPairs(batch0, idCol, pairs)
         .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-      // survivors re-read from the sink (the materialization point — the
-      // document ingest's measured rule); schema pinned from the batch so
-      // the read skips footer inference
-      val kept = spark.read.schema(batch0.schema)
-        .parquet(s"$sinkPath/batch=$batchId")
-      if (!kept.isEmpty) {
-        // LSH store and IVF store are disjoint roots under their own
-        // leases — mutually order-free appends overlap (the §2.6 rule the
-        // document ingest's suite appends use)
-        graft.operators.IndexMaintenance.inParallelAll(Seq(
-          () => IncrementalAnn.appendStaged(d, sigsFull,
-            kept.select(col(idCol).as("id")), indexPath)) ++
-          ivfPath.map(p2 => () =>
-            IvfIndex.appendBatch(kept, idCol, vecCol, p2)))
+    }
+    // survivors re-read from the sink (the materialization point — the
+    // document ingest's measured rule); schema pinned from the batch so
+    // the read skips footer inference
+    val kept = spark.read.schema(batch0.schema)
+      .parquet(s"$sinkPath/batch=$batchId")
+    if (!kept.isEmpty) {
+      // LSH store and IVF store are disjoint roots under their own
+      // leases — mutually order-free appends overlap (the §2.6 rule the
+      // document ingest's suite appends use)
+      graft.operators.IndexMaintenance.inParallelAll(Seq(
+        () => IncrementalAnn.appendStaged(d, sigsFull,
+          kept.select(col(idCol).as("id")), indexPath)) ++
+        ivfPath.map(p2 => () =>
+          IvfIndex.appendBatch(kept, idCol, vecCol, p2)))
+    }
+    // automatic maintenance, mirroring the document ingest: fold the
+    // appended deltas when the policy fires, after this batch's appends
+    // (lease-isolated, marker-swap crash-safe, replay re-compacts
+    // idempotently)
+    if (autoCompact.enabled) {
+      def due(root: String, probeStore: String): Boolean = {
+        val files = IndexMaintenance.storeDataFiles(spark, root, probeStore)
+        files > 0 && (autoCompact.batchDue(batchId) ||
+          (autoCompact.fileThreshold > 0 &&
+            files > autoCompact.fileThreshold))
       }
-      // automatic maintenance, mirroring the document ingest: fold the
-      // appended deltas when the policy fires, after this batch's appends
-      // (lease-isolated, marker-swap crash-safe, replay re-compacts
-      // idempotently)
-      if (autoCompact.enabled) {
-        def due(root: String, probeStore: String): Boolean = {
-          val files = IndexMaintenance.storeDataFiles(spark, root, probeStore)
-          files > 0 && (autoCompact.batchDue(batchId) ||
-            (autoCompact.fileThreshold > 0 &&
-              files > autoCompact.fileThreshold))
-        }
-        if (due(indexPath, "sigs"))
-          IndexMaintenance.compactAnnIndex(spark, indexPath,
-            autoCompact.targetFileBytes)
-        ivfPath.foreach { p =>
-          if (due(p, "cells"))
-            IvfIndex.compact(spark, p, autoCompact.targetFileBytes)
-        }
+      if (due(indexPath, "sigs"))
+        IndexMaintenance.compactAnnIndex(spark, indexPath,
+          autoCompact.targetFileBytes)
+      ivfPath.foreach { p =>
+        if (due(p, "cells"))
+          IvfIndex.compact(spark, p, autoCompact.targetFileBytes)
       }
-    } finally Staging.releaseAll()
+    }
   }
 }

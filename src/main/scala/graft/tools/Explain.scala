@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
+import scala.util.control.NonFatal
 
 /** Dev utility: dump the formatted physical plan of driver-contract
   * queries (`runMain graft.tools.Explain <sfDir> [queryName…]`) to audit
@@ -14,8 +15,9 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
-      try SparkEntry.queries(name)(spark, dir).explain("formatted")
-      catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+      try graft.operators.Staging.scoped(
+        SparkEntry.queries(name)(spark, dir).explain("formatted"))
+      catch { case NonFatal(e) => println(s"failed: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -8,9 +8,11 @@ import graft.operators.Dedup
   * `runMain graft.tools.Profile <sfDir>`). Not part of the driver contract.
   */
 object Profile {
+  /** Times `f` in a staging scope of its own, so no stage reads another's
+    * staged frames. */
   def time[A](label: String)(f: => A): A = {
     val t0 = System.nanoTime()
-    val r = f
+    val r = graft.operators.Staging.scoped(f)
     println(f"[profile] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     r
   }

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+import scala.util.control.NonFatal
+import graft.queries.SessionScratch.rmTree
 
 /** Scale-study runner: times a set of contract queries on an arbitrary
   * data directory and reports per-query wall seconds plus a task-skew
@@ -57,10 +59,7 @@ object ScaleBench {
 
   private def standingIndex(tag: String, dir: String)(
       build: String => Unit): String = {
-    // keyed on the SANITIZED FULL PATH, not hashCode: two fixture dirs
-    // colliding on a 32-bit hash would silently share a standing index
-    val idx = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(100) + "_" + scratchDigest(dir)
+    val idx = graft.queries.SessionScratch.pathFor(tag, dir)
     if (standingBuilt.add(idx)) {
       rmTree(idx)
       scratchDirs.add(idx)
@@ -68,25 +67,6 @@ object ScaleBench {
     }
     idx
   }
-
-
-  /** First 32 hex chars of SHA-256 over the dir path — appended to the
-    * sanitized name (truncated to its LAST 100 chars so a deep fixture
-    * path cannot push the single filename component past the common
-    * 255-byte limit) so the scratch key stays INJECTIVE: the 128-bit
-    * digest carries the injectivity once the readable prefix is lossy.
-    */
-  private def scratchDigest(dir: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(16).map(b => f"${b & 0xff}%02x").mkString
-
-  private def rmTree(d: String): Unit =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(d))) {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
 
   /** Scale-only keys with no driver-contract analogue (the contract keys
     * run bounded fixtures; these exercise the write path / path switch on
@@ -868,7 +848,7 @@ object ScaleBench {
     val out = keys.map { name =>
       val fn = extraKeys.getOrElse(name, graft.SparkEntry.queries(name))
       System.err.println(s"[scale] running $name")
-      try {
+      try graft.operators.Staging.scoped {
         force(fn(spark, dir)) // warm: plan + staging caches
         val times = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
@@ -883,10 +863,10 @@ object ScaleBench {
         val warm = times.min
         f"""{"key":"$name","sec":${warm}%.3f,"sec_last":${cold}%.3f,"tasks":$nTasks,"skew_p100_p50":${skew}%.2f}"""
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[scale] FAILED $name: ${e.getMessage}")
           s"""{"key":"$name","sec":-1}"""
-      } finally graft.operators.Staging.releaseAll()
+      }
     }
     println(out.mkString("[", ",\n", "]"))
     spark.stop()

@@ -11,7 +11,7 @@ import graft.operators.CorpusCompare
   * self-consistency (raw == target → every score is exactly 1) and
   * target-recovery behavior.
   */
-class CorpusCompareSpec extends AnyFunSuite {
+class CorpusCompareSpec extends AnyFunSuite with StagingScope {
 
   lazy val spark: SparkSession = SparkTestSession.get
   val dir = "/root/testdata/sf0.001"

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{IncrementalAnn, IncrementalDedup, IvfIndex}
+import graft.queries.SessionScratch.rmTree
+import graft.operators.{IncrementalAnn, IncrementalDedup, IvfIndex, Staging}
 import graft.streaming.EmbeddingIngest
 
 /** Continuous embedding-side hygiene (streaming/EmbeddingIngest.scala):
@@ -14,7 +15,7 @@ import graft.streaming.EmbeddingIngest
   * the sequential incremental fold, greedy first-fit, replay harmless,
   * checkpoint resume drains only new files.
   */
-class EmbeddingIngestSpec extends AnyFunSuite {
+class EmbeddingIngestSpec extends AnyFunSuite with StagingScope {
 
   lazy val spark: SparkSession = SparkTestSession.get
 
@@ -41,13 +42,6 @@ class EmbeddingIngestSpec extends AnyFunSuite {
     val dest = new java.io.File(dir, name)
     java.nio.file.Files.move(part.toPath, dest.toPath)
     assert(dest.setLastModified(mtime))
-  }
-
-  private def rmTree(dir: String): Unit = {
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk.close()
   }
 
   private def keptIds(df: DataFrame): Set[Long] =
@@ -84,14 +78,13 @@ class EmbeddingIngestSpec extends AnyFunSuite {
       IncrementalAnn.buildIndex(f1.take(0).toDF("vec_id", "embedding"),
         "vec_id", "embedding", dim, idx2, numPlanes = 8, numTables = 8)
       var kept = Set.empty[Long]
-      for (batch <- Seq(f1, f2, f3)) {
+      for (batch <- Seq(f1, f2, f3)) Staging.scoped {
         val b = batch.toDF("vec_id", "embedding")
         val pairs = IncrementalAnn.newBatchPairs(b, "vec_id", "embedding",
           idx2, threshold = 0.9)
         val keep = IncrementalDedup.keepListFromPairs(b, "vec_id", pairs)
         kept ++= keptIds(keep)
         IncrementalAnn.appendBatch(keep, "vec_id", "embedding", idx2)
-        graft.operators.Staging.releaseAll()
       }
       assert(kept == expectedKept, s"sequential fold kept ${kept.toSeq.sorted}")
     } finally rmTree(root)
@@ -118,11 +111,12 @@ class EmbeddingIngestSpec extends AnyFunSuite {
       val after = graft.streaming.CorpusIngest.survivors(spark, s"$root/sink",
         Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding").schema)
       assert(keptIds(after) == Set(1L, 2L, 12L), "replay changed the sink")
-      val probe = IncrementalAnn.newBatchPairs(
-        Seq(31L -> basis(0), 32L -> basis(6)).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", s"$root/idx", threshold = 0.9)
-      val dropped = probe.select("id_b").collect().map(_.getLong(0)).toSet
-      graft.operators.Staging.releaseAll()
+      val dropped = Staging.scoped {
+        IncrementalAnn.newBatchPairs(
+          Seq(31L -> basis(0), 32L -> basis(6)).toDF("vec_id", "embedding"),
+          "vec_id", "embedding", s"$root/idx", threshold = 0.9)
+          .select("id_b").collect().map(_.getLong(0)).toSet
+      }
       assert(dropped == Set(31L), "duplicated index rows changed a decision")
 
       // resume: only the new file drains; published batches untouched
@@ -179,11 +173,11 @@ class EmbeddingIngestSpec extends AnyFunSuite {
         "banned vector must not reach the signature index")
       // and the retracted id never ranks: a probe for basis(0) sees only
       // surviving content
-      val probe = IncrementalAnn.topK(
-        Seq(999L -> basis(0)).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", s"$root/idx", k = 3)
-        .select("n_id").collect().map(_.getLong(0)).toSet
-      graft.operators.Staging.releaseAll()
+      val probe = Staging.scoped {
+        IncrementalAnn.topK(Seq(999L -> basis(0)).toDF("vec_id", "embedding"),
+          "vec_id", "embedding", s"$root/idx", k = 3)
+          .select("n_id").collect().map(_.getLong(0)).toSet
+      }
       assert(!probe.contains(1L) && !probe.contains(41L),
         s"retracted/banned content ranked: $probe")
     } finally rmTree(root)
@@ -215,10 +209,11 @@ class EmbeddingIngestSpec extends AnyFunSuite {
         s"cell store holds $cellIds")
       // and a probe for basis(0) finds the kept vector 1 (never the
       // dropped clones/near-dups, which were never assigned)
-      val top = IvfIndex.topK(Seq(999L -> basis(0)).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", s"$root/ivf", k = 1, nprobe = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      graft.operators.Staging.releaseAll()
+      val top = Staging.scoped {
+        IvfIndex.topK(Seq(999L -> basis(0)).toDF("vec_id", "embedding"),
+          "vec_id", "embedding", s"$root/ivf", k = 1, nprobe = 4)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      }
       assert(top.nonEmpty && Set(1L, 900L).contains(top.head._2),
         s"probe found ${top.headOption}") // 900 is the seed clone of basis(0)
       // a missing IVF store fails loudly BEFORE the stream starts
@@ -256,17 +251,14 @@ class EmbeddingIngestSpec extends AnyFunSuite {
       val ctrl = drain("c", IndexMaintenance.AutoCompactPolicy())
       assert(keptIds(auto) == expectedKept && keptIds(ctrl) == expectedKept)
       // both ANN routes answer identically across the compaction
-      def probes(tag: String): Seq[(Long, Long)] = {
+      def probes(tag: String): Seq[(Long, Long)] = Staging.scoped {
         val q = Seq(999L -> basis(0)).toDF("vec_id", "embedding")
-        val r =
-          IncrementalAnn.topK(q, "vec_id", "embedding",
-            s"$root/idx_$tag", k = 2)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ++
-          IvfIndex.topK(q, "vec_id", "embedding", s"$root/ivf_$tag",
-            k = 2, nprobe = 4)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        graft.operators.Staging.releaseAll()
-        r
+        IncrementalAnn.topK(q, "vec_id", "embedding",
+          s"$root/idx_$tag", k = 2)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ++
+        IvfIndex.topK(q, "vec_id", "embedding", s"$root/ivf_$tag",
+          k = 2, nprobe = 4)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       }
       assert(probes("a") == probes("c"),
         "compacted ANN/IVF stores must answer identically to uncompacted")

@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SessionScratch.rmTree
 import graft.sources.Etl
 
 /** Golden round-trip tests for the ETL write commands (upstream
   * `tweak.etl`): every command is a distributed rewrite + atomic
   * directory swap, and the post-state must read back exactly.
   */
-class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with StagingScope {
 
   lazy val spark = SparkTestSession.get
   val dir = "/root/testdata/sf0.001"
@@ -24,12 +25,7 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     etl
   }
 
-  override def afterAll(): Unit = scratch.foreach { d =>
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk.close()
-  }
+  override def afterAll(): Unit = scratch.foreach(rmTree)
 
   test("copy + read round-trips exactly") {
     val etl = freshEtl()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SessionScratch.rmTree
 import graft.operators.{Decontaminate, IncrementalDedup, IndexMaintenance, Retrieval, Staging}
 
 /** Concurrent-writer protection for the persisted-index family — the ETL
@@ -14,7 +15,7 @@ import graft.operators.{Decontaminate, IncrementalDedup, IndexMaintenance, Retri
   * Readers take no lease and change nothing under the root, so they may
   * run beside any writer.
   */
-class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with StagingScope {
 
   lazy val spark = SparkTestSession.get
   val dir = "/root/testdata/sf0.001"
@@ -27,14 +28,7 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     p
   }
 
-  override def afterAll(): Unit = scratch.foreach { d =>
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(d))) {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
-  }
+  override def afterAll(): Unit = scratch.foreach(rmTree)
 
   private def docs = spark.read.parquet(s"$dir/documents.parquet")
     .limit(200)

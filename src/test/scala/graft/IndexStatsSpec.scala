@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SessionScratch.rmTree
 import graft.operators.{IncrementalDedup, IndexMaintenance}
 
 /** The index health surface ([[IndexMaintenance.indexStats]]) — the one
@@ -9,7 +10,7 @@ import graft.operators.{IncrementalDedup, IndexMaintenance}
   * store lifecycle: build, append, retraction, compaction, and the
   * keyed-counted-store bookkeeping columns.
   */
-class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with StagingScope {
 
   lazy val spark = SparkTestSession.get
   val dir = "/root/testdata/sf0.001"
@@ -22,14 +23,7 @@ class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     p
   }
 
-  override def afterAll(): Unit = scratch.foreach { d =>
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(d))) {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
-  }
+  override def afterAll(): Unit = scratch.foreach(rmTree)
 
   private def docs = spark.read.parquet(s"$dir/documents.parquet")
 

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.IncrementalDedup
+import graft.queries.SessionScratch.rmTree
+import graft.operators.{IncrementalDedup, Staging}
 import graft.streaming.CorpusIngest
 
 /** Continuous-ingest corpus hygiene (streaming/CorpusIngest.scala):
@@ -17,7 +18,7 @@ import graft.streaming.CorpusIngest
   * at-least-once window) is harmless: same sink bytes, and the duplicated
   * index rows change no later decision.
   */
-class IngestSpec extends AnyFunSuite {
+class IngestSpec extends AnyFunSuite with StagingScope {
 
   lazy val spark: SparkSession = SparkTestSession.get
 
@@ -56,13 +57,6 @@ class IngestSpec extends AnyFunSuite {
   private def scratch(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_ingest_$tag").toString
 
-  private def rmTree(dir: String): Unit = {
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk.close()
-  }
-
   private def keptIds(df: DataFrame): Set[Long] =
     df.select("doc_id").collect().map(_.getLong(0)).toSet
 
@@ -87,10 +81,13 @@ class IngestSpec extends AnyFunSuite {
       IncrementalDedup.buildIndex(Seq.empty[(Long, String)].toDF("doc_id", "text"),
         "doc_id", "text", idx2, params)
       val fold = Seq(f1, f2, f3).flatMap { rows =>
-        val keep = IncrementalDedup.newKeepList(rows.toDF("doc_id", "text"),
-          "doc_id", "text", idx2, tau)
-        val ids = keptIds(keep)
-        IncrementalDedup.appendBatch(keep, "doc_id", "text", idx2)
+        val batch = rows.toDF("doc_id", "text")
+        // the keep list's staged frames read idx2: their scope closes
+        // before the append writes it, as in the ingest
+        val ids = Staging.scoped(keptIds(
+          IncrementalDedup.newKeepList(batch, "doc_id", "text", idx2, tau)))
+        IncrementalDedup.appendBatch(batch.filter(col("doc_id").isin(ids.toSeq: _*)),
+          "doc_id", "text", idx2)
         ids
       }.toSet
       assert(fold == expectedKept, s"fold=${fold.toSeq.sorted}")
@@ -128,7 +125,6 @@ class IngestSpec extends AnyFunSuite {
         s"$root/idx", tau)
       assert(pairs.isEmpty,
         "a blocked doc's signatures must never reach the index")
-      graft.operators.Staging.releaseAll()
     } finally rmTree(root)
   }
 
@@ -153,12 +149,10 @@ class IngestSpec extends AnyFunSuite {
       val survivors = streamed.select("doc_id", "text")
       assert(keptIds(streamed) == expectedKept)
       // postings: index-route BM25 == scan over the published survivors
-      def bmRows(df: org.apache.spark.sql.DataFrame) = {
-        val r = df.collect()
+      def bmRows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+        df.collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
           .toSeq
-        graft.operators.Staging.releaseAll()
-        r
       }
       assert(bmRows(Retrieval.topKFromIndex(spark, s"$root/post",
           Seq("w3"), k = 1))
@@ -167,21 +161,20 @@ class IngestSpec extends AnyFunSuite {
         "postings store must equal a scan over the survivors")
       // gram postings: audit == the scan form over the survivors
       val bench = survivors.filter(col("doc_id") === 1L)
-      val viaIdx = Decontaminate.flagContaminatedFromIndex(spark,
-          s"$root/gram", bench, "text", minOverlap = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      graft.operators.Staging.releaseAll()
-      val viaScan = Decontaminate.flagContaminated(survivors, "doc_id",
-          "text", bench, "text", n = 3, minOverlap = 2)
-        .filter(col("overlap") > 0).orderBy("doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      graft.operators.Staging.releaseAll()
+      val viaIdx = Staging.scoped {
+        Decontaminate.flagContaminatedFromIndex(spark, s"$root/gram", bench,
+          "text", minOverlap = 2).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      }
+      val viaScan = Staging.scoped {
+        Decontaminate.flagContaminated(survivors, "doc_id", "text", bench,
+          "text", n = 3, minOverlap = 2)
+          .filter(col("overlap") > 0).orderBy("doc_id")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      }
       assert(viaIdx == viaScan, "gram store must equal the survivor scan")
       // positions: phrase route == the scan twin over the survivors
-      def phRows(df: org.apache.spark.sql.DataFrame) = {
-        val r = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        graft.operators.Staging.releaseAll()
-        r
+      def phRows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       }
       val needle = Seq("w3", "w4", "w5")
       assert(phRows(Retrieval.phraseMatches(spark, s"$root/pos", needle))
@@ -194,22 +187,18 @@ class IngestSpec extends AnyFunSuite {
       // batch-built index over the same survivors, drift summary ditto
       import spark.implicits._
       val probeDocs = Seq(51L -> fresh(51), 52L -> textA).toDF("doc_id", "text")
-      def scoreRows(path: String) = {
-        val r = Retrieval.scoreAgainstTermIndex(probeDocs, "doc_id", "text",
+      def scoreRows(path: String) = Staging.scoped {
+        Retrieval.scoreAgainstTermIndex(probeDocs, "doc_id", "text",
             Seq("w3", "t12_0"), path, k = 2)
           .collect().map(_.toSeq).toSeq
-        graft.operators.Staging.releaseAll()
-        r
       }
       Retrieval.buildTermStatsIndex(survivors, "doc_id", "text", s"$root/terms2")
       assert(scoreRows(s"$root/terms") == scoreRows(s"$root/terms2"),
         "ingest-maintained term stats must equal a batch build on survivors")
       import graft.operators.CorpusCompare
-      def driftRow(path: String) = {
-        val r = CorpusCompare.driftSummaryAgainstIndex(spark, path,
+      def driftRow(path: String) = Staging.scoped {
+        CorpusCompare.driftSummaryAgainstIndex(spark, path,
           probeDocs, col("text")).collect().map(_.toSeq).toSeq
-        graft.operators.Staging.releaseAll()
-        r
       }
       CorpusCompare.buildGramIndex(survivors, col("text"), s"$root/drift2")
       assert(driftRow(s"$root/drift") == driftRow(s"$root/drift2"),
@@ -274,24 +263,21 @@ class IngestSpec extends AnyFunSuite {
       assert(keptIds(auto) == expectedKept && keptIds(ctrl) == expectedKept)
 
       // every query route answers bit-identically across the compaction
-      def answers(tag: String): Seq[Seq[Any]] = {
+      def answers(tag: String): Seq[Seq[Any]] = Staging.scoped {
         val probeDocs = Seq(51L -> fresh(51), 52L -> textA).toDF("doc_id", "text")
         val bench = spark.read.parquet(s"$root/sink_$tag")
           .filter(col("doc_id") === 1L).select("doc_id", "text")
-        val r =
-          Retrieval.topKFromIndex(spark, s"$root/post_$tag", Seq("w3"), k = 1)
-            .collect().map(_.toSeq).toSeq ++
-          Retrieval.phraseMatches(spark, s"$root/pos_$tag", Seq("w3", "w4", "w5"))
-            .collect().map(_.toSeq).toSeq ++
-          Decontaminate.flagContaminatedFromIndex(spark, s"$root/gram_$tag",
-            bench, "text", minOverlap = 2).collect().map(_.toSeq).toSeq ++
-          Retrieval.scoreAgainstTermIndex(probeDocs, "doc_id", "text",
-            Seq("w3", "t12_0"), s"$root/terms_$tag", k = 2)
-            .collect().map(_.toSeq).toSeq ++
-          CorpusCompare.driftSummaryAgainstIndex(spark, s"$root/drift_$tag",
-            probeDocs, col("text")).collect().map(_.toSeq).toSeq
-        graft.operators.Staging.releaseAll()
-        r
+        Retrieval.topKFromIndex(spark, s"$root/post_$tag", Seq("w3"), k = 1)
+          .collect().map(_.toSeq).toSeq ++
+        Retrieval.phraseMatches(spark, s"$root/pos_$tag", Seq("w3", "w4", "w5"))
+          .collect().map(_.toSeq).toSeq ++
+        Decontaminate.flagContaminatedFromIndex(spark, s"$root/gram_$tag",
+          bench, "text", minOverlap = 2).collect().map(_.toSeq).toSeq ++
+        Retrieval.scoreAgainstTermIndex(probeDocs, "doc_id", "text",
+          Seq("w3", "t12_0"), s"$root/terms_$tag", k = 2)
+          .collect().map(_.toSeq).toSeq ++
+        CorpusCompare.driftSummaryAgainstIndex(spark, s"$root/drift_$tag",
+          probeDocs, col("text")).collect().map(_.toSeq).toSeq
       }
       assert(answers("a") == answers("c"),
         "compacted stores must answer bit-identically to uncompacted ones")
@@ -423,12 +409,10 @@ class IngestSpec extends AnyFunSuite {
     val terms = s"$root/terms"
     val suite = CorpusIngest.IndexSuite(termStatsPath = Some(terms))
     val linA = CorpusIngest.lineageOf(s"$root/ckptA")
-    def score() = {
+    def score() = Staging.scoped {
       val probe = Seq(900L -> textA).toDF("doc_id", "text")
-      val r = Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
+      Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
         Seq("w3"), terms, k = 1).collect().map(_.toSeq).toSeq
-      graft.operators.Staging.releaseAll()
-      r
     }
     try {
       // lineage A ingests two batches
@@ -467,10 +451,8 @@ class IngestSpec extends AnyFunSuite {
         s"$root/terms_ref")
       val ref = {
         val probe = Seq(900L -> textA).toDF("doc_id", "text")
-        val r = Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
-          Seq("w3"), s"$root/terms_ref", k = 1).collect().map(_.toSeq).toSeq
-        graft.operators.Staging.releaseAll()
-        r
+        Staging.scoped(Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
+          Seq("w3"), s"$root/terms_ref", k = 1).collect().map(_.toSeq).toSeq)
       }
       assert(score() == ref,
         "a second lineage must accumulate, not clobber, the counted store")
@@ -495,10 +477,8 @@ class IngestSpec extends AnyFunSuite {
         s"$root/terms_ref", 2L, linA)
       val ref2 = {
         val probe = Seq(900L -> textA).toDF("doc_id", "text")
-        val r = Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
-          Seq("w3"), s"$root/terms_ref", k = 1).collect().map(_.toSeq).toSeq
-        graft.operators.Staging.releaseAll()
-        r
+        Staging.scoped(Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
+          Seq("w3"), s"$root/terms_ref", k = 1).collect().map(_.toSeq).toSeq)
       }
       assert(score() == ref2,
         "a mid-swap crash before the bootstrap probe must be read as built, not wiped")

@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.queries.SessionScratch.rmTree
+import graft.operators.{Dedup, Multimodal, Similarity, Staging, TextAnalysis}
 
 /** Invariant tests for the training-data operators — properties the DuckDB
   * oracle can't check (hash-sketch outputs are engine-specific):
   * approximation quality bounds against the exact baselines, determinism
   * across runs, and plumbing correctness.
   */
-class OperatorSpec extends AnyFunSuite {
+class OperatorSpec extends AnyFunSuite with StagingScope {
 
   lazy val spark: SparkSession = SparkTestSession.get
   val dir = "/root/testdata/sf0.001"
@@ -48,12 +49,7 @@ class OperatorSpec extends AnyFunSuite {
       // so compare at milli precision (the long fixture keeps full micros)
       assert(readBack("longs") == micros.sorted)
       assert(readBack("ntz") == micros.map(u => u / 1000 * 1000).sorted)
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("incremental index equals the monolithic minhash run on the delta slice") {
@@ -107,12 +103,7 @@ class OperatorSpec extends AnyFunSuite {
         assert(!inc2.exists(p => p._2 == id || (p._1 == id && p._2 % 4 != 0)),
           s"doc $id kept despite a dup pair")
       }
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("incremental ANN index equals the monolithic cosine run on the delta slice") {
@@ -150,21 +141,96 @@ class OperatorSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(inc2 == monolithicTouching(0),
         s"ann delta2 diverges: inc=${inc2.size} mono=${monolithicTouching(0).size}")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    } finally rmTree(work)
+  }
+
+  /** Runs `body` on a new thread, which starts with no staging scope. */
+  private def onFreshThread[T](body: => T): Either[Throwable, T] = {
+    var out: Either[Throwable, T] = null
+    val th = new Thread(() =>
+      out = try Right(body) catch { case e: Throwable => Left(e) })
+    th.start()
+    th.join()
+    out
   }
 
   test("staging persists register and release through Staging") {
-    graft.operators.Staging.releaseAll()
     val docs = t("documents")
-    Dedup.shingleFrame(docs, "doc_id", "text", 3).count()
-    assert(graft.operators.Staging.liveCount >= 2) // toks + shingles stages
-    graft.operators.Staging.releaseAll()
-    assert(graft.operators.Staging.liveCount == 0)
+    val scope = Staging.scoped {
+      Dedup.shingleFrame(docs, "doc_id", "text", 3).count()
+      assert(Staging.currentScope.frames.size >= 2) // toks + shingles stages
+      assert(Staging.liveCount == Staging.currentScope.frames.size)
+      Staging.currentScope
+    }
+    assert(scope.frames.isEmpty)
+    assert(Staging.liveCount == 0)
+    // outside a scope staging throws; a new thread inherits no scope
+    onFreshThread(Dedup.shingleFrame(docs, "doc_id", "text", 3)) match {
+      case Left(e: IllegalStateException) =>
+        assert(e.getMessage.contains("Staging.scoped"), e.getMessage)
+      case other => fail(s"staging outside a scope gave $other")
+    }
+    assert(Staging.liveCount == 0)
+  }
+
+  test("a nested staging scope releases only its own frames") {
+    import Staging.Stageable
+    val outer = spark.range(10).toDF("id").stagePersist()
+    val (innerScope, inner) = Staging.scoped {
+      val inner = spark.range(20).toDF("id").stagePersist()
+      // a plan the outer scope already holds is read from its cache, not
+      // taken over: the inner exit must leave it cached
+      spark.range(10).toDF("id").stagePersist().count()
+      assert(Staging.currentScope.frames == Seq(inner))
+      (Staging.currentScope, inner)
+    }
+    assert(innerScope.frames.isEmpty)
+    assert(inner.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(outer.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(Staging.currentScope.frames == Seq(outer))
+  }
+
+  test("public index writers called outside any scope leave no staged frame") {
+    import graft.operators.{IncrementalDedup, IndexMaintenance, Retrieval}
+    val docs = t("documents")
+    val work = java.nio.file.Files.createTempDirectory("graft_unscoped_").toString
+    try {
+      val live = onFreshThread {
+        Retrieval.buildPostingsIndex(docs, "doc_id", "text", s"$work/post")
+        IncrementalDedup.buildIndex(docs.filter(col("doc_id") % 2 === 0),
+          "doc_id", "text", s"$work/d")
+        IncrementalDedup.appendBatch(docs.filter(col("doc_id") % 2 === 1),
+          "doc_id", "text", s"$work/d")
+        IncrementalDedup.retract(spark, s"$work/d",
+          docs.filter(col("doc_id") < 5).select("doc_id"))
+        IndexMaintenance.compactDedupIndex(spark, s"$work/d")
+        Staging.liveCount
+      }
+      assert(live == Right(0), s"after the writers: $live")
+    } finally rmTree(work)
+  }
+
+  test("heavyDupSetMass's probe memo does not outlive its scope") {
+    val docs = t("documents")
+    val scope = Staging.scoped {
+      Dedup.ngramJaccardPairs(docs, "doc_id", "text").count()
+      assert(Staging.currentScope.memoSize == 1)
+      Staging.currentScope
+    }
+    assert(scope.memoSize == 0 && scope.frames.isEmpty)
+    assert(Staging.currentScope.memoSize == 0)
+  }
+
+  test("one way to persist: src/main persists and releases only through Staging") {
+    import scala.jdk.CollectionConverters._
+    val raw = "\\.persist\\(|\\.cache\\(\\)|unpersist\\(|releaseAll\\(\\)".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+    val offenders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Staging.scala")
+      .filter(p => raw.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).toList.sorted
+    finally walk.close()
+    assert(offenders.isEmpty, s"persist or release outside Staging in: $offenders")
   }
 
   test("widen raises LARGE narrow scans to the core count; small and wide frames pass through") {
@@ -241,7 +307,6 @@ class OperatorSpec extends AnyFunSuite {
         "text", w = 8, grid = gridSurv)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(shared == direct)
-    graft.operators.Staging.releaseAll()
   }
 
   test("ngram pairs: exact-dup-set collapse is output-identical (both orders)") {
@@ -262,7 +327,7 @@ class OperatorSpec extends AnyFunSuite {
       (7L, "completely different text about other things entirely"))
     import spark.implicits._
     val docs = base.toDF("doc_id", "text")
-    for (mc <- Seq(1, 2)) {
+    for (mc <- Seq(1, 2)) Staging.scoped {
       val sh = Dedup.shingleFrame(docs, "doc_id", "text", 3)
       def run(collapse: Boolean) =
         Dedup.ngramJaccardPairsFrom(sh, threshold = 0.2, minCommon = mc,
@@ -290,7 +355,6 @@ class OperatorSpec extends AnyFunSuite {
       val pairIds = direct.map(r => (r(0), r(1))).toSet
       assert(pairIds.contains((3L, 4L)) == (mc <= 1))
       assert(!pairIds.contains((5L, 6L)))
-      graft.operators.Staging.releaseAll()
     }
     // the PROBE fires on this dup-heavy corpus and the auto path still
     // matches the forced-direct path end-to-end
@@ -308,7 +372,6 @@ class OperatorSpec extends AnyFunSuite {
         s"missing=${(d -- a).take(3)} extra=${(a -- d).take(3)} " +
         s"nDirect=${direct2.size} nAuto=${auto.size}")
     }
-    graft.operators.Staging.releaseAll()
   }
 
   test("ngram maxDf candidates are a subset of the unfiltered pairs") {
@@ -352,11 +415,9 @@ class OperatorSpec extends AnyFunSuite {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val q = emb.filter(col("vec_id") < 8)
     val work = java.nio.file.Files.createTempDirectory("graft_ivfidx_").toString
-    def rows(df: org.apache.spark.sql.DataFrame) = {
-      val r = df.orderBy("q_id", "rank").collect()
+    def rows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+      df.orderBy("q_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-      graft.operators.Staging.releaseAll()
-      r
     }
     try {
       // ROUTE EQUALITY: same corpus, same nlist/iters/replicas →
@@ -407,13 +468,7 @@ class OperatorSpec extends AnyFunSuite {
         IvfIndex.topK(q, "vec_id", "embedding", torn, k = 3)
       }
       assert(e.getMessage.contains("iparams missing"))
-    } finally {
-      graft.operators.Staging.releaseAll()
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("IVF Lloyd update collects ≤ nlist rows; seeding is bounded and stable") {
@@ -1005,8 +1060,7 @@ class OperatorSpec extends AnyFunSuite {
       (4L, "z"),         // short doc: one final segment, kept
       (5L, "   ")        // zero tokens → no segments → no output row
     ).toDF("doc_id", "text")
-    val out = segRows(Dedup.dedupSegmentsKeepFirst(docs, "doc_id", "text", w = 2))
-    graft.operators.Staging.releaseAll()
+    val out = Staging.scoped(segRows(Dedup.dedupSegmentsKeepFirst(docs, "doc_id", "text", w = 2)))
     assert(out == Map(
       1L -> ((2L, 2L, "a b c d")),
       2L -> ((2L, 1L, "x y")),
@@ -1039,9 +1093,8 @@ class OperatorSpec extends AnyFunSuite {
           (ss.size.toLong, kept.size.toLong, kept.map(_._3).mkString(" "))
         }.toMap
       }
-      val out = segRows(Dedup.dedupSegmentsKeepFirst(
-        docs.toDF("doc_id", "text"), "doc_id", "text", w))
-      graft.operators.Staging.releaseAll()
+      val out = Staging.scoped(segRows(Dedup.dedupSegmentsKeepFirst(
+        docs.toDF("doc_id", "text"), "doc_id", "text", w)))
       assert(out == model, s"trial $trial (w=$w): mismatch\n got $out\n exp $model")
     }
   }
@@ -1093,10 +1146,8 @@ class OperatorSpec extends AnyFunSuite {
       (Array(1.0, if (y == 1) 0.9 else 0.1), y)
     }
     val df = rows.toDF("x", "y")
-    val w1 = QualityModel.trainLogistic(df, col("x"), col("y"), dim = 2)
-    graft.operators.Staging.releaseAll()
-    val w2 = QualityModel.trainLogistic(df, col("x"), col("y"), dim = 2)
-    graft.operators.Staging.releaseAll()
+    val w1 = Staging.scoped(QualityModel.trainLogistic(df, col("x"), col("y"), dim = 2))
+    val w2 = Staging.scoped(QualityModel.trainLogistic(df, col("x"), col("y"), dim = 2))
     // decimal gradient sums → bit-identical training runs
     assert(w1.toSeq == w2.toSeq)
     assert(w1(1) > 0.0) // the separating feature earns positive weight
@@ -1116,7 +1167,6 @@ class OperatorSpec extends AnyFunSuite {
       QualityModel.trainLogistic(wrongLen, col("x"), col("y"), dim = 2, iters = 1)
     }
     assert(e1.getMessage.contains("size != 2"))
-    graft.operators.Staging.releaseAll()
     // null feature element → same guard
     val nullElem = Seq((Array[java.lang.Double](1.0, null), 1),
         (Array[java.lang.Double](1.0, 0.2), 0))
@@ -1124,7 +1174,6 @@ class OperatorSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       QualityModel.trainLogistic(nullElem, col("x"), col("y"), dim = 2, iters = 1)
     }
-    graft.operators.Staging.releaseAll()
   }
 
   test("novelty scores the share of corpus-unique shingles per doc") {
@@ -1509,12 +1558,7 @@ class OperatorSpec extends AnyFunSuite {
       IndexMaintenance.compactDedupIndex(spark, work)
       assert(!f.exists(staged), "uncommitted staged dir not cleaned")
       assert(pairsOf(delta) == before)
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("ann index compaction preserves incremental embedding pairs bit-for-bit") {
@@ -1536,12 +1580,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(pairsOf(delta) == before, "ann compaction changed query results")
       val vecIds = spark.read.parquet(s"$work/vecs").select("id").collect().map(_.getLong(0))
       assert(vecIds.length == vecIds.distinct.length, "replayed vec rows survived compaction")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("centroid top-cells kernel is bit-identical to the literal-composed form") {
@@ -1565,7 +1604,6 @@ class OperatorSpec extends AnyFunSuite {
           s"kernel/composed diverged at r=$r, cells=${cents.length}")
       }
     }
-    graft.operators.Staging.releaseAll()
   }
 
   test("nested top-cells kernel: full probing equals flat; partial probing high-recall") {
@@ -1653,7 +1691,6 @@ class OperatorSpec extends AnyFunSuite {
       emb, "vec_id", "embedding", threshold = 0.2, nlist = 4,
       candidateBudget = 1.0)
     assert(pinned == 4)
-    graft.operators.Staging.releaseAll()
   }
 
   test("semantic governor futility: clamped escalation skipped only when it can't meet the budget") {
@@ -1757,7 +1794,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(out(3L) == ((2L, d3)))
     // whitespace-only doc still present: zero tokens, score 0
     assert(out(4L) == ((0L, 0.0)))
-    graft.operators.Staging.releaseAll()
   }
 
   test("scoreAgainst: unseen bigram backs off at 0.4, unseen word scores 0") {
@@ -1775,7 +1811,6 @@ class OperatorSpec extends AnyFunSuite {
     val za = (0L + u(0.4 * (3.0 / 7))).toDouble / 2 / 1e9
     assert(out(10L) == ((2L, bb)))
     assert(out(11L) == ((2L, za)))
-    graft.operators.Staging.releaseAll()
   }
 
   test("lmScore: minBigramCount prunes bigrams to the backoff path") {
@@ -1795,7 +1830,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(out(1L) == ((3L, d1)))
     assert(out(2L) == ((2L, d2)))
     assert(out(3L) == ((2L, d3)))
-    graft.operators.Staging.releaseAll()
   }
 
   test("scoreAgainst3: hand-computed trigram chain exercises both backoff hops") {
@@ -1820,7 +1854,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(out(10L) == ((3L, d10)))
     assert(out(11L) == ((3L, d11)))
     assert(out(12L) == ((3L, d12)))
-    graft.operators.Staging.releaseAll()
   }
 
   test("lmScore3: minTrigramCount prunes trigrams to the bigram hop; bigram context stays unpruned") {
@@ -1840,7 +1873,6 @@ class OperatorSpec extends AnyFunSuite {
     val full = lmRows(LanguageModel.lmScore3(docs, "doc_id", "text"))
     val d1full = (u(1.0 / 3) + u(1.0 / 1) + u(1.0 / 1)).toDouble / 3 / 1e9
     assert(full(1L) == ((3L, d1full)))
-    graft.operators.Staging.releaseAll()
   }
 
   // ---- fuzzy (near-dup) decontamination --------------------------------
@@ -1865,7 +1897,6 @@ class OperatorSpec extends AnyFunSuite {
     // if banding surfaced the paraphrase, the exact verify scored it:
     // emitted jaccard must be the true 3/5 — never a false positive
     if (flags(2L).getBoolean(1)) assert(flags(2L).getDouble(3) == 0.6)
-    graft.operators.Staging.releaseAll()
   }
 
   test("fuzzy decontamination pairs: precision total, self-pairs complete") {
@@ -1888,16 +1919,13 @@ class OperatorSpec extends AnyFunSuite {
           graft.operators.Dedup.tokens(col("text")), 3)).as("n"))
       .filter(col("n") > 0).collect().map(_.getLong(0)).toSet
     assert(selfIds.map(_._1).toSet == benchWithShingles)
-    graft.operators.Staging.releaseAll()
   }
 
   test("lmScore is deterministic under repartitioning") {
     import graft.operators.LanguageModel
     val docs = t("documents")
-    val a = lmRows(LanguageModel.lmScore(docs, "doc_id", "text"))
-    graft.operators.Staging.releaseAll()
-    val b = lmRows(LanguageModel.lmScore(docs.repartition(7), "doc_id", "text"))
-    graft.operators.Staging.releaseAll()
+    val a = Staging.scoped(lmRows(LanguageModel.lmScore(docs, "doc_id", "text")))
+    val b = Staging.scoped(lmRows(LanguageModel.lmScore(docs.repartition(7), "doc_id", "text")))
     assert(a == b)
     assert(a.values.forall { case (_, s) => s >= 0.0 && s <= 1.0 })
   }
@@ -1955,10 +1983,8 @@ class OperatorSpec extends AnyFunSuite {
     val docs = t("documents")
     val scored = LanguageModel.lmScore(docs, "doc_id", "text")
     val (tTail, tHead) = LanguageModel.bucketThresholds(scored, col("lm_score"))
-    graft.operators.Staging.releaseAll()
     assert(tTail <= tHead)
     val scores = scored.select("lm_score").collect().map(_.getDouble(0)).sorted
-    graft.operators.Staging.releaseAll()
     val n = scores.length
     // rank error of the sketch at accuracy 10000 on this corpus is far
     // under 5% of n; assert the cuts sit within that band of the terciles
@@ -1978,9 +2004,8 @@ class OperatorSpec extends AnyFunSuite {
     // N=2, df=1 → idf = (2-1+0.5)/1.5 = 1.0; avgdl = (4+2)/2 = 3.
     // doc1: sat = 2*2.2/(2 + 1.2*(0.25+0.75*(4*2/6.0))) = 4.4/3.5
     val docs = Seq((1L, "x y x z"), (2L, "y z")).toDF("doc_id", "text")
-    val rows = Retrieval.bm25TopK(docs, "doc_id", "text", Seq("x"), k = 2)
-      .collect()
-    graft.operators.Staging.releaseAll()
+    val rows = Staging.scoped(Retrieval.bm25TopK(docs, "doc_id", "text", Seq("x"), k = 2)
+      .collect())
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L))
     assert(rows.map(_.getLong(3)).toSeq == Seq(1L, 2L)) // ranks dense from 1
     val expected = math.floor(1.0 * (2 * 2.2 / (2 + 1.2 *
@@ -1992,12 +2017,10 @@ class OperatorSpec extends AnyFunSuite {
   test("bm25TopK is deterministic under repartitioning and rare terms rank up") {
     import graft.operators.Retrieval
     val docs = t("documents")
-    def run(df: org.apache.spark.sql.DataFrame) = {
-      val r = Retrieval.bm25TopK(df, "doc_id", "text",
+    def run(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+      Retrieval.bm25TopK(df, "doc_id", "text",
         Seq("dup", "vector", "batch"), k = 10)
         .collect().map(r => (r.getLong(0), r.getDouble(2), r.getLong(3))).toSeq
-      graft.operators.Staging.releaseAll()
-      r
     }
     val a = run(docs)
     assert(a == run(docs.repartition(7)))
@@ -2049,11 +2072,9 @@ class OperatorSpec extends AnyFunSuite {
       "table", "row", "agg", "scan", "the", "a", "key", "fast", "line",
       "value", "column", "query", "group", "part")
     for (terms <- Seq(Seq("dup", "vector", "batch"), wide)) {
-      def rows(df: org.apache.spark.sql.DataFrame) = {
-        val r = df.collect().map(r => (r.getLong(0), r.getLong(1),
+      def rows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+        df.collect().map(r => (r.getLong(0), r.getLong(1),
           r.getDouble(2), r.getLong(3))).toSeq
-        graft.operators.Staging.releaseAll()
-        r
       }
       assert(rows(Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 15))
         == rows(Retrieval.bm25TopKIndexed(docs, "doc_id", "text", terms, k = 15)))
@@ -2108,12 +2129,7 @@ class OperatorSpec extends AnyFunSuite {
         "text", Seq("x"), s"$work/b", k = 2).collect()
       assert(resolved.map(r => (r.getLong(0), r.getDouble(2))).toSeq ==
         rows.map(r => (r.getLong(0), r.getDouble(2))).toSeq)
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("postings index: topKFromIndex == scan bm25TopK; replay/compact/crash-safe") {
@@ -2121,11 +2137,9 @@ class OperatorSpec extends AnyFunSuite {
     val docs = t("documents")
     val terms = Seq("dup", "vector", "batch")
     val work = java.nio.file.Files.createTempDirectory("graft_post_").toString
-    def rows(df: org.apache.spark.sql.DataFrame) = {
-      val r = df.collect().map(r => (r.getLong(0), r.getLong(1),
+    def rows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2), r.getLong(3))).toSeq
-      graft.operators.Staging.releaseAll()
-      r
     }
     try {
       // two-batch build (odd then even ids) — merge-on-read additivity
@@ -2156,12 +2170,7 @@ class OperatorSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] {
         Retrieval.topKFromIndex(spark, work, Seq("dup", "dup"), k = 2)
       }
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("retraction: postings index == fresh survivor build; vacuum is physical") {
@@ -2170,11 +2179,9 @@ class OperatorSpec extends AnyFunSuite {
     val docs = t("documents")
     val terms = Seq("dup", "vector", "batch")
     val work = java.nio.file.Files.createTempDirectory("graft_retract_").toString
-    def rows(df: org.apache.spark.sql.DataFrame) = {
-      val r = df.collect().map(r => (r.getLong(0), r.getLong(1),
+    def rows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2), r.getLong(3))).toSeq
-      graft.operators.Staging.releaseAll()
-      r
     }
     try {
       val removed = docs.filter(col("doc_id") % 7 === 3)
@@ -2194,11 +2201,10 @@ class OperatorSpec extends AnyFunSuite {
         "after retraction the index must equal the scan over survivors")
       // the batch probe form sees the retraction through the same filter
       val qs = terms.map(("qa", _)).toDF("query_id", "term")
-      val viaBatch = Retrieval.topKFromIndexBatch(spark, s"$work/a", qs,
+      val viaBatch = Staging.scoped(Retrieval.topKFromIndexBatch(spark, s"$work/a", qs,
           "query_id", "term", k = 12)
         .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3),
-          r.getLong(4))).toSeq
-      graft.operators.Staging.releaseAll()
+          r.getLong(4))).toSeq)
       assert(viaBatch == scanSurv)
       // replaying an interrupted retraction is safe end to end: the
       // negative ptotals row collapses on its replay identity, duplicate
@@ -2227,12 +2233,7 @@ class OperatorSpec extends AnyFunSuite {
         .agg(sum(col("n_docs")), sum(col("t_len"))).collect()(0)
       assert(totSums(s"$work/a") == totSums(s"$work/b"),
         "folded corpus totals must equal a fresh survivor build's")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("retraction: term-stats negative delta == fresh index on survivors") {
@@ -2266,12 +2267,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(!stored(s"$work/a").exists(_._1 == "q"),
         "a token whose df reached zero must fold away")
       assert(scores(s"$work/a") == scores(s"$work/b"))
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("retraction: incremental dedup + ANN indices == rebuilt on survivors") {
@@ -2286,15 +2282,13 @@ class OperatorSpec extends AnyFunSuite {
       val corpus0 = docs.filter(col("doc_id") % 4 =!= 2)
       val delta = docs.filter(col("doc_id") % 4 === 2)
       IncrementalDedup.buildIndex(corpus0, "doc_id", "text", s"$work/d")
-      // releaseAll after every collect — the harness contract; holding the
-      // staged frames would let a post-vacuum query (whose plan is again
-      // tombstone-free, like the pre-retraction one) hit the stale cache
-      def pairs(p: String) = {
-        val r = IncrementalDedup
+      // one scope per query: holding the staged frames would let a
+      // post-vacuum query (whose plan is again tombstone-free, like the
+      // pre-retraction one) hit the stale cache
+      def pairs(p: String) = Staging.scoped {
+        IncrementalDedup
           .newBatchPairs(delta, "doc_id", "text", p, jaccardThreshold = 0.2)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        graft.operators.Staging.releaseAll()
-        r
       }
       val inc1 = pairs(s"$work/d")
       val hitIds = inc1.flatMap(p => Seq(p._1, p._2)).filter(_ % 4 != 2)
@@ -2324,12 +2318,10 @@ class OperatorSpec extends AnyFunSuite {
       val vdelta = emb.filter(col("vec_id") % 4 === 2)
       IncrementalAnn.buildIndex(vcorpus0, "vec_id", "embedding", dim = 64,
         path = s"$work/v", numPlanes = 8)
-      def vpairs(p: String) = {
-        val r = IncrementalAnn
+      def vpairs(p: String) = Staging.scoped {
+        IncrementalAnn
           .newBatchPairs(vdelta, "vec_id", "embedding", p, threshold = 0.2)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        graft.operators.Staging.releaseAll()
-        r
       }
       val vinc1 = vpairs(s"$work/v")
       val vhit = vinc1.flatMap(p => Seq(p._1, p._2)).filter(_ % 4 != 2)
@@ -2348,23 +2340,15 @@ class OperatorSpec extends AnyFunSuite {
       assert(spark.read.parquet(s"$work/v/vecs")
         .filter(col("id").isin(vhit.toSeq: _*)).count() == 0L)
       assert(vpairs(s"$work/v") == vinc2)
-    } finally {
-      graft.operators.Staging.releaseAll()
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("positional index: phrase matches == scan twin; overlap/replay/vacuum") {
     import spark.implicits._
     import graft.operators.Retrieval
     val work = java.nio.file.Files.createTempDirectory("graft_phrase_").toString
-    def rows(df: org.apache.spark.sql.DataFrame) = {
-      val r = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      graft.operators.Staging.releaseAll()
-      r
+    def rows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     try {
       // hand fixture: periodic phrase "a a" must count OVERLAPPING starts
@@ -2439,12 +2423,7 @@ class OperatorSpec extends AnyFunSuite {
         Seq.empty[Long].toDF("doc_id"))
       assert(rows(Retrieval.phraseMatches(spark, s"$work/p", Seq("a", "a")))
         == afterRetract, "empty retraction must change nothing")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("phraseMatchesBatch == per-phrase loop; ghosts empty; slot gaps loud") {
@@ -2462,14 +2441,12 @@ class OperatorSpec extends AnyFunSuite {
       val q = suite.flatMap { case (id, ph) =>
         ph.zipWithIndex.map { case (t, i) => (id, i, t) }
       }.toDF("phrase_id", "slot", "token")
-      val batch = Retrieval.phraseMatchesBatch(spark, work, q,
+      val batch = Staging.scoped(Retrieval.phraseMatchesBatch(spark, work, q,
           "phrase_id", "slot", "token")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      graft.operators.Staging.releaseAll()
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
       val loop = suite.flatMap { case (id, ph) =>
-        val r = Retrieval.phraseMatches(spark, work, ph)
-          .collect().map(r => (id, r.getLong(0), r.getLong(1))).toSeq
-        graft.operators.Staging.releaseAll()
+        val r = Staging.scoped(Retrieval.phraseMatches(spark, work, ph)
+          .collect().map(r => (id, r.getLong(0), r.getLong(1))).toSeq)
         r
       }
       assert(batch == loop,
@@ -2483,12 +2460,7 @@ class OperatorSpec extends AnyFunSuite {
           Seq(("bad", 0, "a"), ("bad", 2, "a")).toDF("phrase_id", "slot", "token"),
           "phrase_id", "slot", "token")
       }
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("phrase-batch governor: routes by probed df, output identical either way") {
@@ -2505,11 +2477,9 @@ class OperatorSpec extends AnyFunSuite {
       val q = suite.flatMap { case (id, ph) =>
         ph.zipWithIndex.map { case (t, i) => (id, i, t) }
       }.toDF("phrase_id", "slot", "token")
-      def rows(df: org.apache.spark.sql.DataFrame) = {
-        val r = df.collect()
+      def rows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+        df.collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-        graft.operators.Staging.releaseAll()
-        r
       }
       val reference = rows(Retrieval.phraseMatchesBatch(spark, work, q,
         "phrase_id", "slot", "token"))
@@ -2549,13 +2519,7 @@ class OperatorSpec extends AnyFunSuite {
           Seq((1, 0, "a"), (1, 1, "a")).toDF("phrase_id", "slot", "token"),
           "phrase_id", "slot", "token", docs, "doc_id", "text")
       }
-    } finally {
-      graft.operators.Staging.releaseAll()
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("index-side decontamination == the scan form's flagged rows") {
@@ -2563,12 +2527,10 @@ class OperatorSpec extends AnyFunSuite {
     import graft.operators.Decontaminate
     val docs = t("documents")
     val work = java.nio.file.Files.createTempDirectory("graft_decidx_").toString
-    def flagged(p: String, bench: org.apache.spark.sql.DataFrame) = {
-      val r = Decontaminate.flagContaminatedFromIndex(spark, p,
+    def flagged(p: String, bench: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+      Decontaminate.flagContaminatedFromIndex(spark, p,
           bench, "text", minOverlap = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-      graft.operators.Staging.releaseAll()
-      r
     }
     try {
       // two-batch build: merge-on-read additivity under the differential
@@ -2578,11 +2540,10 @@ class OperatorSpec extends AnyFunSuite {
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", work)
       val bench = docs.filter(col("doc_id") % 97 === 0)
       val viaIndex = flagged(work, bench)
-      val viaScan = Decontaminate.flagContaminated(docs, "doc_id", "text",
+      val viaScan = Staging.scoped(Decontaminate.flagContaminated(docs, "doc_id", "text",
           bench, "text", n = 3, minOverlap = 2)
         .filter(col("overlap") > 0).orderBy("doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-      graft.operators.Staging.releaseAll()
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq)
       assert(viaIndex == viaScan,
         s"index route ${viaIndex.size} rows vs scan ${viaScan.size}")
       assert(viaIndex.exists(_._3) && viaIndex.exists(!_._3),
@@ -2605,12 +2566,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(spark.read.parquet(s"$work/grams")
         .filter(col("doc_id") === victim).count() == 0L,
         "vacuum must drop the retracted doc's gram rows")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("ANN index topK == lshTopK at the pinned width; respects retraction") {
@@ -2618,11 +2574,9 @@ class OperatorSpec extends AnyFunSuite {
     import graft.operators.{IncrementalAnn, Similarity}
     val emb = t("embeddings")
     val work = java.nio.file.Files.createTempDirectory("graft_annq_").toString
-    def rows(df: org.apache.spark.sql.DataFrame) = {
-      val r = df.collect().map(r => (r.getLong(0), r.getLong(1),
+    def rows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getDouble(3))).toSeq.sorted
-      graft.operators.Staging.releaseAll()
-      r
     }
     try {
       IncrementalAnn.buildIndex(emb, "vec_id", "embedding", dim = 64,
@@ -2647,12 +2601,7 @@ class OperatorSpec extends AnyFunSuite {
         dim = 64, k = 3, numPlanes = 8))
       assert(after == lshSurv,
         "retracted index must rank exactly like the surviving corpus")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("bm25TopKBatch equals the per-query scan loop (overlapping + disjoint)") {
@@ -2666,18 +2615,16 @@ class OperatorSpec extends AnyFunSuite {
       "qc" -> Seq("scan", "row"))
     val qFrame = perQuery.flatMap { case (q, ts) => ts.map(q -> _) }
       .toDF("query_id", "term")
-    val batched = Retrieval.bm25TopKBatch(docs, "doc_id", "text",
+    val batched = Staging.scoped(Retrieval.bm25TopKBatch(docs, "doc_id", "text",
       qFrame, "query_id", "term", k = 5)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getLong(4))).toSeq
-    graft.operators.Staging.releaseAll()
+        r.getDouble(3), r.getLong(4))).toSeq)
     for ((q, ts) <- perQuery) {
-      val loop = Retrieval.bm25TopK(docs, "doc_id", "text", ts, k = 5)
+      val loop = Staging.scoped(Retrieval.bm25TopK(docs, "doc_id", "text", ts, k = 5)
         .collect()
         .map(r => (q, r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getLong(3))).toSeq
-      graft.operators.Staging.releaseAll()
+          r.getLong(3))).toSeq)
       assert(batched.filter(_._1 == q) == loop,
         s"batched result for $q must equal its scan-form loop iteration")
     }
@@ -2699,11 +2646,9 @@ class OperatorSpec extends AnyFunSuite {
         "doc_id", "text", work)
       Retrieval.appendToPostingsIndex(docs.filter(col("doc_id") % 2 === 0),
         "doc_id", "text", work)
-      def rows5(df: org.apache.spark.sql.DataFrame) = {
-        val r = df.collect().map(r => (r.getString(0), r.getLong(1),
+      def rows5(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+        df.collect().map(r => (r.getString(0), r.getLong(1),
           r.getLong(2), r.getDouble(3), r.getLong(4))).toSeq
-        graft.operators.Staging.releaseAll()
-        r
       }
       val probe = rows5(Retrieval.topKFromIndexBatch(spark, work,
         qFrame, "query_id", "term", k = 5))
@@ -2714,10 +2659,9 @@ class OperatorSpec extends AnyFunSuite {
         "postings-probe batch must equal the corpus-pass batch")
       // == the single-query index route, per query
       for ((q, ts) <- perQuery) {
-        val one = Retrieval.topKFromIndex(spark, work, ts, k = 5)
+        val one = Staging.scoped(Retrieval.topKFromIndex(spark, work, ts, k = 5)
           .collect().map(r => (q, r.getLong(0), r.getLong(1),
-            r.getDouble(2), r.getLong(3))).toSeq
-        graft.operators.Staging.releaseAll()
+            r.getDouble(2), r.getLong(3))).toSeq)
         assert(probe.filter(_._1 == q) == one,
           s"batched probe for $q must equal its single-query route")
       }
@@ -2733,12 +2677,7 @@ class OperatorSpec extends AnyFunSuite {
       val ghostedCorpus = rows5(Retrieval.bm25TopKBatch(docs, "doc_id",
         "text", withGhost, "query_id", "term", k = 5))
       assert(ghostedCorpus == corpus)
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("bm25TopKBatch == scan loop on seeded random term suites (generative)") {
@@ -2760,16 +2699,14 @@ class OperatorSpec extends AnyFunSuite {
       }
       val qFrame = suite.flatMap { case (q, ts) => ts.map(q -> _) }
         .toDF("query_id", "term")
-      val batched = Retrieval.bm25TopKBatch(docs, "doc_id", "text",
+      val batched = Staging.scoped(Retrieval.bm25TopKBatch(docs, "doc_id", "text",
         qFrame, "query_id", "term", k = 4)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3), r.getLong(4))).toSeq
-      graft.operators.Staging.releaseAll()
+          r.getDouble(3), r.getLong(4))).toSeq)
       for ((q, ts) <- suite) {
-        val loop = Retrieval.bm25TopK(docs, "doc_id", "text", ts, k = 4)
+        val loop = Staging.scoped(Retrieval.bm25TopK(docs, "doc_id", "text", ts, k = 4)
           .collect().map(r => (q, r.getLong(0), r.getLong(1),
-            r.getDouble(2), r.getLong(3))).toSeq
-        graft.operators.Staging.releaseAll()
+            r.getDouble(2), r.getLong(3))).toSeq)
         assert(batched.filter(_._1 == q) == loop, s"trial $trial query $q " +
           s"terms $ts: batched != loop")
       }
@@ -2805,9 +2742,8 @@ class OperatorSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.Retrieval
     val empty = Seq((1L, ""), (2L, "  "), (3L, "")).toDF("doc_id", "text")
-    val r = Retrieval.bm25TopK(empty, "doc_id", "text", Seq("x"), k = 3)
-      .collect()
-    graft.operators.Staging.releaseAll()
+    val r = Staging.scoped(Retrieval.bm25TopK(empty, "doc_id", "text", Seq("x"), k = 3)
+      .collect())
     // Σdl = 0 → the lengthNorm guard pins every score to exactly 0.0 and
     // the ranking degrades to ascending id — no NaN/null rows
     assert(r.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
@@ -2864,14 +2800,12 @@ class OperatorSpec extends AnyFunSuite {
       (i.toLong, base.toSeq)
     }
     val emb = rows.toDF("vec_id", "embedding")
-    val m = Clustering.trainCentroidMatrix(emb, "vec_id", "embedding",
-      k = 2, iters = 3)
-    graft.operators.Staging.releaseAll()
+    val m = Staging.scoped(Clustering.trainCentroidMatrix(emb, "vec_id", "embedding",
+      k = 2, iters = 3))
     // the (cell, centroid) frame is the same training, as data (and proves
     // train-twice determinism); cells are 1-based row indices
-    val frame = Clustering.trainedCentroids(emb, "vec_id", "embedding",
-      k = 2, iters = 3).collect()
-    graft.operators.Staging.releaseAll()
+    val frame = Staging.scoped(Clustering.trainedCentroids(emb, "vec_id", "embedding",
+      k = 2, iters = 3).collect())
     assert(frame.map(_.getInt(0)).toSeq == Seq(1, 2))
     assert(frame.map(_.getSeq[Double](1).toSeq).toSeq == m.map(_.toSeq).toSeq)
     // trained centroids are unit vectors (the spherical contract)
@@ -2907,14 +2841,12 @@ class OperatorSpec extends AnyFunSuite {
     val emb = rows.toDF("vec_id", "embedding")
     val work = java.nio.file.Files.createTempDirectory("graft_codebook_").toString
     try {
-      val trained = Clustering.trainedCentroids(emb, "vec_id", "embedding",
-        k = 2, iters = 3)
-      graft.operators.Staging.releaseAll()
+      val trained = Staging.scoped(Clustering.trainedCentroids(emb, "vec_id", "embedding",
+        k = 2, iters = 3))
       Clustering.saveCentroids(trained, work)
       val loaded = Clustering.loadCentroidMatrix(spark, work)
-      val direct = Clustering.trainCentroidMatrix(emb, "vec_id", "embedding",
-        k = 2, iters = 3)
-      graft.operators.Staging.releaseAll()
+      val direct = Staging.scoped(Clustering.trainCentroidMatrix(emb, "vec_id", "embedding",
+        k = 2, iters = 3))
       // bit-exact round-trip (doubles through parquet are lossless)
       assert(loaded.map(_.toSeq).toSeq == direct.map(_.toSeq).toSeq)
       val a = Clustering.assignments(emb, "vec_id", "embedding", loaded)
@@ -2929,12 +2861,7 @@ class OperatorSpec extends AnyFunSuite {
         Clustering.loadCentroidMatrix(spark, s"$work/partial")
       }
       assert(e.getMessage.contains("non-contiguous"))
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("kmeansSummary seeds once: job count stays under the single-seeding budget") {
@@ -2956,7 +2883,7 @@ class OperatorSpec extends AnyFunSuite {
       jobs.set(0)
       spark.sparkContext.addSparkListener(listener)
       try {
-        work
+        Staging.scoped(work)
         // drain the async listener bus: poll until the count is stable
         var last = -1
         var stable = 0
@@ -2966,13 +2893,12 @@ class OperatorSpec extends AnyFunSuite {
           if (now == last) stable += 1 else { stable = 0; last = now }
         }
       } finally spark.sparkContext.removeSparkListener(listener)
-      graft.operators.Staging.releaseAll()
       jobs.get()
     }
-    // warm the staging/kernel/codegen paths so measured runs are steady
-    Clustering.kmeansSummary(emb, "vec_id", "embedding", k = 4, iters = 2)
-      .collect()
-    graft.operators.Staging.releaseAll()
+    // warm the staging/kernel/codegen paths so measured runs are steady;
+    // each run stages in a scope of its own, so none reads another's cache
+    Staging.scoped(Clustering.kmeansSummary(emb, "vec_id", "embedding",
+      k = 4, iters = 2).collect())
     val summaryJobs = measured {
       val out = Clustering.kmeansSummary(emb, "vec_id", "embedding",
         k = 4, iters = 2).collect()(0)
@@ -3002,11 +2928,9 @@ class OperatorSpec extends AnyFunSuite {
     val docs = t("documents")
     val emb = t("embeddings")
     val q0 = emb.filter(col("vec_id") === 0)
-    def rows(df: org.apache.spark.sql.DataFrame) = {
-      val r = df.collect().map(r => (r.getLong(0), r.getDouble(1),
+    def rows(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
+      df.collect().map(r => (r.getLong(0), r.getDouble(1),
         r.getLong(2))).toSeq
-      graft.operators.Staging.releaseAll()
-      r
     }
     val lex = Retrieval.bm25TopK(docs, "doc_id", "text",
       Seq("dup", "vector", "batch"), k = 60)
@@ -3039,17 +2963,15 @@ class OperatorSpec extends AnyFunSuite {
       (i.toLong, base.toSeq)
     }
     val emb = rows.toDF("vec_id", "embedding")
-    val out = Clustering.kmeansSummary(emb, "vec_id", "embedding",
-      k = 2, iters = 4).collect()(0)
-    graft.operators.Staging.releaseAll()
+    val out = Staging.scoped(Clustering.kmeansSummary(emb, "vec_id", "embedding",
+      k = 2, iters = 4).collect()(0))
     assert(out.getLong(0) == 40L)
     assert(out.getBoolean(1) && out.getBoolean(2) && out.getBoolean(3))
     // the corpus fixture: gates hold there too, and repeat runs agree
     val emb2 = t("embeddings")
-    def run(df: org.apache.spark.sql.DataFrame) = {
+    def run(df: => org.apache.spark.sql.DataFrame) = Staging.scoped {
       val r = Clustering.kmeansSummary(df, "vec_id", "embedding",
         k = 8, iters = 2).collect()(0)
-      graft.operators.Staging.releaseAll()
       (r.getLong(0), r.getBoolean(1), r.getBoolean(2), r.getBoolean(3))
     }
     val a = run(emb2)

@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Diff, Sampling, Sharding, TextAnalysis}
+import graft.queries.SessionScratch.rmTree
+import graft.operators.{Dedup, Diff, Sampling, Sharding, Staging, TextAnalysis}
 
 /** Properties of the corpus-lifecycle operators (PipelineQueries) the
   * DuckDB oracle doesn't cover: leakage-safety as an invariant (not just
   * a hash match on one fixture), mixture proportion bounds, diff
   * round-trip semantics, and the shard write → manifest-verify loop.
   */
-class PipelineOpsSpec extends AnyFunSuite {
+class PipelineOpsSpec extends AnyFunSuite with StagingScope {
 
   lazy val spark: SparkSession = SparkTestSession.get
   val dir = "/root/testdata/sf0.001"
@@ -418,12 +419,7 @@ class PipelineOpsSpec extends AnyFunSuite {
         .findFirst().get()
       java.nio.file.Files.delete(aFile)
       assert(!Sharding.verifyShards(spark, work, col("doc_id")).isEmpty)
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("shuffled shard export bakes in the deterministic read order") {
@@ -446,12 +442,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       // …which is actually shuffled, not id order
       val ids = gotKeys.map(_._2)
       assert(ids != ids.sorted)
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("shard assignment is decorrelated from the split assignment") {
@@ -567,7 +558,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       val q = r.getAs[Double]("mean_quality")
       assert(q >= 0.0 && q <= 1.0, s"mean_quality $q")
     }
-    graft.operators.Staging.releaseAll()
   }
 
   // ---- source triage ---------------------------------------------------
@@ -581,11 +571,10 @@ class PipelineOpsSpec extends AnyFunSuite {
       (4L, "B", "xx yy zz ww")  // → B: rep 2/4 = 0.5
     ).toDF("doc_id", "source", "text")
     // minMeanQuality = 0 isolates the repeated-segment leg
-    val out = TextAnalysis.sourceTriage(d, "source", "doc_id", "text",
+    val out = Staging.scoped(TextAnalysis.sourceTriage(d, "source", "doc_id", "text",
         w = 2, minMeanQuality = 0.0, maxRepFraction = 0.3)
       .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(3), r.getDouble(4), r.getBoolean(5)))).toMap
-    graft.operators.Staging.releaseAll()
+        ((r.getLong(1), r.getLong(3), r.getDouble(4), r.getBoolean(5)))).toMap)
     assert(out("A") == ((2L, 4L, 0.0, false)))
     assert(out("B") == ((2L, 4L, 0.5, true)))
   }
@@ -596,11 +585,10 @@ class PipelineOpsSpec extends AnyFunSuite {
       (1L, "A", "alpha beta gamma delta"),
       (2L, "E", "   ")) // zero tokens → no segments
     .toDF("doc_id", "source", "text")
-    val out = TextAnalysis.sourceTriage(d, "source", "doc_id", "text",
+    val out = Staging.scoped(TextAnalysis.sourceTriage(d, "source", "doc_id", "text",
         w = 2, minMeanQuality = 1.0, maxRepFraction = 1.1)
       .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(3), r.getDouble(4), r.getBoolean(5)))).toMap
-    graft.operators.Staging.releaseAll()
+        ((r.getLong(1), r.getLong(3), r.getDouble(4), r.getBoolean(5)))).toMap)
     // both flagged by the (impossible) quality bar; the empty source's
     // segment stats are the guarded zeros, never null or NaN
     assert(out("E") == ((1L, 0L, 0.0, true)))
@@ -609,18 +597,16 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("the round-10 curation operators are deterministic under repartitioning") {
     val d = docs.limit(120)
-    def seg(df: org.apache.spark.sql.DataFrame) = {
-      val out = Dedup.dedupSegmentsKeepFirst(df, "doc_id", "text", w = 6)
+    def seg(df: org.apache.spark.sql.DataFrame) = Staging.scoped {
+      Dedup.dedupSegmentsKeepFirst(df, "doc_id", "text", w = 6)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-      graft.operators.Staging.releaseAll(); out
     }
     assert(seg(d) == seg(d.repartition(7)))
-    def tri(df: org.apache.spark.sql.DataFrame) = {
-      val out = TextAnalysis.sourceTriage(df, "source", "doc_id", "text",
+    def tri(df: org.apache.spark.sql.DataFrame) = Staging.scoped {
+      TextAnalysis.sourceTriage(df, "source", "doc_id", "text",
           w = 6, minMeanQuality = 0.8, maxRepFraction = 0.1)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
           r.getLong(3), r.getDouble(4), r.getBoolean(5))).toSet
-      graft.operators.Staging.releaseAll(); out
     }
     assert(tri(d) == tri(d.repartition(7)))
   }
@@ -634,10 +620,9 @@ class PipelineOpsSpec extends AnyFunSuite {
           .cast("long").as("qu"))
       .groupBy("source").agg(avg(col("qu")).as("m"))
       .collect().map(r => r.getString(0) -> r.getDouble(1) / 1e9).toMap
-    val out = TextAnalysis.sourceTriage(d, "source", "doc_id", "text",
+    val out = Staging.scoped(TextAnalysis.sourceTriage(d, "source", "doc_id", "text",
         w = 8, minMeanQuality = 0.5, maxRepFraction = 0.5)
-      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-    graft.operators.Staging.releaseAll()
+      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap)
     assert(out.keySet == expected.keySet)
     out.foreach { case (s, q) =>
       assert(math.abs(q - expected(s)) < 1e-12, s"$s: $q vs ${expected(s)}")
@@ -652,9 +637,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     val total = emb.count()
     // the public quantizer surface: train once, bucket the corpus with the
     // returned matrix (the data-card "topic balance" loop)
-    val m = Clustering.trainCentroidMatrix(emb, "vec_id", "embedding",
-      k = 4, iters = 2)
-    graft.operators.Staging.releaseAll()
+    val m = Staging.scoped(Clustering.trainCentroidMatrix(emb, "vec_id", "embedding",
+      k = 4, iters = 2))
     val bucketed = Clustering.assignments(emb, "vec_id", "embedding", m)
       .withColumnRenamed("id", "vec_id")
     // every vector lands in exactly one cell, cells within [1, k]

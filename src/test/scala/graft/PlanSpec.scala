@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SessionScratch.rmTree
 
 /** Physical-plan assertions: the properties that make these operators hold
   * at 100 TB must survive refactors, so they're pinned here — filters reach
@@ -9,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast, aggregates split partial/final (SURVEY.md §4: all delegated
   * to Catalyst, verified rather than hand-built).
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with StagingScope {
 
   lazy val spark: SparkSession = SparkTestSession.get
   val dir = "/root/testdata/sf0.01"
@@ -254,12 +255,7 @@ class PlanSpec extends AnyFunSuite {
         .filter(_.contains("Exchange hashpartitioning")).toSeq
       assert(shuffles.forall(l => !l.contains("band_sig")),
         s"band store rides a shuffle:\n${shuffles.mkString("\n")}")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => java.nio.file.Files.delete(x))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 
   test("corpus-comparison plans: digests and buckets shuffle, never payloads") {
@@ -351,7 +347,6 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"corpus-side sort-merge join (bench must broadcast):\n$p")
-    graft.operators.Staging.releaseAll()
   }
 
   test("LM scoring model tables join as broadcasts at gate scale") {
@@ -362,7 +357,6 @@ class PlanSpec extends AnyFunSuite {
     // broadcast at this scale; the corpus side never sort-merge-joins
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")
     assert(!p.contains("SortMergeJoin"), s"unexpected sort-merge join:\n$p")
-    graft.operators.Staging.releaseAll()
   }
 
   test("BM25 is map-side scoring: no token explode, top-k as TakeOrdered") {
@@ -377,7 +371,6 @@ class PlanSpec extends AnyFunSuite {
     assert(shuffles.isEmpty, s"doc-keyed exchange:\n${shuffles.mkString("\n")}")
     assert(p.contains("TakeOrderedAndProject"),
       s"top-k did not plan as TakeOrdered:\n$p")
-    graft.operators.Staging.releaseAll()
   }
 
   test("postings-index top-k pushes the In(token) filter to the parquet scan") {
@@ -394,7 +387,6 @@ class PlanSpec extends AnyFunSuite {
       s"postings route still scans the corpus:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       s"top-k did not plan as TakeOrdered:\n$p")
-    graft.operators.Staging.releaseAll()
   }
 
   test("phrase matches push the In(token) filter; no corpus in the plan") {
@@ -407,7 +399,6 @@ class PlanSpec extends AnyFunSuite {
       s"token filter not pushed to the positions scan:\n$p")
     assert(!p.contains("documents.parquet"),
       s"phrase route still scans the corpus:\n$p")
-    graft.operators.Staging.releaseAll()
   }
 
   test("gram-postings decontamination never touches the corpus") {
@@ -426,7 +417,6 @@ class PlanSpec extends AnyFunSuite {
       s"the benchmark slice filter is not pushed:\n$p")
     assert(corpusScans.isEmpty,
       s"unfiltered corpus scan in the audit plan:\n${corpusScans.mkString("\n")}")
-    graft.operators.Staging.releaseAll()
   }
 
   test("IVF-cell probe pushes the In(cell) filter; corpus vectors stay out of the plan") {
@@ -441,7 +431,6 @@ class PlanSpec extends AnyFunSuite {
     // side never shuffles on a join key
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
       s"query probes did not broadcast:\n$p")
-    graft.operators.Staging.releaseAll()
   }
 
   test("batched BM25 shares one corpus pass across all queries") {
@@ -452,7 +441,6 @@ class PlanSpec extends AnyFunSuite {
     // the corpus never sort-merge-joins
     assert(!p.contains("SortMergeJoin"), s"corpus-side SMJ:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"query frames not broadcast:\n$p")
-    graft.operators.Staging.releaseAll()
   }
 
   test("cluster assignment is one kernel pass + a k-group aggregate") {

@@ -3,6 +3,7 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SessionScratch.rmTree
 
 /** Integration tests for the HTTP entry point: real requests through
   * socket → parse → plan → render, covering the formats, the Accept
@@ -171,10 +172,7 @@ class ServerSpec extends AnyFunSuite {
       assert(lines.length == 6) // header + 5 regions - deleted + inserted
     } finally {
       srv.stop()
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
+      rmTree(work)
     }
   }
 
@@ -202,10 +200,7 @@ class ServerSpec extends AnyFunSuite {
         "aborted do() must stage nothing")
     } finally {
       srv.stop()
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
+      rmTree(work)
     }
   }
 

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SessionScratch.rmTree
+import graft.operators.Staging
 import graft.streaming.{CorpusIngest, EventStreams}
 
 /** Long-running streaming soak — the evidence the bounded AvailableNow
@@ -14,20 +16,30 @@ import graft.streaming.{CorpusIngest, EventStreams}
   * Both soaks run bounded wall-clock (~2-3 min combined) by keeping each
   * micro-batch tiny and the drain's shuffle width at 2.
   */
-class SoakSpec extends AnyFunSuite {
+class SoakSpec extends AnyFunSuite with StagingScope {
 
   lazy val spark: SparkSession = SparkTestSession.get
-
-  private def rmTree(dir: String): Unit = {
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk.close()
-  }
 
   private def median(xs: Seq[Long]): Long = {
     val s = xs.sorted
     if (s.isEmpty) 0L else s(s.length / 2)
+  }
+
+  /** CPU time this JVM has used so far, in ms. The flat-cost checks
+    * below compare CPU, not wall time: wall time grows whenever other
+    * processes load the host (the checks failed that way under a loaded
+    * 32-core run), CPU time grows only with the work done.
+    */
+  private def cpuMs(): Long =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+      .getProcessCpuTime / 1000000L
+
+  /** `f`'s wall and CPU seconds. */
+  private def timed(f: => Unit): (Double, Double) = {
+    val (t0, c0) = (System.nanoTime(), cpuMs())
+    f
+    ((System.nanoTime() - t0) / 1e9, (cpuMs() - c0) / 1e3)
   }
 
   test("tumbling drain soak: 240 micro-batches, watermark-bounded state, flat cost") {
@@ -60,6 +72,16 @@ class SoakSpec extends AnyFunSuite {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "2")
       s.conf.set("spark.sql.streaming.numRecentProgressUpdates", "300")
+      // the JVM's CPU clock at each batch's progress event
+      val cpuAt = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          cpuAt.put(e.progress.batchId, cpuMs())
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      }
+      s.streams.addListener(listener)
       val agg = EventStreams.tumblingAgg(EventStreams.readEventStream(s, fixture))
       val q = agg.writeStream
         .outputMode("append")
@@ -68,7 +90,14 @@ class SoakSpec extends AnyFunSuite {
         .option("checkpointLocation", s"$fixture/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      try {
+        q.awaitTermination()
+        // progress events reach listeners asynchronously
+        val last = q.lastProgress.batchId
+        val until = System.currentTimeMillis() + 30000L
+        while (!cpuAt.containsKey(last) && System.currentTimeMillis() < until)
+          Thread.sleep(50)
+      } finally s.streams.removeListener(listener)
 
       val prog = q.recentProgress.filter(_.numInputRows > 0)
       assert(prog.length >= 200, s"expected 200+ data batches, saw ${prog.length}")
@@ -81,17 +110,23 @@ class SoakSpec extends AnyFunSuite {
       assert(stateRows.max <= 12,
         s"state grew to ${stateRows.max} rows — not watermark-bounded")
 
-      // PER-BATCH COST IS FLAT: the median trigger wall of the last 50
+      // PER-BATCH COST IS FLAT: the mean CPU per batch over the last 50
       // batches stays within 3× of batches 10-60 (skipping codegen
       // warmup). Linear state or log growth would trend this upward.
+      assert(prog.forall(p => cpuAt.containsKey(p.batchId)),
+        "a batch's progress event never reached the listener")
+      def cpuPerBatch(from: Int, until: Int): Long =
+        (cpuAt.get(prog(until - 1).batchId) - cpuAt.get(prog(from - 1).batchId)) /
+          (until - from)
+      val early = cpuPerBatch(10, 60)
+      val late = cpuPerBatch(prog.length - 50, prog.length)
       val durs = prog.flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
-      val early = median(durs.slice(10, 60))
-      val late = median(durs.takeRight(50))
+      val wall = s"median walls ${median(durs.slice(10, 60))} → ${median(durs.takeRight(50))} ms"
       assert(late <= math.max(3 * early, early + 200),
-        s"per-batch wall grew: early=$early ms late=$late ms")
+        s"per-batch CPU grew: early=$early ms late=$late ms ($wall)")
       // observability for the SCALE.md soak row (sbt test prints info)
       info(f"drain soak: batches=${prog.length} stateRowsMax=${stateRows.max} " +
-        f"earlyMedian=${early}ms lateMedian=${late}ms")
+        f"cpuPerBatch=${early}ms → ${late}ms, $wall")
 
       // CHECKPOINT LOGS ARE PURGED, NOT ACCUMULATED FOREVER: retention
       // keeps minBatchesToRetain (100) entries, but the purge itself is
@@ -256,19 +291,18 @@ class SoakSpec extends AnyFunSuite {
         rows.toDF("doc_id", "text")
           .repartitionByRange(perChunk, col("doc_id"))
           .write.mode("append").parquet(src)
-        val t0 = System.nanoTime()
-        CorpusIngest.runIngestAvailableNow(spark, src,
+        timed(CorpusIngest.runIngestAvailableNow(spark, src,
           s"$root/idx", s"$root/sink", s"$root/ckpt",
-          jaccardThreshold = 0.6, shufflePartitions = Some(2))
-        (System.nanoTime() - t0) / 1e9
+          jaccardThreshold = 0.6, shufflePartitions = Some(2)))
       }
-      // FLAT PER-CHUNK WALL: every chunk drains the same 50 batches; the
+      // FLAT PER-CHUNK COST: every chunk drains the same 50 batches; the
       // index quadruples over the soak but per-batch work must stay
-      // delta-sized (3× bound absorbs host noise, not growth trends)
-      assert(chunkWalls.last <= chunkWalls.head * 3,
-        s"chunk walls grew: ${chunkWalls.map(w => f"$w%.1f").mkString(", ")} s")
-      info(s"ingest soak chunk walls (50 batches each): " +
-        chunkWalls.map(w => f"$w%.1f s").mkString(", "))
+      // delta-sized (3× bound absorbs measurement noise, not growth
+      // trends). Measured in CPU seconds, which host load leaves alone.
+      val walls = chunkWalls.map(w => f"${w._1}%.1f/${w._2}%.1f").mkString(", ")
+      assert(chunkWalls.last._2 <= chunkWalls.head._2 * 3,
+        s"chunk CPU grew (wall/CPU s per chunk): $walls")
+      info(s"ingest soak chunk wall/CPU s (50 batches each): $walls")
 
       // the one duplicate planted 199 batches after its source dropped;
       // everything else survived
@@ -333,45 +367,41 @@ class SoakSpec extends AnyFunSuite {
         // k = 1: exactly one doc contains the probe term, and the
         // equality contract holds only while the scan form's k-th score
         // is positive (the index never pads with zero-score docs)
-        val viaPost = Retrieval.topKFromIndex(spark, s"$root/post",
-          Seq("s1_3"), k = 1).collect().map(_.toSeq).toSeq
-        val viaScan = Retrieval.bm25TopK(c, "doc_id", "text",
-          Seq("s1_3"), k = 1).collect().map(_.toSeq).toSeq
-        graft.operators.Staging.releaseAll()
+        val viaPost = Staging.scoped(Retrieval.topKFromIndex(spark,
+          s"$root/post", Seq("s1_3"), k = 1).collect().map(_.toSeq).toSeq)
+        val viaScan = Staging.scoped(Retrieval.bm25TopK(c, "doc_id", "text",
+          Seq("s1_3"), k = 1).collect().map(_.toSeq).toSeq)
         assert(viaPost == viaScan, s"$label: postings route diverged")
         val needle = Seq("s2_4", "s2_5")
-        val viaPos = Retrieval.phraseMatches(spark, s"$root/pos", needle)
-          .collect().map(_.toSeq).toSeq
-        val viaPosScan = Retrieval.phraseCountScan(c, "doc_id", "text",
-          needle).collect().map(_.toSeq).toSeq
-        graft.operators.Staging.releaseAll()
+        val viaPos = Staging.scoped(Retrieval.phraseMatches(spark,
+          s"$root/pos", needle).collect().map(_.toSeq).toSeq)
+        val viaPosScan = Staging.scoped(Retrieval.phraseCountScan(c,
+          "doc_id", "text", needle).collect().map(_.toSeq).toSeq)
         assert(viaPos == viaPosScan, s"$label: positional route diverged")
         val bench = c.filter(col("doc_id") === 3L)
-        val viaGram = Decontaminate.flagContaminatedFromIndex(spark,
-            s"$root/gram", bench, "text", minOverlap = 2)
-          .collect().map(_.toSeq).toSeq
-        val viaGramScan = Decontaminate.flagContaminated(c, "doc_id",
-            "text", bench, "text", n = 3, minOverlap = 2)
-          .filter(col("overlap") > 0).orderBy("doc_id")
-          .collect().map(_.toSeq).toSeq
-        graft.operators.Staging.releaseAll()
+        val viaGram = Staging.scoped {
+          Decontaminate.flagContaminatedFromIndex(spark, s"$root/gram", bench,
+            "text", minOverlap = 2).collect().map(_.toSeq).toSeq
+        }
+        val viaGramScan = Staging.scoped {
+          Decontaminate.flagContaminated(c, "doc_id", "text", bench, "text",
+            n = 3, minOverlap = 2)
+            .filter(col("overlap") > 0).orderBy("doc_id")
+            .collect().map(_.toSeq).toSeq
+        }
         assert(viaGram == viaGramScan, s"$label: gram route diverged")
         Retrieval.buildTermStatsIndex(c, "doc_id", "text", s"$root/terms_fresh")
         val probe = Seq(901L -> freshText(1)).toDF("doc_id", "text")
-        def sc(p: String) = {
-          val r = Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
+        def sc(p: String) = Staging.scoped {
+          Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
             Seq("s1_3", "s2_4"), p, k = 1).collect().map(_.toSeq).toSeq
-          graft.operators.Staging.releaseAll()
-          r
         }
         assert(sc(s"$root/terms") == sc(s"$root/terms_fresh"),
           s"$label: term-stats route diverged")
         CorpusCompare.buildGramIndex(c, col("text"), s"$root/drift_fresh")
-        def dr(p: String) = {
-          val r = CorpusCompare.driftSummaryAgainstIndex(spark, p, probe,
+        def dr(p: String) = Staging.scoped {
+          CorpusCompare.driftSummaryAgainstIndex(spark, p, probe,
             col("text")).collect().map(_.toSeq).toSeq
-          graft.operators.Staging.releaseAll()
-          r
         }
         assert(dr(s"$root/drift") == dr(s"$root/drift_fresh"),
           s"$label: drift-gram route diverged")
@@ -386,7 +416,7 @@ class SoakSpec extends AnyFunSuite {
       }
 
       addChunk(0)
-      val w0 = { val t0 = System.nanoTime(); drain(); (System.nanoTime() - t0) / 1e9 }
+      val w0 = timed(drain())
       // TAKEDOWN of doc 0 across the whole suite: dedup tombstone + ban
       // at the door, postings stat correction, per-row tombstones on the
       // positional/gram stores, negative term-stats delta
@@ -403,7 +433,7 @@ class SoakSpec extends AnyFunSuite {
       // chunk 1 includes a RE-UPLOAD of the taken-down bytes (id 990) —
       // the banned door must drop it before any store sees it
       addChunk(1, Seq(990L -> freshText(0)))
-      val w1 = { val t0 = System.nanoTime(); drain(); (System.nanoTime() - t0) / 1e9 }
+      val w1 = timed(drain())
       assert(corpus().filter(col("doc_id") === 990L).count() == 0L,
         "banned re-upload re-entered mid-soak")
       // MID-SOAK compaction of every store: queries bit-identical after
@@ -412,11 +442,13 @@ class SoakSpec extends AnyFunSuite {
       routesEqual("post-compaction")
 
       addChunk(2)
-      val w2 = { val t0 = System.nanoTime(); drain(); (System.nanoTime() - t0) / 1e9 }
+      val w2 = timed(drain())
       routesEqual("end-of-soak")
-      assert(w2 <= w0 * 3,
-        f"suite-maintaining chunk walls grew: $w0%.1f, $w1%.1f, $w2%.1f s")
-      info(f"suite soak chunk walls (20 batches each): $w0%.1f, $w1%.1f, $w2%.1f s")
+      // flat per-chunk CPU, as in the ingest soak
+      val walls = Seq(w0, w1, w2).map(w => f"${w._1}%.1f/${w._2}%.1f").mkString(", ")
+      assert(w2._2 <= w0._2 * 3,
+        s"suite-maintaining chunk CPU grew (wall/CPU s per chunk): $walls")
+      info(s"suite soak chunk wall/CPU s (20 batches each): $walls")
       // the live policy kept every family's backlog bounded across the
       // 60-batch drain — the small-files growth auto-compaction exists
       // to stop (without it each store would hold ~60 append sets here)

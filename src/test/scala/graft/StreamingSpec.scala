@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SessionScratch.rmTree
+import graft.operators.Staging
 import graft.streaming.EventStreams
 import graft.model.Tables
 
@@ -10,7 +12,7 @@ import graft.model.Tables
   * converge to the batch answer once all input is processed (same
   * `groupBy(window(...))` core — SURVEY.md §2.9 upgrade path).
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with StagingScope {
 
   lazy val spark: SparkSession = SparkTestSession.get
   val dir = "/root/testdata/sf0.001"
@@ -146,13 +148,6 @@ class StreamingSpec extends AnyFunSuite {
     writeFixtureFile(fixture, Seq((ns(1, 40), "click", 10.0), (ns(6, 30), "view", 6.0)),
       "f3.parquet", now)
     fixture
-  }
-
-  private def rmTree(dir: String): Unit = {
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk.close()
   }
 
   test("append-mode AvailableNow drain equals the batch oracle on a late-data fixture") {
@@ -432,9 +427,11 @@ class StreamingSpec extends AnyFunSuite {
         .parquet(s"$work/in")
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-          val scored = Retrieval.scoreAgainstTermIndex(df, "doc_id",
-            "text", Seq("dup", "vector", "batch"), s"$work/idx", k = 10)
-            .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+          val scored = Staging.scoped {
+            Retrieval.scoreAgainstTermIndex(df, "doc_id", "text",
+              Seq("dup", "vector", "batch"), s"$work/idx", k = 10)
+              .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+          }
           got.synchronized { got(id) = scored }
           ()
         }
@@ -442,25 +439,19 @@ class StreamingSpec extends AnyFunSuite {
         .option("checkpointLocation", s"$work/ckpt")
         .start()
       q.awaitTermination(120000)
-      graft.operators.Staging.releaseAll()
       assert(got.size == 2, s"expected 2 batches, got ${got.keySet}")
       // each streamed batch == the static scoring of the same rows
       val allStatic = Seq(batch1, batch2).map { b =>
-        val r = Retrieval.scoreAgainstTermIndex(b.toDF("doc_id", "text"),
-          "doc_id", "text", Seq("dup", "vector", "batch"), s"$work/idx",
-          k = 10).collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-        graft.operators.Staging.releaseAll()
-        r
+        Staging.scoped {
+          Retrieval.scoreAgainstTermIndex(b.toDF("doc_id", "text"), "doc_id",
+            "text", Seq("dup", "vector", "batch"), s"$work/idx", k = 10)
+            .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+        }
       }
       // batch→file order under maxFilesPerTrigger=1 follows mtime; match
       // by content (the id set), then require exact score equality
       assert(got.values.toSet == allStatic.toSet,
         s"streamed $got vs static $allStatic")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(work))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
+    } finally rmTree(work)
   }
 }
