@@ -658,7 +658,6 @@ final class Planner(spark: SparkSession, dir: String, catalog: Catalog = Catalog
       val pk = catalog.primaryKey(childCtx.table).filter(childCtx.baseColumns.contains)
       val order = sortKeys.map(sk => direction(bindScalar(childCtx, sk.expr), sk.ascending)) ++
         pk.map(col)
-      val w = Window.partitionBy(rootKeys.map(col): _*).orderBy(order: _*)
       val fields = structCols.zipWithIndex.map { case (c, i) => c.as(s"__f$i") }
       val names = items.zipWithIndex.map { case (it, i) =>
         it.title.orElse(it.alias).getOrElse(it.expr match {
@@ -666,12 +665,29 @@ final class Planner(spark: SparkSession, dir: String, catalog: Catalog = Catalog
           case e => itemName(e, i)
         })
       }
-      val ranked0 = childCtx.df.withColumn("__rn", row_number().over(w))
-      val ranked = segLimit match {
-        case Some((n, skip)) =>
-          ranked0.filter(col("__rn") > skip && col("__rn") <= skip + n)
-        case None => ranked0
-      }
+      val ranked =
+        if (rootKeys.isEmpty) {
+          // a root segment is ONE group: rank one sorted partition instead
+          // of a window with no partition key (which warns on every call).
+          // A limit runs as one sorted partition (TakeOrderedAndProject);
+          // without one the rows sort in a single partition, as the window
+          // did. Either way `monotonically_increasing_id` counts the rows
+          // in rank order.
+          val sorted = segLimit match {
+            case Some((n, skip)) => childCtx.df.orderBy(order: _*).limit(skip + n)
+            case None => childCtx.df.repartition(1).sortWithinPartitions(order: _*)
+          }
+          val rn = sorted.withColumn("__rn", monotonically_increasing_id() + 1L)
+          segLimit.fold(rn) { case (_, skip) => rn.filter(col("__rn") > skip) }
+        } else {
+          val w = Window.partitionBy(rootKeys.map(col): _*).orderBy(order: _*)
+          val ranked0 = childCtx.df.withColumn("__rn", row_number().over(w))
+          segLimit match {
+            case Some((n, skip)) =>
+              ranked0.filter(col("__rn") > skip && col("__rn") <= skip + n)
+            case None => ranked0
+          }
+        }
       ranked
         .groupBy(rootKeys.map(col): _*)
         .agg(sort_array(collect_list(struct((col("__rn") +: fields): _*))).as("__raw"))

@@ -164,34 +164,45 @@ object Clustering {
 
   /** Persist a trained codebook — the quantizer lifecycle's missing hop:
     * train ONCE (an iterative distributed job), store the k-row
-    * (cell, centroid) frame next to the corpus indices, and have every
-    * later session [[loadCentroidMatrix]] + [[assignments]] without
+    * (cell, centroid) frame as the parquet directory `path`, and have
+    * every later session [[loadCentroidMatrix]] + [[assignments]] without
     * retraining. A codebook is a one-shot artifact (k rows, written
     * whole), so this is a plain overwrite-in-one-job write, not the
     * merge-on-read lifecycle the growing stores need; re-training writes
     * a new codebook atomically the same way.
     */
   def saveCentroids(centroids: DataFrame, path: String): Unit =
+    codebook(centroids).write.mode("overwrite").parquet(path)
+
+  /** The stored form of a codebook: one file of (int cell, double-array
+    * centroid) rows.
+    */
+  private[graft] def codebook(centroids: DataFrame): DataFrame =
     centroids.select(col("cell").cast("int").as("cell"),
         col("centroid").cast("array<double>").as("centroid"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/codebook")
 
-  /** Load a persisted codebook back to the matrix form [[assignments]]
-    * takes — row i is cell i+1, exactly as trained. Fails loudly on a
-    * codebook whose cells aren't the contiguous 1..k the trainer wrote
-    * (a partial copy or a concatenation of two codebooks).
+  /** Load a codebook saved at `path` back to the matrix form
+    * [[assignments]] takes — row i is cell i+1, exactly as trained.
     */
   def loadCentroidMatrix(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Double]] = {
-    val rows = spark.read.parquet(s"$path/codebook")
+      path: String): Array[Array[Double]] =
+    centroidMatrix(spark.read.parquet(path), path)
+
+  /** A codebook frame as a matrix. Fails loudly on a codebook whose cells
+    * aren't the contiguous 1..k the trainer wrote (a partial copy or a
+    * concatenation of two codebooks).
+    */
+  private[graft] def centroidMatrix(codebook: DataFrame,
+      where: String): Array[Array[Double]] = {
+    val rows = codebook
       .select(col("cell").cast("int"), col("centroid").cast("array<double>"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    require(rows.nonEmpty, s"empty codebook at $path")
+    require(rows.nonEmpty, s"empty codebook at $where")
     require(rows.map(_._1).toSeq == (1 to rows.length),
-      s"codebook at $path has non-contiguous cells ${rows.map(_._1).toSeq} " +
+      s"codebook at $where has non-contiguous cells ${rows.map(_._1).toSeq} " +
         "— not a trainer-written codebook")
     rows.map(_._2)
   }

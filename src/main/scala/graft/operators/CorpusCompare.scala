@@ -247,47 +247,37 @@ object CorpusCompare {
     * pattern of `IncrementalDedup` applied to the monitoring family: a
     * DAILY drift check must not re-tokenize the historical corpus.
     *
-    * Durability contract: plain single-writer parquet, same as the dedup
-    * indices; appends add complete delta-count files and reads SUM per
-    * gram across files, so the layout is merge-on-read and append crashes
-    * leave at worst a missing delta (re-run the append). [[compactGramIndex]]
-    * folds accumulated deltas through the `IndexMaintenance` write-ahead-
-    * marker swap; readers resolve a pending swap through
-    * [[IndexMaintenance.storePath]] and never write.
+    * Durability contract: an [[IndexMaintenance]] root, like the dedup
+    * indices; appends add complete delta-count segments and reads SUM per
+    * gram across them, so the layout is merge-on-read and a crashed
+    * append commits nothing (re-run it). [[compactGramIndex]] folds
+    * accumulated deltas into one segment.
     */
   def buildGramIndex(docs: DataFrame, text: Column, path: String): Unit =
-    IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      gramCounts(docs, text).write.mode("overwrite").parquet(s"$path/grams")
-    }
+    IndexMaintenance.withWriterLease(docs.sparkSession, path)(
+      _.replace("grams", gramCounts(docs, text)))
 
   /** Append a delta batch's gram counts to an existing index (one
-    * vocabulary-sized file per append; reads merge by summing).
+    * vocabulary-sized segment per append; reads merge by summing).
     */
   def appendToGramIndex(delta: DataFrame, text: Column, path: String): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      gramCounts(delta, text).write.mode("append").parquet(s"$path/grams")
-    }
+    IndexMaintenance.withWriterLease(delta.sparkSession, path)(
+      _.append("grams", gramCounts(delta, text)))
 
   /** BATCH-ID-KEYED append — the REPLAY-IDEMPOTENT form a streaming
     * ingest needs: a plain [[appendToGramIndex]] re-run double-counts
     * (count rows carry no replay identity — this store's documented
-    * exactly-once contract), so the keyed form writes the delta into its
-    * own `grams/b<batchKey>` subdirectory with OVERWRITE semantics — an
-    * at-least-once foreachBatch replay overwrites its own delta instead
-    * of duplicating it. Readers list recursively and sum as before.
+    * exactly-once contract), so the keyed form writes the delta as a
+    * segment keyed `b<batchKey>` — an at-least-once foreachBatch replay
+    * replaces its own delta instead of duplicating it, and a batch a
+    * compaction already folded is skipped (the lineage namespacing of
+    * [[Retrieval.appendToTermStatsIndexKeyed]]).
     */
   def appendToGramIndexKeyed(delta: DataFrame, text: Column, path: String,
       batchKey: Long, lineage: String = ""): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      // folded-ledger skip + lineage namespacing: see
-      // Retrieval.appendToTermStatsIndexKeyed (the same two lifecycle
-      // hardenings — replay-after-compaction and fresh-lineage reuse)
-      val name = if (lineage.isEmpty) s"b$batchKey" else s"b${lineage}_$batchKey"
-      if (!IndexMaintenance.foldedBatches(delta.sparkSession, path, "grams")
-          .contains(name))
-        gramCounts(delta, text).write.mode("overwrite")
-          .parquet(s"$path/grams/$name")
-    }
+    IndexMaintenance.withWriterLease(delta.sparkSession, path)(
+      _.writeKeyed("grams", Retrieval.keyedName(batchKey, lineage),
+        gramCounts(delta, text)))
 
   /** RETRACT docs (takedown) from the gram-count index: append their
     * gram counts NEGATED — counts are additive, so merge-on-read sums
@@ -298,10 +288,8 @@ object CorpusCompare {
     * like this store's plain appends.
     */
   def retractFromGramIndex(docs: DataFrame, text: Column, path: String): Unit =
-    IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      gramCounts(docs, text).select(col("gram"), (-col("n")).as("n"))
-        .write.mode("append").parquet(s"$path/grams")
-    }
+    IndexMaintenance.withWriterLease(docs.sparkSession, path)(
+      _.append("grams", gramCounts(docs, text).select(col("gram"), (-col("n")).as("n"))))
 
   /** The index's merged distribution: SUM per gram across the build file
     * and every appended delta — exactly the counts a monolithic
@@ -310,10 +298,7 @@ object CorpusCompare {
     * to a fresh build on the survivors.
     */
   private def indexCounts(spark: SparkSession, path: String): DataFrame =
-    // recursive: root build/append files + keyed b<id>/ replay-idempotent
-    // subdirectories merge as one frame (no partition inference)
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(IndexMaintenance.storePath(spark, path, "grams"))
+    IndexMaintenance.snapshot(spark, path).read("grams")
       .groupBy("gram").agg(sum("n").as("n"))
       .filter(col("n") =!= 0)
 
@@ -342,28 +327,19 @@ object CorpusCompare {
       .limit(k)
       .select("gram", "n_a", "n_b", "drift_q")
 
-  /** Fold the accumulated append files into one pre-summed store — the
-    * same crash-safe protocol as [[IndexMaintenance]] (write staged →
-    * publish marker → swap; a crash at any point heals under the next
-    * writer's lease: marker present rolls the swap forward, marker absent
-    * discards the stage). Counts are bit-identical pre/post (sum of sums).
+  /** Fold the accumulated delta segments into one pre-summed segment, in
+    * one [[IndexMaintenance]] commit that also marks the folded keyed
+    * deltas so a replay of one of them is skipped. Counts are
+    * bit-identical pre/post (sum of sums).
     */
   def compactGramIndex(spark: SparkSession, path: String): Unit =
-    IndexMaintenance.withWriterLease(spark, path) {
-      val folded = spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$path/grams")
+    IndexMaintenance.withWriterLease(spark, path) { tx =>
+      tx.replace("grams", tx.snapshot.read("grams")
         .groupBy("gram").agg(sum("n").as("n"))
         // grams a retraction zeroed out fold away entirely (the
         // term-stats rule): the compacted store is row-identical to a
         // fresh build on the surviving corpus
-        .filter(col("n") =!= 0)
-      // ledger BEFORE the swap (the term-stats rule): folded keyed
-      // subdirectories must not double-count if a replay re-creates them
-      IndexMaintenance.recordFolded(spark, path, "grams",
-        IndexMaintenance.keyedSubdirs(spark, path, "grams"))
-      IndexMaintenance.swapCompacted(spark, path, "grams") { staged =>
-        folded.write.mode("overwrite").parquet(staged)
-      }
+        .filter(col("n") =!= 0))
     }
 
   /** Content overlap between two corpora, exact + gated sample estimate.

@@ -264,8 +264,8 @@ object Decontaminate {
     * these grams" audit) without a corpus scan: one `grams/` store of
     * (gram, doc_id) rows, gram = xxhash64 of the n-gram string (8-byte
     * keys — the same injective-hash budget as the dedup family's hashed
-    * shingles), gram-clustered + sorted; `gparams/` pins n at build time
-    * so appends and queries can never sign with a different width.
+    * shingles), gram-clustered + sorted; the root's params pin n at build
+    * time so appends and queries can never sign with a different width.
     *
     * Why not the positional index: a benchmark's grams over ANY shared
     * vocabulary make the phrase route's slot fan-out combinatorial
@@ -281,68 +281,56 @@ object Decontaminate {
   def buildGramPostingsIndex(docs: DataFrame, idCol: String,
       textCol: String, path: String, n: Int = 3): Unit = {
     require(n >= 1 && n <= 32, s"n must be in [1, 32], got $n")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    IndexMaintenance.withWriterLease(spark, path) {
-      // rebuild = new generation; stale tombstones must not filter it
-      IndexMaintenance.dropTombstones(spark, path)
-      // grams FIRST, gparams LAST: gparams doubles as the
-      // store-is-complete discriminator (CorpusIngest's bootstrap probes
-      // it), so a torn FIRST build fails loudly. An in-place rebuild at
-      // ANY n additionally retires the old gparams before touching grams
-      // — otherwise a crash between the two writes leaves the OLD-n
-      // gparams validating over NEW-n gram rows, and every reader would
-      // silently hash benchmarks at the wrong shingle width.
-      val fsys = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(s"$path/gparams"), true)
-      gramPostingsOf(docs, idCol, textCol, n)
-        .write.mode("overwrite").parquet(s"$path/grams")
-      Seq(n).toDF("n").write.mode("overwrite").parquet(s"$path/gparams")
+    IndexMaintenance.withWriterLease(docs.sparkSession, path) { tx =>
+      // rebuild = new id space; stale tombstones must not filter it
+      tx.drop(IndexMaintenance.TombstoneStore)
+      tx.replace("grams", gramPostingsOf(docs, idCol, textCol, n))
+      tx.params(Map("n" -> n.toLong))
     }
   }
 
   /** Append one batch (disjoint doc_ids); n comes from the index. */
   def appendToGramPostingsIndex(delta: DataFrame, idCol: String,
-      textCol: String, path: String): Unit = {
-    val spark = delta.sparkSession
-    IndexMaintenance.withWriterLease(spark, path) {
-      gramPostingsOf(delta, idCol, textCol, readGramN(spark, path))
-        .write.mode("append").parquet(s"$path/grams")
+      textCol: String, path: String): Unit =
+    IndexMaintenance.withWriterLease(delta.sparkSession, path) { tx =>
+      tx.append("grams", gramPostingsOf(delta, idCol, textCol, gramN(tx.snapshot)))
     }
-  }
+
+  /** [[appendToGramPostingsIndex]] that pins `n` on a root with no build
+    * yet — the streaming ingest's first surviving batch.
+    */
+  private[graft] def appendToGramPostingsIndexOrPin(delta: DataFrame,
+      idCol: String, textCol: String, path: String, n: Int): Unit =
+    IndexMaintenance.withWriterLease(delta.sparkSession, path) { tx =>
+      if (tx.params.isEmpty) tx.params(Map("n" -> n.toLong))
+      tx.append("grams", gramPostingsOf(delta, idCol, textCol, tx.params("n").toInt))
+    }
 
   /** RETRACT indexed docs (takedown): tombstones only — per-doc rows, no
     * cross-doc aggregate. Same contract as [[IncrementalDedup.retract]].
     */
   def retractFromGramPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame): Unit =
-    IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.addTombstones(path, ids)
-    }
+    IndexMaintenance.withWriterLease(spark, path)(IndexMaintenance.addTombstones(_, ids))
 
   /** Fold the store: replayed duplicates and tombstoned docs leave
-    * physically; tombstones retire after the swap commits.
+    * physically; tombstones retire in the same commit.
     */
   def compactGramPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): Unit =
-      IndexMaintenance.withWriterLease(spark, path) {
-    val nFiles = IndexMaintenance.targetFileCount(spark, path, "grams",
-      targetFileBytes)
-    val folded = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/grams"), "doc_id")
+      IndexMaintenance.withWriterLease(spark, path) { tx =>
+    tx.replace("grams", tx.snapshot.live("grams", "doc_id")
       .dropDuplicates("gram", "doc_id")
-      .repartition(nFiles, col("gram"))
-      .sortWithinPartitions("gram", "doc_id")
-    IndexMaintenance.swapCompacted(spark, path, "grams") { staged =>
-      folded.write.mode("overwrite").parquet(staged)
-    }
-    IndexMaintenance.dropTombstones(spark, path)
+      .repartition(tx.snapshot.targetFiles("grams", targetFileBytes), col("gram"))
+      .sortWithinPartitions("gram", "doc_id"))
+    tx.drop(IndexMaintenance.TombstoneStore)
   }
 
-  private def readGramN(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int =
-    spark.read.parquet(s"$path/gparams").head().getInt(0)
+  private def gramN(snap: IndexMaintenance.Snapshot): Int = {
+    require(snap.params.contains("n"),
+      s"no gram-postings index at ${snap.root} (no committed build)")
+    snap.params("n").toInt
+  }
 
   private def gramPostingsOf(docs: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame =
@@ -374,16 +362,15 @@ object Decontaminate {
   def flagContaminatedFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, benchmark: DataFrame, benchTextCol: String,
       minOverlap: Int = 2): DataFrame = {
-    val n = readGramN(spark, path)
+    val snap = IndexMaintenance.snapshot(spark, path)
+    val n = gramN(snap)
     val benchSh = benchmark
       .select(Dedup.tokens(col(benchTextCol)).as("toks"))
       .stagePersist()
       .select(explode(Dedup.shinglesFromTokens(col("toks"), n)).as("g"))
       .select(xxhash64(col("g")).as("gram"))
       .distinct()
-    IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(IndexMaintenance.storePath(spark, path, "grams")),
-        "doc_id")
+    snap.live("grams", "doc_id")
       .join(broadcast(benchSh), Seq("gram"), "left_semi")
       .dropDuplicates("gram", "doc_id") // crash-replayed append rows
       .groupBy("doc_id")

@@ -11,7 +11,7 @@ import graft.functions.VectorFunctions
   * without re-projecting it against the hyperplanes (or re-reading its
   * raw vectors, except the candidate rows the verify actually needs).
   *
-  * Index layout (parquet):
+  * Index layout (an [[IndexMaintenance]] root):
   *   - `sigs/`   (id, tbl, sig) — the FULL-width random-hyperplane
   *     signature per (vector, table), computed once by the native
   *     [[graft.functions.HyperplaneSigs]] kernel. Banding at any plane
@@ -21,13 +21,13 @@ import graft.functions.VectorFunctions
   *   - `vecs/`   (id, vec double array) — joined back candidate-wise for
   *     the exact-cosine verify (`cosine_sim`, bit-identical to the
   *     monolithic operator).
-  *   - `params/` one row (dim, num_tables, seed, full_planes, planes) —
-  *     `planes` is the banding width chosen at build time
+  *   - params (dim, num_tables, seed, full_planes, planes) in the
+  *     manifest — `planes` is the banding width chosen at build time
   *     ([[Similarity.adaptivePlanes]] of the corpus size unless the
   *     caller pins one). A small increment does not materially shift
   *     bucket population, so the per-increment query reuses it; corpus
-  *     growth big enough to need a wider banding is a `buildIndex` (or a
-  *     params-row edit — the signatures themselves never change).
+  *     growth big enough to need a wider banding is a `buildIndex` (the
+  *     signatures themselves never change; only `planes` would).
   *
   * Scale shape: identical premise to [[IncrementalDedup]] — the delta is
   * small, so every corpus-side frame is consumed by one broadcast hash
@@ -44,12 +44,11 @@ object IncrementalAnn {
       path: String, numPlanes: Int = 0, numTables: Int = 16,
       seed: Long = 42L, targetBucket: Int = 128,
       maxEscalations: Int = 6): Unit =
-      IndexMaintenance.withWriterLease(emb.sparkSession, path) {
+      IndexMaintenance.withWriterLease(emb.sparkSession, path) { tx =>
     val spark = emb.sparkSession
-    import spark.implicits._
     VectorFunctions.ensureRegistered(spark)
-    // rebuild = new generation; stale tombstones must not filter it
-    IndexMaintenance.dropTombstones(spark, path)
+    // rebuild = new id space; stale tombstones must not filter it
+    tx.drop(IndexMaintenance.TombstoneStore)
     val c = staged(emb, idCol, vecCol)
     val n = c.count()
     var planes =
@@ -83,30 +82,23 @@ object IncrementalAnn {
         tries += 1
       }
     }
-    // params LAST (the discriminator-last rule): an in-place rebuild
-    // retires the old params first, so a torn rebuild fails loudly at
-    // readParams instead of banding new batches against old-width
-    // signatures (or old params against new-width ones)
-    val fsys = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(s"$path/params"), true)
-    sigs.write.mode("overwrite").parquet(s"$path/sigs")
-    c.write.mode("overwrite").parquet(s"$path/vecs")
-    Seq((dim, numTables, seed, fullPlanes, planes))
-      .toDF("dim", "num_tables", "seed", "full_planes", "planes")
-      .write.mode("overwrite").parquet(s"$path/params")
+    // stores and params commit together: a reader never bands against
+    // signatures of another width
+    tx.replace("sigs", sigs)
+    tx.replace("vecs", c)
+    tx.params(paramsMap(VecParams(dim, numTables, seed, fullPlanes, planes)))
   }
 
   /** Append a new batch (typically the survivors of [[newBatchPairs]]).
-    * Same durability contract as [[IncrementalDedup.appendBatch]]:
-    * single-writer plain parquet; a crashed append recovers by re-running
-    * it (duplicates are deduped on read).
+    * Same durability contract as [[IncrementalDedup.appendBatch]]: a
+    * crashed append commits nothing and recovers by re-running it
+    * (duplicates of a re-run committed append are deduped on read).
     */
   def appendBatch(emb: DataFrame, idCol: String, vecCol: String,
       path: String): Unit =
-    IndexMaintenance.withWriterLease(emb.sparkSession, path) {
-      val p = readParams(emb.sparkSession, path)
-      writeBatch(staged(emb, idCol, vecCol), path, p, "append")
+    IndexMaintenance.withWriterLease(emb.sparkSession, path) { tx =>
+      val c = staged(emb, idCol, vecCol)
+      appendSigned(tx, sigsOf(c, paramsOf(tx.snapshot)), c)
     }
 
   /** RETRACT indexed vectors (takedown) — tombstone the ids; queries drop
@@ -115,15 +107,26 @@ object IncrementalAnn {
     * contract as [[IncrementalDedup.retract]].
     */
   def retract(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.addTombstones(path, ids)
-    }
+    IndexMaintenance.withWriterLease(spark, path)(IndexMaintenance.addTombstones(_, ids))
 
-  def readParams(spark: SparkSession, path: String): VecParams = {
-    val r = spark.read.parquet(s"$path/params").head()
-    VecParams(r.getAs[Int]("dim"), r.getAs[Int]("num_tables"),
-      r.getAs[Long]("seed"), r.getAs[Int]("full_planes"), r.getAs[Int]("planes"))
+  private[graft] def paramsOf(snap: IndexMaintenance.Snapshot): VecParams = {
+    val m = snap.params
+    require(m.nonEmpty, s"no ANN index at ${snap.root} (no committed build)")
+    VecParams(m("dim").toInt, m("num_tables").toInt, m("seed"),
+      m("full_planes").toInt, m("planes").toInt)
   }
+
+  private def paramsMap(p: VecParams): Map[String, Long] = Map(
+    "dim" -> p.dim.toLong, "num_tables" -> p.numTables.toLong, "seed" -> p.seed,
+    "full_planes" -> p.fullPlanes.toLong, "planes" -> p.planes.toLong)
+
+  /** The params the streaming ingest pins on an empty root: an explicit
+    * banding width (adaptive sizing needs a corpus to measure) at the
+    * [[buildIndex]] defaults.
+    */
+  private[graft] def bootstrapParams(dim: Int, numPlanes: Int,
+      numTables: Int): VecParams =
+    VecParams(dim, numTables, 42L, math.max(40, numPlanes), numPlanes)
 
   private def staged(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     Staging.widen(emb)
@@ -135,13 +138,13 @@ object IncrementalAnn {
       posexplode(Similarity.bucketTables(col("vec"), p.dim, p.fullPlanes,
         p.numTables, p.seed)).as(Seq("tbl", "sig")))
 
-  private def writeBatch(c: DataFrame, path: String, p: VecParams,
-      mode: String): Unit =
-    // order-free pair (recovery = re-run; duplicates collapse on read) —
-    // the writes overlap instead of summing job + commit latencies
-    IndexMaintenance.inParallel(
-      sigsOf(c, p).write.mode(mode).parquet(s"$path/sigs"),
-      c.write.mode(mode).parquet(s"$path/vecs"))
+  /** Append signatures and vectors in parallel — the transaction commits
+    * both at once.
+    */
+  private def appendSigned(tx: IndexMaintenance.Tx, sigs: DataFrame,
+      c: DataFrame): Unit =
+    IndexMaintenance.inParallelAll(Seq(
+      () => tx.append("sigs", sigs), () => tx.append("vecs", c)))
 
   /** The staged (id, vec) frame + its FULL-width signature frame, both
     * persisted — the streaming ingest computes the batch's projections
@@ -162,13 +165,13 @@ object IncrementalAnn {
     * kernel over the same double-cast vectors).
     */
   private[graft] def appendStaged(d: DataFrame, sigsFull: DataFrame,
-      keptIds: DataFrame, path: String): Unit =
-    IndexMaintenance.withWriterLease(d.sparkSession, path) {
-      IndexMaintenance.inParallel(
-        sigsFull.join(broadcast(keptIds), Seq("id"), "left_semi")
-          .write.mode("append").parquet(s"$path/sigs"),
-        d.join(broadcast(keptIds), Seq("id"), "left_semi")
-          .write.mode("append").parquet(s"$path/vecs"))
+      keptIds: DataFrame, path: String, p: VecParams): Unit =
+    IndexMaintenance.withWriterLease(d.sparkSession, path) { tx =>
+      if (tx.params.isEmpty) tx.params(paramsMap(p))
+      else require(paramsOf(tx.snapshot) == p,
+        s"the ANN index at $path was rebuilt with other params during the batch")
+      appendSigned(tx, sigsFull.join(broadcast(keptIds), Seq("id"), "left_semi"),
+        d.join(broadcast(keptIds), Seq("id"), "left_semi"))
     }
 
   /** Top-k nearest neighbors IN THE INDEXED CORPUS for a batch of query
@@ -194,7 +197,8 @@ object IncrementalAnn {
     require(probeBits >= 0 && probeBits <= 1, s"probeBits ∈ {0, 1}, got $probeBits")
     val spark = queries.sparkSession
     VectorFunctions.ensureRegistered(spark)
-    val p = readParams(spark, path)
+    val snap = IndexMaintenance.snapshot(spark, path)
+    val p = paramsOf(snap)
     val q = staged(queries, idCol, vecCol)
     val mask = lit((1L << p.planes) - 1)
     val qBand0 = sigsOf(q, p)
@@ -209,9 +213,7 @@ object IncrementalAnn {
           explode(array(flips.map(m => col("bucket").bitwiseXOR(m)): _*))
             .as("bucket"))
       }
-    val indexBand = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(IndexMaintenance.storePath(spark, path, "sigs")),
-        "id")
+    val indexBand = snap.live("sigs", "id")
       .select(col("id").as("n_id"), col("tbl"),
         col("sig").bitwiseAND(mask).as("bucket"))
     val cand = indexBand.join(broadcast(qBand), Seq("tbl", "bucket"))
@@ -221,8 +223,7 @@ object IncrementalAnn {
       .stagePersist()
     val candIds = cand.select(col("n_id").as("id")).distinct()
     // candidate vectors only; dropDuplicates(id) absorbs replayed appends
-    val nVecs = spark.read
-      .parquet(IndexMaintenance.storePath(spark, path, "vecs"))
+    val nVecs = snap.read("vecs")
       .join(broadcast(candIds), Seq("id"), "left_semi")
       .dropDuplicates("id")
     val scored = cand
@@ -251,29 +252,31 @@ object IncrementalAnn {
       path: String, threshold: Double): DataFrame = {
     val spark = newEmb.sparkSession
     VectorFunctions.ensureRegistered(spark)
-    val p = readParams(spark, path)
+    val snap = IndexMaintenance.snapshot(spark, path)
+    val p = paramsOf(snap)
     val (d, sigsFull) = stagedSigs(newEmb, idCol, vecCol, p)
-    newBatchPairsFromSigs(d, sigsFull, path, p, threshold)
+    newBatchPairsFromSigs(d, sigsFull, snap, p, threshold)
   }
 
   /** [[newBatchPairs]] over the shared staged frames of [[stagedSigs]] —
     * the streaming ingest's entry point (it reuses both frames for the
     * survivor append). The banding is a bit-mask over the PERSISTED
     * full-width signatures, so re-deriving it per consumer is a narrow
-    * cached-scan projection, not a re-projection of the corpus.
+    * cached-scan projection, not a re-projection of the corpus. A
+    * snapshot with no stores yet (the ingest's first batch) pairs the
+    * batch with itself only.
     */
   private[graft] def newBatchPairsFromSigs(d: DataFrame, sigsFull: DataFrame,
-      path: String, p: VecParams, threshold: Double): DataFrame = {
-    val spark = d.sparkSession
+      snap: IndexMaintenance.Snapshot, p: VecParams,
+      threshold: Double): DataFrame = {
     val mask = lit((1L << p.planes) - 1)
     val deltaBand = sigsFull
       .select(col("id"), col("tbl"), col("sig").bitwiseAND(mask).as("bucket"))
     // retracted vectors drop before candidate generation (broadcast
     // anti-join, map-side); their raw vectors are then never fetched
-    val indexBand = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(IndexMaintenance.storePath(spark, path, "sigs")),
-        "id")
-      .select(col("id"), col("tbl"), col("sig").bitwiseAND(mask).as("bucket"))
+    val indexBand =
+      (if (snap.has("sigs")) snap.live("sigs", "id") else sigsFull.limit(0))
+        .select(col("id"), col("tbl"), col("sig").bitwiseAND(mask).as("bucket"))
 
     val candsCross = indexBand.alias("c")
       .join(broadcast(deltaBand.alias("d")),
@@ -294,9 +297,7 @@ object IncrementalAnn {
       .distinct()
     // dropDuplicates(id): keeps a re-run (crash-recovered) append from
     // duplicating verified pairs — same rationale as IncrementalDedup
-    val needed = spark.read
-      .parquet(IndexMaintenance.storePath(spark, path, "vecs"))
-      .unionByName(d)
+    val needed = snap.readOpt("vecs").fold(d)(_.unionByName(d))
       .join(broadcast(candIds), Seq("id"), "left_semi")
       .dropDuplicates("id")
       .stagePersist()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import Staging.Stageable
 
 /** Incremental near-duplicate detection against a PERSISTED fingerprint
-  * index — the production shape of corpus hygiene at 100 TB: a daily
+  * index (an [[IndexMaintenance]] root) — the production shape of corpus hygiene at 100 TB: a daily
   * increment must dedup against everything already ingested without
   * re-reading (let alone re-shingling) the historical corpus.
   *
@@ -23,8 +23,8 @@ import Staging.Stageable
   *     over injective hashes equals Jaccard over the sets themselves, and
   *     a 64-bit space holds ~10⁹ distinct shingles per doc pair before
   *     collisions matter).
-  *   - `params/`   one row (shingle_size, num_hashes, bands) — pinned at
-  *     build time; query and append batches MUST sign with the same
+  *   - params (shingle_size, num_hashes, bands) in the root's manifest —
+  *     pinned at build time; query and append batches MUST sign with the same
   *     parameters, so they read them from here rather than trusting the
   *     caller to repeat them.
   *
@@ -42,58 +42,46 @@ object IncrementalDedup {
 
   final case class Params(shingleSize: Int, numHashes: Int, bands: Int)
 
-  /** Build the index at `path` from scratch (overwrites; starts a new
-    * index generation, so stale tombstones from the previous one drop —
-    * they would silently filter fresh rows out of the new index).
+  /** Build the index at `path` from scratch (replaces every store; starts
+    * a new id space, so stale tombstones drop — they would silently
+    * filter fresh rows out of the new index). Stores and params commit
+    * together.
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
-      path: String, params: Params = Params(3, 16, 4)): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.dropTombstones(spark, path)
-      // params LAST (the discriminator-last rule): a rebuild that crashes
-      // mid-way must leave either the OLD params over old stores (re-run)
-      // or no params (loud) — never new params over old-width signatures,
-      // which every later batch would silently band against. An in-place
-      // rebuild first RETIRES the old params, so readers racing the
-      // rebuild fail loudly instead of mixing widths.
-      val fsys = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(s"$path/params"), true)
-      writeBatch(docs, idCol, textCol, path, params, "overwrite")
-      Seq((params.shingleSize, params.numHashes, params.bands))
-        .toDF("shingle_size", "num_hashes", "bands")
-        .write.mode("overwrite").parquet(s"$path/params")
+      path: String, params: Params = Params(3, 16, 4)): Unit =
+    IndexMaintenance.withWriterLease(docs.sparkSession, path) { tx =>
+      tx.drop(IndexMaintenance.TombstoneStore)
+      writeSigned(tx, signed(docs, idCol, textCol, params), params, replace = true)
+      tx.params(paramsMap(params))
     }
-  }
 
   /** Append a new batch (typically the survivors of [[newBatchPairs]]) to
     * an existing index. Signing parameters come from the index itself.
     *
-    * Durability contract: the index is plain parquet (single writer, like
-    * the ETL working dirs) — a crash between the two store writes leaves
-    * the batch partially ingested; recovery is re-running the SAME append,
-    * which is safe: duplicate band rows dedup in candidate generation and
-    * duplicate shingle rows dedup before the verify. A pipeline needing
-    * multi-writer atomicity should route the writes through
-    * [[graft.sources.Etl]]'s commit-marker protocol instead.
+    * Recovery from a crashed append is re-running it: nothing it wrote
+    * was committed. Re-running a COMMITTED append is also safe: duplicate
+    * band rows dedup in candidate generation and duplicate shingle rows
+    * dedup before the verify.
     */
   def appendBatch(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
-    IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      writeBatch(docs, idCol, textCol, path,
-        readParams(docs.sparkSession, path), "append")
+    IndexMaintenance.withWriterLease(docs.sparkSession, path) { tx =>
+      val p = paramsOf(tx.snapshot)
+      writeSigned(tx, signed(docs, idCol, textCol, p), p, replace = false)
     }
 
   /** Append an already-[[signed]] frame under the writer lease — the
     * streaming ingest's append entry point (it signs a batch once and
     * reuses the staged frame for both the pair search and this append).
+    * The first append to an empty root pins `p` as the index's params.
     */
   private[graft] def appendSigned(base: DataFrame, path: String,
       p: Params): Unit =
-    IndexMaintenance.withWriterLease(base.sparkSession, path) {
-      writeSigned(base, path, p, "append")
+    IndexMaintenance.withWriterLease(base.sparkSession, path) { tx =>
+      if (tx.params.isEmpty) tx.params(paramsMap(p))
+      else require(paramsOf(tx.params, path) == p,
+        s"the dedup index at $path was rebuilt with other params during the batch")
+      writeSigned(tx, base, p, replace = false)
     }
 
   /** RETRACT indexed docs (takedown): tombstone their ids — queries stop
@@ -107,35 +95,37 @@ object IncrementalDedup {
     * each id is retracted at most once and never re-appended.
     */
   def retract(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.addTombstones(path, ids)
-    }
+    IndexMaintenance.withWriterLease(spark, path)(IndexMaintenance.addTombstones(_, ids))
 
-  def readParams(spark: SparkSession, path: String): Params = {
-    val r = spark.read.parquet(s"$path/params").head()
-    Params(r.getAs[Int]("shingle_size"), r.getAs[Int]("num_hashes"),
-      r.getAs[Int]("bands"))
+  private[graft] def paramsOf(snap: IndexMaintenance.Snapshot): Params =
+    paramsOf(snap.params, snap.root)
+
+  private def paramsOf(m: Map[String, Long], path: String): Params = {
+    require(m.nonEmpty, s"no dedup index at $path (no committed build)")
+    Params(m("shingle_size").toInt, m("num_hashes").toInt, m("bands").toInt)
   }
 
-  private def writeBatch(docs: DataFrame, idCol: String, textCol: String,
-      path: String, p: Params, mode: String): Unit =
-    writeSigned(signed(docs, idCol, textCol, p), path, p, mode)
+  private def paramsMap(p: Params): Map[String, Long] = Map(
+    "shingle_size" -> p.shingleSize.toLong, "num_hashes" -> p.numHashes.toLong,
+    "bands" -> p.bands.toLong)
 
   /** Write an already-signed frame's band keys + hashed shingles — lets
     * the streaming ingest append a batch's SURVIVORS from the staged
-    * frame its dedup already built instead of re-shingling them.
+    * frame its dedup already built instead of re-shingling them. The two
+    * stores write in parallel: the transaction commits both at once.
     */
-  private[graft] def writeSigned(base: DataFrame, path: String, p: Params,
-      mode: String): Unit =
-    // order-free pair (recovery = re-run; duplicates collapse on read),
-    // so the two writes overlap instead of summing their job + commit
-    // latencies (IndexMaintenance.inParallel — the §2.6 rule)
-    IndexMaintenance.inParallel(
-      Dedup.bandedKeys(base, p.numHashes, p.bands)
-        .write.mode(mode).parquet(s"$path/bands"),
-      base.select(col("id"),
-          transform(col("sh"), s => xxhash64(s)).as("shash"), col("n_sh"))
-        .write.mode(mode).parquet(s"$path/shingles"))
+  private def writeSigned(tx: IndexMaintenance.Tx, base: DataFrame, p: Params,
+      replace: Boolean): Unit = {
+    def put(store: String, df: DataFrame): () => Unit =
+      () => if (replace) tx.replace(store, df) else tx.append(store, df)
+    IndexMaintenance.inParallelAll(Seq(
+      put("bands", Dedup.bandedKeys(base, p.numHashes, p.bands)),
+      put("shingles", hashedShingles(base))))
+  }
+
+  private def hashedShingles(base: DataFrame): DataFrame =
+    base.select(col("id"), transform(col("sh"), s => xxhash64(s)).as("shash"),
+      col("n_sh"))
 
   /** The staged (id, sh, n_sh, sig) frame of a batch under the index's
     * parameters — the same construction [[Dedup.minhashPairsFrom]] stages.
@@ -155,22 +145,22 @@ object IncrementalDedup {
     */
   def newBatchPairs(newDocs: DataFrame, idCol: String, textCol: String,
       path: String, jaccardThreshold: Double = 0.5): DataFrame = {
-    val p = readParams(newDocs.sparkSession, path)
-    newBatchPairsFrom(signed(newDocs, idCol, textCol, p), path, p,
+    val snap = IndexMaintenance.snapshot(newDocs.sparkSession, path)
+    val p = paramsOf(snap)
+    newBatchPairsFrom(signed(newDocs, idCol, textCol, p), snap, p,
       jaccardThreshold)
   }
 
   /** [[newBatchPairs]] over a prebuilt [[signed]] frame — the streaming
     * ingest signs a batch once and reuses the staged frame for both the
-    * pair search and the survivor append.
+    * pair search and the survivor append. A snapshot with no stores yet
+    * (the ingest's first batch) pairs the batch with itself only.
     */
-  private[graft] def newBatchPairsFrom(base: DataFrame, path: String,
-      p: Params, jaccardThreshold: Double): DataFrame = {
-    val spark = base.sparkSession
+  private[graft] def newBatchPairsFrom(base: DataFrame,
+      snap: IndexMaintenance.Snapshot, p: Params,
+      jaccardThreshold: Double): DataFrame = {
     val deltaBanded = Dedup.bandedKeys(base, p.numHashes, p.bands).stagePersist()
-    val deltaSh = base.select(col("id"),
-      transform(col("sh"), s => xxhash64(s)).as("shash"), col("n_sh"))
-      .stagePersist()
+    val deltaSh = hashedShingles(base).stagePersist()
 
     // The whole query side is the DELTA — small by the operator's premise
     // (a daily increment against a standing corpus) — so every corpus-side
@@ -183,8 +173,8 @@ object IncrementalDedup {
     // Tombstoned (retracted) docs drop HERE, before candidate generation —
     // a broadcast anti-join on the same map-side pass; their shingle rows
     // are then never fetched (the verify joins by candidate id).
-    val indexBanded = IndexMaintenance.filterTombstoned(spark, path,
-      spark.read.parquet(IndexMaintenance.storePath(spark, path, "bands")), "id")
+    val indexBanded =
+      if (snap.has("bands")) snap.live("bands", "id") else deltaBanded.limit(0)
     val candsCross = indexBanded.alias("c")
       .join(broadcast(deltaBanded.alias("d")),
         col("d.band") === col("c.band") && col("d.band_sig") === col("c.band_sig") &&
@@ -205,14 +195,11 @@ object IncrementalDedup {
     // shuffles; the verify then joins two candidate-sized frames
     val candIds = cands.select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
-    // dropDuplicates(id): a re-run append (the recovery story for a
-    // crashed append — the index is plain parquet, not a transaction log)
-    // duplicates store rows; duplicate BAND rows are already harmless
-    // (candidates dedup), and this keeps duplicate shingle rows from
-    // duplicating verified pairs
-    val needed = spark.read
-      .parquet(IndexMaintenance.storePath(spark, path, "shingles"))
-      .unionByName(deltaSh)
+    // dropDuplicates(id): a re-run of a committed append duplicates
+    // store rows; duplicate BAND rows are already harmless (candidates
+    // dedup), and this keeps duplicate shingle rows from duplicating
+    // verified pairs
+    val needed = snap.readOpt("shingles").fold(deltaSh)(_.unionByName(deltaSh))
       .join(broadcast(candIds), Seq("id"), "left_semi")
       .dropDuplicates("id")
       .stagePersist()

@@ -1,97 +1,91 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.io.FileNotFoundException
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import Staging.Stageable
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-/** Compaction for the persisted incremental indices ([[IncrementalDedup]],
-  * [[IncrementalAnn]]) — the small-files countermeasure every append-only
-  * store needs at production cadence: N daily increments leave N parquet
-  * append sets per store, so scan task count (and open/footer overhead)
-  * grows linearly with ingest HISTORY rather than data size. At 10¹⁰ docs
-  * × 365 increments the band scan would plan ~10⁵ splits of a few MB each.
+/** The on-disk layout of every persisted index root ([[IncrementalDedup]],
+  * [[IncrementalAnn]], [[IvfIndex]], the [[Retrieval]] postings,
+  * positional and term-stats stores, the [[CorpusCompare]] and
+  * [[Decontaminate]] gram stores, tombstones and banned stores). No other
+  * module builds a path under an index root.
   *
-  * `compact*Index` rewrites each store to `ceil(bytes / targetFileBytes)`
-  * files, hash-clustered on its join key (band / sig) and sorted within
-  * partitions, and DEDUPS replayed append rows (the crash-recovery
-  * contract lets a re-run append duplicate a batch — queries tolerate the
-  * duplicates; compaction is where they physically leave). Query results
-  * are bit-identical before and after (spec-pinned): the stores hold the
-  * same logical rows, just fewer files.
-  *
-  * The swap is crash-safe by WRITE-AHEAD MARKER, the same roll-forward
-  * protocol as [[graft.sources.Etl]] scoped to one store directory:
-  *
-  *   1. the compacted store is fully written to `<store>.compact`;
-  *   2. `_compact_<store>` publishes (create tmp + atomic rename) — the
-  *      commit point;
-  *   3. live store deletes, staged renames over it, marker deletes.
-  *
-  * The protocol is known HERE only. WRITERS heal: [[withWriterLease]]
-  * lists the index root once after taking the lease and makes every
-  * crash state consistent before the mutation runs. READERS never write:
-  * they resolve a store's directory with [[storePath]] and change
-  * nothing under the root, so a reader running beside a compaction can
-  * never delete the `.compact` store that compaction is still writing
-  * (an HTSQL query is a GET and has no side effects; the same holds
-  * for index reads). The crash states, and what each side does:
+  * Layout: every write goes to a new SEGMENT directory,
+  * `<root>/<store>/<segment>/part-*.parquet`, that nothing modifies
+  * afterwards. A root's state is one MANIFEST file, `<root>/_manifest_<g>`,
+  * whose number `g` is the root's generation. The manifest is JSON:
   *
   * {{{
-  *   marker  staged  live    storePath reads   lease-time heal
-  *   -       -       yes     live              nothing
-  *   -       yes     yes     live              deletes staged (debris)
-  *   yes     yes     either  staged            deletes live, renames staged
-  *   yes     -       yes     live              deletes marker
+  *   {"generation": g, "writer": "<lease holder>",
+  *    "params": {"<name>": <long>, ...},            // the family's pinned params
+  *    "stores": {"<store>": {
+  *       "schema": <Spark StructType json>,
+  *       "folded": ["<key>", ...],                   // keyed batches compacted in
+  *       "segments": [{"id": "<segment>", "key": "<key>" | null,
+  *                     "files": [{"name": "part-…", "bytes": n}, ...]}]}}}
   * }}}
+  *
+  * COMMIT POINT: a mutation runs under [[withWriterLease]], which hands
+  * its body a [[Tx]]; the body's writes land in fresh segments, and the
+  * lease publishes manifest g+1 (written to `_manifest_<g+1>.tmp`, then
+  * renamed) only after the body returns. A crash at any point therefore
+  * leaves generation g or g+1 visible, never a mix: segments written
+  * without a manifest, or a tmp manifest never renamed, name nothing a
+  * reader sees, and the next writer deletes them.
+  *
+  * READERS take one [[snapshot]] per entry point (one listing of the
+  * root, one manifest read, no write) and read every store as a parquet
+  * relation over the manifest's file list with its recorded schema: all
+  * stores of one query come from one generation, and no read lists a
+  * directory, checks a file or infers a schema.
+  *
+  * RETENTION: a writer, under the lease, deletes every segment that
+  * neither the current nor the previous manifest names (a crashed
+  * writer's debris included) and every older manifest. A frame planned on
+  * generation g therefore stays readable until the writer of g+3 starts.
+  *
+  * A root that holds store directories but no manifest was written before
+  * manifests existed; it is refused loudly and must be rebuilt.
   */
 object IndexMaintenance {
 
   /** Filesystem of the index root itself — NOT the default filesystem.
-    * Lease/generation/ledger/heal files must live next to the stores they
-    * protect: resolving `FileSystem.get(conf)` would put the lock on the
-    * default scheme while the stores sit on (say) `s3a://`, and the lease
-    * would silently provide no mutual exclusion there.
+    * Lease and manifest files must live next to the stores they protect:
+    * resolving `FileSystem.get(conf)` would put the lock on the default
+    * scheme while the stores sit on (say) `s3a://`, and the lease would
+    * silently provide no mutual exclusion there.
     */
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def fsOf(spark: SparkSession, root: String): FileSystem =
-    fsOf(spark, new Path(root))
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ---- concurrent-writer lease -----------------------------------------
   //
-  // The ETL `_txn_lock` + generation protocol (graft.sources.Etl) applied
-  // to the persisted-index family: every STORE MUTATION — append, build,
-  // compact-swap, retract — runs under a fail-loud lease at the index
-  // root, so a continuous ingest racing a maintenance compaction ABORTS
-  // LOUDLY instead of losing an append between `swapCompacted`'s two
-  // renames (the compactor's read snapshot predates the append; the swap
-  // would erase it). Isolation, not interleaving: the whole
-  // read-fold-swap of a compaction sits inside one lease, so there is no
-  // window for a lost update and no generation-check-at-commit is needed
-  // — the generation here is bumped per completed mutation purely as an
-  // attributable audit trail (who mutated last, how many times), the
-  // same stamp the ETL marker header carries.
+  // The ETL `_txn_lock` protocol (graft.sources.Etl) applied to the
+  // persisted-index family: every mutation — append, build, compaction,
+  // retract — runs under a fail-loud lease at the index root, so a
+  // continuous ingest racing a maintenance compaction ABORTS LOUDLY
+  // instead of losing an append (the compactor's manifest would not name
+  // it). Isolation, not interleaving: the whole read-fold-commit of a
+  // compaction sits inside one lease.
   //
   // A lease older than `leaseMs` belongs to a crashed writer and is
   // reclaimed: the stale lock is RENAMED aside (atomic — exactly one
   // reclaimer wins a given lock-file instance), the reclaimer re-creates
   // the lock, and a read-back verifies ownership before proceeding —
-  // losers abort loudly. The crashed writer may have left a compaction
-  // half done; [[withWriterLease]] heals the root after every acquire,
-  // reclaims included, before the mutation body runs. Healing is safe
-  // only under the lease: a compaction holds it for its whole
-  // read-fold-swap, so an unmarked `.compact` store seen there cannot
-  // belong to a compaction still in flight. Like the ETL lease, a
-  // mutation that legitimately outlives `leaseMs` is exposed to a
-  // takeover; size `leaseMs` to the slowest expected compaction.
+  // losers abort loudly. Like the ETL lease, a mutation that legitimately
+  // outlives `leaseMs` is exposed to a takeover; size `leaseMs` to the
+  // slowest expected compaction.
 
   val LockFile = "_index_lock"
-  val GenFile = "_index_gen"
 
   private def lockPath(root: String) = new Path(s"$root/$LockFile")
-  private def genPath(root: String) = new Path(s"$root/$GenFile")
 
   /** Take the index root's writer lease or throw. Public so specs (and
     * external maintenance tooling) can construct interleavings by hand;
@@ -125,12 +119,8 @@ object IndexMaintenance {
       }
     }
     def holder(): Option[String] =
-      try {
-        val in = f.open(lockPath(root))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        Some(text.trim)
-      } catch { case _: java.io.IOException => None }
+      try Some(readText(f, lockPath(root)).trim)
+      catch { case _: java.io.IOException => None }
     if (!tryCreate()) {
       // read the holder BEFORE measuring age: if a reclaimer replaces the
       // lock between the two, the age we measure is the FRESH lock's and
@@ -146,22 +136,21 @@ object IndexMaintenance {
           s"concurrent index writer holds the lease on $root " +
             s"(lock age ${age}ms < lease ${leaseMs}ms) — refusing to " +
             "interleave store mutations")
-      // stale lease: the holder crashed. Store writes are individually
-      // crash-safe (marker protocol), so reclaim RENAMES the stale lock
-      // aside (atomic — exactly one reclaimer wins a given lock-file
-      // instance; a plain delete would let a second reclaimer delete the
-      // first one's FRESH lock) and re-creates. The rename alone is NOT
-      // enough: a second reclaimer that measured L0's staleness before
-      // our takeover completes would rename OUR fresh lock aside and its
-      // own read-back would verify its own lock — two writers. So the
-      // reclaim is anchored to the lock-file INSTANCE, not the path: we
-      // record the stale holder's id at measurement time, and after
-      // winning the rename we READ the aside file — if its content is not
-      // the holder we measured as stale, we renamed a FRESH lock by
-      // mistake: restore it and abort loudly. (Holder ids are one-shot
-      // UUIDs, so instance identity == holder identity; a lock whose
-      // holder crashed between create and stamp reads as empty on both
-      // sides and still matches.)
+      // stale lease: the holder crashed. Its writes never reached a
+      // manifest, so reclaim RENAMES the stale lock aside (atomic —
+      // exactly one reclaimer wins a given lock-file instance; a plain
+      // delete would let a second reclaimer delete the first one's FRESH
+      // lock) and re-creates. The rename alone is NOT enough: a second
+      // reclaimer that measured L0's staleness before our takeover
+      // completes would rename OUR fresh lock aside and its own read-back
+      // would verify its own lock — two writers. So the reclaim is
+      // anchored to the lock-file INSTANCE, not the path: we record the
+      // stale holder's id at measurement time, and after winning the
+      // rename we READ the aside file — if its content is not the holder
+      // we measured as stale, we renamed a FRESH lock by mistake: restore
+      // it and abort loudly. (Holder ids are one-shot UUIDs, so instance
+      // identity == holder identity; a lock whose holder crashed between
+      // create and stamp reads as empty on both sides and still matches.)
       val staleHolder = observedHolder.getOrElse(
         throw new IllegalStateException(
           s"concurrent index writer raced the stale-lease takeover on $root"))
@@ -171,11 +160,7 @@ object IndexMaintenance {
         throw new IllegalStateException(
           s"concurrent index writer raced the stale-lease takeover on $root")
       val asideHolder =
-        try {
-          val in = f.open(aside)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        } catch { case _: java.io.IOException => "" }
+        try readText(f, aside).trim catch { case _: java.io.IOException => "" }
       if (asideHolder != staleHolder) {
         // the lock we renamed is not the stale instance we measured — a
         // live writer holds it. Put it back and abort; if the restore
@@ -200,103 +185,348 @@ object IndexMaintenance {
   def releaseLease(spark: SparkSession, root: String): Unit =
     fsOf(spark, root).delete(lockPath(root), false)
 
-  /** The root's mutation generation — 0 before any leased mutation
-    * completes, then +1 per completed mutation (audit surface).
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  // ---- manifests ---------------------------------------------------------
+
+  /** One immutable segment: its directory name under the store, the batch
+    * key of a keyed write, and its data files with their sizes.
     */
-  def generation(spark: SparkSession, root: String): Long = {
-    val f = fsOf(spark, root)
-    // a crash between `bumpGeneration`'s delete and rename leaves only the
-    // tmp file; it holds the COMPLETED mutation's number (the bump runs
-    // after the body), so reading it — rather than resetting to 0 — keeps
-    // the audit counter truthful across that window. When both exist the
-    // published file wins (the tmp is an uncommitted draft).
-    val p =
-      if (f.exists(genPath(root))) Some(genPath(root))
-      else {
-        val tmp = new Path(genPath(root).toString + ".tmp")
-        if (f.exists(tmp)) Some(tmp) else None
+  private final case class Segment(id: String, key: Option[String],
+      files: Seq[(String, Long)])
+
+  private final case class Store(schema: StructType, segments: Seq[Segment],
+      folded: Set[String])
+
+  private final case class Manifest(generation: Long, writer: String,
+      params: Map[String, Long], stores: Map[String, Store])
+
+  private val Empty = Manifest(0L, "", Map.empty, Map.empty)
+  private val ManifestPrefix = "_manifest_"
+  private val ManifestName = "_manifest_(\\d+)".r
+  private val json = new ObjectMapper
+
+  private def manifestPath(root: String, g: Long) = new Path(s"$root/$ManifestPrefix$g")
+
+  private def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+
+  private def encode(m: Manifest): String = {
+    val o = json.createObjectNode()
+    o.put("generation", m.generation).put("writer", m.writer)
+    val ps = o.putObject("params")
+    m.params.toSeq.sortBy(_._1).foreach { case (k, v) => ps.put(k, v) }
+    val ss = o.putObject("stores")
+    m.stores.toSeq.sortBy(_._1).foreach { case (name, st) =>
+      val so = ss.putObject(name)
+      so.set[JsonNode]("schema", json.readTree(st.schema.json))
+      val fo = so.putArray("folded")
+      st.folded.toSeq.sorted.foreach(k => fo.add(k))
+      val sa = so.putArray("segments")
+      st.segments.foreach { seg =>
+        val go = sa.addObject().put("id", seg.id).put("key", seg.key.orNull)
+        val fa = go.putArray("files")
+        seg.files.foreach { case (n, b) => fa.addObject().put("name", n).put("bytes", b) }
       }
-    p match {
-      case None => 0L
-      case Some(gp) =>
-        val in = f.open(gp)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.trim.split("\\s+").head.toLong
+    }
+    json.writerWithDefaultPrettyPrinter().writeValueAsString(o)
+  }
+
+  private def decode(text: String): Manifest = {
+    val o = json.readTree(text)
+    def elems(n: JsonNode) = n.elements().asScala.toSeq
+    Manifest(o.get("generation").asLong, o.get("writer").asText,
+      o.get("params").properties().asScala.map(e => e.getKey -> e.getValue.asLong).toMap,
+      o.get("stores").properties().asScala.map { e =>
+        val so = e.getValue
+        e.getKey -> Store(
+          DataType.fromJson(so.get("schema").toString).asInstanceOf[StructType],
+          elems(so.get("segments")).map { g =>
+            Segment(g.get("id").asText,
+              Option(g.get("key")).filterNot(_.isNull).map(_.asText),
+              elems(g.get("files")).map(f => f.get("name").asText -> f.get("bytes").asLong))
+          },
+          elems(so.get("folded")).map(_.asText).toSet)
+      }.toMap)
+  }
+
+  private def listRoot(f: FileSystem, root: String): Seq[FileStatus] =
+    try f.listStatus(new Path(root)).toSeq
+    catch { case _: FileNotFoundException => Nil }
+
+  private def generations(listing: Seq[FileStatus]): Seq[Long] =
+    listing.map(_.getPath.getName).collect { case ManifestName(g) => g.toLong }.sorted
+
+  /** The newest published manifest in `listing` (the empty generation 0
+    * when there is none), refusing a root written before manifests.
+    */
+  private def newest(f: FileSystem, root: String, listing: Seq[FileStatus]): Manifest =
+    generations(listing).lastOption match {
+      case Some(g) => decode(readText(f, manifestPath(root, g)))
+      case None =>
+        if (listing.exists(s => s.isDirectory && !hidden(s.getPath.getName)))
+          throw new IllegalStateException(
+            s"index root $root holds store directories but no manifest: it " +
+              "was written before index manifests — delete it and rebuild the index")
+        Empty
+    }
+
+  private def publish(f: FileSystem, root: String, m: Manifest): Unit = {
+    val target = manifestPath(root, m.generation)
+    val tmp = new Path(target.toString + ".tmp")
+    val out = f.create(tmp, true)
+    try out.write(encode(m).getBytes("UTF-8")) finally out.close()
+    if (f.exists(target) || !f.rename(tmp, target))
+      throw new IllegalStateException(
+        s"index commit at $root: generation ${m.generation} already published " +
+          "by another writer")
+  }
+
+  /** One generation of an index root, read-only: what a reader plans
+    * every store of one query against.
+    */
+  final class Snapshot private[IndexMaintenance] (spark: SparkSession,
+      val root: String, m: Manifest) {
+
+    def generation: Long = m.generation
+
+    /** The family's params pinned at build time (empty before a build). */
+    def params: Map[String, Long] = m.params
+
+    def stores: Seq[String] = m.stores.keys.toSeq.sorted
+
+    def has(store: String): Boolean = m.stores.contains(store)
+
+    /** The live data files of `store` with their sizes in bytes. */
+    def files(store: String): Seq[(Path, Long)] =
+      m.stores.get(store).toSeq.flatMap(_.segments.flatMap { seg =>
+        seg.files.map { case (n, b) => (new Path(s"$root/$store/${seg.id}/$n"), b) }
+      })
+
+    /** Batch keys of the live keyed segments of `store`. */
+    def keys(store: String): Seq[String] =
+      m.stores.get(store).toSeq.flatMap(_.segments.flatMap(_.key))
+
+    /** Batch keys already compacted into `store`. */
+    def folded(store: String): Set[String] =
+      m.stores.get(store).fold(Set.empty[String])(_.folded)
+
+    /** `store` as `spark.read.schema(s).parquet(files: _*)` would read it,
+      * minus that call's per-file existence checks and listing: the file
+      * statuses come from the manifest, so a store of hundreds of segments
+      * (past Spark's 32-path threshold) never starts a listing job.
+      */
+    def readOpt(store: String): Option[DataFrame] = m.stores.get(store).map { st =>
+      val fs = fsOf(spark, root)
+      val statuses = files(store).map { case (p, b) =>
+        new FileStatus(b, false, 1, b, 0L, fs.makeQualified(p))
+      }
+      if (statuses.isEmpty) spark.createDataFrame(java.util.List.of[Row](), st.schema)
+      else {
+        val known = statuses.map(s => s.getPath -> Array(s)).toMap
+        val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty,
+          Some(st.schema), new FileStatusCache {
+            override def getLeafFiles(path: Path) = known.get(path)
+            override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+            override def invalidateAll(): Unit = ()
+          })
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+          st.schema, None, new ParquetFileFormat, Map.empty)(spark))
+      }
+    }
+
+    def read(store: String): DataFrame = readOpt(store).getOrElse(
+      throw new IllegalStateException(
+        s"no store '$store' in generation $generation of the index at $root"))
+
+    /** `store` without the rows whose `idCol` is tombstoned. */
+    def live(store: String, idCol: String): DataFrame = dropTombstoned(read(store), idCol)
+
+    /** Drop `df` rows whose `idCol` is tombstoned — a broadcast anti-join
+      * when the root has tombstones, the identity otherwise.
+      */
+    def dropTombstoned(df: DataFrame, idCol: String): DataFrame =
+      readOpt(TombstoneStore) match {
+        case Some(t) => df.join(broadcast(t), df(idCol) === t("id"), "left_anti")
+        case None => df
+      }
+
+    /** Size-derived file count for a rewrite of `store`. */
+    def targetFiles(store: String, targetFileBytes: Long): Int =
+      math.max(1L, (files(store).map(_._2).sum + targetFileBytes - 1) / targetFileBytes).toInt
+  }
+
+  /** The newest committed generation of `root`: one listing of the root
+    * and one manifest read; writes nothing. A root with no manifest reads
+    * as the empty generation 0.
+    */
+  def snapshot(spark: SparkSession, root: String): Snapshot = {
+    val f = fsOf(spark, root)
+    // a writer deletes manifests two generations old; a listing that
+    // named one just before it went is retried
+    var m: Option[Manifest] = None
+    while (m.isEmpty)
+      m = try Some(newest(f, root, listRoot(f, root)))
+        catch { case _: FileNotFoundException => None }
+    new Snapshot(spark, root, m.get)
+  }
+
+  /** The root's generation — 0 before any leased mutation completes, then
+    * +1 per completed mutation.
+    */
+  def generation(spark: SparkSession, root: String): Long =
+    snapshot(spark, root).generation
+
+  /** One mutation of an index root. Reads go through [[snapshot]] (the
+    * generation the lease started from); every write lands in a new
+    * segment and reaches readers only when the lease commits. Safe to
+    * write from several threads at once (paired stores write in parallel).
+    */
+  final class Tx private[IndexMaintenance] (spark: SparkSession, root: String,
+      base: Manifest, writerId: String) {
+
+    val snapshot: Snapshot = new Snapshot(spark, root, base)
+    private val generation = base.generation + 1
+    private val written = new AtomicInteger
+    private var stores = base.stores
+    private var pinned = base.params
+
+    def params: Map[String, Long] = synchronized(pinned)
+
+    def params(p: Map[String, Long]): Unit = synchronized { pinned = p }
+
+    /** Add `df` to `store` as one more segment. */
+    def append(store: String, df: DataFrame): Unit = {
+      val seg = write(store, df, None)
+      update(store, df)(st => st.copy(segments = st.segments :+ seg))
+    }
+
+    /** Make `df` the whole of `store` (a build or a compaction). The keys
+      * of the keyed segments it replaces become folded.
+      */
+    def replace(store: String, df: DataFrame): Unit = {
+      val seg = write(store, df, None)
+      update(store, df)(st =>
+        Store(readSchema(df), Seq(seg), st.folded ++ st.segments.flatMap(_.key)))
+    }
+
+    /** Write a counted store's batch delta under `key`: a replay replaces
+      * the live segment of the same key, and a key already folded by a
+      * compaction is skipped (its counts are in the folded segment).
+      */
+    def writeKeyed(store: String, key: String, df: DataFrame): Unit =
+      if (!synchronized(stores.get(store).exists(_.folded(key)))) {
+        val seg = write(store, df, Some(key))
+        update(store, df)(st =>
+          st.copy(segments = st.segments.filterNot(_.key.contains(key)) :+ seg))
+      }
+
+    def drop(store: String): Unit = synchronized { stores -= store }
+
+    private def write(store: String, df: DataFrame, key: Option[String]): Segment = {
+      val id = s"g$generation-$writerId-${written.incrementAndGet()}"
+      val dir = new Path(s"$root/$store/$id")
+      df.write.parquet(dir.toString)
+      val files = fsOf(spark, root).listStatus(dir).toSeq
+        .filterNot(s => hidden(s.getPath.getName))
+        .map(s => s.getPath.getName -> s.getLen).sortBy(_._1)
+      Segment(id, key, files)
+    }
+
+    private def update(store: String, df: DataFrame)(f: Store => Store): Unit =
+      synchronized {
+        stores += store -> f(stores.getOrElse(store, Store(readSchema(df), Nil, Set.empty)))
+      }
+
+    private[IndexMaintenance] def commit(): Unit = synchronized {
+      publish(fsOf(spark, root), root, Manifest(generation, writerId, pinned, stores))
     }
   }
 
-  private def bumpGeneration(spark: SparkSession, root: String,
-      writerId: String): Unit = {
-    val f = fsOf(spark, root)
-    val next = generation(spark, root) + 1
-    val tmp = new Path(genPath(root).toString + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(s"$next $writerId".getBytes("UTF-8")) finally out.close()
-    f.delete(genPath(root), false)
-    if (!f.rename(tmp, genPath(root)))
-      throw new IllegalStateException(s"generation publish failed at $root")
+  /** The schema a parquet read of `df`'s files reports: every field,
+    * element and value nullable.
+    */
+  private def readSchema(df: DataFrame): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    nullable(df.schema).asInstanceOf[StructType]
   }
 
-  /** Run one store mutation under the root's writer lease; bump the
-    * generation iff the mutation completes. Every mutating entry point of
-    * the index family (build/append/retract/compact in [[Retrieval]],
-    * [[Decontaminate]], [[CorpusCompare]], [[IncrementalDedup]],
-    * [[IncrementalAnn]], [[IvfIndex]], and the compactions below) wraps
-    * its body in this. The root heals once, under the lease, before the
-    * body runs, so every body sees consistent stores at their live paths.
-    * The body runs in a [[Staging.scoped]] scope of its own: the frames
-    * it stages are released once its writes are done, whether or not
-    * the caller has a scope open.
+  /** Open the mutation under the lease: publish the empty generation 0 on
+    * a fresh root, then delete every segment that neither the current nor
+    * the previous manifest names, every older manifest and every tmp
+    * manifest.
+    */
+  private def begin(spark: SparkSession, root: String, writerId: String): Tx = {
+    val f = fsOf(spark, root)
+    val listing = listRoot(f, root)
+    val current = newest(f, root, listing)
+    val gens = generations(listing)
+    if (gens.isEmpty) publish(f, root, Empty)
+    val previous = gens.dropRight(1).lastOption.map(g => decode(readText(f, manifestPath(root, g))))
+    val kept = (current +: previous.toSeq).flatMap(_.stores.toSeq)
+      .groupMapReduce(_._1)(_._2.segments.map(_.id).toSet)(_ ++ _)
+    listing.foreach { s =>
+      val name = s.getPath.getName
+      name match {
+        case ManifestName(g) if g.toLong < gens.dropRight(1).lastOption.getOrElse(0L) =>
+          f.delete(s.getPath, false)
+        case _ if name.startsWith(ManifestPrefix) && name.endsWith(".tmp") =>
+          f.delete(s.getPath, false)
+        case _ if s.isDirectory && !hidden(name) => kept.get(name) match {
+          case None => f.delete(s.getPath, true)
+          case Some(ids) => f.listStatus(s.getPath).foreach { seg =>
+            if (!ids(seg.getPath.getName)) f.delete(seg.getPath, true)
+          }
+        }
+        case _ =>
+      }
+    }
+    new Tx(spark, root, current, writerId)
+  }
+
+  /** Run one mutation of the index at `root` under its writer lease and
+    * commit it by publishing the next manifest. Every mutating entry
+    * point of the index family (build/append/retract/compact in
+    * [[Retrieval]], [[Decontaminate]], [[CorpusCompare]],
+    * [[IncrementalDedup]], [[IncrementalAnn]], [[IvfIndex]], and the
+    * compactions below) runs its body here. A body that throws commits
+    * nothing. The body runs in a [[Staging.scoped]] scope of its own: the
+    * frames it stages are released once its writes are done, whether or
+    * not the caller has a scope open.
     */
   def withWriterLease[A](spark: SparkSession, root: String,
-      leaseMs: Long = 10 * 60 * 1000L)(body: => A): A = {
+      leaseMs: Long = 10 * 60 * 1000L)(body: Tx => A): A = {
     val writerId = java.util.UUID.randomUUID().toString.take(8)
     acquireLease(spark, root, writerId, leaseMs)
     try {
-      healRoot(spark, root)
-      val r = Staging.scoped(body)
-      bumpGeneration(spark, root, writerId)
+      val tx = begin(spark, root, writerId)
+      val r = Staging.scoped(body(tx))
+      tx.commit()
       r
     } finally releaseLease(spark, root)
   }
 
-  /** Run two INDEPENDENT store writes concurrently and wait for both —
-    * the guide's overlap-independent-jobs rule (§2.6) applied to the
-    * paired-store appends (bands‖shingles, sigs‖vecs, postings‖ptotals):
-    * their relative order carries no crash-consistency meaning (every
-    * pair's recovery contract is "re-run the append; duplicates collapse
-    * on read"), so serializing them only sums two job-scheduling +
-    * file-commit latencies. Concurrent first-touch of a shared staged
-    * frame is safe: the block manager's per-block write lock makes the
-    * second job's task wait for, then read, the first's cached block.
-    * NOT for order-SENSITIVE sequences (a store before its
-    * params/discriminator, a correction row before its tombstones) —
-    * those encode crash-recovery invariants and stay sequential.
-    * `b` runs on a pool thread; `a` stays on the caller's thread (keeps
-    * its thread-local job group/description). The first failure
-    * propagates after both settle (never abandons an in-flight write).
-    */
-  private[graft] def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fb = Future(b)
-    val ea = try { a; None } catch { case e: Throwable => Some(e) }
-    val eb = try { Await.result(fb, Duration.Inf); None } catch {
-      case e: Throwable => Some(e)
-    }
-    ea.orElse(eb).foreach(e => throw e)
-  }
-
-  /** [[inParallel]] for N independent store mutations — the ingest's
-    * standing-index suite: each family appends to its OWN root under its
-    * OWN lease, so the mutations are mutually order-free and overlap the
-    * same way the paired writes do (each family's INTERNAL build/
-    * append sequence stays sequential inside its thunk — those orderings
-    * are crash-recovery invariants). The first thunk runs on the caller's
-    * thread; every failure is awaited before the first one propagates
-    * (never abandons an in-flight write).
+  /** Run N INDEPENDENT writes concurrently and wait for all of them — the
+    * guide's overlap-independent-jobs rule (§2.6): the paired stores of
+    * one transaction (bands‖shingles, sigs‖vecs, postings‖ptotals) and
+    * the ingest's standing-index families (each its own root under its
+    * own lease). Their order carries no crash-consistency meaning — a
+    * transaction commits all of its segments at once — so serializing
+    * them only sums job-scheduling and file-commit latencies. Concurrent
+    * first-touch of a shared staged frame is safe: the block manager's
+    * per-block write lock makes the second job's task wait for, then
+    * read, the first's cached block. The first thunk runs on the caller's
+    * thread (keeps its thread-local job group/description); every failure
+    * is awaited before the first one propagates (never abandons an
+    * in-flight write).
     */
   private[graft] def inParallelAll(thunks: Seq[() => Unit]): Unit =
     thunks match {
@@ -319,17 +549,16 @@ object IndexMaintenance {
   // ---- auto-compaction policy ------------------------------------------
 
   /** When a continuous ingest should fold its appended deltas — the knob
-    * that stops the small-files growth the compaction protocol exists to
-    * price out (one parquet append set per micro-batch, forever, without
-    * it). Two triggers, either sufficient:
+    * that stops the small-files growth (one segment per micro-batch,
+    * forever, without it). Two triggers, either sufficient:
     *
     *   - `everyBatches > 0`: compact on every Nth batch id ((id+1) % N
     *     == 0) — deterministic under replay, so a re-run triggering
     *     batch just re-compacts (idempotent: same logical rows, the
-    *     folded-batch ledger keeps counted stores exact);
+    *     folded keys keep counted stores exact);
     *   - `fileThreshold > 0`: compact a store family whose probe store
     *     has accumulated more than this many data files — the
-    *     [[indexStats]] backlog signal, one directory listing per batch.
+    *     [[indexStats]] backlog signal, one manifest read per batch.
     *
     * Disabled (the default) preserves the manual-maintenance contract.
     */
@@ -340,164 +569,52 @@ object IndexMaintenance {
       everyBatches > 0 && (batchId + 1) % everyBatches == 0
   }
 
-  /** Data-file count of one store (recursive; `_`/`.` metadata excluded);
-    * 0 when the store does not exist. The backlog probe for
+  /** Data-file count of one store in the root's current generation; 0
+    * when the store does not exist. The backlog probe for
     * [[AutoCompactPolicy.fileThreshold]] and the `files` column of
     * [[indexStats]].
     */
-  def storeDataFiles(spark: SparkSession, root: String,
-      store: String): Long = {
-    val f = fsOf(spark, root)
-    val p = new Path(s"$root/$store")
-    if (!f.exists(p)) 0L
-    else {
-      var files = 0L
-      val it = f.listFiles(p, true)
-      while (it.hasNext) {
-        val s = it.next(); val nm = s.getPath.getName
-        if (!nm.startsWith("_") && !nm.startsWith(".")) files += 1L
-      }
-      files
-    }
-  }
+  def storeDataFiles(spark: SparkSession, root: String, store: String): Long =
+    snapshot(spark, root).files(store).size.toLong
 
   // ---- observability ---------------------------------------------------
 
-  /** One frame describing every store under an index root — the health
-    * surface a maintenance scheduler, pager, or auto-compaction policy
-    * thresholds on. One row per store subdirectory (including
-    * `tombstones` when present), with the root-level generation repeated
-    * on every row:
+  /** One frame describing every store of an index root's current
+    * generation — the health surface a maintenance scheduler, pager, or
+    * auto-compaction policy thresholds on. One row per store (including
+    * `tombstones` when present), plus one `params` row carrying the
+    * family's pinned params, with the generation repeated on every row:
     *
-    *   - `files` / `bytes`: data files (recursive, `_`/`.` metadata
-    *     excluded) and their total size — the small-files backlog signal
-    *     for append stores;
+    *   - `files` / `bytes`: live data files and their total size — the
+    *     small-files backlog signal for append stores;
     *   - `target_files`: what a compaction at `targetFileBytes` would
     *     rewrite the store to; `files` far above it = compact now;
     *   - `rows`: parquet row count (footer-derived — no data scan);
-    *   - `keyed_batches` / `folded_batches`: delta subdirectories present
-    *     / already folded, for the batch-keyed counted stores (0/0 for
+    *   - `keyed_batches` / `folded_batches`: live keyed segments / keys
+    *     already compacted, for the batch-keyed counted stores (0/0 for
     *     plain append stores);
-    *   - `pending_compaction`: a committed-but-unswapped compaction
-    *     marker exists (the next writer's lease rolls it forward);
-    *   - `params`: the single params row rendered as JSON for `*params`
-    *     stores, null elsewhere.
+    *   - `params`: the params rendered as JSON on the `params` row, null
+    *     elsewhere.
     *
-    * Driver-side listing + per-store footer counts: cost is O(stores ×
-    * files), the same metadata the next scan planning pays anyway; no
-    * store data is read. Read-only — takes no lease (a concurrent
-    * mutation can skew a row; a scheduler reads again next tick).
+    * Read-only — takes no lease and reads one snapshot.
     */
   def indexStats(spark: SparkSession, root: String,
       targetFileBytes: Long = 128L << 20): DataFrame = {
     import spark.implicits._
-    val f = fsOf(spark, root)
-    val rootP = new Path(root)
-    val stores =
-      if (!f.exists(rootP)) Seq.empty[String]
-      else f.listStatus(rootP).toSeq
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filterNot(_.endsWith(".compact")).sorted
-    val gen = generation(spark, root)
-    val rows = stores.map { st =>
-      val p = new Path(s"$root/$st")
-      val files = storeDataFiles(spark, root, st)
-      var bytes = 0L
-      val it = f.listFiles(p, true)
-      while (it.hasNext) {
-        val s = it.next(); val nm = s.getPath.getName
-        if (!nm.startsWith("_") && !nm.startsWith(".")) bytes += s.getLen
-      }
-      val rowCount =
-        try spark.read.option("recursiveFileLookup", "true")
-          .parquet(p.toString).count()
-        catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-      val keyed = keyedSubdirs(spark, root, st)
-      val folded = foldedBatches(spark, root, st)
-      val pending = f.exists(markerPath(root, st))
-      val params =
-        if (st.endsWith("params") && rowCount == 1L)
-          spark.read.parquet(p.toString).toJSON.head()
-        else null
-      (st, files, bytes, rowCount,
-        targetFileCount(spark, root, st, targetFileBytes).toLong,
-        keyed.size.toLong, folded.size.toLong, pending, params, gen)
+    val snap = snapshot(spark, root)
+    val stores = snap.stores.map { st =>
+      val files = snap.files(st)
+      (st, files.size.toLong, files.map(_._2).sum, snap.read(st).count(),
+        snap.targetFiles(st, targetFileBytes).toLong, snap.keys(st).size.toLong,
+        snap.folded(st).size.toLong, null: String, snap.generation)
     }
-    rows.toDF("store", "files", "bytes", "rows", "target_files",
-      "keyed_batches", "folded_batches", "pending_compaction", "params",
-      "generation")
-  }
-
-  private def stagedPath(root: String, store: String) = new Path(s"$root/$store.compact")
-  private val MarkerPrefix = "_compact_"
-  private def markerPath(root: String, store: String) = new Path(s"$root/$MarkerPrefix$store")
-
-  /** The directory a reader should read `store` from, resolved without
-    * touching the filesystem's state: the staged `<store>.compact` when
-    * its marker is published (the swap has committed; the live directory
-    * may already be gone), the live `<store>` otherwise (an unmarked
-    * staged directory is either debris or a compaction still writing).
-    */
-  def storePath(spark: SparkSession, root: String, store: String): String = {
-    val f = fsOf(spark, root)
-    val staged = stagedPath(root, store)
-    if (f.exists(markerPath(root, store)) && f.exists(staged)) staged.toString
-    else s"$root/$store"
-  }
-
-  /** Make every store under `root` consistent: each published marker
-    * rolls its store forward, each `<store>.compact` without a marker is
-    * uncommitted debris and deletes. One listing of the root; runs only
-    * inside [[withWriterLease]], where no compaction can be in flight.
-    */
-  private def healRoot(spark: SparkSession, root: String): Unit = {
-    val f = fsOf(spark, root)
-    val names = f.listStatus(new Path(root)).map(_.getPath.getName).toSet
-    val marked = names.collect {
-      case n if n.startsWith(MarkerPrefix) && !n.endsWith(".tmp") =>
-        n.stripPrefix(MarkerPrefix)
+    val params = Option.when(snap.params.nonEmpty) {
+      val o = json.createObjectNode()
+      snap.params.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
+      ("params", 0L, 0L, 1L, 0L, 0L, 0L, json.writeValueAsString(o), snap.generation)
     }
-    marked.foreach { store =>
-      val live = new Path(s"$root/$store")
-      val staged = stagedPath(root, store)
-      if (names(staged.getName)) {
-        if (names(store)) f.delete(live, true)
-        if (!f.rename(staged, live))
-          throw new IllegalStateException(s"compaction heal: rename failed for $staged")
-      }
-      f.delete(markerPath(root, store), false)
-    }
-    names.filter(n => n.endsWith(".compact") &&
-        !marked(n.stripSuffix(".compact")))
-      .foreach(n => f.delete(new Path(s"$root/$n"), true))
-  }
-
-  /** The ONE copy of the crash-safe staged-store swap, shared by every
-    * compaction (incl. [[CorpusCompare.compactGramIndex]], which folds by
-    * aggregation rather than dedup): has `writeStaged` materialize the
-    * replacement at `<store>.compact`, then publishes the write-ahead
-    * marker and swaps. Runs under the writer lease, whose heal left no
-    * prior interrupted state; a crash anywhere leaves a state the next
-    * lease heals and [[storePath]] resolves.
-    */
-  def swapCompacted(spark: SparkSession, root: String, store: String)(
-      writeStaged: String => Unit): Unit = {
-    val f = fsOf(spark, root)
-    val live = new Path(s"$root/$store")
-    val staged = stagedPath(root, store)
-    writeStaged(staged.toString)
-    // commit point: marker publishes via create-then-rename
-    val marker = markerPath(root, store)
-    val tmp = new Path(marker.toString + ".tmp")
-    val out = f.create(tmp, true)
-    try out.writeBytes(store) finally out.close()
-    if (!f.rename(tmp, marker))
-      throw new IllegalStateException(s"compaction commit: marker rename failed for $store")
-    // roll forward (identical to healRoot's marker branch)
-    f.delete(live, true)
-    if (!f.rename(staged, live))
-      throw new IllegalStateException(s"compaction swap: rename failed for $staged")
-    f.delete(marker, false)
+    (stores ++ params).sortBy(_._1).toDF("store", "files", "bytes", "rows",
+      "target_files", "keyed_batches", "folded_batches", "params", "generation")
   }
 
   /** RETRACTION (takedown) support shared by every persisted index — the
@@ -505,167 +622,39 @@ object IndexMaintenance {
     * takedown, PII discovery, opt-out) at 100 TB, where rebuilding an
     * index to drop 0.01% of its rows is not an option:
     *
-    *   - [[addTombstones]] appends the retracted ids to a `tombstones/`
-    *     store under the index root — one small parquet append, no touch
-    *     of the data stores;
-    *   - readers drop tombstoned rows with [[filterTombstoned]] — a
+    *   - [[addTombstones]] appends the retracted ids to a `tombstones`
+    *     store of the root — one small segment, no touch of the data
+    *     stores;
+    *   - readers drop tombstoned rows with [[Snapshot.live]] — a
     *     BROADCAST anti-join (a takedown list is orders of magnitude
     *     smaller than the corpus: millions of ids = tens of MB; a list
     *     too large to broadcast should be applied as a rebuild instead);
     *   - the index's `compact*` pass physically drops tombstoned rows
-    *     while rewriting (the vacuum), then deletes the tombstone store —
-    *     retraction cost is thereby amortized into the compaction the
-    *     lifecycle already pays.
+    *     while rewriting (the vacuum) and drops the tombstone store in the
+    *     same commit — retraction cost is thereby amortized into the
+    *     compaction the lifecycle already pays.
     *
-    * Crash posture: tombstone appends are at-least-once (duplicate id
-    * rows are harmless — the filter is an anti-join); vacuum deletes the
-    * tombstone store only AFTER every data-store swap commits, so a crash
-    * anywhere leaves either extra tombstones whose rows still exist
-    * (still filtered — correct) or extra tombstones whose rows are gone
-    * (filter is a no-op — correct). Contract: an id is retracted at most
+    * Tombstone appends are at-least-once (duplicate id rows are harmless —
+    * the filter is an anti-join). Contract: an id is retracted at most
     * once and never re-appended afterwards — the same stated-not-checked
     * id-space discipline as the append disjointness contract. A REBUILD
-    * (any overwrite-mode build entry point) starts a new index
-    * generation: it drops the tombstone store first (a stale tombstone
-    * would silently filter fresh rows the new build's stats count — the
-    * postings ptotals would then disagree with df/candidates on every
-    * query), and thereby RESETS the retract-at-most-once contract for
-    * the new generation's id space.
+    * (any build entry point) starts a new id space: it drops the
+    * tombstone store (a stale tombstone would silently filter fresh rows
+    * the new build's stats count — the postings ptotals would then
+    * disagree with df/candidates on every query), and thereby RESETS the
+    * retract-at-most-once contract.
     */
   val TombstoneStore = "tombstones"
 
-  private def tombstonePath(root: String) = new Path(s"$root/$TombstoneStore")
-
   /** Append retraction ids (any single-column frame; the column is
-    * renamed `id` in the store). Idempotent under replay: re-running an
-    * interrupted retraction appends duplicate rows, which the anti-join
-    * read ignores and vacuum drops.
+    * renamed `id` in the store).
     */
-  def addTombstones(root: String, ids: DataFrame): Unit = Staging.scoped {
+  def addTombstones(tx: Tx, ids: DataFrame): Unit = {
     require(ids.columns.length == 1,
       s"tombstone frame must have exactly one id column, got " +
         ids.columns.mkString("(", ", ", ")"))
-    val t = ids.select(col(ids.columns.head).as("id")).distinct()
-      .coalesce(1).stagePersist()
-    // an empty retraction is a no-op — writing it would leave a
-    // zero-file parquet dir that breaks every later tombstone read
-    // ("unable to infer schema"), poisoning the whole index
-    if (!t.isEmpty)
-      t.write.mode("append").parquet(tombstonePath(root).toString)
-  }
-
-  /** The tombstone id set at `root`, if any retraction has happened. */
-  def tombstones(spark: SparkSession, root: String): Option[DataFrame] = {
-    val p = tombstonePath(root)
-    if (fsOf(spark, root).exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** Drop `df` rows whose `idCol` is tombstoned at `root` — a broadcast
-    * anti-join when a tombstone store exists, the identity otherwise (the
-    * common case: no retraction has ever touched this index).
-    */
-  def filterTombstoned(spark: SparkSession, root: String, df: DataFrame,
-      idCol: String): DataFrame =
-    tombstones(spark, root) match {
-      case Some(t) =>
-        df.join(broadcast(t), df(idCol) === t("id"), "left_anti")
-      case None => df
-    }
-
-  /** Delete the tombstone store — called by vacuum after every data-store
-    * swap has committed (the rows the tombstones pointed at are gone).
-    */
-  def dropTombstones(spark: SparkSession, root: String): Unit = {
-    val p = tombstonePath(root)
-    if (fsOf(spark, root).exists(p)) fsOf(spark, root).delete(p, true)
-  }
-
-  // ---- folded-batch ledger (keyed counted stores) ------------------------
-  //
-  // The batch-id-keyed counted stores (term stats, drift grams) get their
-  // replay idempotence from "a replayed batch OVERWRITES its own b<key>
-  // subdirectory". Compaction breaks that on its own: it folds the keyed
-  // subdirectories into root files and deletes them, so a post-compaction
-  // replay of a batch whose delta was already folded would re-CREATE its
-  // subdirectory and double-count. The ledger closes the window: before
-  // the compaction swap commits, the names of the subdirectories being
-  // folded are recorded in a `_folded_<store>` file at the index root
-  // (atomic tmp+rename, merged with prior entries), and keyed appends
-  // SKIP a batch whose subdirectory name is in the ledger — its counts
-  // are already in the folded store. Crash anywhere stays consistent:
-  // ledger written but swap not committed → the subdirectory still
-  // exists and the replay skip is still correct (the delta is present
-  // once, via the subdirectory, and a later compaction folds it).
-
-  private def foldedPath(root: String, store: String) =
-    new Path(s"$root/_folded_$store")
-
-  /** The set of keyed-subdirectory names already folded into `store`. */
-  def foldedBatches(spark: SparkSession, root: String,
-      store: String): Set[String] = {
-    val f = fsOf(spark, root)
-    val p = foldedPath(root, store)
-    if (!f.exists(p)) Set.empty
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSet
-    }
-  }
-
-  /** Record keyed subdirectories as folded (union with prior entries;
-    * atomic publish). Call BEFORE the compaction swap commits.
-    */
-  def recordFolded(spark: SparkSession, root: String, store: String,
-      names: Iterable[String]): Unit = {
-    val all = foldedBatches(spark, root, store) ++ names
-    if (all.nonEmpty) {
-      val f = fsOf(spark, root)
-      val tmp = new Path(foldedPath(root, store).toString + ".tmp")
-      val out = f.create(tmp, true)
-      try out.write(all.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      f.delete(foldedPath(root, store), false)
-      if (!f.rename(tmp, foldedPath(root, store)))
-        throw new IllegalStateException(s"folded-ledger publish failed at $root")
-    }
-  }
-
-  /** The keyed subdirectory names currently present under a store. */
-  def keyedSubdirs(spark: SparkSession, root: String,
-      store: String): Seq[String] = {
-    val f = fsOf(spark, root)
-    val p = new Path(s"$root/$store")
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("b"))
-      .map(_.getPath.getName)
-  }
-
-  /** Size-derived file count for a store rewrite. */
-  def targetFileCount(spark: SparkSession, root: String, store: String,
-      targetFileBytes: Long): Int = {
-    val bytes = fsOf(spark, root).getContentSummary(new Path(s"$root/$store")).getLength
-    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-  }
-
-  /** Rewrite one store: `ceil(bytes/targetFileBytes)` files, clustered on
-    * `clusterCols`, sorted by `sortCols`, exact-duplicate rows dropped,
-    * tombstoned ids (column `id`) physically vacuumed.
-    */
-  private def compactStore(spark: SparkSession, root: String, store: String,
-      clusterCols: Seq[Column], sortCols: Seq[Column], dedupCols: Seq[String],
-      targetFileBytes: Long): Unit = {
-    val nFiles = targetFileCount(spark, root, store, targetFileBytes)
-    val df = filterTombstoned(spark, root,
-        spark.read.parquet(s"$root/$store"), "id")
-      .dropDuplicates(dedupCols.head, dedupCols.tail: _*)
-      .repartition(nFiles, clusterCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    swapCompacted(spark, root, store) { staged =>
-      df.write.mode("overwrite").parquet(staged)
-    }
+    tx.append(TombstoneStore,
+      ids.select(col(ids.columns.head).as("id")).distinct().coalesce(1))
   }
 
   /** Compact an [[IncrementalDedup]] index: `bands` clusters on the band
@@ -673,36 +662,33 @@ object IndexMaintenance {
     * here).
     */
   def compactDedupIndex(spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L << 20): Unit = withWriterLease(spark, path) {
-    compactStore(spark, path, "bands",
-      clusterCols = Seq(col("band")),
-      sortCols = Seq(col("band"), col("band_sig"), col("id")),
-      dedupCols = Seq("id", "band", "band_sig"),
-      targetFileBytes = targetFileBytes)
-    compactStore(spark, path, "shingles",
-      clusterCols = Seq(col("id")),
-      sortCols = Seq(col("id")),
-      dedupCols = Seq("id"),
-      targetFileBytes = targetFileBytes)
-    dropTombstones(spark, path) // vacuum complete: both stores swapped
-  }
+      targetFileBytes: Long = 128L << 20): Unit =
+    compactStores(spark, path, targetFileBytes,
+      ("bands", "band", Seq("band", "band_sig", "id")), ("shingles", "id", Seq("id")))
 
   /** Compact an [[IncrementalAnn]] index: `sigs` clusters on the signature
     * (bucket keys are its low bits — co-located at any banding width),
     * `vecs` on id.
     */
   def compactAnnIndex(spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L << 20): Unit = withWriterLease(spark, path) {
-    compactStore(spark, path, "sigs",
-      clusterCols = Seq(col("sig")),
-      sortCols = Seq(col("tbl"), col("sig"), col("id")),
-      dedupCols = Seq("id", "tbl", "sig"),
-      targetFileBytes = targetFileBytes)
-    compactStore(spark, path, "vecs",
-      clusterCols = Seq(col("id")),
-      sortCols = Seq(col("id")),
-      dedupCols = Seq("id"),
-      targetFileBytes = targetFileBytes)
-    dropTombstones(spark, path) // vacuum complete: both stores swapped
+      targetFileBytes: Long = 128L << 20): Unit =
+    compactStores(spark, path, targetFileBytes,
+      ("sigs", "sig", Seq("tbl", "sig", "id")), ("vecs", "id", Seq("id")))
+
+  /** Rewrite each (store, cluster column, key columns) store in one
+    * commit: `ceil(bytes/targetFileBytes)` files clustered on the cluster
+    * column and sorted by the key columns, rows repeating a key dropped,
+    * tombstoned ids (column `id`) physically vacuumed and the tombstones
+    * retired.
+    */
+  private def compactStores(spark: SparkSession, path: String, targetFileBytes: Long,
+      stores: (String, String, Seq[String])*): Unit = withWriterLease(spark, path) { tx =>
+    stores.foreach { case (store, cluster, keys) =>
+      tx.replace(store, tx.snapshot.live(store, "id")
+        .dropDuplicates(keys)
+        .repartition(tx.snapshot.targetFiles(store, targetFileBytes), col(cluster))
+        .sortWithinPartitions(keys.map(col): _*))
+    }
+    tx.drop(TombstoneStore)
   }
 }

@@ -7,7 +7,7 @@ import graft.functions.VectorFunctions
 
 /** Persisted IVF-cell ANN index — the high-recall complement of the LSH
   * signature store ([[IncrementalAnn]]): cell ASSIGNMENTS persist next to
-  * the trained codebook ([[Clustering.saveCentroids]] layout), partitioned
+  * the trained codebook (the [[Clustering.saveCentroids]] rows), partitioned
   * by cell, so a top-k probe reads only its `nprobe` cells' rows — the
   * standard inverted-file ANN route (the [[Similarity.ivfTopK]] semantics
   * with the corpus-side training and assignment amortized into the build
@@ -16,9 +16,8 @@ import graft.functions.VectorFunctions
   * trade is that the codebook is FROZEN at build time — appends assign
   * against it (the quantizer-lifecycle contract: retrain = rebuild).
   *
-  * Stores, the established incremental-index lifecycle (writer lease,
-  * merge-on-read appends, crash-safe compaction swap, tombstone
-  * retraction, readers that resolve and never write):
+  * Stores of one [[IndexMaintenance]] root (writer lease, merge-on-read
+  * appends, compaction, tombstone retraction, readers on one snapshot):
   *
   *   - `cells/`    (cell, id, vec) — one row per (vector, assigned cell),
   *     `assignReplicas`-redundant (each vector enters its top-R cells —
@@ -29,14 +28,12 @@ import graft.functions.VectorFunctions
   *     trade): a probe re-ranks candidates without joining a per-id
   *     vector side table — the per-row cost is ×R vector storage, the
   *     alternative an O(N) vecs-store scan per probe.
-  *   - `codebook/` the k-row (cell, centroid) frame, loadable by
-  *     [[Clustering.loadCentroidMatrix]] — shared with the public
+  *   - `codebook` the k-row (cell, centroid) frame, the rows
+  *     [[Clustering.saveCentroids]] writes — shared with the public
   *     quantizer surface, so cluster metadata joins and stratified quotas
   *     run off the same artifact the index probes with.
-  *   - `iparams/`  one row (dim, nlist, iters, replicas), written LAST —
-  *     the build-completeness discriminator (the gparams rule): a torn
-  *     build leaves no iparams and every reader fails loudly instead of
-  *     probing a half-written store.
+  *   - params (dim, nlist, iters, replicas) in the manifest, committed
+  *     with the stores: a reader sees a whole build or none.
   *
   * Query cost ([[topK]]): the query batch's own cell assignment (map-side
   * against the ≤nlist-row codebook, the CentroidTopCells kernel) + the
@@ -74,10 +71,10 @@ object IvfIndex {
       .repartition(col("cell"))
       .sortWithinPartitions("cell", "id")
 
-  /** Build at `path` (overwrites; a rebuild starts a new generation, so
-    * stale tombstones drop). Trains the codebook on the build corpus —
-    * the one distributed-iterative job of the lifecycle — then writes
-    * assignments, codebook, and (last) the params discriminator.
+  /** Build at `path` (replaces the stores; a rebuild starts a new id
+    * space, so stale tombstones drop). Trains the codebook on the build
+    * corpus — the one distributed-iterative job of the lifecycle — then
+    * writes assignments and codebook; params commit with them.
     */
   def buildIndex(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       path: String, nlist: Int = 16, iters: Int = 2,
@@ -85,26 +82,15 @@ object IvfIndex {
     require(nlist >= 1 && iters >= 0 && assignReplicas >= 1,
       s"bad IVF params: nlist=$nlist iters=$iters replicas=$assignReplicas")
     val spark = emb.sparkSession
-    import spark.implicits._
     VectorFunctions.ensureRegistered(spark)
-    IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.dropTombstones(spark, path)
-      // an in-place REBUILD retires the old discriminator first: a crash
-      // after the cells overwrite but before the new codebook/iparams
-      // land must leave the index LOUDLY torn (iparams missing), never
-      // the old codebook + iparams validating over assignments made
-      // under a different codebook (probes would silently read the
-      // wrong cells)
-      val fsys = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(s"$path/iparams"), true)
+    IndexMaintenance.withWriterLease(spark, path) { tx =>
+      tx.drop(IndexMaintenance.TombstoneStore)
       val c = staged(emb, idCol, vecCol)
       val centroids = Similarity.trainCentroids(
         c.select(col("id").as("n_id"), col("vec").as("n_vec")), nlist, iters)
       require(centroids.nonEmpty, "cannot train an IVF codebook on an empty corpus")
-      assignments(c, centroids, assignReplicas)
-        .write.mode("overwrite").parquet(s"$path/cells")
-      Clustering.saveCentroids(
+      tx.replace("cells", assignments(c, centroids, assignReplicas))
+      tx.replace("codebook", Clustering.codebook(
         spark.createDataFrame(
           spark.sparkContext.parallelize(
             centroids.zipWithIndex.map { case (v, i) =>
@@ -115,26 +101,24 @@ object IvfIndex {
               org.apache.spark.sql.types.IntegerType, nullable = false),
             org.apache.spark.sql.types.StructField("centroid",
               org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType), nullable = false)))),
-        path)
-      // params LAST: the completeness discriminator — readers fail loudly
-      // on a torn build instead of probing half a store
-      Seq((dim, nlist, iters, assignReplicas))
-        .toDF("dim", "nlist", "iters", "replicas")
-        .write.mode("overwrite").parquet(s"$path/iparams")
+                org.apache.spark.sql.types.DoubleType), nullable = false))))))
+      tx.params(Map("dim" -> dim.toLong, "nlist" -> nlist.toLong,
+        "iters" -> iters.toLong, "replicas" -> assignReplicas.toLong))
     }
   }
 
-  def readParams(spark: SparkSession, path: String): Params = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/iparams")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(f.exists(p),
-      s"no complete IVF index at $path (iparams missing — torn or absent " +
-        "build; re-run buildIndex)")
-    val r = spark.read.parquet(p.toString).head()
-    Params(r.getAs[Int]("dim"), r.getAs[Int]("nlist"),
-      r.getAs[Int]("iters"), r.getAs[Int]("replicas"))
+  def readParams(spark: SparkSession, path: String): Params =
+    paramsOf(IndexMaintenance.snapshot(spark, path))
+
+  private def paramsOf(snap: IndexMaintenance.Snapshot): Params = {
+    val m = snap.params
+    require(m.nonEmpty,
+      s"no complete IVF index at ${snap.root} (no committed build; run buildIndex)")
+    Params(m("dim").toInt, m("nlist").toInt, m("iters").toInt, m("replicas").toInt)
   }
+
+  private def centroidsOf(snap: IndexMaintenance.Snapshot): Array[Array[Double]] =
+    Clustering.centroidMatrix(snap.read("codebook"), snap.root)
 
   /** Append a batch (disjoint ids — the standard contract), assigned
     * under the PERSISTED codebook: the frozen-quantizer posture — cost is
@@ -144,11 +128,10 @@ object IvfIndex {
       path: String): Unit = {
     val spark = emb.sparkSession
     VectorFunctions.ensureRegistered(spark)
-    IndexMaintenance.withWriterLease(spark, path) {
-      val p = readParams(spark, path)
-      val centroids = Clustering.loadCentroidMatrix(spark, path)
-      assignments(staged(emb, idCol, vecCol), centroids, p.replicas)
-        .write.mode("append").parquet(s"$path/cells")
+    IndexMaintenance.withWriterLease(spark, path) { tx =>
+      val p = paramsOf(tx.snapshot)
+      tx.append("cells", assignments(staged(emb, idCol, vecCol),
+        centroidsOf(tx.snapshot), p.replicas))
     }
   }
 
@@ -157,29 +140,21 @@ object IvfIndex {
     * at-least-once contract as [[IncrementalDedup.retract]].
     */
   def retract(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.addTombstones(path, ids)
-    }
+    IndexMaintenance.withWriterLease(spark, path)(IndexMaintenance.addTombstones(_, ids))
 
   /** Fold the cells store: replayed duplicates and tombstoned ids leave
     * physically, rewrite cell-clustered at size-derived file counts,
-    * retire tombstones after the swap commits. Probes are bit-identical
+    * retire tombstones in the same commit. Probes are bit-identical
     * before and after (spec-pinned).
     */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): Unit =
-    IndexMaintenance.withWriterLease(spark, path) {
-      val nFiles = IndexMaintenance.targetFileCount(spark, path, "cells",
-        targetFileBytes)
-      val folded = IndexMaintenance.filterTombstoned(spark, path,
-          spark.read.parquet(s"$path/cells"), "id")
+    IndexMaintenance.withWriterLease(spark, path) { tx =>
+      tx.replace("cells", tx.snapshot.live("cells", "id")
         .dropDuplicates("cell", "id")
-        .repartition(nFiles, col("cell"))
-        .sortWithinPartitions("cell", "id")
-      IndexMaintenance.swapCompacted(spark, path, "cells") { staged =>
-        folded.write.mode("overwrite").parquet(staged)
-      }
-      IndexMaintenance.dropTombstones(spark, path)
+        .repartition(tx.snapshot.targetFiles("cells", targetFileBytes), col("cell"))
+        .sortWithinPartitions("cell", "id"))
+      tx.drop(IndexMaintenance.TombstoneStore)
     }
 
   /** Top-k neighbors IN THE INDEXED CORPUS for a batch of query vectors —
@@ -197,8 +172,9 @@ object IvfIndex {
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
     val spark = queries.sparkSession
     VectorFunctions.ensureRegistered(spark)
-    readParams(spark, path) // fails loudly on a torn build
-    val centroids = Clustering.loadCentroidMatrix(spark, path)
+    val snap = IndexMaintenance.snapshot(spark, path)
+    paramsOf(snap) // fails loudly before any build committed
+    val centroids = centroidsOf(snap)
     val q = queries
       .select(col(idCol).as("q_id"), col(vecCol).cast("array<double>").as("q_vec"))
       .stagePersist()
@@ -209,9 +185,8 @@ object IvfIndex {
     // the probed cell set is ≤ nlist values by construction — a literal
     // In list is what pushes the filter into the parquet scan
     val probed = qProbes.select("cell").distinct().collect().map(_.getInt(0))
-    val cand = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(IndexMaintenance.storePath(spark, path, "cells"))
-          .filter(col("cell").isin(probed.toIndexedSeq: _*)), "id")
+    val cand = snap.dropTombstoned(
+        snap.read("cells").filter(col("cell").isin(probed.toIndexedSeq: _*)), "id")
       .select(col("cell"), col("id").as("n_id"), col("vec").as("n_vec"))
       .withColumn("n_norm", Similarity.norm(col("n_vec")))
       .join(broadcast(qProbes), "cell")

@@ -217,71 +217,44 @@ object Retrieval {
     * (oracle-proven: the contract key builds in two batches). Corpus
     * totals ride a SENTINEL row (token = '', impossible for a real token
     * — the tokenizer drops empties): df = doc count, tl = token total;
-    * one write job per batch, same crash posture as the gram store;
-    * reads resolve a pending compaction through
-    * [[IndexMaintenance.storePath]] and never write.
+    * one segment per batch, committed by the root's manifest
+    * ([[IndexMaintenance]]).
     */
   def buildTermStatsIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
-    IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      termStats(docs, idCol, textCol).write.mode("overwrite")
-        .parquet(s"$path/terms")
-    }
+    IndexMaintenance.withWriterLease(docs.sparkSession, path)(
+      _.replace("terms", termStats(docs, idCol, textCol)))
 
   /** Append one batch's term statistics (must be DISJOINT from the docs
     * already indexed — df additivity is the merge-on-read contract).
     */
   def appendToTermStatsIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      termStats(delta, idCol, textCol).write.mode("append")
-        .parquet(s"$path/terms")
-    }
+    IndexMaintenance.withWriterLease(delta.sparkSession, path)(
+      _.append("terms", termStats(delta, idCol, textCol)))
 
   /** BATCH-ID-KEYED append — the REPLAY-IDEMPOTENT form a streaming
     * ingest needs: where [[appendToTermStatsIndex]]'s plain append
     * double-counts if re-run (stat rows carry no replay identity — the
     * documented exactly-once contract), this writes the batch's delta
-    * into its own keyed subdirectory with OVERWRITE semantics, so an
-    * at-least-once foreachBatch replay overwrites its own output instead
-    * of duplicating it (the sink's `batch=<id>` idempotence pattern
-    * applied to a counted store). Readers list the store recursively and
-    * sum as before — keyed subdirectories and root-level build/append
-    * files merge identically.
-    *
-    * Two hardenings make the idempotence hold across the whole
-    * lifecycle: (1) a batch whose subdirectory was already FOLDED by
-    * [[compactTermStatsIndex]] is SKIPPED (the `_folded_terms` ledger —
-    * a compaction landing inside the at-least-once replay window would
-    * otherwise let the replay re-create a subdirectory whose counts are
-    * already in the folded store); (2) `lineage` namespaces the keys
-    * per ingest LINEAGE (checkpoint identity), so a fresh ingest pointed
-    * at an existing store cannot overwrite a previous lineage's deltas
-    * by reusing batch ids 0, 1, ….
+    * as a KEYED segment ([[IndexMaintenance.Tx.writeKeyed]]): an
+    * at-least-once foreachBatch replay replaces its own delta instead of
+    * duplicating it (the sink's `batch=<id>` idempotence pattern applied
+    * to a counted store), and a batch a compaction already folded is
+    * skipped. `lineage` namespaces the keys per ingest LINEAGE
+    * (checkpoint identity), so a fresh ingest pointed at an existing
+    * store cannot replace a previous lineage's deltas by reusing batch
+    * ids 0, 1, ….
     */
   def appendToTermStatsIndexKeyed(delta: DataFrame, idCol: String,
       textCol: String, path: String, batchKey: Long,
       lineage: String = ""): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      val name = keyedName(batchKey, lineage)
-      if (!IndexMaintenance.foldedBatches(delta.sparkSession, path, "terms")
-          .contains(name))
-        termStats(delta, idCol, textCol).write.mode("overwrite")
-          .parquet(s"$path/terms/$name")
-    }
+    IndexMaintenance.withWriterLease(delta.sparkSession, path)(
+      _.writeKeyed("terms", keyedName(batchKey, lineage),
+        termStats(delta, idCol, textCol)))
 
-  private def keyedName(batchKey: Long, lineage: String): String =
+  private[graft] def keyedName(batchKey: Long, lineage: String): String =
     if (lineage.isEmpty) s"b$batchKey" else s"b${lineage}_$batchKey"
-
-  /** The ptotals store, listed RECURSIVELY: root-level build/append/
-    * retraction rows and the keyed `b<id>/` ingest subdirectories read as
-    * one merge-on-read frame (recursive lookup skips partition inference,
-    * so the subdirectory names never become columns).
-    */
-  private def readPtotals(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(IndexMaintenance.storePath(spark, path, "ptotals"))
 
   /** RETRACT docs (takedown) from the term-stats index: append their
     * statistics NEGATED — df and tl are additive, so merge-on-read sums
@@ -301,11 +274,9 @@ object Retrieval {
     */
   def retractFromTermStatsIndex(docs: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
-    IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      termStats(docs, idCol, textCol)
-        .select(col("token"), (-col("df")).as("df"), (-col("tl")).as("tl"))
-        .write.mode("append").parquet(s"$path/terms")
-    }
+    IndexMaintenance.withWriterLease(docs.sparkSession, path)(
+      _.append("terms", termStats(docs, idCol, textCol)
+        .select(col("token"), (-col("df")).as("df"), (-col("tl")).as("tl"))))
 
   private def termStats(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
@@ -331,40 +302,21 @@ object Retrieval {
     dfRows.unionByName(sentinel)
   }
 
-  /** Fold accumulated append deltas into one summed store — the
-    * small-files countermeasure, same write-ahead-marker swap as every
-    * other index ([[IndexMaintenance.swapCompacted]]; the writer lease
-    * heals any crash state). Sums are per token, so the folded store is
-    * bit-identical to merge-on-read by construction.
+  /** Fold accumulated append deltas into one summed segment — the
+    * small-files countermeasure. Sums are per token, so the folded store
+    * is bit-identical to merge-on-read by construction; the keyed deltas
+    * it folds are recorded in the same commit, so a later replay of one
+    * of them is skipped instead of double-counted.
     */
   def compactTermStatsIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = IndexMaintenance.withWriterLease(spark, path) {
-    val folded = readTermStore(spark, path)
+      path: String): Unit = IndexMaintenance.withWriterLease(spark, path) { tx =>
+    tx.replace("terms", tx.snapshot.read("terms")
       .groupBy("token")
       .agg(sum(col("df")).as("df"), sum(col("tl")).as("tl"))
       // tokens a retraction zeroed out fold away entirely, so the
       // compacted store is row-identical to a fresh build on survivors
-      .filter(col("df") =!= 0 || col("tl") =!= 0)
-    // ledger BEFORE the swap: the keyed subdirectories being folded are
-    // recorded so a post-compaction replay of one of them SKIPS instead
-    // of double-counting (a crash between ledger and swap stays correct
-    // — the subdirectory still exists, exactly once)
-    IndexMaintenance.recordFolded(spark, path, "terms",
-      IndexMaintenance.keyedSubdirs(spark, path, "terms"))
-    IndexMaintenance.swapCompacted(spark, path, "terms") { staged =>
-      folded.write.mode("overwrite").parquet(staged)
-    }
+      .filter(col("df") =!= 0 || col("tl") =!= 0))
   }
-
-  /** The terms store, listed RECURSIVELY: root-level build/append files
-    * and keyed `b<id>/` replay-idempotent subdirectories read as one
-    * merge-on-read frame (recursive lookup skips partition inference, so
-    * the subdirectory names never become columns).
-    */
-  private def readTermStore(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(IndexMaintenance.storePath(spark, path, "terms"))
 
   /** BM25-score a NEW batch against the index — the scan form's exact
     * arithmetic ([[bm25TopK]]'s IEEE tree, quantized-long sums, same tie
@@ -383,17 +335,17 @@ object Retrieval {
       "empty-string terms are reserved for the corpus-stats sentinel")
     requireDistinctTerms("scoreAgainstTermIndex", terms)
     require(k >= 1, s"k must be positive, got $k")
-    val spark = newDocs.sparkSession
+    val store = IndexMaintenance.snapshot(newDocs.sparkSession, path).read("terms")
     // fail fast on a pathological store: a missing or zero sentinel would
     // otherwise flow null/NaN corpus stats into every score row. The probe
     // is a pushed token='' filter — one row group, one tiny job.
-    val sent = readTermStore(spark, path)
+    val sent = store
       .filter(col("token") === "")
       .agg(sum(col("df")).as("n"), sum(col("tl")).as("tl")).collect()(0)
     require(!sent.isNullAt(0) && sent.getLong(0) > 0L && sent.getLong(1) > 0L,
       s"term-stats index at $path has no usable corpus sentinel " +
         "(empty index, or an all-empty-text corpus was indexed)")
-    val idx = readTermStore(spark, path)
+    val idx = store
       .filter(col("token").isin(terms :+ "": _*))
       .groupBy("token")
       .agg(sum(col("df")).as("df"), sum(col("tl")).as("tl"))
@@ -461,9 +413,8 @@ object Retrieval {
     * — the query a curation/decontamination audit repeats hundreds of
     * times against the same frozen snapshot.
     *
-    * Two stores, the established incremental-index lifecycle
-    * (merge-on-read appends, [[IndexMaintenance.swapCompacted]] crash-safe
-    * compaction, readers resolve through [[IndexMaintenance.storePath]]):
+    * Two stores of one [[IndexMaintenance]] root (merge-on-read appends,
+    * compaction, readers on one snapshot):
     *
     *   - `postings/`: one row per (token, doc_id) with its tf and the
     *     doc's dl — dl DENORMALIZED onto the posting row so scoring a
@@ -472,7 +423,7 @@ object Retrieval {
     *     per query). Written token-clustered and (token, doc_id)-sorted,
     *     so a query's `In(token, …)` filter prunes at the parquet
     *     row-group level (PlanSpec pins the pushed filter).
-    *   - `ptotals/`: one (n_docs, t_len, min_id, max_id) row per appended
+    *   - `ptotals`: one (n_docs, t_len, min_id, max_id) row per appended
     *     batch; corpus N and Σdl are the SUM over batch rows (additive for
     *     disjoint batches), folded to one row by compaction. The id-range
     *     columns are the batch's REPLAY IDENTITY: batches hold disjoint
@@ -502,16 +453,14 @@ object Retrieval {
     */
   def buildPostingsIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
-    IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      // a rebuild starts a new index generation — stale tombstones would
-      // silently filter fresh rows the fresh ptotals counts, skewing every
-      // query's N vs df (see the IndexMaintenance tombstone contract)
-      IndexMaintenance.dropTombstones(docs.sparkSession, path)
+    IndexMaintenance.withWriterLease(docs.sparkSession, path) { tx =>
+      // a rebuild starts a new id space — stale tombstones would silently
+      // filter fresh rows the fresh ptotals counts, skewing every query's
+      // N vs df (see the IndexMaintenance tombstone contract)
+      tx.drop(IndexMaintenance.TombstoneStore)
       val (post, tot) = postingsOf(docs, idCol, textCol)
-      // order-free pair (replay-tolerant stores) — overlap the writes
-      IndexMaintenance.inParallel(
-        post.write.mode("overwrite").parquet(s"$path/postings"),
-        tot.write.mode("overwrite").parquet(s"$path/ptotals"))
+      IndexMaintenance.inParallelAll(Seq(
+        () => tx.replace("postings", post), () => tx.replace("ptotals", tot)))
     }
 
   /** Append one batch (disjoint doc_ids from what's indexed — the same
@@ -519,22 +468,20 @@ object Retrieval {
     */
   def appendToPostingsIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) {
+    IndexMaintenance.withWriterLease(delta.sparkSession, path) { tx =>
       val (post, tot) = postingsOf(delta, idCol, textCol)
-      // order-free pair (replay-tolerant stores) — overlap the writes
-      IndexMaintenance.inParallel(
-        post.write.mode("append").parquet(s"$path/postings"),
-        tot.write.mode("append").parquet(s"$path/ptotals"))
+      IndexMaintenance.inParallelAll(Seq(
+        () => tx.append("postings", post), () => tx.append("ptotals", tot)))
     }
 
   /** [[appendToPostingsIndex]] for a CONTINUOUS ingest whose replay
     * window spans compactions: the postings rows append plain (their
     * (token, doc_id) identity collapses replays at read and at the next
     * fold), but the ptotals row — a COUNT with no row identity once a
-    * compaction has summed it — writes batch-id-KEYED into its own
-    * `ptotals/b<lineage>_<id>` subdirectory (overwrite) and SKIPS
-    * entirely when the folded-batch ledger says a compaction already
-    * folded this batch. Without this, the at-least-once worst case
+    * compaction has summed it — writes as a segment keyed
+    * `b<lineage>_<id>` ([[IndexMaintenance.Tx.writeKeyed]]), and the
+    * whole append SKIPS when a compaction already folded that key.
+    * Without this, the at-least-once worst case
     * (append → auto-compaction folds it → crash before checkpoint commit
     * → replay) re-appends a total row the sum already contains and every
     * later idf shifts. Same contract as the keyed term-stats/drift
@@ -544,15 +491,13 @@ object Retrieval {
   def appendToPostingsIndexKeyed(delta: DataFrame, idCol: String,
       textCol: String, path: String, batchKey: Long,
       lineage: String = ""): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) {
+    IndexMaintenance.withWriterLease(delta.sparkSession, path) { tx =>
       val name = keyedName(batchKey, lineage)
-      if (!IndexMaintenance.foldedBatches(delta.sparkSession, path,
-          "ptotals").contains(name)) {
+      if (!tx.snapshot.folded("ptotals")(name)) {
         val (post, tot) = postingsOf(delta, idCol, textCol)
-        // order-free pair (replay-tolerant stores) — overlap the writes
-        IndexMaintenance.inParallel(
-          post.write.mode("append").parquet(s"$path/postings"),
-          tot.write.mode("overwrite").parquet(s"$path/ptotals/$name"))
+        IndexMaintenance.inParallelAll(Seq(
+          () => tx.append("postings", post),
+          () => tx.writeKeyed("ptotals", name, tot)))
       }
     }
 
@@ -584,14 +529,11 @@ object Retrieval {
   def retractFromPostingsIndex(docs: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
     val spark = docs.sparkSession
-    IndexMaintenance.withWriterLease(spark, path) {
+    IndexMaintenance.withWriterLease(spark, path) { tx =>
       val (_, tot) = postingsOf(docs, idCol, textCol)
-      // correction row FIRST: if the tombstone append crashes, a re-run's
-      // identical negative row collapses on read — idempotent recovery
-      tot.select((-col("n_docs")).as("n_docs"), (-col("t_len")).as("t_len"),
-          col("min_id"), col("max_id"))
-        .write.mode("append").parquet(s"$path/ptotals")
-      IndexMaintenance.addTombstones(path, docs.select(col(idCol)))
+      tx.append("ptotals", tot.select((-col("n_docs")).as("n_docs"),
+        (-col("t_len")).as("t_len"), col("min_id"), col("max_id")))
+      IndexMaintenance.addTombstones(tx, docs.select(col(idCol)))
     }
   }
 
@@ -619,40 +561,25 @@ object Retrieval {
   }
 
   /** Fold both stores: postings drop replayed (token, doc_id) duplicates
-    * and rewrite token-clustered at size-derived file counts; ptotals sum
-    * to one row. Same write-ahead-marker swap as every index; queries are
-    * bit-identical before and after (spec-pinned).
+    * and tombstoned docs (the vacuum — their N/Σdl corrections are already
+    * in the ptotals sum) and rewrite token-clustered at size-derived file
+    * counts; ptotals sum to one row, and the keyed batches it folds are
+    * skipped if replayed. Both stores and the tombstone drop commit
+    * together; queries are bit-identical before and after (spec-pinned).
     */
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): Unit =
-      IndexMaintenance.withWriterLease(spark, path) {
-    val nFiles = IndexMaintenance.targetFileCount(spark, path, "postings",
-      targetFileBytes)
-    // the vacuum: tombstoned (retracted) docs leave physically here —
-    // their N/Σdl corrections are already folded into the ptotals sum
-    val folded = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/postings"), "doc_id")
+      IndexMaintenance.withWriterLease(spark, path) { tx =>
+    val snap = tx.snapshot
+    tx.replace("postings", snap.live("postings", "doc_id")
       .dropDuplicates("token", "doc_id")
-      .repartition(nFiles, col("token"))
-      .sortWithinPartitions("token", "doc_id")
-    IndexMaintenance.swapCompacted(spark, path, "postings") { staged =>
-      folded.write.mode("overwrite").parquet(staged)
-    }
-    val tot = readPtotals(spark, path)
+      .repartition(snap.targetFiles("postings", targetFileBytes), col("token"))
+      .sortWithinPartitions("token", "doc_id"))
+    tx.replace("ptotals", snap.read("ptotals")
       .dropDuplicates("n_docs", "t_len", "min_id", "max_id")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("t_len")).as("t_len"),
-        min(col("min_id")).as("min_id"), max(col("max_id")).as("max_id"))
-    // ledger BEFORE the swap (the counted-store rule): the keyed
-    // subdirectories being folded are recorded so a post-compaction
-    // replay of one of them SKIPS instead of re-adding its total row
-    IndexMaintenance.recordFolded(spark, path, "ptotals",
-      IndexMaintenance.keyedSubdirs(spark, path, "ptotals"))
-    IndexMaintenance.swapCompacted(spark, path, "ptotals") { staged =>
-      tot.write.mode("overwrite").parquet(staged)
-    }
-    // only after BOTH swaps commit (a crash before this line just leaves
-    // tombstones whose postings rows are already gone — filter no-ops)
-    IndexMaintenance.dropTombstones(spark, path)
+        min(col("min_id")).as("min_id"), max(col("max_id")).as("max_id")))
+    tx.drop(IndexMaintenance.TombstoneStore)
   }
 
   /** Top-k documents IN the indexed corpus for `terms` — [[bm25TopK]]'s
@@ -683,7 +610,8 @@ object Retrieval {
     require(terms.forall(_.nonEmpty), "query terms must be non-empty strings")
     requireDistinctTerms("topKFromIndex", terms)
     require(k >= 1, s"k must be positive, got $k")
-    val tot = readPtotals(spark, path)
+    val snap = IndexMaintenance.snapshot(spark, path)
+    val tot = snap.read("ptotals")
       .dropDuplicates("n_docs", "t_len", "min_id", "max_id")
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),
         sum(col("t_len")).cast("long").as("t_len"))
@@ -693,9 +621,8 @@ object Retrieval {
     // against the tombstones, map-side) so df counts survivors only. Not
     // staged: the df aggregate and the scoring join share one plan, and
     // a read leaves no cached frame behind.
-    val cand = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(IndexMaintenance.storePath(spark, path, "postings"))
-          .filter(col("token").isin(terms: _*)), "doc_id")
+    val cand = snap.dropTombstoned(
+        snap.read("postings").filter(col("token").isin(terms: _*)), "doc_id")
       .groupBy("token", "doc_id")
       .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl"))
     val dfT = cand.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
@@ -732,13 +659,14 @@ object Retrieval {
     // literal list is what pushes the In filter into the parquet scan)
     val terms = q.select("token").distinct().collect().map(_.getString(0))
     require(terms.nonEmpty, "topKFromIndexBatch needs at least one query term")
-    val tot = readPtotals(spark, path)
+    val snap = IndexMaintenance.snapshot(spark, path)
+    val tot = snap.read("ptotals")
       .dropDuplicates("n_docs", "t_len", "min_id", "max_id")
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),
         sum(col("t_len")).cast("long").as("t_len"))
-    val cand = Staging.stage(IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(IndexMaintenance.storePath(spark, path, "postings"))
-          .filter(col("token").isin(terms.toIndexedSeq: _*)), "doc_id")
+    val cand = Staging.stage(snap.dropTombstoned(
+        snap.read("postings").filter(col("token").isin(terms.toIndexedSeq: _*)),
+        "doc_id")
       .groupBy("token", "doc_id")
       .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl")))
     val dfT = cand.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
@@ -778,20 +706,17 @@ object Retrieval {
     */
   def buildPositionalIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
-    IndexMaintenance.withWriterLease(docs.sparkSession, path) {
-      // rebuild = new generation; stale tombstones must not filter it
-      IndexMaintenance.dropTombstones(docs.sparkSession, path)
-      positionsOf(docs, idCol, textCol).write.mode("overwrite")
-        .parquet(s"$path/positions")
+    IndexMaintenance.withWriterLease(docs.sparkSession, path) { tx =>
+      // rebuild = new id space; stale tombstones must not filter it
+      tx.drop(IndexMaintenance.TombstoneStore)
+      tx.replace("positions", positionsOf(docs, idCol, textCol))
     }
 
   /** Append one batch (disjoint doc_ids — the standard contract). */
   def appendToPositionalIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) {
-      positionsOf(delta, idCol, textCol).write.mode("append")
-        .parquet(s"$path/positions")
-    }
+    IndexMaintenance.withWriterLease(delta.sparkSession, path)(
+      _.append("positions", positionsOf(delta, idCol, textCol)))
 
   /** RETRACT indexed docs (takedown): tombstones only — phrase queries
     * drop the ids before start-candidate generation; the next
@@ -800,9 +725,7 @@ object Retrieval {
     */
   def retractFromPositionalIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame): Unit =
-    IndexMaintenance.withWriterLease(spark, path) {
-      IndexMaintenance.addTombstones(path, ids)
-    }
+    IndexMaintenance.withWriterLease(spark, path)(IndexMaintenance.addTombstones(_, ids))
 
   private def positionsOf(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
@@ -817,23 +740,17 @@ object Retrieval {
 
   /** Fold the store: drop replayed duplicates and tombstoned (retracted)
     * docs, rewrite token-clustered at size-derived file counts, retire
-    * the tombstones after the swap commits. Query results bit-identical
+    * the tombstones in the same commit. Query results bit-identical
     * before and after (spec-pinned).
     */
   def compactPositionalIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): Unit =
-      IndexMaintenance.withWriterLease(spark, path) {
-    val nFiles = IndexMaintenance.targetFileCount(spark, path, "positions",
-      targetFileBytes)
-    val folded = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(s"$path/positions"), "doc_id")
+      IndexMaintenance.withWriterLease(spark, path) { tx =>
+    tx.replace("positions", tx.snapshot.live("positions", "doc_id")
       .dropDuplicates("token", "doc_id", "pos")
-      .repartition(nFiles, col("token"))
-      .sortWithinPartitions("token", "doc_id", "pos")
-    IndexMaintenance.swapCompacted(spark, path, "positions") { staged =>
-      folded.write.mode("overwrite").parquet(staged)
-    }
-    IndexMaintenance.dropTombstones(spark, path)
+      .repartition(tx.snapshot.targetFiles("positions", targetFileBytes), col("token"))
+      .sortWithinPartitions("token", "doc_id", "pos"))
+    tx.drop(IndexMaintenance.TombstoneStore)
   }
 
   /** Exact-phrase matches from the positional index: (doc_id, n_matches)
@@ -866,9 +783,9 @@ object Retrieval {
       s"phrase length ${phrase.length} > 32 — split the needle (an exact " +
         "match of any 32-token window implies containment for longer ones)")
     val distinctToks = phrase.distinct
-    val rows = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(IndexMaintenance.storePath(spark, path, "positions"))
-          .filter(col("token").isin(distinctToks: _*)), "doc_id")
+    val snap = IndexMaintenance.snapshot(spark, path)
+    val rows = snap.dropTombstoned(
+        snap.read("positions").filter(col("token").isin(distinctToks: _*)), "doc_id")
       .dropDuplicates("doc_id", "pos") // crash-replayed append rows
     // token → the phrase slots it fills, as a literal map (driver-side
     // constant; the explode is map-side over the probed slice only)
@@ -909,7 +826,13 @@ object Retrieval {
     */
   def phraseMatchesBatch(spark: org.apache.spark.sql.SparkSession,
       path: String, phrases: DataFrame, phraseIdCol: String,
-      slotCol: String, tokenCol: String): DataFrame = {
+      slotCol: String, tokenCol: String): DataFrame =
+    phraseMatchesBatchAt(IndexMaintenance.snapshot(spark, path), phrases,
+      phraseIdCol, slotCol, tokenCol)
+
+  private def phraseMatchesBatchAt(snap: IndexMaintenance.Snapshot,
+      phrases: DataFrame, phraseIdCol: String, slotCol: String,
+      tokenCol: String): DataFrame = {
     val q = Staging.stage(phrases
       .select(col(phraseIdCol).as("phrase_id"),
         col(slotCol).cast("long").as("slot"), col(tokenCol).as("token"))
@@ -930,9 +853,9 @@ object Retrieval {
     }
     val terms = q.select("token").distinct().collect().map(_.getString(0))
     val lenF = q.groupBy("phrase_id").agg(count(lit(1)).as("len"))
-    val rows = IndexMaintenance.filterTombstoned(spark, path,
-        spark.read.parquet(IndexMaintenance.storePath(spark, path, "positions"))
-          .filter(col("token").isin(terms.toIndexedSeq: _*)), "doc_id")
+    val rows = snap.dropTombstoned(
+        snap.read("positions").filter(col("token").isin(terms.toIndexedSeq: _*)),
+        "doc_id")
       .dropDuplicates("doc_id", "pos")
     rows
       .join(broadcast(q), "token") // fan out to the slots wanting the token
@@ -1020,8 +943,8 @@ object Retrieval {
     // the index route would read) + the store's total occurrence volume
     // (a footer-only count). Occ counts tombstoned/replayed rows too —
     // an upper bound is exactly what a cost probe wants.
-    val positions = spark.read.parquet(
-      IndexMaintenance.storePath(spark, path, "positions"))
+    val snap = IndexMaintenance.snapshot(spark, path)
+    val positions = snap.read("positions")
     val occ = positions
       .filter(col("token").isin(terms: _*))
       .groupBy("token").agg(count(lit(1)).as("c"))
@@ -1035,7 +958,7 @@ object Retrieval {
     import spark.implicits._
     val cheapDf =
       if (cheap.isEmpty) None
-      else Some(phraseMatchesBatch(spark, path,
+      else Some(phraseMatchesBatchAt(snap,
         cheap.flatMap { case (pid, toks) =>
           toks.zipWithIndex.map { case (t, i) => (pid, i, t) }
         }.toDF("phrase_id", "slot", "token"),

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.operators.{IncrementalDedup, Staging}
+import graft.operators.{IncrementalDedup, IndexMaintenance, Staging}
 import graft.operators.Staging.Stageable
 
 /** CONTINUOUS corpus hygiene — the streaming composition of the two
@@ -73,8 +73,8 @@ object CorpusIngest {
     * it is for the dedup index. The two COUNTED stores (term stats,
     * drift grams) are different: their rows carry no replay identity, so
     * a plain re-appended batch would double-count — the ingest therefore
-    * appends them BATCH-ID-KEYED (each batch's delta overwrites its own
-    * `b<id>` subdirectory, the sink's `batch=<id>` idempotence pattern),
+    * appends them BATCH-ID-KEYED (each batch's delta replaces its own
+    * `b<id>` segment, the sink's `batch=<id>` idempotence pattern),
     * which makes the at-least-once window safe for counts too. Survivor
     * batches append with their SINK text (i.e. canonical when
     * `canonicalize` is on), so index content always matches the
@@ -90,31 +90,6 @@ object CorpusIngest {
       postingsPath.isDefined || gramPostingsPath.isDefined ||
         positionsPath.isDefined || termStatsPath.isDefined ||
         driftGramsPath.isDefined
-  }
-
-  // Keyed by (indexPath, params-file mtime): rebuilding an index at the
-  // same path with different params within one JVM invalidates the entry
-  // naturally (the params write bumps the mtime), so batches can never
-  // sign with STALE params — the silent-wrong-answer class where band
-  // keys disagree with the index and near-dups pass through. The mtime
-  // probe is one filesystem metadata call per batch (vs the parquet head
-  // read it guards).
-  private val paramsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), IncrementalDedup.Params]
-
-  private def cachedParams(spark: SparkSession,
-      indexPath: String): IncrementalDedup.Params = {
-    val p = new Path(indexPath, "params")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // max over CHILD files, not the directory status: object stores
-    // (S3A-style) report fake directory mtimes (often 0), which would
-    // quietly disable the rebuild-detection this cache key exists for
-    val statuses = fs.listStatus(p)
-    val mtime =
-      if (statuses.isEmpty) fs.getFileStatus(p).getModificationTime
-      else statuses.map(_.getModificationTime).max
-    paramsCache.getOrElseUpdate((indexPath, mtime),
-      IncrementalDedup.readParams(spark, indexPath))
   }
 
   /** The BANNED-CONTENT store name, living under the dedup index root:
@@ -134,13 +109,12 @@ object CorpusIngest {
   val BannedStore = "banned"
 
   /** The ingest LINEAGE id — a stable fingerprint of the checkpoint
-    * location, namespacing the counted stores' batch-id-keyed
-    * subdirectories: streaming batch ids restart at 0 for every fresh
-    * checkpoint, so without the namespace a decommission-and-replace
-    * ingest pointed at the SAME term-stats/drift stores would overwrite
-    * the previous lineage's b0, b1, … deltas. Same checkpoint (and so
-    * same replay window) ⇒ same lineage ⇒ the keyed-overwrite
-    * idempotence is untouched.
+    * location, namespacing the counted stores' batch keys: streaming
+    * batch ids restart at 0 for every fresh checkpoint, so without the
+    * namespace a decommission-and-replace ingest pointed at the SAME
+    * term-stats/drift stores would replace the previous lineage's b0,
+    * b1, … deltas. Same checkpoint (and so same replay window) ⇒ same
+    * lineage ⇒ the keyed-replace idempotence is untouched.
     */
   def lineageOf(checkpointPath: String): String = {
     val d = java.security.MessageDigest.getInstance("SHA-256")
@@ -150,19 +124,15 @@ object CorpusIngest {
 
   /** BAN content: append the docs' canonical fingerprints to the banned
     * store at `indexPath`. Idempotent under replay (duplicate fp rows are
-    * harmless — the door check is an anti-join); empty ban sets are
-    * no-ops (a zero-file parquet dir would poison later reads).
+    * harmless — the door check is an anti-join).
     */
   def banContent(spark: SparkSession, indexPath: String, docs: DataFrame,
       textCol: String): Unit = {
     graft.functions.VectorFunctions.ensureRegistered(spark)
-    graft.operators.IndexMaintenance.withWriterLease(spark, indexPath) {
-      val fp = docs.select(graft.operators.TextAnalysis
+    IndexMaintenance.withWriterLease(spark, indexPath)(
+      _.append(BannedStore, docs.select(graft.operators.TextAnalysis
           .canonicalFingerprint(col(textCol)).as("fp"))
-        .distinct().coalesce(1).stagePersist()
-      if (!fp.isEmpty)
-        fp.write.mode("append").parquet(s"$indexPath/$BannedStore")
-    }
+        .distinct().coalesce(1)))
   }
 
   /** The full TAKEDOWN: retract the docs from the dedup index (tombstones
@@ -185,20 +155,18 @@ object CorpusIngest {
     * public so batch pipelines can run the same check.
     */
   def filterBannedContent(docs: DataFrame, textCol: String,
-      indexPath: String): DataFrame = {
-    val spark = docs.sparkSession
-    val p = new Path(indexPath, BannedStore)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) docs
-    else {
-      graft.functions.VectorFunctions.ensureRegistered(spark)
-      val banned = spark.read.parquet(p.toString)
+      indexPath: String): DataFrame =
+    filterBanned(docs, textCol, IndexMaintenance.snapshot(docs.sparkSession, indexPath))
+
+  private def filterBanned(docs: DataFrame, textCol: String,
+      snap: IndexMaintenance.Snapshot): DataFrame =
+    snap.readOpt(BannedStore).fold(docs) { banned =>
+      graft.functions.VectorFunctions.ensureRegistered(docs.sparkSession)
       docs.join(broadcast(banned),
         graft.operators.TextAnalysis.canonicalFingerprint(docs(textCol))
           === banned("fp"),
         "left_anti")
     }
-  }
 
   /** Drain every available document file under `srcDir` (one file per
     * micro-batch, arrival order) through the incremental dedup, then
@@ -207,9 +175,9 @@ object CorpusIngest {
     * files arrive processes ONLY the new files and appends ONLY their
     * survivors.
     *
-    * First run bootstraps the index at `indexPath` (params + empty
-    * stores) unless one already exists — seeding with a pre-built index
-    * dedups the stream against a standing corpus from the first batch.
+    * The first surviving batch pins `params` on an empty `indexPath`; a
+    * pre-built index keeps its own params — seeding with one dedups the
+    * stream against a standing corpus from the first batch.
     *
     * `canonicalize` folds [[graft.operators.TextAnalysis.normalizeText]]
     * (Unicode NFC + whitespace collapse) over `textCol` IN-STREAM, before
@@ -241,8 +209,8 @@ object CorpusIngest {
       canonicalize: Boolean = false,
       bannedNeedles: Seq[Seq[String]] = Nil,
       maintain: IndexSuite = IndexSuite(),
-      autoCompact: graft.operators.IndexMaintenance.AutoCompactPolicy =
-        graft.operators.IndexMaintenance.AutoCompactPolicy()): DataFrame = {
+      autoCompact: IndexMaintenance.AutoCompactPolicy =
+        IndexMaintenance.AutoCompactPolicy()): DataFrame = {
     bannedNeedles.foreach { ph =>
       require(ph.nonEmpty && ph.forall(_.nonEmpty),
         "banned needles must be non-empty token sequences")
@@ -295,12 +263,14 @@ object CorpusIngest {
       bannedNeedles: Seq[Seq[String]] = Nil,
       maintain: IndexSuite = IndexSuite(),
       lineage: String = "",
-      autoCompact: graft.operators.IndexMaintenance.AutoCompactPolicy =
-        graft.operators.IndexMaintenance.AutoCompactPolicy()): Unit = {
+      autoCompact: IndexMaintenance.AutoCompactPolicy =
+        IndexMaintenance.AutoCompactPolicy()): Unit = {
+    // one generation of the dedup root serves the whole batch's reads
+    val snap = IndexMaintenance.snapshot(batch0.sparkSession, indexPath)
     // the BANNED-CONTENT door first: retracted-and-banned bytes drop
     // before the needle check, the dedup, the sink, and every index —
     // identity when no ban was ever issued
-    val batchB = filterBannedContent(batch0, textCol, indexPath)
+    val batchB = filterBanned(batch0, textCol, snap)
     val batch =
       if (bannedNeedles.isEmpty) batchB
       else {
@@ -335,16 +305,12 @@ object CorpusIngest {
       return
     }
     val spark = batch.sparkSession
-    val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(indexPath, "params")))
-      IncrementalDedup.buildIndex(batch.limit(0), idCol, textCol, indexPath, params)
     // the batch signs ONCE: the staged (id, sh, sig) frame feeds the
     // pair search, and the survivor append reuses it — a standalone
     // newKeepList + appendBatch sequence would re-shingle and re-sign
-    // the survivors
-    // params are pinned at build time — one read per index per (path,
-    // params mtime); a same-JVM rebuild is picked up via the mtime key
-    val p = cachedParams(spark, indexPath)
+    // the survivors. Params are the index's, or `params` before the
+    // first append pins them.
+    val p = if (snap.params.isEmpty) params else IncrementalDedup.paramsOf(snap)
     val base = IncrementalDedup.signed(batch, idCol, textCol, p)
     // the pair search's frames read the index stores the appends below
     // write, so they get a scope of their own, closed once the keep list
@@ -354,7 +320,7 @@ object CorpusIngest {
       // staged: the keep-list derivation consumes the pair set three
       // times (both drop directions + the batch-internal exemption) —
       // unpersisted, the exact-Jaccard verify join would re-run for each
-      val pairs = IncrementalDedup.newBatchPairsFrom(base, indexPath, p,
+      val pairs = IncrementalDedup.newBatchPairsFrom(base, snap, p,
         jaccardThreshold).stagePersist()
       IncrementalDedup.keepListFromPairs(batch, idCol, pairs)
         .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
@@ -379,10 +345,8 @@ object CorpusIngest {
       base.join(broadcast(keptIds), Seq("id"), "left_semi"),
       indexPath, p))
     // keep the configured standing indices current with the same
-    // survivors (sink text, so canonical when the ingest is). Skipped
-    // for a batch with no survivors — an append that CREATES a store
-    // from an empty frame could leave an unreadable zero-file dir.
-    if (maintain.any && !kept.isEmpty) {
+    // survivors (sink text, so canonical when the ingest is)
+    if (maintain.any) {
       // KEYED append: the postings ptotals row is a count with no
       // replay identity once a compaction has summed it — the
       // batch-keyed form keeps the at-least-once window safe even when
@@ -394,56 +358,32 @@ object CorpusIngest {
             lineage))
       }
       maintain.gramPostingsPath.foreach { mp =>
-        appends += (() => {
-          if (!fs.exists(new Path(mp, "gparams")))
-            graft.operators.Decontaminate.buildGramPostingsIndex(
-              kept, idCol, textCol, mp, maintain.gramN)
-          else
-            graft.operators.Decontaminate.appendToGramPostingsIndex(
-              kept, idCol, textCol, mp)
-        })
+        appends += (() => graft.operators.Decontaminate
+          .appendToGramPostingsIndexOrPin(kept, idCol, textCol, mp, maintain.gramN))
       }
       maintain.positionsPath.foreach { mp =>
         appends += (() => graft.operators.Retrieval
           .appendToPositionalIndex(kept, idCol, textCol, mp))
       }
-      // the COUNTED stores append batch-id-KEYED (overwrite-own-delta,
+      // the COUNTED stores append batch-id-KEYED (replace-own-delta,
       // lineage-namespaced), so an at-least-once replay cannot
-      // double-count; bootstrap is an empty build (schema + store
-      // dirs), idempotent under replay too. The bootstrap probe checks
-      // the RESOLVED store: a compaction crashed mid-swap leaves the
-      // live store dir absent (marker + staged present), and a plain
-      // exists() would misread a full store as unbuilt — the empty
-      // build's overwrite would then WIPE the history. The keyed
-      // append's own lease rolls the swap forward.
-      def built(root: String, store: String): Boolean = fs.exists(
-        new Path(graft.operators.IndexMaintenance.storePath(spark, root, store)))
+      // double-count
       maintain.termStatsPath.foreach { mp =>
-        appends += (() => {
-          if (!built(mp, "terms"))
-            graft.operators.Retrieval.buildTermStatsIndex(
-              kept.limit(0), idCol, textCol, mp)
-          graft.operators.Retrieval.appendToTermStatsIndexKeyed(
-            kept, idCol, textCol, mp, batchId, lineage)
-        })
+        appends += (() => graft.operators.Retrieval.appendToTermStatsIndexKeyed(
+          kept, idCol, textCol, mp, batchId, lineage))
       }
       maintain.driftGramsPath.foreach { mp =>
-        appends += (() => {
-          if (!built(mp, "grams"))
-            graft.operators.CorpusCompare.buildGramIndex(
-              kept.limit(0), col(textCol), mp)
-          graft.operators.CorpusCompare.appendToGramIndexKeyed(
-            kept, col(textCol), mp, batchId, lineage)
-        })
+        appends += (() => graft.operators.CorpusCompare.appendToGramIndexKeyed(
+          kept, col(textCol), mp, batchId, lineage))
       }
     }
-    graft.operators.IndexMaintenance.inParallelAll(appends.toSeq)
+    IndexMaintenance.inParallelAll(appends.toSeq)
     // AUTOMATIC MAINTENANCE: fold the appended deltas when the policy
     // says so — per family, under each compactor's own lease, after the
     // batch's appends (so the triggering batch's rows fold too). Runs
     // inside the foreachBatch: abort-safe by the lease, crash-safe by
-    // the marker swap, and a replayed triggering batch re-compacts
-    // idempotently (the keyed stores' folded ledger keeps counts exact
+    // the manifest commit, and a replayed triggering batch re-compacts
+    // idempotently (the keyed stores' folded keys keep counts exact
     // across the replay). Each family probes its own representative
     // store so a threshold policy only pays for the family over it.
     if (autoCompact.enabled)
@@ -458,8 +398,8 @@ object CorpusIngest {
     */
   private[graft] def maybeCompactSuite(spark: SparkSession, batchId: Long,
       indexPath: String, maintain: IndexSuite,
-      policy: graft.operators.IndexMaintenance.AutoCompactPolicy): Unit = {
-    val im = graft.operators.IndexMaintenance
+      policy: IndexMaintenance.AutoCompactPolicy): Unit = {
+    val im = IndexMaintenance
     def due(root: String, probeStore: String): Boolean = {
       val files = im.storeDataFiles(spark, root, probeStore)
       files > 0 && (policy.batchDue(batchId) ||

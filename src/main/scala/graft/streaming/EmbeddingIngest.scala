@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -34,7 +33,7 @@ import graft.operators.Staging.Stageable
   *     a new vector drops iff its exact cosine vs a previously KEPT
   *     vector (or a lower-id batch vector) reaches `threshold`.
   *
-  * The first surviving batch BOOTSTRAPS the signature index at an
+  * The first surviving batch pins the signature index's params at an
   * explicit `numPlanes` (adaptive sizing needs a corpus to measure;
   * bootstrap has none — the caller pins the width, and corpus growth
   * big enough to need a wider banding is a rebuild, the
@@ -58,18 +57,14 @@ object EmbeddingIngest {
   val BannedStore = "banned_vecs"
 
   /** BAN vectors: append their content hashes to the banned store.
-    * Idempotent under replay (the door is an anti-join); empty sets are
-    * no-ops.
+    * Idempotent under replay (the door is an anti-join).
     */
   def banVectors(spark: SparkSession, indexPath: String, vecs: DataFrame,
       vecCol: String): Unit =
-    IndexMaintenance.withWriterLease(spark, indexPath) {
-      val fp = vecs
+    IndexMaintenance.withWriterLease(spark, indexPath)(
+      _.append(BannedStore, vecs
         .select(xxhash64(col(vecCol).cast("array<double>")).as("fp"))
-        .distinct().coalesce(1).stagePersist()
-      if (!fp.isEmpty)
-        fp.write.mode("append").parquet(s"$indexPath/$BannedStore")
-    }
+        .distinct().coalesce(1)))
 
   /** The full vector TAKEDOWN: tombstone the ids out of the signature
     * index (and the IVF-cell store, when maintained) AND ban the vector
@@ -89,18 +84,16 @@ object EmbeddingIngest {
     * Applied by [[ingestBatch]] at the door; public for batch pipelines.
     */
   def filterBannedVectors(vecs: DataFrame, vecCol: String,
-      indexPath: String): DataFrame = {
-    val spark = vecs.sparkSession
-    val p = new Path(indexPath, BannedStore)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) vecs
-    else {
-      val banned = spark.read.parquet(p.toString)
+      indexPath: String): DataFrame =
+    filterBanned(vecs, vecCol, IndexMaintenance.snapshot(vecs.sparkSession, indexPath))
+
+  private def filterBanned(vecs: DataFrame, vecCol: String,
+      snap: IndexMaintenance.Snapshot): DataFrame =
+    snap.readOpt(BannedStore).fold(vecs) { banned =>
       vecs.join(broadcast(banned),
         xxhash64(vecs(vecCol).cast("array<double>")) === banned("fp"),
         "left_anti")
     }
-  }
 
   /** Drain every available embedding file under `srcDir` (one file per
     * micro-batch, arrival order) through the incremental ANN dedup, then
@@ -154,9 +147,11 @@ object EmbeddingIngest {
       ivfPath: Option[String],
       autoCompact: IndexMaintenance.AutoCompactPolicy =
         IndexMaintenance.AutoCompactPolicy()): Unit = {
+    // one generation of the signature root serves the whole batch's reads
+    val snap = IndexMaintenance.snapshot(batch.sparkSession, indexPath)
     // the banned-vector door first: retracted-and-banned content drops
     // before dedup, the sink, and every index — identity when no ban
-    val batchF = filterBannedVectors(batch, vecCol, indexPath)
+    val batchF = filterBanned(batch, vecCol, snap)
     if (batchF.isEmpty) {
       // a door-emptied batch still overwrites its own sink partition (a
       // replay whose content was banned after the original sink write
@@ -169,16 +164,15 @@ object EmbeddingIngest {
     }
     val batch0 = batchF
     val spark = batch0.sparkSession
-    val fs = new Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(indexPath, "params")))
-      IncrementalAnn.buildIndex(batch0.limit(0), idCol, vecCol, dim,
-        indexPath, numPlanes = numPlanes, numTables = numTables)
     // the batch projects ONCE: the staged (id, vec) + full-width
     // signature frames feed the pair search AND the survivor append
     // (the document ingest's signed-frame rule — the old appendBatch
-    // re-read params and re-projected survivors against every table)
-    val p = IncrementalAnn.readParams(spark, indexPath)
+    // re-read params and re-projected survivors against every table).
+    // Params are the index's, or the bootstrap width before the first
+    // append pins them.
+    val p =
+      if (snap.params.isEmpty) IncrementalAnn.bootstrapParams(dim, numPlanes, numTables)
+      else IncrementalAnn.paramsOf(snap)
     val (d, sigsFull) = IncrementalAnn.stagedSigs(batch0, idCol, vecCol, p)
     // exact-cosine-verified pairs of the batch vs the index and within
     // the batch; the greedy keep-list derivation is SHARED with the
@@ -186,7 +180,7 @@ object EmbeddingIngest {
     // the document ingest: these frames read the stores appended below.
     Staging.scoped {
       val pairs = IncrementalAnn.newBatchPairsFromSigs(d, sigsFull,
-        indexPath, p, threshold).stagePersist()
+        snap, p, threshold).stagePersist()
       IncrementalDedup.keepListFromPairs(batch0, idCol, pairs)
         .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
     }
@@ -195,19 +189,17 @@ object EmbeddingIngest {
     // the read skips footer inference
     val kept = spark.read.schema(batch0.schema)
       .parquet(s"$sinkPath/batch=$batchId")
-    if (!kept.isEmpty) {
-      // LSH store and IVF store are disjoint roots under their own
-      // leases — mutually order-free appends overlap (the §2.6 rule the
-      // document ingest's suite appends use)
-      graft.operators.IndexMaintenance.inParallelAll(Seq(
-        () => IncrementalAnn.appendStaged(d, sigsFull,
-          kept.select(col(idCol).as("id")), indexPath)) ++
-        ivfPath.map(p2 => () =>
-          IvfIndex.appendBatch(kept, idCol, vecCol, p2)))
-    }
+    // LSH store and IVF store are disjoint roots under their own leases —
+    // mutually order-free appends overlap (the §2.6 rule the document
+    // ingest's suite appends use)
+    IndexMaintenance.inParallelAll(Seq(
+      () => IncrementalAnn.appendStaged(d, sigsFull,
+        kept.select(col(idCol).as("id")), indexPath, p)) ++
+      ivfPath.map(p2 => () =>
+        IvfIndex.appendBatch(kept, idCol, vecCol, p2)))
     // automatic maintenance, mirroring the document ingest: fold the
     // appended deltas when the policy fires, after this batch's appends
-    // (lease-isolated, marker-swap crash-safe, replay re-compacts
+    // (lease-isolated, committed by manifest, replay re-compacts
     // idempotently)
     if (autoCompact.enabled) {
       def due(root: String, probeStore: String): Boolean = {

@@ -239,7 +239,7 @@ object ScaleBench {
       scratchDirs.add(work)
       graft.operators.IncrementalDedup.buildIndex(
         t.documents.filter(col("doc_id") % 10 =!= 0), "doc_id", "text", work)
-      s.read.parquet(s"$work/bands")
+      graft.operators.IndexMaintenance.snapshot(s, work).read("bands")
     },
     // the per-increment cost: a 10% delta dedups against the persisted
     // index (sign the delta, join band keys against the 24 B/row index
@@ -299,7 +299,7 @@ object ScaleBench {
       graft.operators.IncrementalAnn.buildIndex(
         t.embeddings.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding",
         dim = 64, path = work)
-      s.read.parquet(s"$work/sigs")
+      graft.operators.IndexMaintenance.snapshot(s, work).read("sigs")
     },
     "x_ann_delta" -> { (s, dir) =>
       import org.apache.spark.sql.functions.col
@@ -319,7 +319,7 @@ object ScaleBench {
         t.embeddings, "vec_id", "embedding", dim = 64, threshold = 0.9)
     },
     // index fragmentation triplet: 20 appended increments leave ~20
-    // parquet append sets per store — x_frag_query times the delta query
+    // segments per store — x_frag_query times the delta query
     // against the fragmented index, x_compact_run the compaction rewrite,
     // x_compact_query the same delta query after it (same answer, bounded
     // files). The standing index is built once per data dir, like
@@ -336,7 +336,7 @@ object ScaleBench {
       val t = new graft.model.Tables(s, dir)
       val idx = fragIdx(s, dir, t)
       graft.operators.IndexMaintenance.compactDedupIndex(s, idx)
-      s.read.parquet(s"$idx/bands")
+      graft.operators.IndexMaintenance.snapshot(s, idx).read("bands")
     },
     "x_compact_query" -> { (s, dir) =>
       import org.apache.spark.sql.functions.col
@@ -502,7 +502,7 @@ object ScaleBench {
       val t = new graft.model.Tables(s, dir)
       graft.operators.Retrieval.retractFromPostingsIndex(
         t.documents.filter(col("doc_id") < 500), "doc_id", "text", idx)
-      s.read.parquet(s"$idx/tombstones").agg(count(lit(1)).as("n_tombstones"))
+      graft.operators.IndexMaintenance.snapshot(s, idx).read("tombstones").agg(count(lit(1)).as("n_tombstones"))
     },
     // EXACT-PHRASE from the positional index vs the scan twin: the index
     // route probes the phrase tokens' position rows (df-bound), the scan

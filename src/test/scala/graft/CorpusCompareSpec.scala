@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.CorpusCompare
+import graft.operators.{CorpusCompare, IndexMaintenance}
 
 /** Properties of the corpus-comparison operators (CompareQueries) beyond
   * the single-fixture DuckDB hash: identity and disjointness laws for
@@ -368,28 +368,20 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
       docs.filter(col("doc_id") % 3 === 1), col("text"), idx)
     CorpusCompare.appendToGramIndex(
       docs.filter(col("doc_id") % 3 === 2), col("text"), idx)
-    def counts() = spark.read.parquet(s"$idx/grams")
+    def counts() = IndexMaintenance.snapshot(spark, idx).read("grams")
       .groupBy("gram").agg(sum("n").as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val before = counts()
-    val filesBefore = new java.io.File(s"$idx/grams").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    val filesBefore = IndexMaintenance.storeDataFiles(spark, idx, "grams")
     CorpusCompare.compactGramIndex(spark, idx)
-    val filesAfter = new java.io.File(s"$idx/grams").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    val filesAfter = IndexMaintenance.storeDataFiles(spark, idx, "grams")
     assert(counts() == before)
     assert(filesAfter < filesBefore,
       s"expected fewer files after compaction, got $filesBefore -> $filesAfter")
-    // crash state: staged store complete + marker published, live deleted
-    // (the window between commit point and swap) — readers must resolve
-    // to the staged store and see identical counts
-    val f = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(s"$idx/grams").write.mode("overwrite")
-      .parquet(s"$idx/grams.compact")
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$idx/_compact_grams"), true)
-    try out.writeBytes("grams") finally out.close()
-    f.delete(new org.apache.hadoop.fs.Path(s"$idx/grams"), true)
+    // crash state: a compaction wrote a replacement segment and its tmp
+    // manifest, and died before the rename — readers must see the
+    // committed generation and identical counts
+    IndexStates.crashBeforeCommit(spark, idx)(tx => tx.replace("grams", tx.snapshot.read("grams").limit(1)))
     val resolved = CorpusCompare.driftSummaryAgainstIndex(spark, idx,
       docs.filter(col("lang") === "en"), col("text")).head()
     val direct = CorpusCompare.driftSummary(docs,
@@ -402,23 +394,19 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
     val oldDocs = docs.filter(col("doc_id") % 2 === 0)
     val newDocs = docs.filter(col("doc_id") % 2 =!= 0)
     CorpusCompare.buildGramIndex(oldDocs, col("text"), idx)
-    // Simulate a compaction that crashed AFTER its commit point: the STALE
-    // store sits staged with the marker published. The rebuild's lease
-    // must settle it BEFORE the build writes — otherwise readers resolve
-    // to the stale staged store (and the next writer rolls it forward)
-    // over the fresh build, silently reverting it.
-    val f = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(s"$idx/grams").write.mode("overwrite")
-      .parquet(s"$idx/grams.compact")
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$idx/_compact_grams"), true)
-    try out.writeBytes("grams") finally out.close()
+    // Simulate a compaction that crashed before its commit: the STALE
+    // store sits in an unnamed segment beside a tmp manifest. The
+    // rebuild's lease must discard both BEFORE the build commits —
+    // otherwise a later writer could publish the stale store over the
+    // fresh build, silently reverting it.
+    IndexStates.crashBeforeCommit(spark, idx)(tx => tx.replace("grams", tx.snapshot.read("grams")))
     CorpusCompare.buildGramIndex(newDocs, col("text"), idx)
+    IndexMaintenance.withWriterLease(spark, idx)(_ => ())
     val viaIndex = CorpusCompare.driftSummaryAgainstIndex(spark, idx,
       newDocs, col("text")).head()
     val direct = CorpusCompare.driftSummary(newDocs, newDocs, col("text")).head()
     assert(viaIndex == direct,
-      "rebuild over a pending stale compaction was reverted by heal")
+      "rebuild over a pending stale compaction was reverted by a later writer")
   }
 
   // ---- overlap --------------------------------------------------------

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.SessionScratch.rmTree
-import graft.operators.{IncrementalAnn, IncrementalDedup, IvfIndex, Staging}
+import graft.operators.{IncrementalAnn, IncrementalDedup, IndexMaintenance, IvfIndex, Staging}
 import graft.streaming.EmbeddingIngest
 
 /** Continuous embedding-side hygiene (streaming/EmbeddingIngest.scala):
@@ -168,7 +168,7 @@ class EmbeddingIngestSpec extends AnyFunSuite with StagingScope {
         shufflePartitions = Some(2))
       assert(keptIds(after) == Set(1L, 2L, 42L),
         s"banned re-upload must drop at the door; got ${keptIds(after)}")
-      assert(spark.read.parquet(s"$root/idx/sigs")
+      assert(IndexMaintenance.snapshot(spark, s"$root/idx").read("sigs")
         .filter(col("id") === 41L).count() == 0L,
         "banned vector must not reach the signature index")
       // and the retracted id never ranks: a probe for basis(0) sees only
@@ -203,7 +203,7 @@ class EmbeddingIngestSpec extends AnyFunSuite with StagingScope {
         shufflePartitions = Some(2), ivfPath = Some(s"$root/ivf"))
       assert(keptIds(streamed) == expectedKept)
       // the cell store holds the seeds + exactly the survivors
-      val cellIds = spark.read.parquet(s"$root/ivf/cells")
+      val cellIds = IndexMaintenance.snapshot(spark, s"$root/ivf").read("cells")
         .select("id").distinct().collect().map(_.getLong(0)).toSet
       assert(cellIds == expectedKept ++ seed.map(_._1),
         s"cell store holds $cellIds")
@@ -222,7 +222,7 @@ class EmbeddingIngestSpec extends AnyFunSuite with StagingScope {
           s"$root/idx_b", s"$root/sink_b", s"$root/ckpt_b", dim = dim,
           numPlanes = 8, ivfPath = Some(s"$root/no_such_ivf"))
       }
-      assert(e.getMessage.contains("iparams missing"))
+      assert(e.getMessage.contains("no committed build"))
     } finally rmTree(root)
   }
 

@@ -5,13 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.SessionScratch.rmTree
 import graft.operators.{Decontaminate, IncrementalDedup, IndexMaintenance, Retrieval, Staging}
 
-/** Concurrent-writer protection for the persisted-index family — the ETL
-  * `_txn_lock` lease applied to every store mutation. The interleavings
-  * here are constructed BY HAND (the EtlSpec two-writer precedent): a
-  * foreign writer's fresh lease is planted at the root, and the mutation
-  * under test must abort loudly instead of interleaving with it (the
-  * silent failure this forecloses: an append landing between a
-  * compaction's read snapshot and its swap renames vanishes in the swap).
+/** Concurrent-writer protection and the manifest commit of the
+  * persisted-index family. The interleavings here are constructed BY HAND
+  * (the EtlSpec two-writer precedent): a foreign writer's fresh lease is
+  * planted at the root, and the mutation under test must abort loudly
+  * instead of interleaving with it (the silent failure this forecloses:
+  * an append landing between a compaction's read and its commit would be
+  * missing from the compaction's manifest). Crash states are manifest
+  * states: segments no manifest names, a tmp manifest never renamed.
   * Readers take no lease and change nothing under the root, so they may
   * run beside any writer.
   */
@@ -141,23 +142,21 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     IndexMaintenance.releaseLease(spark, root)
   }
 
-  test("generation survives a crash between the gen file's delete and rename") {
+  test("generation survives a tmp manifest that was never renamed") {
     val root = fresh("gencrash")
     new java.io.File(root).mkdirs()
-    IndexMaintenance.withWriterLease(spark, root) { () }
-    IndexMaintenance.withWriterLease(spark, root) { () }
+    IndexMaintenance.withWriterLease(spark, root)(_ => ())
+    IndexMaintenance.withWriterLease(spark, root)(_ => ())
     assert(IndexMaintenance.generation(spark, root) == 2L)
-    // simulate the crash window: the published file is deleted and only
-    // the tmp (holding the completed mutation's number) remains
-    val gen = new java.io.File(root, IndexMaintenance.GenFile)
-    val tmp = new java.io.File(root, IndexMaintenance.GenFile + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, "3 crashed".getBytes("UTF-8"))
-    gen.delete()
-    assert(IndexMaintenance.generation(spark, root) == 3L) // not reset to 0
-    // the next completed mutation publishes 4 normally
-    IndexMaintenance.withWriterLease(spark, root) { () }
-    assert(IndexMaintenance.generation(spark, root) == 4L)
-    assert(gen.exists && !tmp.exists)
+    // the crash window of the commit: manifest 3 was written to its tmp
+    // file and never renamed — mutation 3 did not commit
+    val tmp = new java.io.File(root, "_manifest_3.tmp")
+    java.nio.file.Files.copy(new java.io.File(root, "_manifest_2").toPath, tmp.toPath)
+    assert(IndexMaintenance.generation(spark, root) == 2L)
+    // the next completed mutation publishes 3 and clears the tmp
+    IndexMaintenance.withWriterLease(spark, root)(_ => ())
+    assert(IndexMaintenance.generation(spark, root) == 3L)
+    assert(new java.io.File(root, "_manifest_3").exists && !tmp.exists)
   }
 
   test("generation bumps once per completed mutation, not on abort") {
@@ -188,7 +187,7 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     // the fresh ptotals would count docs the stale tombstones filter out
     // of df/candidates — every query's scores would skew
     Retrieval.buildPostingsIndex(docs, "doc_id", "text", root)
-    assert(IndexMaintenance.tombstones(spark, root).isEmpty)
+    assert(!IndexMaintenance.snapshot(spark, root).has(IndexMaintenance.TombstoneStore))
     val viaIndex = Retrieval.topKFromIndex(spark, root,
       Seq("dup", "vector", "batch"), k = 8).collect().map(_.toSeq).toSeq
     val viaScan = Retrieval.bm25TopK(docs, "doc_id", "text",
@@ -197,10 +196,10 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
   }
 
   test("readers beside a running compaction leave its staged store alone") {
-    // The compactor holds the lease and is still writing its staged store
-    // (no marker yet). Readers must answer from the live stores and touch
-    // nothing; only the next writer's lease, taken once the compactor's
-    // is released, may delete the unmarked staged directory as debris.
+    // The compactor holds the lease and has written its replacement
+    // segment, but crashes before its manifest. Readers — beside it and
+    // after it — answer from the committed generation and touch nothing;
+    // only the next writer's lease deletes the unnamed segment as debris.
     val post = fresh("race_post")
     val pos = fresh("race_pos")
     val dedup = fresh("race_dedup")
@@ -221,31 +220,92 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
       s"fixture self-check: ${before._1.size} top-k rows, " +
         s"${before._2.size} phrase rows")
     val planted = Seq(post -> "postings", pos -> "positions", dedup -> "bands")
-    def staged(root: String, store: String) =
-      new java.io.File(s"$root/$store.compact")
-    planted.foreach { case (root, store) =>
-      IndexMaintenance.acquireLease(spark, root, "compactor", 600000L)
-      // a partial store: a reader that read it would answer differently
-      spark.read.parquet(s"$root/$store").limit(1)
-        .write.parquet(staged(root, store).toString)
-    }
-    try {
-      assert(answers() == before, "a reader beside a compaction changed its answer")
-      planted.foreach { case (root, store) =>
-        assert(staged(root, store).exists,
-          s"a reader deleted the in-flight $store.compact at $root")
+    def segments(root: String, store: String) =
+      new java.io.File(s"$root/$store").listFiles().map(_.getName).toSet
+    val debris = planted.map { case (root, store) =>
+      val live = segments(root, store)
+      intercept[IllegalStateException] {
+        IndexMaintenance.withWriterLease(spark, root) { tx =>
+          // a partial store: a reader that read it would answer differently
+          tx.replace(store, tx.snapshot.read(store).limit(1))
+          assert(answers() == before, "a reader beside a compaction changed its answer")
+          throw new IllegalStateException("compactor crashed before its manifest")
+        }
       }
-    } finally planted.foreach { case (root, _) =>
-      IndexMaintenance.releaseLease(spark, root)
+      val left = segments(root, store) -- live
+      assert(left.nonEmpty, s"fixture self-check: no uncommitted segment at $root")
+      (root, store, left)
     }
-    // the next append's lease heals each root: the debris goes
+    assert(answers() == before, "an uncommitted segment changed a reader's answer")
+    debris.foreach { case (root, store, left) =>
+      assert(segments(root, store).intersect(left) == left,
+        s"a reader deleted the uncommitted $store segment at $root")
+    }
+    // the next append's lease deletes the debris
     Retrieval.appendToPostingsIndex(delta, "doc_id", "text", post)
     Retrieval.appendToPositionalIndex(delta, "doc_id", "text", pos)
     IncrementalDedup.appendBatch(delta, "doc_id", "text", dedup)
-    planted.foreach { case (root, store) =>
-      assert(!staged(root, store).exists,
-        s"the next writer left the unmarked $store.compact at $root")
+    debris.foreach { case (root, store, left) =>
+      assert(segments(root, store).intersect(left).isEmpty,
+        s"the next writer left the uncommitted $store segment at $root")
     }
+  }
+
+  test("frames planned before an append and a compaction answer from their generation") {
+    // A read plans its file list from one snapshot; the append and the
+    // compaction after it commit generations g+1 and g+2, and neither may
+    // delete the files generation g names.
+    val post = fresh("pinned_post")
+    val dedup = fresh("pinned_dedup")
+    val half = docs.filter(col("doc_id") % 2 === 1)
+    val delta = docs.filter(col("doc_id") % 2 === 0)
+    Retrieval.buildPostingsIndex(half, "doc_id", "text", post)
+    IncrementalDedup.buildIndex(half, "doc_id", "text", dedup)
+    // the answers before the mutations, in a scope of their own so that
+    // no staged frame of theirs serves the planned frames below
+    val expected = Staging.scoped((
+      Retrieval.topKFromIndex(spark, post, Seq("dup", "vector"), k = 5)
+        .collect().map(_.toSeq).toSeq,
+      IncrementalDedup.newBatchPairs(delta, "doc_id", "text", dedup,
+        jaccardThreshold = 0.2).collect().map(_.toSeq).toSet))
+    val topK = Retrieval.topKFromIndex(spark, post, Seq("dup", "vector"), k = 5)
+    val pairs = IncrementalDedup.newBatchPairs(delta, "doc_id", "text", dedup,
+      jaccardThreshold = 0.2)
+    assert(expected._1.nonEmpty && expected._2.nonEmpty,
+      s"fixture self-check: ${expected._1.size} top-k rows, ${expected._2.size} pairs")
+    Retrieval.appendToPostingsIndex(delta, "doc_id", "text", post)
+    Retrieval.compactPostingsIndex(spark, post)
+    IncrementalDedup.appendBatch(delta.select((col("doc_id") + 1000000L).as("doc_id"),
+      col("text")), "doc_id", "text", dedup)
+    IndexMaintenance.compactDedupIndex(spark, dedup)
+    assert((topK.collect().map(_.toSeq).toSeq, pairs.collect().map(_.toSeq).toSet)
+      == expected, "a planned frame changed its answer after later commits")
+  }
+
+  test("a paired append commits the segments of both of its threads") {
+    val root = fresh("paired")
+    Retrieval.buildPostingsIndex(docs.filter(col("doc_id") % 2 === 1),
+      "doc_id", "text", root)
+    Retrieval.appendToPostingsIndex(docs.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", root)
+    val snap = IndexMaintenance.snapshot(spark, root)
+    assert(snap.generation == 2L)
+    Seq("postings", "ptotals").foreach { store =>
+      val segs = snap.files(store).map(_._1.getParent.getName).distinct
+      assert(segs.size == 2 && segs.exists(_.startsWith("g2-")),
+        s"$store: the append's segment is missing from the manifest: $segs")
+    }
+  }
+
+  test("a root with stores but no manifest is refused with a rebuild message") {
+    val root = fresh("legacy")
+    spark.range(3).toDF("id").write.parquet(s"$root/postings")
+    val e = intercept[IllegalStateException](IndexMaintenance.snapshot(spark, root))
+    assert(e.getMessage.contains("rebuild"), e.getMessage)
+    val e2 = intercept[IllegalStateException] {
+      Retrieval.appendToPostingsIndex(docs, "doc_id", "text", root)
+    }
+    assert(e2.getMessage.contains("rebuild"), e2.getMessage)
   }
 
   test("an index read leaves no staged frame behind") {

@@ -47,7 +47,6 @@ class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     assert(s1("params").getAs[String]("params").contains("\"bands\":4"))
     assert(s1("shingles").getAs[String]("params") == null)
     assert(s1.values.forall(_.getAs[Long]("generation") == 1L))
-    assert(s1.values.forall(!_.getAs[Boolean]("pending_compaction")))
     assert(s1.values.forall(_.getAs[Long]("keyed_batches") == 0L))
     assert(s1("bands").getAs[Long]("files") > 0)
     assert(s1("bands").getAs[Long]("bytes") > 0)
@@ -65,10 +64,8 @@ class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     assert(s2.values.forall(_.getAs[Long]("generation") == 2L))
 
     // retraction surfaces as a tombstones store row; data stores unchanged
-    import spark.implicits._
     IndexMaintenance.withWriterLease(spark, root) {
-      IndexMaintenance.addTombstones(root,
-        base.limit(10).select("doc_id"))
+      IndexMaintenance.addTombstones(_, base.limit(10).select("doc_id"))
     }
     val s3 = statsMap(root)
     assert(s3.contains("tombstones"))
@@ -85,27 +82,25 @@ class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     assert(s4("shingles").getAs[Long]("files") ==
       s4("shingles").getAs[Long]("target_files"))
     assert(s4.values.forall(_.getAs[Long]("generation") == 4L))
-
-    // a committed-but-unswapped compaction marker reads as pending
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "_compact_bands"),
-      "bands".getBytes("UTF-8"))
-    assert(statsMap(root)("bands").getAs[Boolean]("pending_compaction"))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "_compact_bands"))
   }
 
   test("keyed counted stores report delta backlog and folded ledger") {
     val root = fresh("keyed")
     import spark.implicits._
-    // a batch-keyed counted store: two delta subdirectories, one folded
-    Seq(("a", 3L), ("b", 1L)).toDF("term", "n")
-      .write.parquet(s"$root/terms/b1")
-    Seq(("a", 2L)).toDF("term", "n")
-      .write.parquet(s"$root/terms/b2")
-    IndexMaintenance.recordFolded(spark, root, "terms", Seq("b0"))
+    // a batch-keyed counted store: one delta folded (its only token
+    // summed to zero, so the fold leaves no row), two deltas live
+    def keyed(key: String, rows: Seq[(String, Long)]): Unit =
+      IndexMaintenance.withWriterLease(spark, root)(
+        _.writeKeyed("terms", key, rows.toDF("term", "n")))
+    keyed("b0", Seq(("z", 0L)))
+    IndexMaintenance.withWriterLease(spark, root) { tx =>
+      tx.replace("terms", tx.snapshot.read("terms").filter($"n" =!= 0L))
+    }
+    keyed("b1", Seq(("a", 3L), ("b", 1L)))
+    keyed("b2", Seq(("a", 2L)))
     val s = statsMap(root)
     assert(s("terms").getAs[Long]("keyed_batches") == 2L)
     assert(s("terms").getAs[Long]("folded_batches") == 1L)
-    assert(s("terms").getLong(3) == 3L) // recursive row count over deltas
+    assert(s("terms").getLong(3) == 3L) // row count over the live deltas
   }
 }

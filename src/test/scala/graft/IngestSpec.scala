@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.SessionScratch.rmTree
-import graft.operators.{IncrementalDedup, Staging}
+import graft.operators.{IncrementalDedup, IndexMaintenance, Staging}
 import graft.streaming.CorpusIngest
 
 /** Continuous-ingest corpus hygiene (streaming/CorpusIngest.scala):
@@ -290,12 +290,12 @@ class IngestSpec extends AnyFunSuite with StagingScope {
         val fc = IndexMaintenance.storeDataFiles(spark, s"$root/${st._1}_c", st._2)
         assert(fa < fc, s"${st._1}/${st._2}: auto=$fa vs control=$fc")
       }
-      // counted stores: the fired compaction folded batches 0-1 into root
-      // files and recorded them in the ledger; batch 2 is the remaining
+      // counted stores: the fired compaction folded batches 0-1 into one
+      // segment and marked their keys folded; batch 2 is the remaining
       // keyed delta
-      assert(IndexMaintenance.foldedBatches(spark, s"$root/terms_a", "terms").nonEmpty)
-      assert(IndexMaintenance.keyedSubdirs(spark, s"$root/terms_a", "terms").size
-        < IndexMaintenance.keyedSubdirs(spark, s"$root/terms_c", "terms").size)
+      def terms(tag: String) = IndexMaintenance.snapshot(spark, s"$root/terms_$tag")
+      assert(terms("a").folded("terms").nonEmpty)
+      assert(terms("a").keys("terms").size < terms("c").keys("terms").size)
 
       // REPLAY the triggering batch (id 1): the at-least-once window's
       // worst case re-runs the append AND the compaction — answers and
@@ -377,7 +377,7 @@ class IngestSpec extends AnyFunSuite with StagingScope {
       assert(keptIds(after) == Set(1L, 2L, 4L, 43L),
         s"banned re-uploads must drop at the door; got ${keptIds(after)}")
       // ...and the banned docs never polluted the index with signatures
-      assert(spark.read.parquet(s"$root/idx/bands")
+      assert(IndexMaintenance.snapshot(spark, s"$root/idx").read("bands")
         .filter(col("id").isin(41L, 42L)).count() == 0L,
         "banned content must not reach the index")
       // the ban survives a replay of the arrival batch
@@ -425,9 +425,9 @@ class IngestSpec extends AnyFunSuite with StagingScope {
       val before = score()
 
       // COMPACTION inside the at-least-once window, then the replay of
-      // batch 1: the folded ledger must make the replayed keyed append a
-      // no-op — without it the replay re-creates its subdirectory and
-      // every count doubles
+      // batch 1: the folded key must make the replayed keyed append a
+      // no-op — without it the replay re-adds its delta and every count
+      // doubles
       Retrieval.compactTermStatsIndex(spark, terms)
       assert(score() == before, "compaction must be count-identical")
       CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"), 1L,
@@ -457,16 +457,16 @@ class IngestSpec extends AnyFunSuite with StagingScope {
       assert(score() == ref,
         "a second lineage must accumulate, not clobber, the counted store")
 
-      // CRASH MID-SWAP: a compaction that died between its two renames
-      // leaves marker+staged and NO live store dir — the ingest's
-      // bootstrap probe must resolve the staged store as built, not
-      // misread the store as unbuilt and wipe the history with an empty
-      // build; the keyed append's lease then rolls the swap forward
-      val live = java.nio.file.Paths.get(s"$terms/terms")
-      val staged = java.nio.file.Paths.get(s"$terms/terms.compact")
-      java.nio.file.Files.move(live, staged)
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(s"$terms/_compact_terms"))
+      // CRASH MID-COMPACTION: a compaction that wrote its replacement
+      // segment (here an empty one) but died before its manifest commits
+      // nothing — the next keyed append must build on the committed
+      // history, never on the uncommitted store
+      intercept[IllegalStateException] {
+        IndexMaintenance.withWriterLease(spark, terms) { tx =>
+          tx.replace("terms", tx.snapshot.read("terms").limit(0))
+          throw new IllegalStateException("compactor crashed before its manifest")
+        }
+      }
       CorpusIngest.ingestBatch(
         Seq(61L -> fresh(61)).toDF("doc_id", "text"), 2L,
         s"$root/idxA", s"$root/sinkA", "doc_id", "text", tau, params,
@@ -481,7 +481,7 @@ class IngestSpec extends AnyFunSuite with StagingScope {
           Seq("w3"), s"$root/terms_ref", k = 1).collect().map(_.toSeq).toSeq)
       }
       assert(score() == ref2,
-        "a mid-swap crash before the bootstrap probe must be read as built, not wiped")
+        "a crashed compaction must leave the committed history, not wipe it")
     } finally rmTree(root)
   }
 

@@ -16,6 +16,10 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
   lazy val spark: SparkSession = SparkTestSession.get
   val dir = "/root/testdata/sf0.001"
   private def t(name: String) = spark.read.parquet(s"$dir/$name.parquet")
+  private def indexStore(root: String, store: String) =
+    graft.operators.IndexMaintenance.snapshot(spark, root).read(store)
+  private def indexHas(root: String, store: String) =
+    graft.operators.IndexMaintenance.snapshot(spark, root).has(store)
 
   test("events reads in a fresh session with no prior Tables load") {
     // the nanos conf lives in every session BUILDER now (Tables used to set
@@ -231,6 +235,26 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       .map(_.getFileName.toString).toList.sorted
     finally walk.close()
     assert(offenders.isEmpty, s"persist or release outside Staging in: $offenders")
+  }
+
+  test("one index layout: only IndexMaintenance builds paths under an index root") {
+    import scala.jdk.CollectionConverters._
+    // the retired crash protocols, and any path a module builds itself
+    // to an index store (`s"$root/postings"`, the banned stores)
+    val stores = Seq("bands", "shingles", "params", "sigs", "vecs", "postings",
+      "ptotals", "positions", "terms", "grams", "gparams", "iparams", "cells",
+      "codebook", "tombstones", "banned", "banned_vecs").mkString("|")
+    val layout = ("\\.compact\"|\"_compact_|_compact_\\$|_folded_|storePath|" +
+      "s\"\\$\\{?\\w+\\}?/(" + stores + ")\\b|/\\$BannedStore|Path\\(\\w+, BannedStore\\)").r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+    val offenders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "IndexMaintenance.scala")
+      .flatMap(p => layout.findFirstIn(java.nio.file.Files.readString(p))
+        .map(m => s"${p.getFileName}: $m"))
+      .toList.sorted
+    finally walk.close()
+    assert(offenders.isEmpty, s"index layout outside IndexMaintenance: $offenders")
   }
 
   test("widen raises LARGE narrow scans to the core count; small and wide frames pass through") {
@@ -452,22 +476,20 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       IvfIndex.compact(spark, s"$work/b")
       assert(rows(IvfIndex.topK(q, "vec_id", "embedding", s"$work/b", k = 3))
         == only1, "compaction must be bit-identical")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$work/b/tombstones")))
+      assert(!indexHas(s"$work/b", "tombstones"))
       val h2ids = h2.select("vec_id").collect().map(_.getLong(0)).toSet
-      assert(spark.read.parquet(s"$work/b/cells")
+      assert(indexStore(s"$work/b", "cells")
         .filter(col("id").isin(h2ids.toSeq: _*)).count() == 0L,
         "vacuum must drop retracted assignment rows physically")
 
-      // torn build (no iparams) fails loudly
+      // torn build (cells written, crashed before its commit) fails loudly
       val torn = s"$work/torn"
-      new java.io.File(torn).mkdirs()
-      spark.read.parquet(s"$work/a/cells").limit(1)
-        .write.parquet(s"$torn/cells")
+      IndexStates.crashBeforeCommit(spark, torn)(
+        _.replace("cells", indexStore(s"$work/a", "cells").limit(1)))
       val e = intercept[IllegalArgumentException] {
         IvfIndex.topK(q, "vec_id", "embedding", torn, k = 3)
       }
-      assert(e.getMessage.contains("iparams missing"))
+      assert(e.getMessage.contains("no committed build"))
     } finally rmTree(work)
   }
 
@@ -1509,10 +1531,8 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       IncrementalDedup.newBatchPairs(delta, "doc_id", "text", work,
         jaccardThreshold = 0.2)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def fileCount(store: String): Int = {
-      val d = new java.io.File(s"$work/$store")
-      d.listFiles().count(f => f.getName.endsWith(".parquet"))
-    }
+    def fileCount(store: String): Int =
+      IndexMaintenance.storeDataFiles(spark, work, store).toInt
     try {
       // build + 3 appends (one REPLAYED — the crash-recovery duplicate
       // compaction must physically drop) → many small append sets
@@ -1530,33 +1550,45 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       assert(fileCount("bands") === 1 && fileCount("shingles") === 1)
       assert(pairsOf(delta) == before, "compaction changed query results")
       // replayed append rows are physically gone: ids are unique again
-      val shingleIds = spark.read.parquet(s"$work/shingles").select("id").collect().map(_.getLong(0))
+      val shingleIds = indexStore(work, "shingles").select("id").collect().map(_.getLong(0))
       assert(shingleIds.length == shingleIds.distinct.length)
 
-      // crash state A: staged store + marker present (commit point passed,
-      // swap lost) — a reader resolves to the staged store; results
-      // unchanged
-      val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      val live = new org.apache.hadoop.fs.Path(s"$work/bands")
-      val staged = new org.apache.hadoop.fs.Path(s"$work/bands.compact")
-      val marker = new org.apache.hadoop.fs.Path(s"$work/_compact_bands")
-      assert(f.rename(live, staged))
-      val out = f.create(marker, true); out.writeBytes("bands"); out.close()
-      assert(pairsOf(delta) == before, "read after crashed swap changed results")
+      // crash state A: a compaction wrote its stores and its tmp manifest
+      // and died before the rename — a reader sees the committed
+      // generation; results unchanged
+      val committed = IndexStates.segments(work, "bands")
+      val tmp = new java.io.File(work,
+        s"_manifest_${IndexMaintenance.generation(spark, work) + 1}.tmp")
+      IndexStates.crashBeforeCommit(spark, work) { tx =>
+        tx.replace("bands", tx.snapshot.read("bands").limit(1))
+        tx.replace("shingles", tx.snapshot.read("shingles").limit(1))
+      }
+      val debris = IndexStates.segments(work, "bands") -- committed
+      assert(debris.nonEmpty && tmp.exists)
+      assert(pairsOf(delta) == before, "read after a crashed commit changed results")
 
       // compacting an already-compact index is a no-op for results; its
-      // lease rolls crash state A FORWARD first
+      // lease deletes crash state A's segments and tmp manifest first
       IndexMaintenance.compactDedupIndex(spark, work)
-      assert(f.exists(live) && !f.exists(staged) && !f.exists(marker))
+      assert(IndexStates.segments(work, "bands").intersect(debris).isEmpty)
+      assert(!tmp.exists)
       assert(pairsOf(delta) == before)
 
-      // crash state B: staged debris WITHOUT marker (crash before commit
-      // point) — the live store answers; the next writer's lease deletes it
-      val junk = spark.read.parquet(s"$work/bands").limit(1)
-      junk.write.parquet(staged.toString)
+      // crash state B: segments WITHOUT any manifest (crash before the
+      // commit) — the committed stores answer; the next writer deletes them
+      val before2 = IndexStates.segments(work, "bands")
+      intercept[IllegalStateException] {
+        IndexMaintenance.withWriterLease(spark, work) { tx =>
+          tx.append("bands", tx.snapshot.read("bands").limit(1))
+          throw new IllegalStateException("writer crashed before its commit")
+        }
+      }
+      val debris2 = IndexStates.segments(work, "bands") -- before2
+      assert(debris2.nonEmpty)
       assert(pairsOf(delta) == before)
       IndexMaintenance.compactDedupIndex(spark, work)
-      assert(!f.exists(staged), "uncommitted staged dir not cleaned")
+      assert(IndexStates.segments(work, "bands").intersect(debris2).isEmpty,
+        "uncommitted segment not cleaned")
       assert(pairsOf(delta) == before)
     } finally rmTree(work)
   }
@@ -1578,7 +1610,7 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       assert(before.nonEmpty)
       IndexMaintenance.compactAnnIndex(spark, work)
       assert(pairsOf(delta) == before, "ann compaction changed query results")
-      val vecIds = spark.read.parquet(s"$work/vecs").select("id").collect().map(_.getLong(0))
+      val vecIds = indexStore(work, "vecs").select("id").collect().map(_.getLong(0))
       assert(vecIds.length == vecIds.distinct.length, "replayed vec rows survived compaction")
     } finally rmTree(work)
   }
@@ -2118,13 +2150,11 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
         "text", Seq("x"), s"$work/b", k = 2).collect()
       assert(afterCompact.map(r => (r.getLong(0), r.getDouble(2))).toSeq ==
         rows.map(r => (r.getLong(0), r.getDouble(2))).toSeq)
-      // plant the worst crash state (published marker + staged store from
-      // an interrupted compaction) — the next read must resolve and agree
-      val stagedDir = java.nio.file.Paths.get(s"$work/b/terms.compact")
-      val marker = java.nio.file.Paths.get(s"$work/b/_compact_terms")
-      val live = java.nio.file.Paths.get(s"$work/b/terms")
-      java.nio.file.Files.move(live, stagedDir)
-      java.nio.file.Files.createFile(marker)
+      // plant the worst crash state (an interrupted compaction's
+      // replacement store and tmp manifest) — the next read must see the
+      // committed generation and agree
+      IndexStates.crashBeforeCommit(spark, s"$work/b")(tx =>
+        tx.replace("terms", tx.snapshot.read("terms").limit(1)))
       val resolved = Retrieval.scoreAgainstTermIndex(fresh, "doc_id",
         "text", Seq("x"), s"$work/b", k = 2).collect()
       assert(resolved.map(r => (r.getLong(0), r.getDouble(2))).toSeq ==
@@ -2159,12 +2189,13 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       // compaction folds both stores bit-identically (and drops the replay)
       Retrieval.compactPostingsIndex(spark, work)
       assert(rows(Retrieval.topKFromIndex(spark, work, terms, k = 12)) == scan)
-      assert(spark.read.parquet(s"$work/ptotals").count() == 1L)
-      // worst crash state: published marker + staged store — reads resolve
-      val staged = java.nio.file.Paths.get(s"$work/postings.compact")
-      val marker = java.nio.file.Paths.get(s"$work/_compact_postings")
-      java.nio.file.Files.move(java.nio.file.Paths.get(s"$work/postings"), staged)
-      java.nio.file.Files.createFile(marker)
+      assert(indexStore(work, "ptotals").count() == 1L)
+      // worst crash state: an interrupted compaction's stores and tmp
+      // manifest — reads see the committed generation
+      IndexStates.crashBeforeCommit(spark, work) { tx =>
+        tx.replace("postings", tx.snapshot.read("postings").limit(1))
+        tx.replace("ptotals", tx.snapshot.read("ptotals").limit(0))
+      }
       assert(rows(Retrieval.topKFromIndex(spark, work, terms, k = 12)) == scan)
       // duplicate query terms break the distinctness contract loudly
       intercept[IllegalArgumentException] {
@@ -2217,19 +2248,18 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       Retrieval.compactPostingsIndex(spark, s"$work/a")
       assert(rows(Retrieval.topKFromIndex(spark, s"$work/a", terms, k = 12))
         == scanSurv)
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$work/a/tombstones")),
+      assert(!indexHas(s"$work/a", "tombstones"),
         "vacuum must retire the tombstone store")
-      assert(spark.read.parquet(s"$work/a/postings")
+      assert(indexStore(s"$work/a", "postings")
         .filter(col("doc_id") % 7 === 3).count() == 0L,
         "vacuum must drop retracted postings physically")
       Retrieval.buildPostingsIndex(survivors, "doc_id", "text", s"$work/b")
-      def postRows(p: String) = spark.read.parquet(s"$p/postings")
+      def postRows(p: String) = indexStore(p, "postings")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
       assert(postRows(s"$work/a") == postRows(s"$work/b"),
         "vacuumed postings rows must equal a fresh survivor build's")
-      def totSums(p: String) = spark.read.parquet(s"$p/ptotals")
+      def totSums(p: String) = indexStore(p, "ptotals")
         .agg(sum(col("n_docs")), sum(col("t_len"))).collect()(0)
       assert(totSums(s"$work/a") == totSums(s"$work/b"),
         "folded corpus totals must equal a fresh survivor build's")
@@ -2260,7 +2290,7 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       // compaction folds the zeroed token away: store rows match a fresh
       // survivor build row-for-row
       Retrieval.compactTermStatsIndex(spark, s"$work/a")
-      def stored(p: String) = spark.read.parquet(s"$p/terms")
+      def stored(p: String) = indexStore(p, "terms")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       assert(stored(s"$work/a") == stored(s"$work/b"),
         "folded store must hold exactly the survivor statistics")
@@ -2305,11 +2335,10 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
         "retracted index must pair exactly like a rebuild on survivors")
       // vacuum both stores physically, retire the tombstones
       IndexMaintenance.compactDedupIndex(spark, s"$work/d")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$work/d/tombstones")))
-      assert(spark.read.parquet(s"$work/d/bands")
+      assert(!indexHas(s"$work/d", "tombstones"))
+      assert(indexStore(s"$work/d", "bands")
         .filter(col("id").isin(hitIds.toSeq: _*)).count() == 0L)
-      assert(spark.read.parquet(s"$work/d/shingles")
+      assert(indexStore(s"$work/d", "shingles")
         .filter(col("id").isin(hitIds.toSeq: _*)).count() == 0L)
       assert(pairs(s"$work/d") == inc2)
 
@@ -2335,9 +2364,8 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       assert(vinc2 == vpairs(s"$work/v2"),
         "retracted ANN index must pair exactly like a rebuild on survivors")
       IndexMaintenance.compactAnnIndex(spark, s"$work/v")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$work/v/tombstones")))
-      assert(spark.read.parquet(s"$work/v/vecs")
+      assert(!indexHas(s"$work/v", "tombstones"))
+      assert(indexStore(s"$work/v", "vecs")
         .filter(col("id").isin(vhit.toSeq: _*)).count() == 0L)
       assert(vpairs(s"$work/v") == vinc2)
     } finally rmTree(work)
@@ -2397,17 +2425,14 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       Retrieval.compactPositionalIndex(spark, s"$work/p")
       assert(rows(Retrieval.phraseMatches(spark, s"$work/p", Seq("a", "a")))
         == afterRetract, "compaction must be bit-identical")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$work/p/tombstones")))
-      assert(spark.read.parquet(s"$work/p/positions")
+      assert(!indexHas(s"$work/p", "tombstones"))
+      assert(indexStore(s"$work/p", "positions")
         .filter(col("doc_id") === victim).count() == 0L,
         "vacuum must drop the retracted doc's occurrence rows")
-      // worst crash state: published marker + staged store — reads resolve
-      val staged = java.nio.file.Paths.get(s"$work/p/positions.compact")
-      val marker = java.nio.file.Paths.get(s"$work/p/_compact_positions")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$work/p/positions"), staged)
-      java.nio.file.Files.createFile(marker)
+      // worst crash state: an interrupted compaction's store and tmp
+      // manifest — reads see the committed generation
+      IndexStates.crashBeforeCommit(spark, s"$work/p")(tx =>
+        tx.replace("positions", tx.snapshot.read("positions").limit(1)))
       assert(rows(Retrieval.phraseMatches(spark, s"$work/p", Seq("a", "a")))
         == afterRetract)
       // guards
@@ -2561,9 +2586,8 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       Decontaminate.compactGramPostingsIndex(spark, work)
       assert(flagged(work, bench) == afterRetract,
         "compaction must be bit-identical")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$work/tombstones")))
-      assert(spark.read.parquet(s"$work/grams")
+      assert(!indexHas(work, "tombstones"))
+      assert(indexStore(work, "grams")
         .filter(col("doc_id") === victim).count() == 0L,
         "vacuum must drop the retracted doc's gram rows")
     } finally rmTree(work)
@@ -2843,8 +2867,8 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
     try {
       val trained = Staging.scoped(Clustering.trainedCentroids(emb, "vec_id", "embedding",
         k = 2, iters = 3))
-      Clustering.saveCentroids(trained, work)
-      val loaded = Clustering.loadCentroidMatrix(spark, work)
+      Clustering.saveCentroids(trained, s"$work/codebook")
+      val loaded = Clustering.loadCentroidMatrix(spark, s"$work/codebook")
       val direct = Staging.scoped(Clustering.trainCentroidMatrix(emb, "vec_id", "embedding",
         k = 2, iters = 3))
       // bit-exact round-trip (doubles through parquet are lossless)
@@ -2856,7 +2880,7 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       assert(a == b)
       // a non-contiguous codebook (partial copy) fails loudly
       spark.read.parquet(s"$work/codebook").filter(col("cell") === 2)
-        .write.mode("overwrite").parquet(s"$work/partial/codebook")
+        .write.mode("overwrite").parquet(s"$work/partial")
       val e = intercept[IllegalArgumentException] {
         Clustering.loadCentroidMatrix(spark, s"$work/partial")
       }
