@@ -106,7 +106,7 @@ object Catalog {
   )
 }
 
-/** Lazy table loader over a scale-factor directory of data files.
+/** The tables of a directory of data files, as DataFrames.
   *
   * Replaces the reference's backend connection (`src/htsql/core/connect.py`)
   * — instead of a DBAPI socket, tables are columnar scans that Catalyst
@@ -114,31 +114,35 @@ object Catalog {
   * directory of many files; `spark.read` parallelizes per file-split, so
   * nothing here assumes single-file inputs.
   *
-  * `format` = "parquet" (default) or "csv" — the csv path is the analogue
-  * of the reference's `tweak.filedb` addon (mount CSV files as a database,
-  * `src/htsql/tweak/filedb/`): header row + schema inference.
+  * `format` = "parquet" (default, `<dir>/<table>.parquet`), "csv"
+  * (`<table>.csv`, header row + schema inference) or "json" (`<table>.jsonl`,
+  * JSON lines) — the csv and json mounts are the analogue of the reference's
+  * `tweak.filedb` addon (`src/htsql/tweak/filedb/`).
+  *
+  * Resolution is introspect-once, as in the reference (which introspects
+  * its catalog at startup and caches it, `src/htsql/core/cache.py`): every
+  * `Tables` over one session shares that session's [[TableResolver]]. The
+  * resolver keeps each table's resolved relation — the DataFrame with its
+  * inferred schema, analysis and file index — and before each reuse stats
+  * the table path once: if the path's modification time or length moved,
+  * the table is resolved again. A `Tables` takes each table from the
+  * resolver at most once, so a query (one `Planner`, one `Tables`) stats
+  * each table it touches once and sees one state of it throughout.
+  *
+  * What moves the stamp: a Spark write to the table (overwrite or append
+  * changes the directory's entries) and an ETL commit (`graft.sources.Etl`
+  * renames the shadow directory into place). What does not, and is
+  * therefore not a supported layout under a `Tables` path: files rewritten
+  * in place, and tables written with `partitionBy` subdirectories, whose
+  * appends change only a subdirectory.
   */
 final class Tables(val spark: SparkSession, val dir: String,
     val format: String = "parquet") {
-  // Installs only the native functions the session lacks (none on a session
-  // built with GraftExtensions), so every query path that touches data has
-  // them in scope at the cost of one lookup per function.
-  graft.functions.VectorFunctions.ensureRegistered(spark)
-
+  private val resolver = TableResolver.of(spark)
   private val cache = scala.collection.mutable.HashMap.empty[String, DataFrame]
 
   def apply(name: String): DataFrame =
-    cache.getOrElseUpdate(name, format match {
-      case "csv" =>
-        spark.read.option("header", "true").option("inferSchema", "true")
-          .csv(s"$dir/$name.csv")
-      case "json" => // JSON-lines mounts (tweak.filedb analogue, like csv)
-        spark.read.json(s"$dir/$name.jsonl")
-      case _ =>
-        if (name == "events")
-          Tables.normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
-        else spark.read.parquet(s"$dir/$name.parquet")
-    })
+    cache.getOrElseUpdate(name, resolver.resolve(spark, dir, name, format))
 
   def region: DataFrame = apply("region")
   def nation: DataFrame = apply("nation")
@@ -155,6 +159,26 @@ final class Tables(val spark: SparkSession, val dir: String,
 object Tables {
   import org.apache.spark.sql.functions.{col, expr}
   import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+
+  /** The file or directory that holds table `name` in a `format` mount. */
+  private[model] def path(dir: String, name: String, format: String): String = format match {
+    case "csv" => s"$dir/$name.csv"
+    case "json" => s"$dir/$name.jsonl"
+    case _ => s"$dir/$name.parquet"
+  }
+
+  /** Resolve table `name`: infer its schema, list its files, analyze. */
+  private[model] def load(spark: SparkSession, dir: String, name: String,
+      format: String): DataFrame = {
+    val p = path(dir, name, format)
+    format match {
+      case "csv" => spark.read.option("header", "true").option("inferSchema", "true").csv(p)
+      case "json" => spark.read.json(p)
+      case _ =>
+        if (name == "events") normalizeEventTs(spark.read.parquet(p))
+        else spark.read.parquet(p)
+    }
+  }
 
   /** Normalize `events.ts` to session-zoned TimestampType whatever the
     * parquet encoding was. Fixture generators have shipped this column

@@ -795,6 +795,43 @@ class LangSpec extends AnyFunSuite {
     assert(got.length == 5 && got.forall(_.getLong(1) == 5L))
   }
 
+  test("a table overwritten out of band is resolved again by the next query") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_fresh").toString
+    try {
+      val local = Graft(spark, tmp)
+      t("region").write.parquet(s"$tmp/region.parquet")
+      assert(local.query("/region").columns.toSeq == Seq("r_regionkey", "r_name"))
+      assert(local.query("/region").count() == 5)
+      // same session, same path: new rows and a new column set
+      t("region").filter(col("r_regionkey") < 2)
+        .select(col("r_regionkey"), lower(col("r_name")).as("r_name"),
+          lit("rewritten").as("r_comment"))
+        .write.mode("overwrite").parquet(s"$tmp/region.parquet")
+      val after = local.query("/region.sort(r_regionkey)")
+      assert(after.columns.toSeq == Seq("r_regionkey", "r_name", "r_comment"))
+      assert(rows(after) == Seq(Seq(0L, "africa", "rewritten"), Seq(1L, "america", "rewritten")))
+    } finally graft.queries.SessionScratch.rmTree(tmp)
+  }
+
+  test("a table deleted after a query fails the next query like a missing one") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_gone").toString
+    try {
+      val local = Graft(spark, tmp)
+      t("region").write.parquet(s"$tmp/region.parquet")
+      assert(local.query("/region").count() == 5)
+      graft.queries.SessionScratch.rmTree(s"$tmp/region.parquet")
+      val gone = intercept[org.apache.spark.sql.AnalysisException](local.query("/region"))
+      // the error a never-resolved missing path raises
+      val missing = intercept[org.apache.spark.sql.AnalysisException](
+        spark.read.parquet(s"$tmp/region.parquet"))
+      assert(gone.getCondition == "PATH_NOT_FOUND", gone.getMessage)
+      assert(gone.getMessage == missing.getMessage)
+      // and once it is back, the query answers again
+      t("region").write.parquet(s"$tmp/region.parquet")
+      assert(local.query("/region").count() == 5)
+    } finally graft.queries.SessionScratch.rmTree(tmp)
+  }
+
   test("fork() usable in a selection item") {
     val got = g.query("/part{p_partkey, brand_avg := avg(fork(p_brand).p_retailprice)}.sort(p_partkey)")
     assert(got.count() == 200)

@@ -74,6 +74,76 @@ class PlanSpec extends AnyFunSuite with StagingScope {
       s"post-selection scan not pruned:\n$p")
   }
 
+  /** Spark jobs started on this thread while `body` runs. The listener bus
+    * delivers asynchronously, so a sentinel job run after `body` marks the
+    * end: once its start arrives, every earlier start has.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.planspec.phase"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty(tag)).orNull match {
+          case "body" => counted.incrementAndGet()
+          case "sentinel" => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      val out = body
+      sc.setLocalProperty(tag, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the sentinel job never reached the listener")
+      (out, counted.get)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a query over tables the session has resolved plans with zero Spark jobs") {
+    import graft.lang.{Parser, Planner}
+    val tmp = java.nio.file.Files.createTempDirectory("graft_plan_jobs").toString
+    try {
+      // one mount per format over the same two tables; a csv or json table
+      // is one file, as the mounts expect
+      def single(n: String, fmt: String, ext: String)(write: String => Unit): Unit = {
+        write(s"$tmp/$fmt/${n}_dir")
+        val part = new java.io.File(s"$tmp/$fmt/${n}_dir").listFiles()
+          .find(_.getName.endsWith(s".$fmt")).get
+        java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$tmp/$fmt/$n.$ext"))
+      }
+      Seq("region", "nation").foreach { n =>
+        val df = spark.read.parquet(s"$dir/$n.parquet").coalesce(1)
+        df.write.parquet(s"$tmp/parquet/$n.parquet")
+        single(n, "csv", "csv")(df.write.option("header", "true").csv)
+        single(n, "json", "jsonl")(df.write.json)
+      }
+      val expected = spark.read.parquet(s"$dir/nation.parquet")
+        .filter("n_regionkey > 3").collect().map(_.getAs[String]("n_name")).toSet
+      for (fmt <- Seq("parquet", "csv", "json")) {
+        def plan(text: String): DataFrame =
+          new Planner(spark, s"$tmp/$fmt", graft.model.Catalog.default, fmt)
+            .planQuery(Parser.parse(text))
+        val (_, first) = jobsDuring(plan("/region{r_name, count(nation)}"))
+        assert(first > 0, s"$fmt: resolving a new mount started no job, so none is counted")
+        val (again, jobs) = jobsDuring(plan("/nation?n_regionkey>3{n_name, region.r_name}"))
+        assert(jobs == 0, s"$fmt: planning over resolved tables started $jobs Spark jobs")
+        // the reused scan still takes the new query's literal as a pushed filter
+        val p = again.queryExecution.executedPlan.toString
+        assert(p.linesIterator.exists(l => l.contains("PushedFilters") &&
+          l.contains("GreaterThan(n_regionkey,3)")), s"$fmt: sieve not pushed:\n$p")
+        assert(again.collect().map(_.getString(0)).toSet == expected, fmt)
+      }
+    } finally rmTree(tmp)
+  }
+
   test("minhash candidate generation shuffles ids only, never shingles") {
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$dir/documents.parquet")

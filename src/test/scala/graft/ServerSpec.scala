@@ -153,6 +153,11 @@ class ServerSpec extends AnyFunSuite {
       .write.parquet(s"$work/region.parquet")
     val srv = new GraftServer(Graft(spark, work)).start()
     try {
+      // a GET first, so the session has resolved the table before the POST
+      // commits: the GET after it must not be served the pre-state
+      val before = getOn(srv, "/region%7Br_regionkey,r_comment%7D/:csv")
+      assert(before.statusCode() == 200)
+      assert(before.body().linesIterator.toSeq.count(_.endsWith(",orig")) == 5, before.body())
       val cmd = "/do(" +
         "insert(region := {r_regionkey := 100, r_name := 'POSTED', r_comment := 'new'})," +
         "update(region?r_regionkey=0 := {r_comment := 'patched'})," +
