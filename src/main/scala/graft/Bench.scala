@@ -27,7 +27,7 @@ object Bench {
     * aggregate makes each value load-bearing while collecting only one
     * row to the driver. bit_xor (not sum) so ANSI overflow can't throw.
     */
-  private def force(df: DataFrame): Unit = {
+  private[graft] def force(df: DataFrame): Unit = {
     val hashed = df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("h"))
     hashed.agg(bit_xor(col("h")).as("x")).collect()
     ()

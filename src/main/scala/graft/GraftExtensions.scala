@@ -22,9 +22,11 @@ import graft.functions._
   * `spark.sql.extensions=graft.GraftExtensions`.
   *
   * The functions themselves live in ONE table, [[GraftExtensions.functions]],
-  * with two installers: this extension injects every entry when a session
-  * is built, and `VectorFunctions.ensureRegistered` adds only the entries a
-  * session built without the extension lacks — it never replaces one.
+  * with one installer: this extension injects every entry when a session
+  * is built. Every session the engine uses is built with it
+  * (`SparkEntry.session`, the benchmark's own builder), and the children
+  * of such a session (`newSession()`, a streaming query's clone) inherit
+  * its functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

@@ -25,7 +25,10 @@ import java.nio.charset.StandardCharsets.UTF_8
   * this single-process server (the same bounded collect the embedded API
   * uses); full-result exports stay distributed via writeJson/writeCsv.
   * The handler runs on a small thread pool — Spark job scheduling inside
-  * one session is already concurrent-safe.
+  * one session is already concurrent-safe. A POST runs one ETL
+  * transaction; of concurrent POSTs each either lands (200) or, when
+  * another commit holds the lease or committed under it, gets a 409 —
+  * never a 200 whose write is lost.
   */
 /** @param host bind address — LOOPBACK by default: the server has no
   *   authentication, so network exposure must be an explicit opt-in

@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions.{call_function, lit}
   *
   * Same wiring as [[VectorFunctions]]: `bloom_agg` and
   * `bloom_might_contain` are rows of [[graft.GraftExtensions.functions]],
-  * installed by the extension or `VectorFunctions.ensureRegistered`, and
-  * reached through `call_function`. Values must arrive as 64-bit hashes
+  * installed by the extension, and reached through `call_function`. Values must arrive as 64-bit hashes
   * (`xxhash64(...)`) — the aggregate and the probe both operate on
   * LongType, exactly like the optimizer's own `InjectRuntimeFilter` usage.
   */

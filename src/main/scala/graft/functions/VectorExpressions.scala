@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -119,27 +119,12 @@ case class CosineSim(left: Expression, right: Expression)
   *
   * Spark 4 keeps Expression→Column plumbing private, so the public route
   * is function-registry registration + `call_function`. The functions are
-  * the rows of [[graft.GraftExtensions.functions]]: a session built with
-  * `GraftExtensions` (every `SparkEntry.session`) has them all, and
-  * `ensureRegistered` installs the same rows into any other session.
+  * the rows of [[graft.GraftExtensions.functions]], which a session built
+  * with `GraftExtensions` (every `SparkEntry.session`) has.
   */
 object VectorFunctions {
 
-  /** Registers the table's entries the session lacks and leaves every
-    * existing one alone — so an injected function is never replaced, and
-    * the per-request call from `graft.model.Tables` costs one lookup per
-    * entry. The registry's own lock makes check-and-register atomic for
-    * concurrent callers on one session. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.synchronized {
-      graft.GraftExtensions.functions.foreach { case (id, info, builder) =>
-        if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-      }
-    }
-  }
-
-  /** Requires `ensureRegistered` (or GraftExtensions) on the session. */
+  /** Requires a session built with `GraftExtensions`. */
   def vector_dot(a: Column, b: Column): Column = call_function("vector_dot", a, b)
   def cosine_sim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
   def simhash64(hashes: Column): Column = call_function("simhash64", hashes)

@@ -55,18 +55,8 @@ private[model] final class TableResolver private () {
 private[model] object TableResolver {
   private val bySession = new java.util.WeakHashMap[SparkSession, TableResolver]()
 
-  /** The session's resolver, made on first use. Making it installs the
-    * engine's native functions the session lacks (none on a session built
-    * with `GraftExtensions`), so every query path that touches data has
-    * them in scope.
-    */
+  /** The session's resolver, made on first use. */
   def of(spark: SparkSession): TableResolver = bySession.synchronized {
-    var r = bySession.get(spark)
-    if (r == null) {
-      graft.functions.VectorFunctions.ensureRegistered(spark)
-      r = new TableResolver
-      bySession.put(spark, r)
-    }
-    r
+    bySession.computeIfAbsent(spark, _ => new TableResolver)
   }
 }

@@ -48,7 +48,6 @@ object Clustering {
       k: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     val spark = emb.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val v = emb.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("vec"))
     // bounded driver fetch: exactly k centroid rows (the deterministic
@@ -96,7 +95,6 @@ object Clustering {
   def assignments(emb: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]]): DataFrame = {
     require(centroids.nonEmpty, "assignments needs at least one centroid")
-    graft.functions.VectorFunctions.ensureRegistered(emb.sparkSession)
     emb.select(col(idCol).as("id"),
       element_at(Similarity.topCellsCol(centroids, r = 1)(
         col(vecCol).cast("array<double>")), 1).as("cell"))
@@ -137,7 +135,6 @@ object Clustering {
       k: Int, iters: Int): Array[Array[Double]] = {
     require(k >= 1, s"k must be positive, got $k")
     require(iters >= 0, s"iters must be non-negative, got $iters")
-    graft.functions.VectorFunctions.ensureRegistered(emb.sparkSession)
     Similarity.trainCentroids(stagedVectors(emb, idCol, vecCol), k, iters)
   }
 
@@ -242,7 +239,6 @@ object Clustering {
     require(k >= 1, s"k must be positive, got $k")
     require(iters >= 1, s"iters must be positive, got $iters")
     val spark = emb.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val c = stagedVectors(emb, idCol, vecCol)
     val seeds = Similarity.trainCentroids(c, k, iters = 0)
     val trained = Similarity.trainCentroids(c, k, iters, seeds = seeds)

@@ -121,7 +121,6 @@ object Decontaminate {
     */
   def benchmarkShingleBloomFrame(benchmark: DataFrame, benchTextCol: String,
       n: Int = 3, fpp: Double = 1e-4): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(benchmark.sparkSession)
     val benchSh = benchmark
       .select(Dedup.tokens(col(benchTextCol)).as("toks"))
       .stagePersist()
@@ -150,7 +149,6 @@ object Decontaminate {
     */
   def flagContaminatedBloom(docs: DataFrame, idCol: String, textCol: String,
       bloomBytes: Array[Byte], n: Int = 3, minOverlap: Int = 2): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(docs.sparkSession)
     require(bloomBytes.length <= (64 << 20),
       s"${bloomBytes.length}-byte Bloom filter is too large for the " +
         "expression-tree lit() path — use flagContaminatedBloomFrame " +
@@ -168,7 +166,6 @@ object Decontaminate {
     */
   def flagContaminatedBloomFrame(docs: DataFrame, idCol: String, textCol: String,
       bloomFrame: DataFrame, n: Int = 3, minOverlap: Int = 2): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(docs.sparkSession)
     flagWithProbe(docs, idCol, textCol, n, minOverlap, bloomFrame.scalar())
   }
 

@@ -190,7 +190,6 @@ object Dedup {
     // native codegen'd SimHash64 kernel (graft.functions.SimHash64) —
     // bit-identical to simhashFoldSql but one tight pass instead of 64
     // interpreted lambda iterations per token
-    graft.functions.VectorFunctions.ensureRegistered(docs.sparkSession)
     Staging.widen(docs)
       .select(col(idCol).as("id"),
         graft.functions.VectorFunctions.simhash64(

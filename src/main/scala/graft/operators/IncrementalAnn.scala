@@ -45,8 +45,6 @@ object IncrementalAnn {
       seed: Long = 42L, targetBucket: Int = 128,
       maxEscalations: Int = 6): Unit =
       IndexMaintenance.withWriterLease(emb.sparkSession, path) { tx =>
-    val spark = emb.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     // rebuild = new id space; stale tombstones must not filter it
     tx.drop(IndexMaintenance.TombstoneStore)
     val c = staged(emb, idCol, vecCol)
@@ -196,7 +194,6 @@ object IncrementalAnn {
     require(k >= 1, s"k must be positive, got $k")
     require(probeBits >= 0 && probeBits <= 1, s"probeBits ∈ {0, 1}, got $probeBits")
     val spark = queries.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     val snap = IndexMaintenance.snapshot(spark, path)
     val p = paramsOf(snap)
     val q = staged(queries, idCol, vecCol)
@@ -251,7 +248,6 @@ object IncrementalAnn {
   def newBatchPairs(newEmb: DataFrame, idCol: String, vecCol: String,
       path: String, threshold: Double): DataFrame = {
     val spark = newEmb.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     val snap = IndexMaintenance.snapshot(spark, path)
     val p = paramsOf(snap)
     val (d, sigsFull) = stagedSigs(newEmb, idCol, vecCol, p)

@@ -67,21 +67,23 @@ object IndexMaintenance {
 
   // ---- concurrent-writer lease -----------------------------------------
   //
-  // The ETL `_txn_lock` protocol (graft.sources.Etl) applied to the
-  // persisted-index family: every mutation — append, build, compaction,
-  // retract — runs under a fail-loud lease at the index root, so a
-  // continuous ingest racing a maintenance compaction ABORTS LOUDLY
-  // instead of losing an append (the compactor's manifest would not name
-  // it). Isolation, not interleaving: the whole read-fold-commit of a
-  // compaction sits inside one lease.
+  // The engine's one writer lease: a fail-loud lock file at the root of
+  // what it protects. Every index mutation — append, build, compaction,
+  // retract — runs under it at the index root, so a continuous ingest
+  // racing a maintenance compaction ABORTS LOUDLY instead of losing an
+  // append (the compactor's manifest would not name it). Isolation, not
+  // interleaving: the whole read-fold-commit of a compaction sits inside
+  // one lease. An ETL commit (graft.sources.Etl) takes the same lease on
+  // its working directory, and heals a crashed commit only while holding
+  // it. No other module creates a lock (an IndexLeaseSpec lint).
   //
   // A lease older than `leaseMs` belongs to a crashed writer and is
   // reclaimed: the stale lock is RENAMED aside (atomic — exactly one
   // reclaimer wins a given lock-file instance), the reclaimer re-creates
   // the lock, and a read-back verifies ownership before proceeding —
-  // losers abort loudly. Like the ETL lease, a mutation that legitimately
-  // outlives `leaseMs` is exposed to a takeover; size `leaseMs` to the
-  // slowest expected compaction.
+  // losers abort loudly. A mutation that legitimately outlives `leaseMs`
+  // is exposed to a takeover; size `leaseMs` to the slowest expected
+  // compaction or commit.
 
   val LockFile = "_index_lock"
 
@@ -101,7 +103,7 @@ object IndexMaintenance {
     val f = fsOf(spark, root)
     def tryCreate(): Boolean = {
       val created =
-        try Some(f.create(lockPath(root), false))
+        try Some(createExclusive(f, lockPath(root)))
         catch { case _: java.io.IOException => None }
       created match {
         case None => false
@@ -156,7 +158,11 @@ object IndexMaintenance {
           s"concurrent index writer raced the stale-lease takeover on $root"))
       beforeReclaim()
       val aside = new Path(lockPath(root).toString + s".reclaim_$writerId")
-      if (!f.rename(lockPath(root), aside))
+      // (the local filesystem throws, rather than returning false, when
+      // the lock is already gone)
+      val renamed =
+        try f.rename(lockPath(root), aside) catch { case _: FileNotFoundException => false }
+      if (!renamed)
         throw new IllegalStateException(
           s"concurrent index writer raced the stale-lease takeover on $root")
       val asideHolder =
@@ -180,6 +186,19 @@ object IndexMaintenance {
           s"concurrent index writer raced the stale-lease takeover on $root")
     }
   }
+
+  /** Create `p` only if nothing is there, atomically. Hadoop's local
+    * filesystem checks for the file and then opens it, so two writers can
+    * both create one lock; on `file:` the create is an exclusive open.
+    */
+  private def createExclusive(f: FileSystem, p: Path): java.io.OutputStream =
+    if (f.getScheme != "file") f.create(p, false)
+    else {
+      val q = f.makeQualified(p)
+      f.mkdirs(q.getParent)
+      java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(q.toUri),
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+    }
 
   /** Release the lease (delete the lock file). */
   def releaseLease(spark: SparkSession, root: String): Unit =

@@ -82,7 +82,6 @@ object IvfIndex {
     require(nlist >= 1 && iters >= 0 && assignReplicas >= 1,
       s"bad IVF params: nlist=$nlist iters=$iters replicas=$assignReplicas")
     val spark = emb.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     IndexMaintenance.withWriterLease(spark, path) { tx =>
       tx.drop(IndexMaintenance.TombstoneStore)
       val c = staged(emb, idCol, vecCol)
@@ -127,7 +126,6 @@ object IvfIndex {
   def appendBatch(emb: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
     val spark = emb.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     IndexMaintenance.withWriterLease(spark, path) { tx =>
       val p = paramsOf(tx.snapshot)
       tx.append("cells", assignments(staged(emb, idCol, vecCol),
@@ -171,7 +169,6 @@ object IvfIndex {
     require(k >= 1, s"k must be positive, got $k")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
     val spark = queries.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     val snap = IndexMaintenance.snapshot(spark, path)
     paramsOf(snap) // fails loudly before any build committed
     val centroids = centroidsOf(snap)

@@ -94,9 +94,8 @@ object Similarity {
     * drops the whole stage to interpreted execution (found at the sf1
     * bench); the kernel ships the plane matrix as a codegen reference
     * object instead, so the generated code is three small loops at any
-    * width. The kernel is a row of `GraftExtensions.functions`: sessions
-    * built with the extension have it, and every public entry point here
-    * calls `VectorFunctions.ensureRegistered` for sessions built without.
+    * width. The kernel is a row of `GraftExtensions.functions`, which
+    * every session built with the extension has.
     */
   def bucketTables(vec: Column, dim: Int, numPlanes: Int, numTables: Int,
       seed: Long): Column =
@@ -117,7 +116,6 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     // persist the cast frames and precompute norms once per vector —
     // otherwise the float→double cast and the norm fold re-run per PAIR
     val c = Staging.widen(corpus)
@@ -159,7 +157,6 @@ object Similarity {
       numTables: Int = 16, seed: Long = 42L, targetBucket: Int = 128,
       corpusSize: Long = -1L, probeBits: Int = 1): DataFrame = {
     require(probeBits >= 0 && probeBits <= 1, s"probeBits ∈ {0, 1}, got $probeBits")
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     // persist the cast frame first: the bucket bits run numPlanes dot
     // products over the vector, which must be an attribute, not a re-cast
     val c = Staging.widen(corpus)
@@ -302,7 +299,6 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
       iters: Int = 2, assignReplicas: Int = 3): DataFrame = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     val c = Staging.widen(corpus)
       .select(col(idCol).as("n_id"), col(vecCol).cast("array<double>").as("n_vec"))
       .stagePersist()
@@ -365,7 +361,6 @@ object Similarity {
       dim: Int, threshold: Double, numPlanes: Int = 0, numTables: Int = 16,
       seed: Long = 42L, targetBucket: Int = 128, corpusSize: Long = -1L,
       maxEscalations: Int = 3): (DataFrame, Int) = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     val c = Staging.widen(corpus)
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
       .stagePersist()
@@ -763,7 +758,6 @@ object Similarity {
       threshold: Double, nlist: Int = 0, iters: Int = 2,
       assignReplicas: Int = 2, targetCell: Int = 256, corpusSize: Long = -1L,
       maxEscalations: Int = 3, candidateBudget: Double = 0): (DataFrame, Int) = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     val c = Staging.widen(corpus)
       .select(col(idCol).as("n_id"), col(vecCol).cast("array<double>").as("n_vec"))
       .stagePersist()

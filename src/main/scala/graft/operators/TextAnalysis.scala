@@ -215,9 +215,8 @@ object TextAnalysis {
     * [[graft.functions.Fingerprint64]] (one loop over UTF8String bytes) —
     * bit-identical to the former `split(text,"")` + `aggregate` fold, minus
     * the per-character array explosion and interpreted lambda. The kernel
-    * is a row of `GraftExtensions.functions`: a session needs the
-    * extension or `VectorFunctions.ensureRegistered` (done by
-    * `graft.model.Tables`), which installs only the rows it lacks.
+    * is a row of `GraftExtensions.functions`, which every session built
+    * with the extension has.
     */
   def fingerprint(text: Column): Column =
     graft.functions.VectorFunctions.fingerprint64(text)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.IndexMaintenance
 
 /** ETL write commands over a directory of parquet tables — the analogue of
   * the reference's `tweak.etl` addon (`src/htsql/tweak/etl/cmd/insert.py`
@@ -15,38 +16,51 @@ import org.apache.spark.sql.functions._
   * directories. The swap is driver-side metadata work, O(1) regardless of
   * table size.
   *
-  * CRASH ATOMICITY is a write-ahead commit-marker protocol — a directory
-  * is self-healing at every step:
+  * CRASH ATOMICITY is a write-ahead commit-marker protocol:
   *
-  *   1. STAGE    every post-state writes to `<name>.parquet.swap`;
-  *               the live directories are never touched.
+  *   1. STAGE    every post-state writes to `<name>.parquet.stage`,
+  *               private to this commit; then recovery runs (below) and
+  *               each `.stage` is renamed to `<name>.parquet.swap`. The
+  *               live directories are never touched.
   *   2. COMMIT   a `_txn_commit` marker naming the staged tables is
   *               published with a create-then-rename (atomic on
   *               POSIX/HDFS). This is the commit point.
   *   3. SWAP     per table: rename live → `.bak`, rename `.swap` → live,
   *               then drop the `.bak`s and the marker.
   *
-  * Recovery (run before every commit and by any read that finds a marker
-  * or a missing live dir): if the marker exists, every shadow it names was
-  * fully written, so the transaction ROLLS FORWARD — each listed swap is
-  * completed idempotently. Without a marker the commit point was never
-  * reached, so stray `.swap` dirs are uncommitted debris (deleted) and a
-  * `.bak` without its live dir restores. At no step can a crash lose the
-  * pre-state AND the post-state.
+  * READS NEVER WRITE. [[read]] resolves the committed state of a table from
+  * whatever an interrupted commit left: the `.swap` a marker names (the
+  * commit point was reached), else the live directory, else a `.bak` (the
+  * live directory renamed away). So every crash state reads as exactly the
+  * old or the new generation.
+  *
+  * ONE WRITER: a commit holds the working directory's writer lease — the
+  * lease of an index root, `IndexMaintenance.acquireLease` — from before
+  * its staging to after its swap, so no two commits interleave, and a
+  * second writer inside the lease window aborts loudly. Recovery (heal)
+  * runs only there: if a marker exists, every shadow it names was fully
+  * written, so the crashed transaction ROLLS FORWARD — each listed swap is
+  * completed idempotently and its generation published. Without a marker
+  * the commit point was never reached, so stray `.swap` and `.stage` dirs
+  * are uncommitted debris (deleted) and a `.bak` without its live dir
+  * restores. At no step can a crash lose the pre-state AND the post-state.
+  * Recovery follows the commit's staging because the post-states read
+  * what [[read]] resolved — possibly a crashed commit's `.swap` or `.bak`,
+  * which recovery moves.
+  * A lease older than `leaseMs` belongs to a crashed writer and is
+  * reclaimed; the reclaimer's recovery heals what it left.
+  *
+  * LOST UPDATES are DETECTED, not isolated: a transaction snapshots the
+  * committed generation (`_txn_gen`, bumped by every commit; the
+  * generation in a marker's header when a marker exists) before it reads
+  * anything, and its commit, under the lease, aborts loudly if the
+  * committed state moved since — a writer that committed in between fails
+  * the other transaction instead of letting it overwrite state it never
+  * saw.
   *
   * A production deployment would layer a transactional table format's
   * commit log over the same shape; the sandbox has no such dependency, so
-  * this is the minimal honest equivalent. CONCURRENT WRITERS are DETECTED,
-  * not isolated: a commit (a) takes a fail-loud lease (`_txn_lock`,
-  * atomic create — a second writer inside the lease window aborts loudly
-  * instead of silently interleaving swaps), and (b) verifies the
-  * directory GENERATION (`_txn_gen`, bumped by every commit and stamped
-  * with the committing writer's id in the `_txn_commit` header) still
-  * matches the snapshot its transaction read — a writer that committed in
-  * between fails the other transaction loudly (lost-update detection)
-  * rather than letting it overwrite state it never saw. A lease older
-  * than `leaseMs` is a crashed writer: recovery heals the directory and
-  * the lease is reclaimed.
+  * this is the minimal honest equivalent.
   *
   * Tables live at `<workDir>/<name>.parquet` — the same layout
   * `graft.model.Tables` reads, so an Etl working directory IS a queryable
@@ -62,24 +76,27 @@ final class Etl(val spark: SparkSession, val workDir: String,
 
   private def tablePath(name: String): String = s"$workDir/$name.parquet"
   private def livePath(name: String) = new Path(tablePath(name))
+  private def stagePath(name: String) = new Path(tablePath(name) + ".stage")
   private def swapPath(name: String) = new Path(tablePath(name) + ".swap")
   private def bakPath(name: String) = new Path(tablePath(name) + ".bak")
   private val markerPath = new Path(s"$workDir/_txn_commit")
   private val markerTmpPath = new Path(s"$workDir/_txn_commit.tmp")
-  private val lockPath = new Path(s"$workDir/_txn_lock")
   private val genPath = new Path(s"$workDir/_txn_gen")
   private val genTmpPath = new Path(s"$workDir/_txn_gen.tmp")
 
   private def fs: FileSystem =
     new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Read table `name`, healing any interrupted commit first. The fast
-    * path (live dir present, no marker) costs two existence checks.
+  /** Read the committed state of table `name`; writes nothing. The common
+    * case (no marker, live dir present) costs two filesystem calls.
     */
   def read(name: String): DataFrame = {
     val f = fs
-    if (f.exists(markerPath) || !f.exists(livePath(name))) recover(f)
-    spark.read.parquet(tablePath(name))
+    val path =
+      if (readMarker(f).exists(_._2.contains(name)) && f.exists(swapPath(name))) swapPath(name)
+      else if (!f.exists(livePath(name)) && f.exists(bakPath(name))) bakPath(name)
+      else livePath(name)
+    spark.read.parquet(path.toString)
   }
 
   /** `copy.py`: materialize `df` as table `name` (replacing any previous
@@ -115,29 +132,27 @@ final class Etl(val spark: SparkSession, val workDir: String,
     * shadow write, a crash — leaves every live table in its pre-`f` state.
     */
   def transact(f: EtlTx => Unit): Unit = {
-    val fsys = fs
-    recover(fsys)
-    // snapshot the generation BEFORE the transaction reads anything: the
-    // commit verifies it under the lease, so a writer that commits while
-    // this transaction is running fails THIS commit loudly (lost update)
-    // instead of letting it clobber state it never observed
-    val genAtStart = readGen(fsys)
+    // snapshot the committed state BEFORE the transaction reads anything:
+    // the commit verifies it under the lease, so a writer that commits
+    // while this transaction runs fails THIS commit loudly (lost update)
+    val snapshot = committedState(fs)
     val tx = new EtlTx(this)
     f(tx)
     val staged = tx.staged
-    if (staged.nonEmpty) commit(staged, genAtStart)
+    if (staged.nonEmpty) commit(staged, snapshot)
   }
 
   // ---- commit protocol --------------------------------------------------
 
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  /** The published generation; 0 before the first commit. */
   private def readGen(f: FileSystem): Long =
-    if (!f.exists(genPath)) 0L
-    else {
-      val in = f.open(genPath)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.trim.split("\\s+").head.toLong
-    }
+    try readText(f, genPath).trim.split("\\s+").head.toLong
+    catch { case _: java.io.FileNotFoundException => 0L }
 
   private def writeGen(f: FileSystem, gen: Long): Unit = {
     val out = f.create(genTmpPath, true)
@@ -147,72 +162,62 @@ final class Etl(val spark: SparkSession, val workDir: String,
       throw new IllegalStateException(s"generation publish failed in $workDir")
   }
 
-  /** Fail-loud lease: atomic create wins or throws. A lease older than
-    * `leaseMs` belongs to a crashed writer — heal the directory and
-    * reclaim it; a FRESH foreign lease means a live concurrent writer,
-    * which this protocol rejects by design (single-writer, detected).
+  /** The marker a commit past its commit point left (in flight, or
+    * crashed): the generation it commits and the tables it names.
     */
-  private def acquireLock(f: FileSystem): Unit = {
-    def tryCreate(): Boolean =
-      try {
-        val out = f.create(lockPath, false)
-        try out.write(writerId.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    if (!tryCreate()) {
-      val age = try System.currentTimeMillis() - f.getFileStatus(lockPath).getModificationTime
-        catch { case _: java.io.FileNotFoundException => Long.MaxValue }
-      if (age < leaseMs)
-        throw new IllegalStateException(
-          s"concurrent ETL writer holds the lease on $workDir " +
-            s"(lock age ${age}ms < lease ${leaseMs}ms) — refusing to interleave commits")
-      // stale lease: the holder crashed; heal whatever it left behind,
-      // reclaim, and retry the atomic create once
-      recover(f)
-      f.delete(lockPath, false)
-      if (!tryCreate())
-        throw new IllegalStateException(
-          s"concurrent ETL writer raced the stale-lease takeover on $workDir")
-    }
-  }
+  private def readMarker(f: FileSystem): Option[(Long, Seq[String])] =
+    try {
+      // header "<writerId> <generation>", then one staged name per line
+      val lines = readText(f, markerPath).split("\n").filter(_.nonEmpty).toSeq
+      Some((lines.head.split("\\s+")(1).toLong, lines.tail))
+    } catch { case _: java.io.FileNotFoundException => None }
 
-  private def commit(staged: Seq[(String, DataFrame)], expectedGen: Long): Unit = {
+  /** What a transaction snapshots: the committed generation, and whether
+    * a marker (a commit in flight, or one a crash left) carries it.
+    */
+  private def committedState(f: FileSystem): (Long, Boolean) =
+    readMarker(f).fold((readGen(f), false))(m => (m._1, true))
+
+  private def commit(staged: Seq[(String, DataFrame)], snapshot: (Long, Boolean)): Unit = {
     val f = fs
-    acquireLock(f)
+    IndexMaintenance.acquireLease(spark, workDir, writerId, leaseMs)
     var committed = false
     try {
-      recover(f)
-      val gen = readGen(f)
-      if (gen != expectedGen)
+      val now = committedState(f)
+      if (now != snapshot) {
+        val unfinished = if (snapshot._2) " from an unfinished commit" else ""
         throw new IllegalStateException(
-          s"concurrent ETL writer committed generation $gen under this " +
-            s"transaction (writer $writerId read generation $expectedGen) — " +
+          s"concurrent ETL writer committed generation ${now._1} under this " +
+            s"transaction (writer $writerId read generation ${snapshot._1}$unfinished) — " +
             "aborting instead of overwriting state this transaction never saw")
-      // 1. STAGE: distributed writes to the shadow dirs; live dirs
-      //    untouched. A failure here leaves only debris recover() deletes.
-      staged.foreach { case (n, df) =>
-        df.write.mode("overwrite").parquet(swapPath(n).toString)
       }
-      // 2. COMMIT POINT: publish the marker (create tmp + atomic rename);
-      //    header = "<writerId> <generation>", then one staged name per line
+      // 1. STAGE: distributed writes to this commit's own shadow dirs, then
+      //    heal, then move them into the `.swap` slots recovery has freed
+      staged.foreach { case (n, df) =>
+        df.write.mode("overwrite").parquet(stagePath(n).toString)
+      }
+      recover(f, keep = staged.map(_._1).toSet)
+      staged.foreach { case (n, _) =>
+        if (!f.rename(stagePath(n), swapPath(n)))
+          throw new IllegalStateException(s"shadow rename failed for $n")
+      }
+      // 2. COMMIT POINT: publish the marker (create tmp + atomic rename)
+      val gen = now._1 + 1
       val out = f.create(markerTmpPath, true)
-      try out.write((s"$writerId ${gen + 1}" +: staged.map(_._1)).mkString("\n")
-        .getBytes("UTF-8"))
+      try out.write((s"$writerId $gen" +: staged.map(_._1)).mkString("\n").getBytes("UTF-8"))
       finally out.close()
       if (!f.rename(markerTmpPath, markerPath))
         throw new IllegalStateException(s"commit-marker publish failed in $workDir")
       committed = true
       // 3. SWAP each table; every step is idempotently re-runnable
       staged.foreach { case (n, _) => rollForward(f, n) }
-      writeGen(f, gen + 1)
+      writeGen(f, gen)
       f.delete(markerPath, false)
     } finally {
-      // pre-commit-point failures leave only debris; the marker (if
-      // published) survives the lock release so recovery rolls forward
-      if (!committed) staged.foreach { case (n, _) =>
-        if (!f.exists(markerPath)) f.delete(swapPath(n), true)
-      }
-      f.delete(lockPath, false)
+      // a failure before the commit point drops this commit's staged dirs;
+      // any `.swap` it renamed is debris the next writer's recovery deletes
+      if (!committed) staged.foreach { case (n, _) => f.delete(stagePath(n), true) }
+      IndexMaintenance.releaseLease(spark, workDir)
     }
   }
 
@@ -236,32 +241,28 @@ final class Etl(val spark: SparkSession, val workDir: String,
     if (f.exists(live) && f.exists(bak)) f.delete(bak, true)
   }
 
-  /** Heal the directory after any interruption (see class doc). */
-  private def recover(f: FileSystem): Unit = {
-    val base = new Path(workDir)
-    if (!f.exists(base)) return
-    if (f.exists(markerPath)) {
-      // commit point was reached → every named shadow is complete: roll
-      // FORWARD. Line 1 is the "<writerId> <generation>" header — finish
-      // the generation bump too, so a crash between swap and gen-publish
-      // still advances the generation other writers validate against.
-      val in = f.open(markerPath)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = text.split("\n").iterator.filter(_.nonEmpty).toSeq
-      val header = lines.head.split("\\s+")
-      lines.tail.foreach(rollForward(f, _))
-      if (header.length >= 2 && readGen(f) < header(1).toLong)
-        writeGen(f, header(1).toLong)
+  /** Heal the directory after an interrupted commit (see class doc),
+    * keeping the `.stage` dirs of this commit's tables. Runs only under the
+    * lease: it deletes shadows, which would destroy a live writer's staged
+    * post-state.
+    */
+  private def recover(f: FileSystem, keep: Set[String]): Unit = {
+    // commit point reached → every named shadow is complete: roll FORWARD,
+    // and finish the generation bump the crash may have missed
+    readMarker(f).foreach { case (gen, names) =>
+      names.foreach(rollForward(f, _))
+      if (readGen(f) < gen) writeGen(f, gen)
       f.delete(markerPath, false)
     }
     // no marker → commit point never reached: live dirs are pristine,
     // leftover shadows are uncommitted debris, a live-less .bak restores
+    val base = new Path(workDir)
     f.listStatus(base).foreach { st =>
       val p = st.getPath
       if (p.getName == markerTmpPath.getName) f.delete(p, false)
       else if (p.getName.endsWith(".parquet.swap")) f.delete(p, true)
+      else if (p.getName.endsWith(".parquet.stage") &&
+        !keep.contains(p.getName.stripSuffix(".parquet.stage"))) f.delete(p, true)
       else if (p.getName.endsWith(".parquet.bak")) {
         val live = new Path(base, p.getName.stripSuffix(".bak"))
         if (f.exists(live)) f.delete(p, true)

@@ -128,7 +128,6 @@ object CorpusIngest {
     */
   def banContent(spark: SparkSession, indexPath: String, docs: DataFrame,
       textCol: String): Unit = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     IndexMaintenance.withWriterLease(spark, indexPath)(
       _.append(BannedStore, docs.select(graft.operators.TextAnalysis
           .canonicalFingerprint(col(textCol)).as("fp"))
@@ -161,7 +160,6 @@ object CorpusIngest {
   private def filterBanned(docs: DataFrame, textCol: String,
       snap: IndexMaintenance.Snapshot): DataFrame =
     snap.readOpt(BannedStore).fold(docs) { banned =>
-      graft.functions.VectorFunctions.ensureRegistered(docs.sparkSession)
       docs.join(broadcast(banned),
         graft.operators.TextAnalysis.canonicalFingerprint(docs(textCol))
           === banned("fp"),
@@ -232,11 +230,9 @@ object CorpusIngest {
       .option("pathGlobFilter", "*.parquet")
       .parquet(srcDir)
     val src =
-      if (canonicalize) {
-        graft.functions.VectorFunctions.ensureRegistered(spark)
-        src0.withColumn(textCol,
-          graft.operators.TextAnalysis.normalizeText(col(textCol)))
-      } else src0
+      if (canonicalize)
+        src0.withColumn(textCol, graft.operators.TextAnalysis.normalizeText(col(textCol)))
+      else src0
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // staging frames (shingles, signatures, candidates) die with the

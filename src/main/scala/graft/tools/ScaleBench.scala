@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+import org.apache.spark.sql.functions.col
 import scala.util.control.NonFatal
 import graft.queries.SessionScratch.rmTree
 
@@ -27,12 +27,6 @@ object ScaleBench {
       if (ds.isEmpty) (0, 0.0)
       else (ds.length, ds.last.toDouble / math.max(ds(ds.length / 2), 1L))
     }
-  }
-
-  private def force(df: DataFrame): Unit = {
-    val hashed = df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("h"))
-    hashed.agg(bit_xor(col("h")).as("x")).collect()
-    ()
   }
 
   val defaultKeys: Seq[String] = Seq(
@@ -849,15 +843,15 @@ object ScaleBench {
       val fn = extraKeys.getOrElse(name, graft.SparkEntry.queries(name))
       System.err.println(s"[scale] running $name")
       try graft.operators.Staging.scoped {
-        force(fn(spark, dir)) // warm: plan + staging caches
+        graft.Bench.force(fn(spark, dir)) // warm: plan + staging caches
         val times = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
-          force(fn(spark, dir))
+          graft.Bench.force(fn(spark, dir))
           (System.nanoTime() - t0) / 1e9
         }
         stats.reset()
         val t0 = System.nanoTime()
-        force(fn(spark, dir))
+        graft.Bench.force(fn(spark, dir))
         val cold = (System.nanoTime() - t0) / 1e9
         val (nTasks, skew) = stats.skew()
         val warm = times.min

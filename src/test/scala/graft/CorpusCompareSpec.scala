@@ -147,7 +147,6 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
   // ---- generative differential: DataFrame path vs raw-SQL twin ---------
 
   test("20 random slice pairs: driftSummary matches an independent SQL rendering") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     docs.createOrReplaceTempView("cc_docs")
     val rnd = new scala.util.Random(4242)
     for (i <- 1 to 20) {
@@ -210,7 +209,6 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
   }
 
   test("15 random snapshot pairs: corpusOverlap matches an independent SQL rendering") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     docs.createOrReplaceTempView("cc_docs")
     val rnd = new scala.util.Random(777)
     for (i <- 1 to 15) {
@@ -248,7 +246,6 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
 
   test("nfcNormalize composes decomposed sequences; identity on NFC input") {
     import spark.implicits._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val df = Seq(
       (1L, "café"),         // e + combining acute -> precomposed
       (2L, "café"),          // already NFC
@@ -271,7 +268,6 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
   test("nfcNormalize survives CODEGEN_ONLY (no silent interpreted fallback)") {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    graft.functions.VectorFunctions.ensureRegistered(s2)
     import s2.implicits._
     val out = Seq("café").toDF("s")
       .select(graft.functions.VectorFunctions.nfcNormalize(col("s")))
@@ -281,7 +277,6 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
 
   test("NFKC folds ligatures, fullwidth forms, and superscripts; NFC does not") {
     import spark.implicits._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val df = Seq(
       (1L, "ﬁle"),          // LATIN SMALL LIGATURE FI + "le" -> "file"
       (2L, "ｓｐａｍ"), // fullwidth "spam" -> "spam"
@@ -307,7 +302,6 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
 
   test("normalizeText collapses whitespace, trims, and composes NFC") {
     import spark.implicits._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val got = Seq("  a \t b\n\ncafé  ").toDF("s")
       .select(graft.operators.TextAnalysis.normalizeText(col("s")))
       .head().getString(0)
@@ -316,7 +310,6 @@ class CorpusCompareSpec extends AnyFunSuite with StagingScope {
 
   test("canonicalFingerprint: re-encoded (NFC-equal) text maps to the same identity") {
     import spark.implicits._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     // composed \u00e9 vs e + combining acute, plus reflowed whitespace —
     // the content-identity seams (release/hygiene/ingest/overlap/split/
     // shard) must treat these as ONE document; the raw fingerprint must not

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.SessionScratch.rmTree
+import graft.operators.IndexMaintenance
 import graft.sources.Etl
 
 /** Golden round-trip tests for the ETL write commands (upstream
@@ -95,14 +96,54 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with Stag
     assert(etl.read("region").count() == n)
   }
 
-  // ---- crash recovery: construct every intermediate commit state by hand
-  // and prove read() heals it to exactly the old or the new generation.
+  // ---- crash states: construct every intermediate commit state by hand,
+  // prove read() resolves it to exactly the old or the new generation
+  // without writing, and that the next commit heals it.
 
   import java.nio.file.{Files, Paths, Path => JPath}
+  import scala.jdk.CollectionConverters._
 
   private def names(etl: Etl) =
     etl.read("region").collect().map(_.getString(1)).toSet
   private def oldNames(etl: Etl) = names(etl)
+
+  /** Every path under the working dir, relative to it. */
+  private def listing(etl: Etl): Seq[String] = {
+    val root = Paths.get(etl.workDir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.map(root.relativize(_).toString).toSeq.sorted
+    finally walk.close()
+  }
+
+  /** `names(etl)`, asserting the read left the working dir unchanged. */
+  private def namesWithoutWriting(etl: Etl): Set[String] = {
+    val before = listing(etl)
+    val read = names(etl)
+    assert(listing(etl) == before, "a read changed the working dir")
+    read
+  }
+
+  private def insertRow(etl: Etl, key: Int, name: String): Unit = {
+    import spark.implicits._
+    etl.insert("region", Seq((key, name, "c")).toDF("r_regionkey", "r_name", "r_comment"))
+  }
+
+  /** Commit one more row ("X"): the commit heals whatever a crash left, so
+    * afterwards no marker, shadow, backup or lease remains. Returns the
+    * names read after it.
+    */
+  private def commitHeals(etl: Etl): Set[String] = {
+    insertRow(etl, 99, "X")
+    val left = new java.io.File(etl.workDir).list().toList
+      .filter(n => n.startsWith("_txn_commit") || n.endsWith(".swap") ||
+        n.endsWith(".stage") || n.endsWith(".bak") || n == IndexMaintenance.LockFile).toList
+    assert(left.isEmpty, s"the commit left crash debris: $left")
+    names(etl)
+  }
+
+  private def genOf(etl: Etl): String =
+    new String(Files.readAllBytes(Paths.get(etl.workDir, "_txn_gen")), "UTF-8")
+      .trim.split("\\s+").head
 
   /** Write a complete, valid NEW generation into region.parquet.swap. */
   private def stageShadow(etl: Etl): Unit =
@@ -120,13 +161,9 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with Stag
     val etl = freshEtl()
     val old = oldNames(etl)
     stageShadow(etl)
-    assert(names(etl) == old) // reads ignore the uncommitted shadow
-    etl.insert("region", spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(99, "X", "c"))),
-      etl.read("region").schema))
-    // the next commit's recover() must have deleted the stale shadow
-    assert(!Files.exists(Paths.get(etl.workDir, "region.parquet.swap")))
-    assert(names(etl) == old + "X")
+    assert(namesWithoutWriting(etl) == old) // reads ignore the uncommitted shadow
+    // the next commit's recovery deletes the stale shadow
+    assert(commitHeals(etl) == old + "X")
   }
 
   test("crash after commit point, before any rename, rolls FORWARD") {
@@ -134,9 +171,9 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with Stag
     val old = oldNames(etl)
     stageShadow(etl)
     publishMarker(etl)
-    assert(names(etl) == old.map("NEW_" + _))
-    assert(!Files.exists(marker(etl)))
-    assert(!Files.exists(Paths.get(etl.workDir, "region.parquet.bak")))
+    assert(namesWithoutWriting(etl) == old.map("NEW_" + _))
+    assert(Files.exists(marker(etl)))
+    assert(commitHeals(etl) == old.map("NEW_" + _) + "X")
   }
 
   test("crash between the two renames (live gone, .swap + .bak) rolls FORWARD") {
@@ -145,8 +182,8 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with Stag
     stageShadow(etl)
     publishMarker(etl)
     move(etl, "region.parquet", "region.parquet.bak")
-    assert(names(etl) == old.map("NEW_" + _))
-    assert(!Files.exists(marker(etl)))
+    assert(namesWithoutWriting(etl) == old.map("NEW_" + _))
+    assert(commitHeals(etl) == old.map("NEW_" + _) + "X")
   }
 
   test("crash after the swap, before .bak cleanup, completes FORWARD") {
@@ -156,16 +193,40 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with Stag
     publishMarker(etl)
     move(etl, "region.parquet", "region.parquet.bak")
     move(etl, "region.parquet.swap", "region.parquet")
-    assert(names(etl) == old.map("NEW_" + _))
-    assert(!Files.exists(marker(etl)))
-    assert(!Files.exists(Paths.get(etl.workDir, "region.parquet.bak")))
+    assert(namesWithoutWriting(etl) == old.map("NEW_" + _))
+    assert(commitHeals(etl) == old.map("NEW_" + _) + "X")
   }
 
   test("orphaned .bak with no live dir and no marker restores the table") {
     val etl = freshEtl()
     val old = oldNames(etl)
     move(etl, "region.parquet", "region.parquet.bak")
-    assert(names(etl) == old)
+    assert(namesWithoutWriting(etl) == old)
+    assert(commitHeals(etl) == old + "X")
+  }
+
+  test("a second writer and a reader leave a lease holder's staged shadow alone") {
+    val etl = freshEtl()
+    val old = oldNames(etl)
+    // writer W holds the lease with its post-state fully staged
+    IndexMaintenance.acquireLease(spark, etl.workDir, "w-holder", etl.leaseMs)
+    stageShadow(etl)
+    val shadow = Paths.get(etl.workDir, "region.parquet.swap")
+    // a second transaction on the same dir (a second concurrent POST)
+    val second = new Etl(spark, etl.workDir)
+    val e = intercept[IllegalStateException](insertRow(second, 88, "SECOND"))
+    assert(e.getMessage.contains("concurrent index writer holds the lease"), e.getMessage)
+    assert(Files.exists(shadow), "a second writer deleted the lease holder's shadow")
+    // a read of a missing table
+    intercept[org.apache.spark.sql.AnalysisException](second.read("nation"))
+    assert(Files.exists(shadow), "a read deleted the lease holder's shadow")
+    // W reaches its commit point and releases: its commit is visible, and
+    // the next commit finishes it
+    publishMarker(etl)
+    IndexMaintenance.releaseLease(spark, etl.workDir)
+    assert(namesWithoutWriting(etl) == old.map("NEW_" + _))
+    assert(commitHeals(etl) == old.map("NEW_" + _) + "X")
+    assert(genOf(etl) == "3")
   }
 
   // ---- transact(): the reference's multi-command do() -------------------
@@ -220,23 +281,24 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with Stag
     val etl = freshEtl()
     val old = oldNames(etl)
     // a live concurrent writer holds the lease
-    Files.write(Paths.get(etl.workDir, "_txn_lock"), "feedf00d".getBytes("UTF-8"))
+    val lock = Paths.get(etl.workDir, IndexMaintenance.LockFile)
+    Files.write(lock, "feedf00d".getBytes("UTF-8"))
     val e = intercept[IllegalStateException] {
       etl.insert("region", Seq((99, "NEW", "c")).toDF("r_regionkey", "r_name", "r_comment"))
     }
-    assert(e.getMessage.contains("concurrent ETL writer holds the lease"))
+    assert(e.getMessage.contains("concurrent index writer holds the lease"), e.getMessage)
     // the abort happened before staging: no debris, state untouched,
     // and the foreign lease was NOT stolen
     assert(names(etl) == old)
     assert(!Files.exists(Paths.get(etl.workDir, "region.parquet.swap")))
-    assert(Files.exists(Paths.get(etl.workDir, "_txn_lock")))
-    Files.delete(Paths.get(etl.workDir, "_txn_lock"))
+    assert(Files.exists(lock))
+    Files.delete(lock)
   }
 
   test("a stale lease from a crashed writer is reclaimed and released") {
     import spark.implicits._
     val etl = freshEtl()
-    val lock = Paths.get(etl.workDir, "_txn_lock").toFile
+    val lock = Paths.get(etl.workDir, IndexMaintenance.LockFile).toFile
     Files.write(lock.toPath, "deadbeef".getBytes("UTF-8"))
     assert(lock.setLastModified(System.currentTimeMillis() - etl.leaseMs - 1000))
     etl.insert("region", Seq((99, "NEW", "c")).toDF("r_regionkey", "r_name", "r_comment"))
@@ -262,20 +324,35 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with Stag
     val keys = a.read("region").collect().map(_.getInt(0)).toSet
     assert(keys.contains(88) && !keys.contains(99))
     assert(!Files.exists(Paths.get(a.workDir, "region.parquet.swap")))
-    assert(!Files.exists(Paths.get(a.workDir, "_txn_lock")))
+    assert(!Files.exists(Paths.get(a.workDir, IndexMaintenance.LockFile)))
     assert(!Files.exists(marker(a)))
   }
 
   test("generation survives a crash between swap and gen publish") {
     import spark.implicits._
     val etl = freshEtl() // commit #1 → generation 1
-    stageShadow(etl)
-    publishMarker(etl) // hand-built commit #2: marker carries generation 2
-    // read() heals: rolls forward AND finishes the generation bump, so a
-    // writer whose snapshot predates the crashed commit still aborts
-    assert(names(etl).forall(_.startsWith("NEW_")))
-    assert(new String(Files.readAllBytes(Paths.get(etl.workDir, "_txn_gen")), "UTF-8")
-      .trim.startsWith("2"))
+    val old = oldNames(etl)
+    val stale = new Etl(spark, etl.workDir)
+    val e = intercept[IllegalStateException] {
+      stale.transact { tx =>
+        tx.insert("region", Seq((77, "STALE", "c")).toDF("r_regionkey", "r_name", "r_comment"))
+        // a commit of generation 2 crashes inside this transaction's
+        // window, past its commit point: its marker carries generation 2
+        stageShadow(etl)
+        publishMarker(etl)
+      }
+    }
+    // the writer whose snapshot predates the crashed commit still aborts,
+    // and leaves the crashed commit's shadow for the next writer
+    assert(e.getMessage.contains("concurrent ETL writer committed generation 2"), e.getMessage)
+    assert(Files.exists(Paths.get(etl.workDir, "region.parquet.swap")))
+    // reads resolve the crashed commit without finishing its bump
+    assert(namesWithoutWriting(etl) == old.map("NEW_" + _))
+    assert(genOf(etl) == "1")
+    // a fresh transaction snapshots generation 2 from the marker (no false
+    // conflict), heals under the lease and commits generation 3
+    assert(commitHeals(etl) == old.map("NEW_" + _) + "X")
+    assert(genOf(etl) == "3")
   }
 
   test("a failed shadow write inside transact leaves live tables untouched") {

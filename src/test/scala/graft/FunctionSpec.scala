@@ -168,16 +168,15 @@ class FunctionSpec extends AnyFunSuite {
     assertShapeArgKernels(SparkTestSession.get.newSession())
   }
 
-  test("Tables and ensureRegistered keep the injected builders on the shared session") {
+  test("Tables keeps the injected builders on the shared session") {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val reg = spark.sessionState.functionRegistry
     val id = FunctionIdentifier("hyperplane_sigs")
     val before = reg.lookupFunctionBuilder(id)
     assert(before.isDefined)
-    // every HTSQL query constructs a Tables, whose constructor installs
-    // the native functions; it must not replace the injected builders
+    // every HTSQL query constructs a Tables; it must not replace the
+    // injected builders
     new graft.model.Tables(spark, "/root/testdata/sf0.001")
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     assertShapeArgKernels(spark)
     assert(reg.lookupFunctionBuilder(id).exists(_ eq before.get))
   }

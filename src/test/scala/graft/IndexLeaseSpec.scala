@@ -128,6 +128,30 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     IndexMaintenance.releaseLease(spark, root)
   }
 
+  test("racing acquirers: exactly one takes a free lease") {
+    // four writers start together on a free root, round after round (the
+    // server's four request threads committing at once): the create must
+    // be exclusive, or two of them both hold the lease
+    val root = fresh("race")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try (1 to 200).foreach { round =>
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val tries = (1 to 4).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            start.await()
+            try { IndexMaintenance.acquireLease(spark, root, s"r$round-w$i", 60000L); true }
+            catch { case _: IllegalStateException => false }
+          }
+        })
+      }
+      start.countDown()
+      val holders = tries.count(_.get())
+      assert(holders == 1, s"round $round: $holders writers hold the lease")
+      IndexMaintenance.releaseLease(spark, root)
+    } finally pool.shutdown()
+  }
+
   test("single reclaimer still wins an undisturbed stale takeover") {
     // the instance-verify must not break the plain reclaim path
     val root = fresh("reclaim1")
@@ -317,5 +341,21 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     assert(rows.nonEmpty)
     assert(Staging.liveCount == live,
       s"topKFromIndex left ${Staging.liveCount - live} staged frame(s)")
+  }
+
+  test("one writer lease: only IndexMaintenance creates a lock") {
+    import scala.jdk.CollectionConverters._
+    // the retired ETL lock file, and any atomic create-if-absent — the
+    // primitive a second lease implementation would be built on
+    val lock = ("_txn_lock|\\.create\\([^()]*,\\s*false\\)|createNewFile|CREATE_NEW").r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+    val offenders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "IndexMaintenance.scala")
+      .flatMap(p => lock.findFirstIn(java.nio.file.Files.readString(p))
+        .map(m => s"${p.getFileName}: $m"))
+      .toList.sorted
+    finally walk.close()
+    assert(offenders.isEmpty, s"a lock outside IndexMaintenance: $offenders")
   }
 }

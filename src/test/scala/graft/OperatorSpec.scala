@@ -768,7 +768,6 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
     // the codegen'd HyperplaneSigs kernel (plane matrix as a reference
     // object) must reproduce the literal-composed column exactly — same
     // per-table RNG stream, same row-major fill, same sequential dot fold
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val emb = t("embeddings").limit(100)
     Seq((40, 16), (4, 2), (31, 3)).foreach { case (p, tbl) =>
       val mismatches = emb.select(
@@ -1407,7 +1406,6 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
 
   test("native VectorDot/CosineSim match the lambda folds bit-for-bit") {
     import graft.functions.VectorFunctions
-    VectorFunctions.ensureRegistered(spark)
     val emb = t("embeddings").select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     val a = emb.limit(50).select(col("vec_id").as("ida"), col("v").as("va"))
@@ -1423,7 +1421,6 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
   }
 
   test("native Fingerprint64 matches the split+aggregate fold bit-for-bit") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     // the pre-round-4 formulation: per-character array + interpreted lambda
     val foldFp = {
       val chars = filter(split(col("text"), ""), c => c =!= "")
@@ -1444,7 +1441,6 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
   }
 
   test("native SimHash64 matches the SQL fold bit-for-bit") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val hashed = t("documents")
       .select(col("doc_id"), transform(Dedup.tokens(col("text")), x => xxhash64(x)).as("hs"))
     val cmp = hashed.select(
@@ -1455,7 +1451,6 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
   }
 
   test("cosine_sim usable from plain SQL via function registration") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     t("embeddings").select(col("embedding").cast("array<double>").as("v"))
       .limit(3).createOrReplaceTempView("emb_sql_test")
     val r = spark.sql(
@@ -1616,7 +1611,6 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
   }
 
   test("centroid top-cells kernel is bit-identical to the literal-composed form") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val emb = t("embeddings")
       .select(col("vec_id").as("n_id"), col("embedding").cast("array<double>").as("n_vec"))
     // trained centroids (unit vectors, data-dependent) + a crafted matrix
@@ -1639,7 +1633,6 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
   }
 
   test("nested top-cells kernel: full probing equals flat; partial probing high-recall") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val emb = t("embeddings")
       .select(col("vec_id").as("n_id"), col("embedding").cast("array<double>").as("n_vec"))
     // a 300-cell matrix (past NestedCellThreshold) from sampled seeds
@@ -1783,7 +1776,6 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
     // failure class, caught here by forbidding the fallback entirely)
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    graft.functions.VectorFunctions.ensureRegistered(s2)
     val emb = s2.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cents = Similarity.sampleSeeds(

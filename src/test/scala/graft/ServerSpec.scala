@@ -209,6 +209,56 @@ class ServerSpec extends AnyFunSuite {
     }
   }
 
+  test("concurrent POSTs either land or get a 409, never a lost 200") {
+    import org.apache.spark.sql.functions._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val work = java.nio.file.Files.createTempDirectory("graft_server_etl_").toString
+    spark.read.parquet(s"$dir/region.parquet")
+      .select(col("r_regionkey"), col("r_name"), lit("orig").as("r_comment"))
+      .write.parquet(s"$work/region.parquet")
+    val srv = new GraftServer(Graft(spark, work)).start()
+    try {
+      // two clients, each inserting its own key per round; within a round
+      // the POSTs start a varying delay apart, so one transaction starts
+      // at each point of the other's commit
+      val rounds = 5
+      val results = (1 to rounds).flatMap { round =>
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val fs = Seq(1, 2).map { client =>
+          val key = 1000 + 10 * round + client
+          Future {
+            start.await()
+            Thread.sleep(((round * 7 + client * 13) % 10) * 40L)
+            key -> post(srv, s"/insert(region := {r_regionkey := $key, " +
+              s"r_name := 'C$client', r_comment := 'round $round'})")
+          }
+        }
+        start.countDown()
+        Await.result(Future.sequence(fs), 120.seconds)
+      }
+      val after = getOn(srv, "/region%7Br_regionkey%7D/:csv")
+      assert(after.statusCode() == 200, after.body())
+      val keys = after.body().linesIterator.drop(1).map(_.trim.toInt).toSet
+      val statuses = results.map { case (k, r) => s"$k:${r.statusCode()}" }.mkString(" ")
+      results.foreach { case (key, r) =>
+        if (r.statusCode() == 200)
+          assert(keys.contains(key), s"POST of $key answered 200 but its row is missing " +
+            s"($statuses; rows ${keys.toSeq.sorted.mkString(",")})")
+        else
+          assert(r.statusCode() == 409, s"POST of $key: ${r.statusCode()} ${r.body()} ($statuses)")
+      }
+      // a POST that got a 409 left nothing behind
+      val landed = results.collect { case (k, r) if r.statusCode() == 200 => k }.toSet
+      assert(keys.filter(_ >= 1000) == landed, statuses)
+      assert(landed.nonEmpty, statuses)
+    } finally {
+      srv.stop()
+      rmTree(work)
+    }
+  }
+
   test("concurrent requests all succeed (Spark job scheduling is shared)") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
