@@ -259,31 +259,24 @@ object CorpusCompare {
 
   /** Append a delta batch's gram counts to an existing index (one
     * vocabulary-sized segment per append; reads merge by summing).
+    * Exactly-once: count rows carry no replay identity, so a re-run
+    * append double-counts. The streaming ingest's append is exactly-once
+    * under replay because it runs under the root's batch watermark
+    * ([[IndexMaintenance.withWriterLease]]).
     */
   def appendToGramIndex(delta: DataFrame, text: Column, path: String): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path)(
-      _.append("grams", gramCounts(delta, text)))
+      appendGrams(delta, text))
 
-  /** BATCH-ID-KEYED append — the REPLAY-IDEMPOTENT form a streaming
-    * ingest needs: a plain [[appendToGramIndex]] re-run double-counts
-    * (count rows carry no replay identity — this store's documented
-    * exactly-once contract), so the keyed form writes the delta as a
-    * segment keyed `b<batchKey>` — an at-least-once foreachBatch replay
-    * replaces its own delta instead of duplicating it, and a batch a
-    * compaction already folded is skipped (the lineage namespacing of
-    * [[Retrieval.appendToTermStatsIndexKeyed]]).
-    */
-  def appendToGramIndexKeyed(delta: DataFrame, text: Column, path: String,
-      batchKey: Long, lineage: String = ""): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path)(
-      _.writeKeyed("grams", Retrieval.keyedName(batchKey, lineage),
-        gramCounts(delta, text)))
+  private[graft] def appendGrams(delta: DataFrame,
+      text: Column): IndexMaintenance.Tx => Unit =
+    _.append("grams", gramCounts(delta, text))
 
   /** RETRACT docs (takedown) from the gram-count index: append their
     * gram counts NEGATED — counts are additive, so merge-on-read sums
     * stay exact and drift checks afterwards equal a fresh index built on
     * the surviving corpus (grams a retraction zeroes out are filtered at
-    * read and folded away by compaction). `docs` must be exactly the
+    * read and dropped by compaction). `docs` must be exactly the
     * indexed documents being removed. Exactly-once per retraction batch,
     * like this store's plain appends.
     */
@@ -328,9 +321,8 @@ object CorpusCompare {
       .select("gram", "n_a", "n_b", "drift_q")
 
   /** Fold the accumulated delta segments into one pre-summed segment, in
-    * one [[IndexMaintenance]] commit that also marks the folded keyed
-    * deltas so a replay of one of them is skipped. Counts are
-    * bit-identical pre/post (sum of sums).
+    * one [[IndexMaintenance]] commit. Counts are bit-identical pre/post
+    * (sum of sums).
     */
   def compactGramIndex(spark: SparkSession, path: String): Unit =
     IndexMaintenance.withWriterLease(spark, path) { tx =>

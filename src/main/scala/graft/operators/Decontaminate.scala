@@ -296,12 +296,11 @@ object Decontaminate {
   /** [[appendToGramPostingsIndex]] that pins `n` on a root with no build
     * yet — the streaming ingest's first surviving batch.
     */
-  private[graft] def appendToGramPostingsIndexOrPin(delta: DataFrame,
-      idCol: String, textCol: String, path: String, n: Int): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) { tx =>
-      if (tx.params.isEmpty) tx.params(Map("n" -> n.toLong))
-      tx.append("grams", gramPostingsOf(delta, idCol, textCol, tx.params("n").toInt))
-    }
+  private[graft] def appendGramPostingsOrPin(delta: DataFrame, idCol: String,
+      textCol: String, n: Int): IndexMaintenance.Tx => Unit = { tx =>
+    if (tx.params.isEmpty) tx.params(Map("n" -> n.toLong))
+    tx.append("grams", gramPostingsOf(delta, idCol, textCol, tx.params("n").toInt))
+  }
 
   /** RETRACT indexed docs (takedown): tombstones only — per-doc rows, no
     * cross-doc aggregate. Same contract as [[IncrementalDedup.retract]].

@@ -163,14 +163,13 @@ object IncrementalAnn {
     * kernel over the same double-cast vectors).
     */
   private[graft] def appendStaged(d: DataFrame, sigsFull: DataFrame,
-      keptIds: DataFrame, path: String, p: VecParams): Unit =
-    IndexMaintenance.withWriterLease(d.sparkSession, path) { tx =>
-      if (tx.params.isEmpty) tx.params(paramsMap(p))
-      else require(paramsOf(tx.snapshot) == p,
-        s"the ANN index at $path was rebuilt with other params during the batch")
-      appendSigned(tx, sigsFull.join(broadcast(keptIds), Seq("id"), "left_semi"),
-        d.join(broadcast(keptIds), Seq("id"), "left_semi"))
-    }
+      keptIds: DataFrame, p: VecParams): IndexMaintenance.Tx => Unit = { tx =>
+    if (tx.params.isEmpty) tx.params(paramsMap(p))
+    else require(paramsOf(tx.snapshot) == p,
+      s"the ANN index at ${tx.snapshot.root} was rebuilt with other params during the batch")
+    appendSigned(tx, sigsFull.join(broadcast(keptIds), Seq("id"), "left_semi"),
+      d.join(broadcast(keptIds), Seq("id"), "left_semi"))
+  }
 
   /** Top-k nearest neighbors IN THE INDEXED CORPUS for a batch of query
     * vectors — the vector twin of [[Retrieval.topKFromIndex]]: where

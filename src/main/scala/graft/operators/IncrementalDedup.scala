@@ -70,19 +70,19 @@ object IncrementalDedup {
       writeSigned(tx, signed(docs, idCol, textCol, p), p, replace = false)
     }
 
-  /** Append an already-[[signed]] frame under the writer lease — the
-    * streaming ingest's append entry point (it signs a batch once and
-    * reuses the staged frame for both the pair search and this append).
-    * The first append to an empty root pins `p` as the index's params.
+  /** Append an already-[[signed]] frame — the streaming ingest's append
+    * (it signs a batch once and reuses the staged frame for both the pair
+    * search and this append). The first append to an empty root pins `p`
+    * as the index's params.
     */
-  private[graft] def appendSigned(base: DataFrame, path: String,
-      p: Params): Unit =
-    IndexMaintenance.withWriterLease(base.sparkSession, path) { tx =>
-      if (tx.params.isEmpty) tx.params(paramsMap(p))
-      else require(paramsOf(tx.params, path) == p,
-        s"the dedup index at $path was rebuilt with other params during the batch")
-      writeSigned(tx, base, p, replace = false)
-    }
+  private[graft] def appendSigned(base: DataFrame,
+      p: Params): IndexMaintenance.Tx => Unit = { tx =>
+    val path = tx.snapshot.root
+    if (tx.params.isEmpty) tx.params(paramsMap(p))
+    else require(paramsOf(tx.params, path) == p,
+      s"the dedup index at $path was rebuilt with other params during the batch")
+    writeSigned(tx, base, p, replace = false)
+  }
 
   /** RETRACT indexed docs (takedown): tombstone their ids — queries stop
     * seeing them immediately ([[newBatchPairs]] drops tombstoned index

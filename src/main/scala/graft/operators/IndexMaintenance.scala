@@ -25,10 +25,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * {{{
   *   {"generation": g, "writer": "<lease holder>",
   *    "params": {"<name>": <long>, ...},            // the family's pinned params
+  *    "applied": {"<query id>": <batch id>, ...},   // streaming batches landed
   *    "stores": {"<store>": {
   *       "schema": <Spark StructType json>,
-  *       "folded": ["<key>", ...],                   // keyed batches compacted in
-  *       "segments": [{"id": "<segment>", "key": "<key>" | null,
+  *       "segments": [{"id": "<segment>",
   *                     "files": [{"name": "part-…", "bytes": n}, ...]}]}}}
   * }}}
   *
@@ -50,6 +50,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * neither the current nor the previous manifest names (a crashed
   * writer's debris included) and every older manifest. A frame planned on
   * generation g therefore stays readable until the writer of g+3 starts.
+  *
+  * REPLAY GUARD: `applied` is the root's batch watermark, one entry per
+  * streaming query (its persistent id, stable across restarts from one
+  * checkpoint): the last batch id of that query whose append this root
+  * committed. A mutation given a [[Batch]] runs only when the id is past
+  * the watermark, and its manifest records the id, so a streaming batch
+  * lands in a root at most once however often `foreachBatch` replays it.
+  * Builds, replacements and compactions carry `applied` forward
+  * unchanged. A manifest written before the watermark existed (each store
+  * with a list of compacted batch keys, each segment with its batch key)
+  * decodes with those fields ignored and an empty `applied`: a batch
+  * replayed across that upgrade is not guarded, and lands again under the
+  * stores' at-least-once read-time collapse.
   *
   * A root that holds store directories but no manifest was written before
   * manifests existed; it is refused loudly and must be rebuilt.
@@ -200,9 +213,27 @@ object IndexMaintenance {
         java.nio.file.StandardOpenOption.CREATE_NEW)
     }
 
-  /** Release the lease (delete the lock file). */
-  def releaseLease(spark: SparkSession, root: String): Unit =
-    fsOf(spark, root).delete(lockPath(root), false)
+  /** Release `writerId`'s lease: delete the lock only while this writer
+    * still holds it. A writer that outlived `leaseMs` may have been
+    * reclaimed; the lock at the root is then its reclaimer's, and stays.
+    * Closed like the reclaim's own check-to-rename window: the lock is
+    * RENAMED aside (fixing the instance), its holder read, and a lock
+    * that is not ours is restored.
+    */
+  def releaseLease(spark: SparkSession, root: String, writerId: String): Unit = {
+    val f = fsOf(spark, root)
+    val aside = new Path(lockPath(root).toString + s".release_$writerId")
+    val renamed =
+      try f.rename(lockPath(root), aside) catch { case _: FileNotFoundException => false }
+    if (renamed) {
+      val holder = try readText(f, aside).trim catch { case _: java.io.IOException => "" }
+      if (holder == writerId) f.delete(aside, false)
+      else if (!f.rename(aside, lockPath(root)))
+        throw new IllegalStateException(
+          s"releasing $writerId's lease on $root moved the lock of $holder aside " +
+            "and could not restore it — manual intervention required: restore " + aside)
+    }
+  }
 
   private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
@@ -211,19 +242,21 @@ object IndexMaintenance {
 
   // ---- manifests ---------------------------------------------------------
 
-  /** One immutable segment: its directory name under the store, the batch
-    * key of a keyed write, and its data files with their sizes.
+  /** One immutable segment: its directory name under the store and its
+    * data files with their sizes.
     */
-  private final case class Segment(id: String, key: Option[String],
-      files: Seq[(String, Long)])
+  private final case class Segment(id: String, files: Seq[(String, Long)])
 
-  private final case class Store(schema: StructType, segments: Seq[Segment],
-      folded: Set[String])
+  private final case class Store(schema: StructType, segments: Seq[Segment])
 
   private final case class Manifest(generation: Long, writer: String,
-      params: Map[String, Long], stores: Map[String, Store])
+      params: Map[String, Long], applied: Map[String, Long],
+      stores: Map[String, Store])
 
-  private val Empty = Manifest(0L, "", Map.empty, Map.empty)
+  /** One streaming batch: the query's persistent id and the batch id. */
+  private[graft] final case class Batch(query: String, id: Long)
+
+  private val Empty = Manifest(0L, "", Map.empty, Map.empty, Map.empty)
   private val ManifestPrefix = "_manifest_"
   private val ManifestName = "_manifest_(\\d+)".r
   private val json = new ObjectMapper
@@ -237,15 +270,15 @@ object IndexMaintenance {
     o.put("generation", m.generation).put("writer", m.writer)
     val ps = o.putObject("params")
     m.params.toSeq.sortBy(_._1).foreach { case (k, v) => ps.put(k, v) }
+    val ap = o.putObject("applied")
+    m.applied.toSeq.sortBy(_._1).foreach { case (q, id) => ap.put(q, id) }
     val ss = o.putObject("stores")
     m.stores.toSeq.sortBy(_._1).foreach { case (name, st) =>
       val so = ss.putObject(name)
       so.set[JsonNode]("schema", json.readTree(st.schema.json))
-      val fo = so.putArray("folded")
-      st.folded.toSeq.sorted.foreach(k => fo.add(k))
       val sa = so.putArray("segments")
       st.segments.foreach { seg =>
-        val go = sa.addObject().put("id", seg.id).put("key", seg.key.orNull)
+        val go = sa.addObject().put("id", seg.id)
         val fa = go.putArray("files")
         seg.files.foreach { case (n, b) => fa.addObject().put("name", n).put("bytes", b) }
       }
@@ -256,18 +289,18 @@ object IndexMaintenance {
   private def decode(text: String): Manifest = {
     val o = json.readTree(text)
     def elems(n: JsonNode) = n.elements().asScala.toSeq
+    def longs(n: JsonNode) = Option(n).toSeq
+      .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue.asLong)).toMap
     Manifest(o.get("generation").asLong, o.get("writer").asText,
-      o.get("params").properties().asScala.map(e => e.getKey -> e.getValue.asLong).toMap,
+      longs(o.get("params")), longs(o.get("applied")),
       o.get("stores").properties().asScala.map { e =>
         val so = e.getValue
         e.getKey -> Store(
           DataType.fromJson(so.get("schema").toString).asInstanceOf[StructType],
           elems(so.get("segments")).map { g =>
             Segment(g.get("id").asText,
-              Option(g.get("key")).filterNot(_.isNull).map(_.asText),
               elems(g.get("files")).map(f => f.get("name").asText -> f.get("bytes").asLong))
-          },
-          elems(so.get("folded")).map(_.asText).toSet)
+          })
       }.toMap)
   }
 
@@ -324,13 +357,10 @@ object IndexMaintenance {
         seg.files.map { case (n, b) => (new Path(s"$root/$store/${seg.id}/$n"), b) }
       })
 
-    /** Batch keys of the live keyed segments of `store`. */
-    def keys(store: String): Seq[String] =
-      m.stores.get(store).toSeq.flatMap(_.segments.flatMap(_.key))
-
-    /** Batch keys already compacted into `store`. */
-    def folded(store: String): Set[String] =
-      m.stores.get(store).fold(Set.empty[String])(_.folded)
+    /** The root's batch watermark: the last batch id of each streaming
+      * query that landed here.
+      */
+    def applied: Map[String, Long] = m.applied
 
     /** `store` as `spark.read.schema(s).parquet(files: _*)` would read it,
       * minus that call's per-file existence checks and listing: the file
@@ -418,49 +448,36 @@ object IndexMaintenance {
 
     /** Add `df` to `store` as one more segment. */
     def append(store: String, df: DataFrame): Unit = {
-      val seg = write(store, df, None)
+      val seg = write(store, df)
       update(store, df)(st => st.copy(segments = st.segments :+ seg))
     }
 
-    /** Make `df` the whole of `store` (a build or a compaction). The keys
-      * of the keyed segments it replaces become folded.
-      */
+    /** Make `df` the whole of `store` (a build or a compaction). */
     def replace(store: String, df: DataFrame): Unit = {
-      val seg = write(store, df, None)
-      update(store, df)(st =>
-        Store(readSchema(df), Seq(seg), st.folded ++ st.segments.flatMap(_.key)))
+      val seg = write(store, df)
+      update(store, df)(_ => Store(readSchema(df), Seq(seg)))
     }
-
-    /** Write a counted store's batch delta under `key`: a replay replaces
-      * the live segment of the same key, and a key already folded by a
-      * compaction is skipped (its counts are in the folded segment).
-      */
-    def writeKeyed(store: String, key: String, df: DataFrame): Unit =
-      if (!synchronized(stores.get(store).exists(_.folded(key)))) {
-        val seg = write(store, df, Some(key))
-        update(store, df)(st =>
-          st.copy(segments = st.segments.filterNot(_.key.contains(key)) :+ seg))
-      }
 
     def drop(store: String): Unit = synchronized { stores -= store }
 
-    private def write(store: String, df: DataFrame, key: Option[String]): Segment = {
+    private def write(store: String, df: DataFrame): Segment = {
       val id = s"g$generation-$writerId-${written.incrementAndGet()}"
       val dir = new Path(s"$root/$store/$id")
       df.write.parquet(dir.toString)
       val files = fsOf(spark, root).listStatus(dir).toSeq
         .filterNot(s => hidden(s.getPath.getName))
         .map(s => s.getPath.getName -> s.getLen).sortBy(_._1)
-      Segment(id, key, files)
+      Segment(id, files)
     }
 
     private def update(store: String, df: DataFrame)(f: Store => Store): Unit =
       synchronized {
-        stores += store -> f(stores.getOrElse(store, Store(readSchema(df), Nil, Set.empty)))
+        stores += store -> f(stores.getOrElse(store, Store(readSchema(df), Nil)))
       }
 
-    private[IndexMaintenance] def commit(): Unit = synchronized {
-      publish(fsOf(spark, root), root, Manifest(generation, writerId, pinned, stores))
+    private[IndexMaintenance] def commit(batch: Option[Batch]): Unit = synchronized {
+      publish(fsOf(spark, root), root, Manifest(generation, writerId, pinned,
+        base.applied ++ batch.map(b => b.query -> b.id), stores))
     }
   }
 
@@ -520,17 +537,24 @@ object IndexMaintenance {
     * nothing. The body runs in a [[Staging.scoped]] scope of its own: the
     * frames it stages are released once its writes are done, whether or
     * not the caller has a scope open.
+    *
+    * With a `batch` (the streaming ingests' appends), the mutation is
+    * guarded by the root's watermark: a batch id at or below the query's
+    * `applied` entry has already landed here, so the body is skipped and
+    * nothing commits; otherwise the committed manifest records the id.
     */
-  def withWriterLease[A](spark: SparkSession, root: String,
-      leaseMs: Long = 10 * 60 * 1000L)(body: Tx => A): A = {
+  def withWriterLease(spark: SparkSession, root: String,
+      leaseMs: Long = 10 * 60 * 1000L, batch: Option[Batch] = None)(
+      body: Tx => Unit): Unit = {
     val writerId = java.util.UUID.randomUUID().toString.take(8)
     acquireLease(spark, root, writerId, leaseMs)
     try {
       val tx = begin(spark, root, writerId)
-      val r = Staging.scoped(body(tx))
-      tx.commit()
-      r
-    } finally releaseLease(spark, root)
+      if (!batch.exists(b => tx.snapshot.applied.get(b.query).exists(b.id <= _))) {
+        Staging.scoped(body(tx))
+        tx.commit(batch)
+      }
+    } finally releaseLease(spark, root, writerId)
   }
 
   /** Run N INDEPENDENT writes concurrently and wait for all of them — the
@@ -573,8 +597,8 @@ object IndexMaintenance {
     *
     *   - `everyBatches > 0`: compact on every Nth batch id ((id+1) % N
     *     == 0) — deterministic under replay, so a re-run triggering
-    *     batch just re-compacts (idempotent: same logical rows, the
-    *     folded keys keep counted stores exact);
+    *     batch just re-compacts (idempotent: same logical rows, and the
+    *     root's watermark keeps the replayed appends out);
     *   - `fileThreshold > 0`: compact a store family whose probe store
     *     has accumulated more than this many data files — the
     *     [[indexStats]] backlog signal, one manifest read per batch.
@@ -583,9 +607,16 @@ object IndexMaintenance {
     */
   final case class AutoCompactPolicy(everyBatches: Int = 0,
       fileThreshold: Int = 0, targetFileBytes: Long = 128L << 20) {
-    private[graft] def enabled: Boolean = everyBatches > 0 || fileThreshold > 0
-    private[graft] def batchDue(batchId: Long): Boolean =
-      everyBatches > 0 && (batchId + 1) % everyBatches == 0
+    /** Whether batch `batchId` should compact the family whose probe
+      * store is `probeStore` at `root`: the store has data files, and the
+      * batch cadence fires or the backlog is past the threshold.
+      */
+    private[graft] def due(spark: SparkSession, root: String, probeStore: String,
+        batchId: Long): Boolean = (everyBatches > 0 || fileThreshold > 0) && {
+      val files = storeDataFiles(spark, root, probeStore)
+      files > 0 && ((everyBatches > 0 && (batchId + 1) % everyBatches == 0) ||
+        (fileThreshold > 0 && files > fileThreshold))
+    }
   }
 
   /** Data-file count of one store in the root's current generation; 0
@@ -609,9 +640,6 @@ object IndexMaintenance {
     *   - `target_files`: what a compaction at `targetFileBytes` would
     *     rewrite the store to; `files` far above it = compact now;
     *   - `rows`: parquet row count (footer-derived — no data scan);
-    *   - `keyed_batches` / `folded_batches`: live keyed segments / keys
-    *     already compacted, for the batch-keyed counted stores (0/0 for
-    *     plain append stores);
     *   - `params`: the params rendered as JSON on the `params` row, null
     *     elsewhere.
     *
@@ -624,16 +652,15 @@ object IndexMaintenance {
     val stores = snap.stores.map { st =>
       val files = snap.files(st)
       (st, files.size.toLong, files.map(_._2).sum, snap.read(st).count(),
-        snap.targetFiles(st, targetFileBytes).toLong, snap.keys(st).size.toLong,
-        snap.folded(st).size.toLong, null: String, snap.generation)
+        snap.targetFiles(st, targetFileBytes).toLong, null: String, snap.generation)
     }
     val params = Option.when(snap.params.nonEmpty) {
       val o = json.createObjectNode()
       snap.params.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
-      ("params", 0L, 0L, 1L, 0L, 0L, 0L, json.writeValueAsString(o), snap.generation)
+      ("params", 0L, 0L, 1L, 0L, json.writeValueAsString(o), snap.generation)
     }
     (stores ++ params).sortBy(_._1).toDF("store", "files", "bytes", "rows",
-      "target_files", "keyed_batches", "folded_batches", "params", "generation")
+      "target_files", "params", "generation")
   }
 
   /** RETRACTION (takedown) support shared by every persisted index — the

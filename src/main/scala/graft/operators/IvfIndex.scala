@@ -124,13 +124,14 @@ object IvfIndex {
     * the batch's own kernel assignment, never a retrain or corpus touch.
     */
   def appendBatch(emb: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val spark = emb.sparkSession
-    IndexMaintenance.withWriterLease(spark, path) { tx =>
-      val p = paramsOf(tx.snapshot)
-      tx.append("cells", assignments(staged(emb, idCol, vecCol),
-        centroidsOf(tx.snapshot), p.replicas))
-    }
+      path: String): Unit =
+    IndexMaintenance.withWriterLease(emb.sparkSession, path)(
+      appendCells(emb, idCol, vecCol))
+
+  private[graft] def appendCells(emb: DataFrame, idCol: String,
+      vecCol: String): IndexMaintenance.Tx => Unit = { tx =>
+    tx.append("cells", assignments(staged(emb, idCol, vecCol),
+      centroidsOf(tx.snapshot), paramsOf(tx.snapshot).replicas))
   }
 
   /** RETRACT indexed vectors (takedown): tombstone the ids — probes drop

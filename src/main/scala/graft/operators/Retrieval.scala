@@ -227,34 +227,19 @@ object Retrieval {
 
   /** Append one batch's term statistics (must be DISJOINT from the docs
     * already indexed — df additivity is the merge-on-read contract).
+    * Exactly-once: stat rows carry no replay identity, so a re-run append
+    * double-counts. The streaming ingest's append is exactly-once under
+    * replay because it runs under the root's batch watermark
+    * ([[IndexMaintenance.withWriterLease]]).
     */
   def appendToTermStatsIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path)(
-      _.append("terms", termStats(delta, idCol, textCol)))
+      appendTermStats(delta, idCol, textCol))
 
-  /** BATCH-ID-KEYED append — the REPLAY-IDEMPOTENT form a streaming
-    * ingest needs: where [[appendToTermStatsIndex]]'s plain append
-    * double-counts if re-run (stat rows carry no replay identity — the
-    * documented exactly-once contract), this writes the batch's delta
-    * as a KEYED segment ([[IndexMaintenance.Tx.writeKeyed]]): an
-    * at-least-once foreachBatch replay replaces its own delta instead of
-    * duplicating it (the sink's `batch=<id>` idempotence pattern applied
-    * to a counted store), and a batch a compaction already folded is
-    * skipped. `lineage` namespaces the keys per ingest LINEAGE
-    * (checkpoint identity), so a fresh ingest pointed at an existing
-    * store cannot replace a previous lineage's deltas by reusing batch
-    * ids 0, 1, ….
-    */
-  def appendToTermStatsIndexKeyed(delta: DataFrame, idCol: String,
-      textCol: String, path: String, batchKey: Long,
-      lineage: String = ""): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path)(
-      _.writeKeyed("terms", keyedName(batchKey, lineage),
-        termStats(delta, idCol, textCol)))
-
-  private[graft] def keyedName(batchKey: Long, lineage: String): String =
-    if (lineage.isEmpty) s"b$batchKey" else s"b${lineage}_$batchKey"
+  private[graft] def appendTermStats(delta: DataFrame, idCol: String,
+      textCol: String): IndexMaintenance.Tx => Unit =
+    _.append("terms", termStats(delta, idCol, textCol))
 
   /** RETRACT docs (takedown) from the term-stats index: append their
     * statistics NEGATED — df and tl are additive, so merge-on-read sums
@@ -303,10 +288,8 @@ object Retrieval {
   }
 
   /** Fold accumulated append deltas into one summed segment — the
-    * small-files countermeasure. Sums are per token, so the folded store
-    * is bit-identical to merge-on-read by construction; the keyed deltas
-    * it folds are recorded in the same commit, so a later replay of one
-    * of them is skipped instead of double-counted.
+    * small-files countermeasure. Sums are per token, so the compacted
+    * store is bit-identical to merge-on-read by construction.
     */
   def compactTermStatsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = IndexMaintenance.withWriterLease(spark, path) { tx =>
@@ -425,7 +408,7 @@ object Retrieval {
     *     row-group level (PlanSpec pins the pushed filter).
     *   - `ptotals`: one (n_docs, t_len, min_id, max_id) row per appended
     *     batch; corpus N and Σdl are the SUM over batch rows (additive for
-    *     disjoint batches), folded to one row by compaction. The id-range
+    *     disjoint batches), summed to one row by compaction. The id-range
     *     columns are the batch's REPLAY IDENTITY: batches hold disjoint
     *     doc_ids, so two legitimate batches can never produce identical
     *     rows, while a crash-replayed append reproduces its row exactly —
@@ -443,13 +426,16 @@ object Retrieval {
     * TakeOrdered(k). Independent of corpus size for fixed term
     * selectivity; grows with df(term) exactly as an inverted index should.
     *
-    * Crash/replay posture: a re-run append can duplicate a batch's rows
-    * (the at-least-once contract every store here shares). Queries
-    * TOLERATE duplicates end to end — [[topKFromIndex]] collapses
-    * (token, doc_id) posting repeats with max(tf) and ptotals batch-row
-    * repeats with dropDuplicates on the replay identity (exact replays
-    * are identical rows in both stores) — and compaction drops them
-    * physically. Single writer at a time, like every store.
+    * Crash/replay posture: the streaming ingest appends under the root's
+    * batch watermark ([[IndexMaintenance.withWriterLease]]), so a
+    * replayed micro-batch lands once. A plain append re-run by hand can
+    * still duplicate a batch's rows (the at-least-once contract every
+    * store here shares), and queries TOLERATE that end to end —
+    * [[topKFromIndex]] collapses (token, doc_id) posting repeats with
+    * max(tf) and ptotals batch-row repeats with dropDuplicates on the
+    * replay identity (exact replays are identical rows in both stores) —
+    * and compaction drops them physically. Single writer at a time, like
+    * every store.
     */
   def buildPostingsIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
@@ -468,38 +454,15 @@ object Retrieval {
     */
   def appendToPostingsIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) { tx =>
-      val (post, tot) = postingsOf(delta, idCol, textCol)
-      IndexMaintenance.inParallelAll(Seq(
-        () => tx.append("postings", post), () => tx.append("ptotals", tot)))
-    }
+    IndexMaintenance.withWriterLease(delta.sparkSession, path)(
+      appendPostings(delta, idCol, textCol))
 
-  /** [[appendToPostingsIndex]] for a CONTINUOUS ingest whose replay
-    * window spans compactions: the postings rows append plain (their
-    * (token, doc_id) identity collapses replays at read and at the next
-    * fold), but the ptotals row — a COUNT with no row identity once a
-    * compaction has summed it — writes as a segment keyed
-    * `b<lineage>_<id>` ([[IndexMaintenance.Tx.writeKeyed]]), and the
-    * whole append SKIPS when a compaction already folded that key.
-    * Without this, the at-least-once worst case
-    * (append → auto-compaction folds it → crash before checkpoint commit
-    * → replay) re-appends a total row the sum already contains and every
-    * later idf shifts. Same contract as the keyed term-stats/drift
-    * appends; a given batch must flow through either this or the plain
-    * append, never both.
-    */
-  def appendToPostingsIndexKeyed(delta: DataFrame, idCol: String,
-      textCol: String, path: String, batchKey: Long,
-      lineage: String = ""): Unit =
-    IndexMaintenance.withWriterLease(delta.sparkSession, path) { tx =>
-      val name = keyedName(batchKey, lineage)
-      if (!tx.snapshot.folded("ptotals")(name)) {
-        val (post, tot) = postingsOf(delta, idCol, textCol)
-        IndexMaintenance.inParallelAll(Seq(
-          () => tx.append("postings", post),
-          () => tx.writeKeyed("ptotals", name, tot)))
-      }
-    }
+  private[graft] def appendPostings(delta: DataFrame, idCol: String,
+      textCol: String): IndexMaintenance.Tx => Unit = { tx =>
+    val (post, tot) = postingsOf(delta, idCol, textCol)
+    IndexMaintenance.inParallelAll(Seq(
+      () => tx.append("postings", post), () => tx.append("ptotals", tot)))
+  }
 
   /** RETRACT indexed docs (takedown) from the postings index — the exact
     * mirror of [[appendToPostingsIndex]], because BM25 statistics are
@@ -563,9 +526,9 @@ object Retrieval {
   /** Fold both stores: postings drop replayed (token, doc_id) duplicates
     * and tombstoned docs (the vacuum — their N/Σdl corrections are already
     * in the ptotals sum) and rewrite token-clustered at size-derived file
-    * counts; ptotals sum to one row, and the keyed batches it folds are
-    * skipped if replayed. Both stores and the tombstone drop commit
-    * together; queries are bit-identical before and after (spec-pinned).
+    * counts; ptotals sum to one row. Both stores and the tombstone drop
+    * commit together; queries are bit-identical before and after
+    * (spec-pinned).
     */
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): Unit =
@@ -716,7 +679,11 @@ object Retrieval {
   def appendToPositionalIndex(delta: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
     IndexMaintenance.withWriterLease(delta.sparkSession, path)(
-      _.append("positions", positionsOf(delta, idCol, textCol)))
+      appendPositions(delta, idCol, textCol))
+
+  private[graft] def appendPositions(delta: DataFrame, idCol: String,
+      textCol: String): IndexMaintenance.Tx => Unit =
+    _.append("positions", positionsOf(delta, idCol, textCol))
 
   /** RETRACT indexed docs (takedown): tombstones only — phrase queries
     * drop the ids before start-candidate generation; the next

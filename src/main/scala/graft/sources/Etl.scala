@@ -217,7 +217,7 @@ final class Etl(val spark: SparkSession, val workDir: String,
       // a failure before the commit point drops this commit's staged dirs;
       // any `.swap` it renamed is debris the next writer's recovery deletes
       if (!committed) staged.foreach { case (n, _) => f.delete(stagePath(n), true) }
-      IndexMaintenance.releaseLease(spark, workDir)
+      IndexMaintenance.releaseLease(spark, workDir, writerId)
     }
   }
 

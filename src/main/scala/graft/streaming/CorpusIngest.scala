@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{IncrementalDedup, IndexMaintenance, Staging}
 import graft.operators.Staging.Stageable
 
@@ -19,24 +18,15 @@ import graft.operators.Staging.Stageable
   *
   * No reference analogue (the reference has no streaming and no dedup);
   * the construction is Structured Streaming's `foreachBatch` pattern for
-  * sinks with custom logic, with exactly-once output by the standard
-  * batch-id idempotence argument:
-  *
-  *   - the CHECKPOINT records which source files each committed batch
-  *     consumed — a restart never re-reads acknowledged input, and new
-  *     arrivals drain as fresh batches;
-  *   - the sink write is `overwrite` into a `batch=<id>` partition
-  *     directory, so a replayed batch (crash after the sink write but
-  *     before the checkpoint commit — foreachBatch is at-least-once)
-  *     overwrites its own output instead of duplicating it;
-  *   - the index append is replay-SAFE rather than idempotent: a replayed
-  *     append duplicates band/shingle rows, which candidate generation
-  *     and the verify path already dedup (IncrementalDedup's documented
-  *     recovery contract), and the keep-list recomputed against the
-  *     post-append index is IDENTICAL — a batch doc never pairs with its
-  *     own indexed copy (id equality is excluded) and batch-internal
-  *     pairs are resolved by the same min-id rule whether or not the
-  *     partner's rows are already indexed. IngestSpec pins this replay.
+  * sinks with custom logic, run by the [[Drain]] both ingests share, with
+  * exactly-once output: a restart never re-reads acknowledged input, a
+  * replayed batch overwrites its own sink partition, and every index root
+  * the batch appends to records the batch in its manifest's watermark, so
+  * a replayed append is skipped where it already landed. The keep list
+  * recomputed on a replay is IDENTICAL — a batch doc never pairs with its
+  * own indexed copy (id equality is excluded) and batch-internal pairs are
+  * resolved by the same min-id rule whether or not the partner's rows are
+  * already indexed. IngestSpec pins this replay.
   *
   * Dedup semantics are GREEDY FIRST-FIT (the standard online form): a new
   * doc drops iff it near-dups a previously KEPT doc (or a lower-id doc in
@@ -62,22 +52,17 @@ object CorpusIngest {
     *   - `positionsPath`: the exact-phrase positional index
     *     ([[graft.operators.Retrieval.appendToPositionalIndex]]);
     *   - `termStatsPath`: the frozen-ranker BM25 statistics store
-    *     ([[graft.operators.Retrieval.appendToTermStatsIndexKeyed]]);
+    *     ([[graft.operators.Retrieval.appendToTermStatsIndex]]);
     *   - `driftGramsPath`: the monitoring gram-count index
-    *     ([[graft.operators.CorpusCompare.appendToGramIndexKeyed]]).
+    *     ([[graft.operators.CorpusCompare.appendToGramIndex]]).
     *
-    * Replay posture: the postings/gram-postings/positions stores are
-    * replay-TOLERANT by design (a re-run batch appends identical rows,
-    * which their queries collapse and their compactions drop), so the
-    * ingest's at-least-once foreachBatch window is safe there exactly as
-    * it is for the dedup index. The two COUNTED stores (term stats,
-    * drift grams) are different: their rows carry no replay identity, so
-    * a plain re-appended batch would double-count — the ingest therefore
-    * appends them BATCH-ID-KEYED (each batch's delta replaces its own
-    * `b<id>` segment, the sink's `batch=<id>` idempotence pattern),
-    * which makes the at-least-once window safe for counts too. Survivor
-    * batches append with their SINK text (i.e. canonical when
-    * `canonicalize` is on), so index content always matches the
+    * Replay posture: every store is exactly-once under the ingest's
+    * at-least-once foreachBatch window, the COUNTED stores (term stats,
+    * drift grams, the postings totals) included: each append runs under
+    * its root's batch watermark, so a replayed batch, before or after the
+    * compaction it triggered, is skipped at every root it already landed
+    * in. Survivor batches append with their SINK text (i.e. canonical
+    * when `canonicalize` is on), so index content always matches the
     * published corpus.
     */
   final case class IndexSuite(postingsPath: Option[String] = None,
@@ -85,12 +70,7 @@ object CorpusIngest {
       positionsPath: Option[String] = None,
       gramN: Int = 3,
       termStatsPath: Option[String] = None,
-      driftGramsPath: Option[String] = None) {
-    private[graft] def any: Boolean =
-      postingsPath.isDefined || gramPostingsPath.isDefined ||
-        positionsPath.isDefined || termStatsPath.isDefined ||
-        driftGramsPath.isDefined
-  }
+      driftGramsPath: Option[String] = None)
 
   /** The BANNED-CONTENT store name, living under the dedup index root:
     * one column (`fp`) of canonical content fingerprints
@@ -107,20 +87,6 @@ object CorpusIngest {
     * has ever been issued.
     */
   val BannedStore = "banned"
-
-  /** The ingest LINEAGE id — a stable fingerprint of the checkpoint
-    * location, namespacing the counted stores' batch keys: streaming
-    * batch ids restart at 0 for every fresh checkpoint, so without the
-    * namespace a decommission-and-replace ingest pointed at the SAME
-    * term-stats/drift stores would replace the previous lineage's b0,
-    * b1, … deltas. Same checkpoint (and so same replay window) ⇒ same
-    * lineage ⇒ the keyed-replace idempotence is untouched.
-    */
-  def lineageOf(checkpointPath: String): String = {
-    val d = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(checkpointPath.getBytes("UTF-8"))
-    d.take(4).map(b => f"${b & 0xff}%02x").mkString
-  }
 
   /** BAN content: append the docs' canonical fingerprints to the banned
     * store at `indexPath`. Idempotent under replay (duplicate fp rows are
@@ -213,54 +179,29 @@ object CorpusIngest {
       require(ph.nonEmpty && ph.forall(_.nonEmpty),
         "banned needles must be non-empty token sequences")
     }
-    // like EventStreams.drainSession: a bounded drain's exchanges should
-    // be sized to ITS data, not the cluster default — a gate-scale batch
-    // pays ~10 shuffles whose per-task overhead dwarfs the rows. A
-    // production ingest sizes this to the arrival volume (or leaves the
-    // session untouched).
-    val spark = shufflePartitions.fold(spark0) { n =>
-      val s = spark0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
-      s
-    }
-    val schema = spark.read.parquet(srcDir).schema
-    val src0 = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(srcDir)
-    val src =
+    val prepare: DataFrame => DataFrame =
       if (canonicalize)
-        src0.withColumn(textCol, graft.operators.TextAnalysis.normalizeText(col(textCol)))
-      else src0
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // staging frames (shingles, signatures, candidates) die with the
-        // batch — a 10k-batch ingest must not accumulate 10k persists
-        Staging.scoped(ingestBatch(batch, batchId, indexPath, sinkPath,
-          idCol, textCol, jaccardThreshold, params, bannedNeedles, maintain,
-          lineage = lineageOf(checkpointPath), autoCompact = autoCompact))
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    survivors(spark, sinkPath, schema)
+        _.withColumn(textCol, graft.operators.TextAnalysis.normalizeText(col(textCol)))
+      else identity
+    Drain.run(spark0, srcDir, sinkPath, checkpointPath, shufflePartitions, prepare)(
+      ingestBatch(_, _, indexPath, sinkPath, idCol, textCol, jaccardThreshold,
+        params, bannedNeedles, maintain, autoCompact))
   }
 
   /** One micro-batch: dedup against the index, publish survivors
-    * idempotently, append them to the index. Stages into the caller's
-    * scope (the stream opens one per micro-batch). Package-visible so the
-    * spec can replay a committed batch and pin the at-least-once story.
+    * idempotently, append them to every maintained root under the batch's
+    * replay guard. Stages into the caller's scope (the drain opens one per
+    * micro-batch). Package-visible so the spec can replay a committed
+    * batch and pin the exactly-once story.
     */
-  private[graft] def ingestBatch(batch0: DataFrame, batchId: Long,
+  private[graft] def ingestBatch(batch0: DataFrame, b: IndexMaintenance.Batch,
       indexPath: String, sinkPath: String, idCol: String, textCol: String,
       jaccardThreshold: Double, params: IncrementalDedup.Params,
       bannedNeedles: Seq[Seq[String]] = Nil,
       maintain: IndexSuite = IndexSuite(),
-      lineage: String = "",
       autoCompact: IndexMaintenance.AutoCompactPolicy =
         IndexMaintenance.AutoCompactPolicy()): Unit = {
+    import graft.operators.{CorpusCompare, Decontaminate, Retrieval}
     // one generation of the dedup root serves the whole batch's reads
     val snap = IndexMaintenance.snapshot(batch0.sparkSession, indexPath)
     // the BANNED-CONTENT door first: retracted-and-banned bytes drop
@@ -287,19 +228,7 @@ object CorpusIngest {
         val bad = toksF.filter(hitAny).select("id")
         batchB.join(broadcast(bad), batchB(idCol) === bad("id"), "left_anti")
       }
-    if (batch.isEmpty) {
-      // A batch the DOORS emptied (banned content / needles) must still
-      // overwrite its own sink partition: a replay whose content was
-      // banned between the original sink write and the checkpoint commit
-      // would otherwise leave the STALE partition — now-banned content —
-      // published forever. A genuinely empty source batch can have no
-      // stale partition (batch content is deterministic from the
-      // checkpoint), and the empty overwrite is harmless there too.
-      if (!batch0.isEmpty)
-        batch0.limit(0).write.mode("overwrite")
-          .parquet(s"$sinkPath/batch=$batchId")
-      return
-    }
+    if (Drain.emptied(batch0, batch, sinkPath, b.id)) return
     val spark = batch.sparkSession
     // the batch signs ONCE: the staged (id, sh, sig) frame feeds the
     // pair search, and the survivor append reuses it — a standalone
@@ -308,124 +237,42 @@ object CorpusIngest {
     // first append pins them.
     val p = if (snap.params.isEmpty) params else IncrementalDedup.paramsOf(snap)
     val base = IncrementalDedup.signed(batch, idCol, textCol, p)
-    // the pair search's frames read the index stores the appends below
-    // write, so they get a scope of their own, closed once the keep list
-    // is published: a frame still cached at an append would be recached
-    // by the write for nobody to read
-    Staging.scoped {
+    val kept = Drain.publish(batch, sinkPath, b.id) {
       // staged: the keep-list derivation consumes the pair set three
       // times (both drop directions + the batch-internal exemption) —
       // unpersisted, the exact-Jaccard verify join would re-run for each
       val pairs = IncrementalDedup.newBatchPairsFrom(base, snap, p,
         jaccardThreshold).stagePersist()
       IncrementalDedup.keepListFromPairs(batch, idCol, pairs)
-        .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
     }
-    // append the survivors' already-staged rows, identified from the
-    // sink read-back (the write above is the materialization point —
-    // measured: broadcasting a CACHED keep list instead re-derives the
-    // keep plan inside the broadcast build and costs 5× the tiny read);
-    // schema pinned from the batch so the read skips footer inference
-    val kept = spark.read.schema(batch.schema)
-      .parquet(s"$sinkPath/batch=$batchId")
     val keptIds = kept.select(col(idCol).as("id"))
-    // The core index append and every standing-store FAMILY append
-    // mutate DISJOINT roots under their own leases — mutually
-    // order-free, so they overlap (inParallelAll, the §2.6 rule the
-    // paired writes already use) instead of summing up to six
-    // job-scheduling + commit latencies per micro-batch. Each family's
-    // INTERNAL build-if-missing → append order is preserved inside its
-    // thunk — those orderings are crash-recovery invariants.
-    val appends = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    appends += (() => IncrementalDedup.appendSigned(
-      base.join(broadcast(keptIds), Seq("id"), "left_semi"),
-      indexPath, p))
-    // keep the configured standing indices current with the same
-    // survivors (sink text, so canonical when the ingest is)
-    if (maintain.any) {
-      // KEYED append: the postings ptotals row is a count with no
-      // replay identity once a compaction has summed it — the
-      // batch-keyed form keeps the at-least-once window safe even when
-      // the auto-compaction below folds the triggering batch before a
-      // crash-and-replay
-      maintain.postingsPath.foreach { mp =>
-        appends += (() => graft.operators.Retrieval
-          .appendToPostingsIndexKeyed(kept, idCol, textCol, mp, batchId,
-            lineage))
-      }
-      maintain.gramPostingsPath.foreach { mp =>
-        appends += (() => graft.operators.Decontaminate
-          .appendToGramPostingsIndexOrPin(kept, idCol, textCol, mp, maintain.gramN))
-      }
-      maintain.positionsPath.foreach { mp =>
-        appends += (() => graft.operators.Retrieval
-          .appendToPositionalIndex(kept, idCol, textCol, mp))
-      }
-      // the COUNTED stores append batch-id-KEYED (replace-own-delta,
-      // lineage-namespaced), so an at-least-once replay cannot
-      // double-count
-      maintain.termStatsPath.foreach { mp =>
-        appends += (() => graft.operators.Retrieval.appendToTermStatsIndexKeyed(
-          kept, idCol, textCol, mp, batchId, lineage))
-      }
-      maintain.driftGramsPath.foreach { mp =>
-        appends += (() => graft.operators.CorpusCompare.appendToGramIndexKeyed(
-          kept, col(textCol), mp, batchId, lineage))
-      }
-    }
-    IndexMaintenance.inParallelAll(appends.toSeq)
-    // AUTOMATIC MAINTENANCE: fold the appended deltas when the policy
-    // says so — per family, under each compactor's own lease, after the
-    // batch's appends (so the triggering batch's rows fold too). Runs
-    // inside the foreachBatch: abort-safe by the lease, crash-safe by
-    // the manifest commit, and a replayed triggering batch re-compacts
-    // idempotently (the keyed stores' folded keys keep counts exact
-    // across the replay). Each family probes its own representative
-    // store so a threshold policy only pays for the family over it.
-    if (autoCompact.enabled)
-      maybeCompactSuite(spark, batchId, indexPath, maintain, autoCompact)
-  }
-
-  /** Run every due compaction for the document ingest's store families —
-    * the dedup index plus whatever the [[IndexSuite]] maintains. A family
-    * is due when the policy's batch cadence fires (all families compact
-    * together) or its probe store's file backlog crosses the threshold
-    * (only that family pays). Missing stores (no survivors yet) skip.
-    */
-  private[graft] def maybeCompactSuite(spark: SparkSession, batchId: Long,
-      indexPath: String, maintain: IndexSuite,
-      policy: IndexMaintenance.AutoCompactPolicy): Unit = {
-    val im = IndexMaintenance
-    def due(root: String, probeStore: String): Boolean = {
-      val files = im.storeDataFiles(spark, root, probeStore)
-      files > 0 && (policy.batchDue(batchId) ||
-        (policy.fileThreshold > 0 && files > policy.fileThreshold))
-    }
-    if (due(indexPath, "bands"))
-      im.compactDedupIndex(spark, indexPath, policy.targetFileBytes)
-    maintain.postingsPath.foreach { mp =>
-      if (due(mp, "postings"))
-        graft.operators.Retrieval.compactPostingsIndex(spark, mp,
-          policy.targetFileBytes)
-    }
-    maintain.gramPostingsPath.foreach { mp =>
-      if (due(mp, "grams"))
-        graft.operators.Decontaminate.compactGramPostingsIndex(spark, mp,
-          policy.targetFileBytes)
-    }
-    maintain.positionsPath.foreach { mp =>
-      if (due(mp, "positions"))
-        graft.operators.Retrieval.compactPositionalIndex(spark, mp,
-          policy.targetFileBytes)
-    }
-    maintain.termStatsPath.foreach { mp =>
-      if (due(mp, "terms"))
-        graft.operators.Retrieval.compactTermStatsIndex(spark, mp)
-    }
-    maintain.driftGramsPath.foreach { mp =>
-      if (due(mp, "grams"))
-        graft.operators.CorpusCompare.compactGramIndex(spark, mp)
-    }
+    // the dedup index takes the survivors' already-staged rows; the
+    // configured standing indices take the survivors' sink text
+    Drain.appendAll(spark, b,
+      Seq(indexPath -> IncrementalDedup.appendSigned(
+        base.join(broadcast(keptIds), Seq("id"), "left_semi"), p)) ++
+      maintain.postingsPath.map(_ -> Retrieval.appendPostings(kept, idCol, textCol)) ++
+      maintain.gramPostingsPath.map(_ ->
+        Decontaminate.appendGramPostingsOrPin(kept, idCol, textCol, maintain.gramN)) ++
+      maintain.positionsPath.map(_ -> Retrieval.appendPositions(kept, idCol, textCol)) ++
+      maintain.termStatsPath.map(_ -> Retrieval.appendTermStats(kept, idCol, textCol)) ++
+      maintain.driftGramsPath.map(_ -> CorpusCompare.appendGrams(kept, col(textCol))))
+    // each family probes its own representative store, so a threshold
+    // policy only pays for the family over it
+    val bytes = autoCompact.targetFileBytes
+    Drain.compactDue(spark, b.id, autoCompact,
+      Seq((indexPath, "bands",
+        () => IndexMaintenance.compactDedupIndex(spark, indexPath, bytes))) ++
+      maintain.postingsPath.map(mp => (mp, "postings",
+        () => Retrieval.compactPostingsIndex(spark, mp, bytes))) ++
+      maintain.gramPostingsPath.map(mp => (mp, "grams",
+        () => Decontaminate.compactGramPostingsIndex(spark, mp, bytes))) ++
+      maintain.positionsPath.map(mp => (mp, "positions",
+        () => Retrieval.compactPositionalIndex(spark, mp, bytes))) ++
+      maintain.termStatsPath.map(mp => (mp, "terms",
+        () => Retrieval.compactTermStatsIndex(spark, mp))) ++
+      maintain.driftGramsPath.map(mp => (mp, "grams",
+        () => CorpusCompare.compactGramIndex(spark, mp))))
   }
 
   /** The accumulated survivor set at `sinkPath` (empty-sink safe). The

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.operators.{IncrementalAnn, IncrementalDedup, IndexMaintenance, IvfIndex, Staging}
+import graft.operators.{IncrementalAnn, IncrementalDedup, IndexMaintenance, IvfIndex}
 import graft.operators.Staging.Stageable
 
 /** CONTINUOUS embedding-side hygiene — the VECTOR twin of
@@ -17,18 +16,21 @@ import graft.operators.Staging.Stageable
   * shape: per-arrival cost is the arrival's own projections + one
   * column-pruned 20 B/row signature scan, never a corpus re-projection.
   *
-  * Same construction and guarantees as the document ingest:
+  * Same construction and guarantees as the document ingest (the shared
+  * [[Drain]]):
   *
   *   - checkpointed `foreachBatch` over a file source (a restart never
   *     re-reads acknowledged input);
   *   - the sink write is `overwrite` into a `batch=<id>` partition, so
   *     an at-least-once replay overwrites its own output;
-  *   - the index appends are replay-SAFE: duplicated sig/vec/cell rows
-  *     collapse in candidate generation and compaction, and the
-  *     keep-list recomputed against the post-append index is identical
-  *     (a batch vector never pairs with its own indexed copy — id
-  *     equality is excluded — and batch-internal pairs resolve by the
-  *     same min-id rule either way);
+  *   - the index appends are exactly-once: the signature and IVF-cell
+  *     roots record each batch in their manifest's watermark, so a
+  *     replayed append is skipped where it already landed, and the
+  *     keep-list recomputed on the replay is identical (a batch vector
+  *     never pairs with its own indexed copy — id equality is excluded —
+  *     and batch-internal pairs resolve by the same min-id rule either
+  *     way). Duplicate rows from plain appends re-run by hand still
+  *     collapse in candidate generation and compaction;
   *   - dedup semantics are GREEDY FIRST-FIT, like the document ingest:
   *     a new vector drops iff its exact cosine vs a previously KEPT
   *     vector (or a lower-id batch vector) reaches `threshold`.
@@ -110,38 +112,19 @@ object EmbeddingIngest {
         IndexMaintenance.AutoCompactPolicy()): DataFrame = {
     require(numPlanes >= 1 && numPlanes <= 62,
       s"bootstrap needs an explicit banding width in [1, 62], got $numPlanes")
-    val spark = shufflePartitions.fold(spark0) { n =>
-      val s = spark0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
-      s
-    }
-    ivfPath.foreach(p => IvfIndex.readParams(spark, p)) // pre-built, loudly
-    val schema = spark.read.parquet(srcDir).schema
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch's staged projections die with it
-        Staging.scoped(ingestBatch(batch, batchId, indexPath, sinkPath, idCol,
-          vecCol, dim, threshold, numPlanes, numTables, ivfPath, autoCompact))
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    CorpusIngest.survivors(spark, sinkPath, schema)
+    ivfPath.foreach(p => IvfIndex.readParams(spark0, p)) // pre-built, loudly
+    Drain.run(spark0, srcDir, sinkPath, checkpointPath, shufflePartitions)(
+      ingestBatch(_, _, indexPath, sinkPath, idCol, vecCol, dim, threshold,
+        numPlanes, numTables, ivfPath, autoCompact))
   }
 
   /** One micro-batch: dedup against the signature index, publish
-    * survivors idempotently, append them to every maintained store.
-    * Stages into the caller's scope (the stream opens one per
-    * micro-batch). Package-visible so the spec can replay a committed
-    * batch.
+    * survivors idempotently, append them to every maintained root under
+    * the batch's replay guard. Stages into the caller's scope (the drain
+    * opens one per micro-batch). Package-visible so the spec can replay a
+    * committed batch.
     */
-  private[graft] def ingestBatch(batch: DataFrame, batchId: Long,
+  private[graft] def ingestBatch(batch: DataFrame, b: IndexMaintenance.Batch,
       indexPath: String, sinkPath: String, idCol: String, vecCol: String,
       dim: Int, threshold: Double, numPlanes: Int, numTables: Int,
       ivfPath: Option[String],
@@ -151,19 +134,9 @@ object EmbeddingIngest {
     val snap = IndexMaintenance.snapshot(batch.sparkSession, indexPath)
     // the banned-vector door first: retracted-and-banned content drops
     // before dedup, the sink, and every index — identity when no ban
-    val batchF = filterBanned(batch, vecCol, snap)
-    if (batchF.isEmpty) {
-      // a door-emptied batch still overwrites its own sink partition (a
-      // replay whose content was banned after the original sink write
-      // must not leave the stale — now banned — partition published);
-      // see CorpusIngest.ingestBatch for the full argument
-      if (!batch.isEmpty)
-        batch.limit(0).write.mode("overwrite")
-          .parquet(s"$sinkPath/batch=$batchId")
-      return
-    }
-    val batch0 = batchF
-    val spark = batch0.sparkSession
+    val admitted = filterBanned(batch, vecCol, snap)
+    if (Drain.emptied(batch, admitted, sinkPath, b.id)) return
+    val spark = admitted.sparkSession
     // the batch projects ONCE: the staged (id, vec) + full-width
     // signature frames feed the pair search AND the survivor append
     // (the document ingest's signed-frame rule — the old appendBatch
@@ -173,48 +146,23 @@ object EmbeddingIngest {
     val p =
       if (snap.params.isEmpty) IncrementalAnn.bootstrapParams(dim, numPlanes, numTables)
       else IncrementalAnn.paramsOf(snap)
-    val (d, sigsFull) = IncrementalAnn.stagedSigs(batch0, idCol, vecCol, p)
+    val (d, sigsFull) = IncrementalAnn.stagedSigs(admitted, idCol, vecCol, p)
     // exact-cosine-verified pairs of the batch vs the index and within
     // the batch; the greedy keep-list derivation is SHARED with the
-    // document ingest (it only consumes (id_a, id_b) pairs). Scoped as in
-    // the document ingest: these frames read the stores appended below.
-    Staging.scoped {
+    // document ingest (it only consumes (id_a, id_b) pairs)
+    val kept = Drain.publish(admitted, sinkPath, b.id) {
       val pairs = IncrementalAnn.newBatchPairsFromSigs(d, sigsFull,
         snap, p, threshold).stagePersist()
-      IncrementalDedup.keepListFromPairs(batch0, idCol, pairs)
-        .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
+      IncrementalDedup.keepListFromPairs(admitted, idCol, pairs)
     }
-    // survivors re-read from the sink (the materialization point — the
-    // document ingest's measured rule); schema pinned from the batch so
-    // the read skips footer inference
-    val kept = spark.read.schema(batch0.schema)
-      .parquet(s"$sinkPath/batch=$batchId")
-    // LSH store and IVF store are disjoint roots under their own leases —
-    // mutually order-free appends overlap (the §2.6 rule the document
-    // ingest's suite appends use)
-    IndexMaintenance.inParallelAll(Seq(
-      () => IncrementalAnn.appendStaged(d, sigsFull,
-        kept.select(col(idCol).as("id")), indexPath, p)) ++
-      ivfPath.map(p2 => () =>
-        IvfIndex.appendBatch(kept, idCol, vecCol, p2)))
-    // automatic maintenance, mirroring the document ingest: fold the
-    // appended deltas when the policy fires, after this batch's appends
-    // (lease-isolated, committed by manifest, replay re-compacts
-    // idempotently)
-    if (autoCompact.enabled) {
-      def due(root: String, probeStore: String): Boolean = {
-        val files = IndexMaintenance.storeDataFiles(spark, root, probeStore)
-        files > 0 && (autoCompact.batchDue(batchId) ||
-          (autoCompact.fileThreshold > 0 &&
-            files > autoCompact.fileThreshold))
-      }
-      if (due(indexPath, "sigs"))
-        IndexMaintenance.compactAnnIndex(spark, indexPath,
-          autoCompact.targetFileBytes)
-      ivfPath.foreach { p =>
-        if (due(p, "cells"))
-          IvfIndex.compact(spark, p, autoCompact.targetFileBytes)
-      }
-    }
+    Drain.appendAll(spark, b,
+      Seq(indexPath -> IncrementalAnn.appendStaged(d, sigsFull,
+        kept.select(col(idCol).as("id")), p)) ++
+      ivfPath.map(_ -> IvfIndex.appendCells(kept, idCol, vecCol)))
+    Drain.compactDue(spark, b.id, autoCompact,
+      Seq((indexPath, "sigs", () => IndexMaintenance.compactAnnIndex(spark,
+        indexPath, autoCompact.targetFileBytes))) ++
+      ivfPath.map(ip => (ip, "cells",
+        () => IvfIndex.compact(spark, ip, autoCompact.targetFileBytes))))
   }
 }

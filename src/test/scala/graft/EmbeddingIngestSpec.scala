@@ -47,6 +47,21 @@ class EmbeddingIngestSpec extends AnyFunSuite with StagingScope {
   private def keptIds(df: DataFrame): Set[Long] =
     df.select("vec_id").collect().map(_.getLong(0)).toSet
 
+  /** The streaming query that drained into `root` (the one key of its
+    * batch watermark).
+    */
+  private def queryOf(root: String): String =
+    IndexMaintenance.snapshot(spark, root).applied.keys.toSeq match {
+      case Seq(q) => q
+      case qs => fail(s"expected one query in the watermark of $root, got $qs")
+    }
+
+  /** Row count of each of `stores` at `root`. */
+  private def rowCounts(root: String, stores: String*): Seq[Long] = {
+    val snap = IndexMaintenance.snapshot(spark, root)
+    stores.map(snap.read(_).count())
+  }
+
   // f1: 1 and 3 are exact clones (3 drops in-batch); 2 fresh; f2: 11 is
   // a near-dup of KEPT 1 (drops against the index at τ=0.9), 12 fresh;
   // f3: 21 near-dups DROPPED 11 — wait: 21 = near(0) too, which also
@@ -105,19 +120,28 @@ class EmbeddingIngestSpec extends AnyFunSuite with StagingScope {
       assert(keptIds(first) == Set(1L, 2L, 12L))
 
       // at-least-once: replay batch 1 (f2) — sink overwritten in place,
-      // survivors unchanged, and a later probe decides identically
-      EmbeddingIngest.ingestBatch(f2.toDF("vec_id", "embedding"), 1L,
+      // survivors unchanged, no row appended and nothing committed (the
+      // root's watermark holds batch 1), and a later probe decides
+      // identically
+      val countsBefore = rowCounts(s"$root/idx", "sigs", "vecs")
+      val genBefore = IndexMaintenance.generation(spark, s"$root/idx")
+      EmbeddingIngest.ingestBatch(f2.toDF("vec_id", "embedding"),
+        IndexMaintenance.Batch(queryOf(s"$root/idx"), 1L),
         s"$root/idx", s"$root/sink", "vec_id", "embedding", dim, 0.9, 8, 8, None)
       val after = graft.streaming.CorpusIngest.survivors(spark, s"$root/sink",
         Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding").schema)
       assert(keptIds(after) == Set(1L, 2L, 12L), "replay changed the sink")
+      assert(rowCounts(s"$root/idx", "sigs", "vecs") == countsBefore,
+        "replay appended to the signature index")
+      assert(IndexMaintenance.generation(spark, s"$root/idx") == genBefore,
+        "replay committed a generation")
       val dropped = Staging.scoped {
         IncrementalAnn.newBatchPairs(
           Seq(31L -> basis(0), 32L -> basis(6)).toDF("vec_id", "embedding"),
           "vec_id", "embedding", s"$root/idx", threshold = 0.9)
           .select("id_b").collect().map(_.getLong(0)).toSet
       }
-      assert(dropped == Set(31L), "duplicated index rows changed a decision")
+      assert(dropped == Set(31L), "the replay changed a decision")
 
       // resume: only the new file drains; published batches untouched
       // (snapshot AFTER the replay — the replay itself legitimately
@@ -268,15 +292,22 @@ class EmbeddingIngestSpec extends AnyFunSuite with StagingScope {
         val fc = IndexMaintenance.storeDataFiles(spark, s"$root/${r}_c", st)
         assert(fa < fc, s"$r/$st: auto=$fa vs control=$fc")
       }
-      // replay of the triggering batch (id 1): appends + compaction
-      // re-run; answers must not move
+      // replay of the triggering batch (id 1): the appends are skipped
+      // (both roots' watermarks hold it) and the compaction re-runs;
+      // answers and row counts must not move
       val before = probes("a")
-      EmbeddingIngest.ingestBatch(f2.toDF("vec_id", "embedding"), 1L,
+      def counts = rowCounts(s"$root/idx_a", "sigs", "vecs") ++
+        rowCounts(s"$root/ivf_a", "cells")
+      val countsBefore = counts
+      EmbeddingIngest.ingestBatch(f2.toDF("vec_id", "embedding"),
+        IndexMaintenance.Batch(queryOf(s"$root/idx_a"), 1L),
         s"$root/idx_a", s"$root/sink_a", "vec_id", "embedding",
         dim, 0.9, 8, 8, Some(s"$root/ivf_a"),
         IndexMaintenance.AutoCompactPolicy(everyBatches = 2))
       assert(probes("a") == before,
         "replaying the compaction-triggering batch must change no answer")
+      assert(counts == countsBefore,
+        "replaying the compaction-triggering batch must append no row")
       assert(keptIds(spark.read.parquet(s"$root/sink_a")) == expectedKept)
     } finally rmTree(root)
   }

@@ -223,7 +223,7 @@ class EtlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with Stag
     // W reaches its commit point and releases: its commit is visible, and
     // the next commit finishes it
     publishMarker(etl)
-    IndexMaintenance.releaseLease(spark, etl.workDir)
+    IndexMaintenance.releaseLease(spark, etl.workDir, "w-holder")
     assert(namesWithoutWriting(etl) == old.map("NEW_" + _))
     assert(commitHeals(etl) == old.map("NEW_" + _) + "X")
     assert(genOf(etl) == "3")

@@ -49,7 +49,7 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     // the single-batch build
     val before = Retrieval.topKFromIndex(spark, root,
       Seq("dup", "vector"), k = 5).collect().map(_.toSeq).toSeq
-    IndexMaintenance.releaseLease(spark, root)
+    IndexMaintenance.releaseLease(spark, root, "w1")
     // after release the same append succeeds and changes the result set
     Retrieval.appendToPostingsIndex(docs.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", root)
@@ -70,7 +70,7 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
       Retrieval.retractFromPostingsIndex(docs.limit(5), "doc_id", "text", root)
     }
     assert(e2.getMessage.contains("concurrent index writer holds the lease"))
-    IndexMaintenance.releaseLease(spark, root)
+    IndexMaintenance.releaseLease(spark, root, "other-compactor")
     Retrieval.compactPostingsIndex(spark, root) // now fine
   }
 
@@ -125,7 +125,53 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
       IndexMaintenance.acquireLease(spark, root, "writerC", 600000L)
     }
     assert(e2.getMessage.contains("holds the lease"))
-    IndexMaintenance.releaseLease(spark, root)
+    IndexMaintenance.releaseLease(spark, root, "writerA")
+  }
+
+  test("a reclaimed writer's release leaves its reclaimer's lease in place") {
+    // A outlives its lease and B reclaims it; A finishing afterwards must
+    // not free B's lease, or C could take it while B still writes
+    val root = fresh("release")
+    new java.io.File(root).mkdirs()
+    IndexMaintenance.acquireLease(spark, root, "writerA", 50L)
+    Thread.sleep(200)
+    IndexMaintenance.acquireLease(spark, root, "writerB", 50L)
+    IndexMaintenance.releaseLease(spark, root, "writerA")
+    val e = intercept[IllegalStateException] {
+      IndexMaintenance.acquireLease(spark, root, "writerC", 600000L)
+    }
+    assert(e.getMessage.contains("holds the lease"))
+    val lock = new java.io.File(root, IndexMaintenance.LockFile)
+    assert(new String(java.nio.file.Files.readAllBytes(lock.toPath), "UTF-8").trim == "writerB")
+    assert(!new java.io.File(root).listFiles.exists(_.getName.contains(".release_")))
+    // B's own release frees the lease
+    IndexMaintenance.releaseLease(spark, root, "writerB")
+    assert(!lock.exists)
+    IndexMaintenance.acquireLease(spark, root, "writerC", 600000L)
+    IndexMaintenance.releaseLease(spark, root, "writerC")
+  }
+
+  test("a manifest written before batch watermarks reads and takes appends") {
+    import spark.implicits._
+    val root = fresh("legacy")
+    Retrieval.buildTermStatsIndex(docs, "doc_id", "text", root)
+    // the previous manifest layout: a `folded` list per store, a `key`
+    // per segment, no `applied`
+    IndexStates.legacyManifest(spark, root)
+    val before = IndexMaintenance.snapshot(spark, root)
+    assert(before.applied.isEmpty)
+    val rows = before.read("terms").count()
+    assert(rows > 0L)
+    val delta = Seq(900001L -> "zzlegacy token").toDF("doc_id", "text")
+    Retrieval.appendToTermStatsIndex(delta, "doc_id", "text", root)
+    IndexMaintenance.withWriterLease(spark, root,
+      batch = Some(IndexMaintenance.Batch("q", 0L)))(
+      Retrieval.appendTermStats(delta, "doc_id", "text"))
+    val after = IndexMaintenance.snapshot(spark, root)
+    assert(after.generation == before.generation + 2)
+    assert(after.applied == Map("q" -> 0L))
+    assert(after.read("terms").filter($"token" === "zzlegacy").count() == 2L)
+    assert(after.read("terms").count() > rows)
   }
 
   test("racing acquirers: exactly one takes a free lease") {
@@ -137,18 +183,19 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     try (1 to 200).foreach { round =>
       val start = new java.util.concurrent.CountDownLatch(1)
       val tries = (1 to 4).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Boolean] {
-          def call(): Boolean = {
+        pool.submit(new java.util.concurrent.Callable[Option[String]] {
+          def call(): Option[String] = {
             start.await()
-            try { IndexMaintenance.acquireLease(spark, root, s"r$round-w$i", 60000L); true }
-            catch { case _: IllegalStateException => false }
+            val id = s"r$round-w$i"
+            try { IndexMaintenance.acquireLease(spark, root, id, 60000L); Some(id) }
+            catch { case _: IllegalStateException => None }
           }
         })
       }
       start.countDown()
-      val holders = tries.count(_.get())
-      assert(holders == 1, s"round $round: $holders writers hold the lease")
-      IndexMaintenance.releaseLease(spark, root)
+      val holders = tries.flatMap(_.get())
+      assert(holders.size == 1, s"round $round: ${holders.size} writers hold the lease")
+      IndexMaintenance.releaseLease(spark, root, holders.head)
     } finally pool.shutdown()
   }
 
@@ -163,7 +210,7 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     val holder = new String(
       java.nio.file.Files.readAllBytes(lock.toPath), "UTF-8").trim
     assert(holder == "writerA")
-    IndexMaintenance.releaseLease(spark, root)
+    IndexMaintenance.releaseLease(spark, root, "writerA")
   }
 
   test("generation survives a tmp manifest that was never renamed") {
@@ -197,7 +244,7 @@ class IndexLeaseSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
       Decontaminate.compactGramPostingsIndex(spark, root)
     }
     assert(IndexMaintenance.generation(spark, root) == 2L) // no bump on abort
-    IndexMaintenance.releaseLease(spark, root)
+    IndexMaintenance.releaseLease(spark, root, "w9")
     Decontaminate.compactGramPostingsIndex(spark, root)
     assert(IndexMaintenance.generation(spark, root) == 3L)
   }

@@ -7,8 +7,8 @@ import graft.operators.{IncrementalDedup, IndexMaintenance}
 
 /** The index health surface ([[IndexMaintenance.indexStats]]) — the one
   * frame a maintenance scheduler thresholds on. Pinned across the full
-  * store lifecycle: build, append, retraction, compaction, and the
-  * keyed-counted-store bookkeeping columns.
+  * store lifecycle: build, append, retraction, compaction — and the
+  * root's batch watermark, which a compaction carries forward.
   */
 class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll with StagingScope {
 
@@ -47,7 +47,6 @@ class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     assert(s1("params").getAs[String]("params").contains("\"bands\":4"))
     assert(s1("shingles").getAs[String]("params") == null)
     assert(s1.values.forall(_.getAs[Long]("generation") == 1L))
-    assert(s1.values.forall(_.getAs[Long]("keyed_batches") == 0L))
     assert(s1("bands").getAs[Long]("files") > 0)
     assert(s1("bands").getAs[Long]("bytes") > 0)
 
@@ -84,23 +83,30 @@ class IndexStatsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll wi
     assert(s4.values.forall(_.getAs[Long]("generation") == 4L))
   }
 
-  test("keyed counted stores report delta backlog and folded ledger") {
-    val root = fresh("keyed")
+  test("the applied watermark survives a compaction") {
+    val root = fresh("applied")
     import spark.implicits._
-    // a batch-keyed counted store: one delta folded (its only token
-    // summed to zero, so the fold leaves no row), two deltas live
-    def keyed(key: String, rows: Seq[(String, Long)]): Unit =
-      IndexMaintenance.withWriterLease(spark, root)(
-        _.writeKeyed("terms", key, rows.toDF("term", "n")))
-    keyed("b0", Seq(("z", 0L)))
+    // a counted store fed by one streaming query: batch 0's only token
+    // sums to zero, so the compaction folds it away
+    def append(id: Long, rows: Seq[(String, Long)]): Unit =
+      IndexMaintenance.withWriterLease(spark, root,
+        batch = Some(IndexMaintenance.Batch("q", id)))(
+        _.append("terms", rows.toDF("term", "n")))
+    append(0L, Seq(("z", 0L)))
     IndexMaintenance.withWriterLease(spark, root) { tx =>
       tx.replace("terms", tx.snapshot.read("terms").filter($"n" =!= 0L))
     }
-    keyed("b1", Seq(("a", 3L), ("b", 1L)))
-    keyed("b2", Seq(("a", 2L)))
+    assert(IndexMaintenance.snapshot(spark, root).applied == Map("q" -> 0L))
+    append(1L, Seq(("a", 3L), ("b", 1L)))
+    append(2L, Seq(("a", 2L)))
+    // a replay of either batch, after the compaction or not, is skipped:
+    // no row, no generation
+    val g = IndexMaintenance.generation(spark, root)
+    append(0L, Seq(("z", 0L)))
+    append(2L, Seq(("a", 2L)))
+    assert(IndexMaintenance.generation(spark, root) == g)
     val s = statsMap(root)
-    assert(s("terms").getAs[Long]("keyed_batches") == 2L)
-    assert(s("terms").getAs[Long]("folded_batches") == 1L)
     assert(s("terms").getLong(3) == 3L) // row count over the live deltas
+    assert(IndexMaintenance.snapshot(spark, root).applied == Map("q" -> 2L))
   }
 }

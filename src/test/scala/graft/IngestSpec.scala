@@ -15,8 +15,8 @@ import graft.streaming.CorpusIngest
   * fold it orchestrates, with greedy first-fit semantics (A~B, B~C, A≁C
   * keeps {A, C}); (2) checkpoint resume processes ONLY new files and
   * never rewrites published batches; (3) a replayed batch (foreachBatch's
-  * at-least-once window) is harmless: same sink bytes, and the duplicated
-  * index rows change no later decision.
+  * at-least-once window) is harmless: same sink bytes, and every root's
+  * batch watermark keeps its rows out of every store.
   */
 class IngestSpec extends AnyFunSuite with StagingScope {
 
@@ -59,6 +59,21 @@ class IngestSpec extends AnyFunSuite with StagingScope {
 
   private def keptIds(df: DataFrame): Set[Long] =
     df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  /** The streaming query that drained into `root`: the one key of the
+    * root's batch watermark.
+    */
+  private def queryOf(root: String): String =
+    IndexMaintenance.snapshot(spark, root).applied.keys.toSeq match {
+      case Seq(q) => q
+      case qs => fail(s"expected one query in the watermark of $root, got $qs")
+    }
+
+  /** Row count of every store of every root, keyed "<root>/<store>". */
+  private def rowCounts(roots: Seq[String]): Map[String, Long] = roots.flatMap { r =>
+    val snap = IndexMaintenance.snapshot(spark, r)
+    snap.stores.map(st => s"$r/$st" -> snap.read(st).count())
+  }.toMap
 
   test("streamed ingest equals the sequential incremental fold (greedy first-fit)") {
     import spark.implicits._
@@ -183,8 +198,8 @@ class IngestSpec extends AnyFunSuite with StagingScope {
         "positional store must equal the survivor scan twin")
       assert(phRows(Retrieval.phraseMatches(spark, s"$root/pos",
         needle)).nonEmpty, "fixture self-check: the needle occurs")
-      // COUNTED stores (batch-id-keyed appends): term stats == a fresh
-      // batch-built index over the same survivors, drift summary ditto
+      // COUNTED stores: term stats == a fresh batch-built index over the
+      // same survivors, drift summary ditto
       import spark.implicits._
       val probeDocs = Seq(51L -> fresh(51), 52L -> textA).toDF("doc_id", "text")
       def scoreRows(path: String) = Staging.scoped {
@@ -203,20 +218,22 @@ class IngestSpec extends AnyFunSuite with StagingScope {
       CorpusCompare.buildGramIndex(survivors, col("text"), s"$root/drift2")
       assert(driftRow(s"$root/drift") == driftRow(s"$root/drift2"),
         "ingest-maintained drift grams must equal a batch build on survivors")
-      // FORCED REPLAY of the last committed batch: at-least-once
-      // foreachBatch must leave the counted stores' answers unchanged
-      // (keyed overwrite) and the row stores' queries unchanged (collapse)
-      // the replay carries the STREAM's lineage (counted-store keys are
-      // lineage-namespaced; a replay is by definition same-checkpoint)
-      CorpusIngest.ingestBatch(f3.toDF("doc_id", "text"), 2L,
+      // FORCED REPLAY of the last committed batch under the stream's
+      // query id: at-least-once foreachBatch must leave every store's
+      // rows and every answer unchanged (each root's watermark skips it)
+      val roots = Seq("idx", "post", "pos", "gram", "terms", "drift").map(r => s"$root/$r")
+      val countsBefore = rowCounts(roots)
+      CorpusIngest.ingestBatch(f3.toDF("doc_id", "text"),
+        IndexMaintenance.Batch(queryOf(s"$root/idx"), 2L),
         s"$root/idx", s"$root/sink", "doc_id", "text", tau, params,
         maintain = CorpusIngest.IndexSuite(
           postingsPath = Some(s"$root/post"),
           gramPostingsPath = Some(s"$root/gram"),
           positionsPath = Some(s"$root/pos"),
           termStatsPath = Some(s"$root/terms"),
-          driftGramsPath = Some(s"$root/drift")),
-        lineage = CorpusIngest.lineageOf(s"$root/ckpt"))
+          driftGramsPath = Some(s"$root/drift")))
+      assert(rowCounts(roots) == countsBefore,
+        "a replayed batch must append no row to any store")
       assert(scoreRows(s"$root/terms") == scoreRows(s"$root/terms2"),
         "a replayed batch must not double-count term stats")
       assert(driftRow(s"$root/drift") == driftRow(s"$root/drift2"),
@@ -229,7 +246,7 @@ class IngestSpec extends AnyFunSuite with StagingScope {
           Seq("w3"), k = 1))
         == bmRows(Retrieval.bm25TopK(survivors2, "doc_id", "text",
           Seq("w3"), k = 1)),
-        "replayed postings rows must collapse on read")
+        "a replayed batch must leave the postings answer unchanged")
     } finally rmTree(root)
   }
 
@@ -290,18 +307,27 @@ class IngestSpec extends AnyFunSuite with StagingScope {
         val fc = IndexMaintenance.storeDataFiles(spark, s"$root/${st._1}_c", st._2)
         assert(fa < fc, s"${st._1}/${st._2}: auto=$fa vs control=$fc")
       }
-      // counted stores: the fired compaction folded batches 0-1 into one
-      // segment and marked their keys folded; batch 2 is the remaining
-      // keyed delta
-      def terms(tag: String) = IndexMaintenance.snapshot(spark, s"$root/terms_$tag")
-      assert(terms("a").folded("terms").nonEmpty)
-      assert(terms("a").keys("terms").size < terms("c").keys("terms").size)
+      // every root of the compacted run records the drain's last batch
+      // under the drain's query id: the compaction after batch 1 carried
+      // the watermark forward. The control's checkpoint is another query.
+      val qa = queryOf(s"$root/idx_a")
+      val rootsA = Seq("idx", "post", "pos", "gram", "terms", "drift").map(r => s"$root/${r}_a")
+      rootsA.foreach { r =>
+        assert(IndexMaintenance.snapshot(spark, r).applied == Map(qa -> 2L), r)
+      }
+      assert(queryOf(s"$root/idx_c") != qa)
 
       // REPLAY the triggering batch (id 1): the at-least-once window's
-      // worst case re-runs the append AND the compaction — answers and
-      // the sink must not move
+      // worst case re-runs the append AND the compaction — answers, the
+      // sink and the row stores' row counts must not move (the counted
+      // stores' rows are summed by the re-run compaction; their answers
+      // are pinned above)
       val before = answers("a")
-      CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"), 1L,
+      val rowStores = Seq("bands", "shingles", "postings", "positions", "grams")
+      def rowStoreCounts = rowCounts(rootsA.filterNot(_.contains("drift")))
+        .filter { case (k, _) => rowStores.exists(st => k.endsWith(s"/$st")) }
+      val countsBefore = rowStoreCounts
+      CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"), IndexMaintenance.Batch(qa, 1L),
         s"$root/idx_a", s"$root/sink_a", "doc_id", "text", tau, params,
         maintain = CorpusIngest.IndexSuite(
           postingsPath = Some(s"$root/post_a"),
@@ -309,10 +335,11 @@ class IngestSpec extends AnyFunSuite with StagingScope {
           positionsPath = Some(s"$root/pos_a"),
           termStatsPath = Some(s"$root/terms_a"),
           driftGramsPath = Some(s"$root/drift_a")),
-        lineage = CorpusIngest.lineageOf(s"$root/ckpt_a"),
         autoCompact = IndexMaintenance.AutoCompactPolicy(everyBatches = 2))
       assert(answers("a") == before,
         "replaying the compaction-triggering batch must change no answer")
+      assert(rowStoreCounts == countsBefore,
+        "replaying the compaction-triggering batch must append no row")
       assert(keptIds(spark.read.parquet(s"$root/sink_a")) == expectedKept)
     } finally rmTree(root)
   }
@@ -330,13 +357,14 @@ class IngestSpec extends AnyFunSuite with StagingScope {
       for (b <- 0 until 6) {
         val batch = Seq((100L * b + 1) -> fresh(100 * b + 1),
           (100L * b + 2) -> fresh(100 * b + 2)).map { case (i, t) => (i.toLong, t) }
-        CorpusIngest.ingestBatch(batch.toDF("doc_id", "text"), b.toLong,
+        CorpusIngest.ingestBatch(batch.toDF("doc_id", "text"),
+          IndexMaintenance.Batch("t", b.toLong),
           s"$root/idx", s"$root/sink", "doc_id", "text", tau, params,
-          maintain = maintain, lineage = "t",
-          autoCompact = policy)
-        CorpusIngest.ingestBatch(batch.toDF("doc_id", "text"), b.toLong,
+          maintain = maintain, autoCompact = policy)
+        CorpusIngest.ingestBatch(batch.toDF("doc_id", "text"),
+          IndexMaintenance.Batch("t", b.toLong),
           s"$root/idx2", s"$root/sink2", "doc_id", "text", tau, params,
-          maintain = maintain, lineage = "t")
+          maintain = maintain)
       }
       val end = IndexMaintenance.storeDataFiles(spark, s"$root/idx", "bands")
       val ctrl = IndexMaintenance.storeDataFiles(spark, s"$root/idx2", "bands")
@@ -381,8 +409,9 @@ class IngestSpec extends AnyFunSuite with StagingScope {
         .filter(col("id").isin(41L, 42L)).count() == 0L,
         "banned content must not reach the index")
       // the ban survives a replay of the arrival batch
+      val replay = IndexMaintenance.Batch(queryOf(s"$root/idx"), 1L)
       CorpusIngest.ingestBatch(
-        Seq(41L -> textA, 43L -> fresh(43)).toDF("doc_id", "text"), 1L,
+        Seq(41L -> textA, 43L -> fresh(43)).toDF("doc_id", "text"), replay,
         s"$root/idx", s"$root/sink", "doc_id", "text", tau, params)
       assert(keptIds(CorpusIngest.survivors(spark, s"$root/sink",
         Seq.empty[(Long, String)].toDF("doc_id", "text").schema))
@@ -393,7 +422,7 @@ class IngestSpec extends AnyFunSuite with StagingScope {
       CorpusIngest.retractContent(spark, s"$root/idx",
         Seq(43L -> fresh(43)).toDF("doc_id", "text"), "doc_id", "text")
       CorpusIngest.ingestBatch(
-        Seq(41L -> textA, 43L -> fresh(43)).toDF("doc_id", "text"), 1L,
+        Seq(41L -> textA, 43L -> fresh(43)).toDF("doc_id", "text"), replay,
         s"$root/idx", s"$root/sink", "doc_id", "text", tau, params)
       assert(keptIds(CorpusIngest.survivors(spark, s"$root/sink",
         Seq.empty[(Long, String)].toDF("doc_id", "text").schema))
@@ -408,42 +437,46 @@ class IngestSpec extends AnyFunSuite with StagingScope {
     val root = scratch("counted")
     val terms = s"$root/terms"
     val suite = CorpusIngest.IndexSuite(termStatsPath = Some(terms))
-    val linA = CorpusIngest.lineageOf(s"$root/ckptA")
+    // two streaming queries (two checkpoints) feeding one counted store
+    def a(id: Long) = IndexMaintenance.Batch("query-a", id)
+    def b(id: Long) = IndexMaintenance.Batch("query-b", id)
     def score() = Staging.scoped {
       val probe = Seq(900L -> textA).toDF("doc_id", "text")
       Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
         Seq("w3"), terms, k = 1).collect().map(_.toSeq).toSeq
     }
     try {
-      // lineage A ingests two batches
-      CorpusIngest.ingestBatch(f1.toDF("doc_id", "text"), 0L,
+      // query A ingests two batches
+      CorpusIngest.ingestBatch(f1.toDF("doc_id", "text"), a(0L),
         s"$root/idxA", s"$root/sinkA", "doc_id", "text", tau, params,
-        maintain = suite, lineage = linA)
-      CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"), 1L,
+        maintain = suite)
+      CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"), a(1L),
         s"$root/idxA", s"$root/sinkA", "doc_id", "text", tau, params,
-        maintain = suite, lineage = linA)
+        maintain = suite)
       val before = score()
 
       // COMPACTION inside the at-least-once window, then the replay of
-      // batch 1: the folded key must make the replayed keyed append a
-      // no-op — without it the replay re-adds its delta and every count
-      // doubles
+      // batch 1: the watermark the compaction carried forward must make
+      // the replayed append a no-op — without it the replay re-adds its
+      // delta and every count doubles
       Retrieval.compactTermStatsIndex(spark, terms)
       assert(score() == before, "compaction must be count-identical")
-      CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"), 1L,
+      assert(IndexMaintenance.snapshot(spark, terms).applied == Map("query-a" -> 1L))
+      val rowsBefore = rowCounts(Seq(terms))
+      CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"), a(1L),
         s"$root/idxA", s"$root/sinkA", "doc_id", "text", tau, params,
-        maintain = suite, lineage = linA)
+        maintain = suite)
       assert(score() == before,
-        "a replay after compaction must not double-count (folded ledger)")
+        "a replay after compaction must not double-count (watermark)")
+      assert(rowCounts(Seq(terms)) == rowsBefore)
 
-      // a FRESH ingest lineage (new checkpoint ⇒ batch ids restart at 0)
-      // against the SAME store must add its deltas, not overwrite
-      // lineage A's b0 — the score must equal a fresh batch build over
-      // BOTH lineages' survivors
-      val linB = CorpusIngest.lineageOf(s"$root/ckptB")
-      CorpusIngest.ingestBatch(f3.toDF("doc_id", "text"), 0L,
+      // a SECOND query (new checkpoint ⇒ batch ids restart at 0) against
+      // the SAME store must add its deltas: its batch 0 is not query A's —
+      // the score must equal a fresh batch build over BOTH queries'
+      // survivors
+      CorpusIngest.ingestBatch(f3.toDF("doc_id", "text"), b(0L),
         s"$root/idxB", s"$root/sinkB", "doc_id", "text", tau, params,
-        maintain = suite, lineage = linB)
+        maintain = suite)
       val allSurvivors = spark.read.parquet(s"$root/sinkA")
         .unionByName(spark.read.parquet(s"$root/sinkB"))
         .select("doc_id", "text")
@@ -455,12 +488,14 @@ class IngestSpec extends AnyFunSuite with StagingScope {
           Seq("w3"), s"$root/terms_ref", k = 1).collect().map(_.toSeq).toSeq)
       }
       assert(score() == ref,
-        "a second lineage must accumulate, not clobber, the counted store")
+        "a second query must accumulate, not clobber, the counted store")
+      assert(IndexMaintenance.snapshot(spark, terms).applied ==
+        Map("query-a" -> 1L, "query-b" -> 0L))
 
       // CRASH MID-COMPACTION: a compaction that wrote its replacement
       // segment (here an empty one) but died before its manifest commits
-      // nothing — the next keyed append must build on the committed
-      // history, never on the uncommitted store
+      // nothing — the next append must build on the committed history,
+      // never on the uncommitted store
       intercept[IllegalStateException] {
         IndexMaintenance.withWriterLease(spark, terms) { tx =>
           tx.replace("terms", tx.snapshot.read("terms").limit(0))
@@ -468,13 +503,13 @@ class IngestSpec extends AnyFunSuite with StagingScope {
         }
       }
       CorpusIngest.ingestBatch(
-        Seq(61L -> fresh(61)).toDF("doc_id", "text"), 2L,
+        Seq(61L -> fresh(61)).toDF("doc_id", "text"), a(2L),
         s"$root/idxA", s"$root/sinkA", "doc_id", "text", tau, params,
-        maintain = suite, lineage = linA)
+        maintain = suite)
       // history survived AND the new batch counted
-      Retrieval.appendToTermStatsIndexKeyed(
+      Retrieval.appendToTermStatsIndex(
         Seq(61L -> fresh(61)).toDF("doc_id", "text"), "doc_id", "text",
-        s"$root/terms_ref", 2L, linA)
+        s"$root/terms_ref")
       val ref2 = {
         val probe = Seq(900L -> textA).toDF("doc_id", "text")
         Staging.scoped(Retrieval.scoreAgainstTermIndex(probe, "doc_id", "text",
@@ -516,6 +551,9 @@ class IngestSpec extends AnyFunSuite with StagingScope {
       // the batch partition column tracks arrival order
       assert(second.filter(col("doc_id") === 21L).select("batch")
         .collect().head.getAs[Number](0).longValue == 2L)
+      // the restart from the checkpoint is the same streaming query: one
+      // watermark entry, advanced to the resumed batch
+      assert(IndexMaintenance.snapshot(spark, s"$root/idx").applied.values.toSeq == Seq(2L))
     } finally rmTree(root)
   }
 
@@ -533,18 +571,59 @@ class IngestSpec extends AnyFunSuite with StagingScope {
       assert(keptIds(drained) == Set(1L, 2L, 4L, 12L))
 
       // foreachBatch is at-least-once: simulate the crash-replay of batch 1
-      CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"), 1L,
+      val countsBefore = rowCounts(Seq(s"$root/idx"))
+      CorpusIngest.ingestBatch(f2.toDF("doc_id", "text"),
+        IndexMaintenance.Batch(queryOf(s"$root/idx"), 1L),
         s"$root/idx", s"$root/sink", "doc_id", "text", tau, params)
       val after = CorpusIngest.survivors(spark, s"$root/sink",
         Seq.empty[(Long, String)].toDF("doc_id", "text").schema)
       assert(keptIds(after) == Set(1L, 2L, 4L, 12L), "replay changed the sink")
+      assert(rowCounts(Seq(s"$root/idx")) == countsBefore,
+        "replay appended to the index")
 
-      // the duplicated index rows change no later decision: an A-copy
-      // still drops, a fresh doc still survives
+      // later decisions are unchanged: an A-copy still drops, a fresh doc
+      // still survives
       val probe = IncrementalDedup.newKeepList(
         Seq(31L -> textA, 32L -> fresh(32)).toDF("doc_id", "text"),
         "doc_id", "text", s"$root/idx", tau)
       assert(keptIds(probe) == Set(32L))
+    } finally rmTree(root)
+  }
+
+  test("a fresh checkpoint at a reused path is a new query: its batches land in every store") {
+    import graft.operators.Retrieval
+    val root = scratch("freshckpt")
+    try {
+      val suite = CorpusIngest.IndexSuite(postingsPath = Some(s"$root/post"),
+        termStatsPath = Some(s"$root/terms"))
+      val policy = IndexMaintenance.AutoCompactPolicy(everyBatches = 1)
+      val now = System.currentTimeMillis()
+      val src1 = s"$root/src1"; new java.io.File(src1).mkdirs()
+      writeDocFile(src1, f1, "f1.parquet", now)
+      val first = CorpusIngest.runIngestAvailableNow(spark, src1,
+        s"$root/idx", s"$root/sink1", s"$root/ckpt",
+        jaccardThreshold = tau, params = params, maintain = suite, autoCompact = policy)
+      assert(keptIds(first) == Set(1L, 2L, 4L))
+      // the checkpoint is deleted and a new stream starts at the same
+      // path: its batch ids restart at 0 under a new query id
+      rmTree(s"$root/ckpt")
+      val src2 = s"$root/src2"; new java.io.File(src2).mkdirs()
+      writeDocFile(src2, Seq(7L -> fresh(7)), "f2.parquet", now)
+      val second = CorpusIngest.runIngestAvailableNow(spark, src2,
+        s"$root/idx", s"$root/sink2", s"$root/ckpt",
+        jaccardThreshold = tau, params = params, maintain = suite, autoCompact = policy)
+      assert(keptIds(second) == Set(7L))
+      val hits = Staging.scoped {
+        Retrieval.topKFromIndex(spark, s"$root/post", Seq("t7_3"), k = 5)
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+      }
+      assert(hits == Set(7L), "the new stream's doc must be in the postings index")
+      val terms = IndexMaintenance.snapshot(spark, s"$root/terms")
+      val docCount = terms.read("terms").filter(col("token") === "")
+        .agg(sum("df")).head.getLong(0)
+      assert(docCount == 4L, "the term-stats sentinel must count every ingested doc")
+      assert(terms.applied.size == 2 && terms.applied.values.forall(_ == 0L),
+        s"two queries, one batch each: ${terms.applied}")
     } finally rmTree(root)
   }
 

@@ -246,15 +246,23 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
       "codebook", "tombstones", "banned", "banned_vecs").mkString("|")
     val layout = ("\\.compact\"|\"_compact_|_compact_\\$|_folded_|storePath|" +
       "s\"\\$\\{?\\w+\\}?/(" + stores + ")\\b|/\\$BannedStore|Path\\(\\w+, BannedStore\\)").r
+    // each pattern with the one file allowed to hold it: the layout and
+    // the manifest's batch watermark field belong to IndexMaintenance;
+    // a batch's streaming query id is read only by the shared drain
+    val rules = Seq(layout -> "IndexMaintenance.scala",
+      "\"applied\"".r -> "IndexMaintenance.scala",
+      "sql\\.streaming\\.queryId".r -> "Drain.scala")
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
     val offenders = try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "IndexMaintenance.scala")
-      .flatMap(p => layout.findFirstIn(java.nio.file.Files.readString(p))
-        .map(m => s"${p.getFileName}: $m"))
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        rules.filter(_._2 != p.getFileName.toString)
+          .flatMap(_._1.findFirstIn(text).map(m => s"${p.getFileName}: $m"))
+      }
       .toList.sorted
     finally walk.close()
-    assert(offenders.isEmpty, s"index layout outside IndexMaintenance: $offenders")
+    assert(offenders.isEmpty, s"index layout, watermark or query id outside its owner: $offenders")
   }
 
   test("widen raises LARGE narrow scans to the core count; small and wide frames pass through") {
