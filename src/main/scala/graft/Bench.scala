@@ -72,7 +72,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = SparkEntry.session("graft-bench", SparkEntry.envCpus(4))
+    val cpus = SparkEntry.envCpus(4)
+    val spark = SparkEntry.session("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // warm the JVM/codegen path once so the first measured query doesn't
     // absorb session startup (order below is name-sorted and deterministic)
@@ -133,7 +134,7 @@ object Bench {
     // headline fields LAST: the driver keeps only a tail of stdout, and the
     // per-query map is long enough to push a leading "value" out of the
     // window (JSON key order is semantically irrelevant)
-    val fullLine = s"""{"queries":$qs,"failures":$failJson,"skewed":$skewJson,"sf":"$sfDir","baseline_r01_keys_subtotal":$baselineSubtotal,"baseline_r01_keys_counted":$baselineCounted,"metric":"total","unit":"sec","value":$total}"""
+    val fullLine = s"""{"queries":$qs,"failures":$failJson,"skewed":$skewJson,"sf":"$sfDir","cpus":$cpus,"baseline_r01_keys_subtotal":$baselineSubtotal,"baseline_r01_keys_counted":$baselineCounted,"metric":"total","unit":"sec","value":$total}"""
     println(fullLine)
     // REPORTING CONTRACT REPAIR (r14, measurement plumbing only — no
     // timing methodology change, the full line above is unchanged and
@@ -156,7 +157,7 @@ object Bench {
     } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     val skewCompact = skewed.take(8).map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"total","unit":"sec","value":$total,"sf":"$sfDir","n_queries":${results.size},"n_failed":${failures.size},"skewed":$skewCompact,"baseline_r01_keys_subtotal":$baselineSubtotal,"baseline_r01_keys_counted":$baselineCounted,"queries_in":"$outPath"}""")
+    println(s"""{"metric":"total","unit":"sec","value":$total,"sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"n_failed":${failures.size},"skewed":$skewCompact,"baseline_r01_keys_subtotal":$baselineSubtotal,"baseline_r01_keys_counted":$baselineCounted,"queries_in":"$outPath"}""")
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)
   }

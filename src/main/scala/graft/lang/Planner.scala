@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import graft.Execution
 import graft.model.{Catalog, Link, Tables}
 import graft.functions.Ht
 import Ast._
@@ -35,7 +36,12 @@ final class PlanError(msg: String, val pos: Int = -1) extends RuntimeException(m
 final class Planner(spark: SparkSession, dir: String, catalog: Catalog = Catalog.default,
     format: String = "parquet") {
 
-  private val tables = new Tables(spark, dir, format)
+  // the execution-mode rule (graft.Execution): a query binds on the
+  // session's interpreted twin, and binds again on `spark` itself when the
+  // tables it touched reach the bound
+  private val interpretedTables = new Tables(Execution.interpreted(spark), dir, format)
+  private lazy val compiledTables = new Tables(spark, dir, format)
+  private var tables = interpretedTables
   private var aggCounter = 0
 
   /** Mutable per-query scope: the current axis table, its accreting
@@ -92,7 +98,7 @@ final class Planner(spark: SparkSession, dir: String, catalog: Catalog = Catalog
     * argument implicitly detached (`@`).
     */
   private def rootCtx: Ctx =
-    new Ctx("__root__", spark.range(1).toDF("__root"), Map.empty, Set.empty,
+    new Ctx("__root__", tables.spark.range(1).toDF("__root"), Map.empty, Set.empty,
       Some(Seq("__root")))
 
   /** Scope over a genuinely projected frame — a quotient's grouped output
@@ -206,7 +212,18 @@ final class Planner(spark: SparkSession, dir: String, catalog: Catalog = Catalog
 
   // -------------------------------------------------------------- entry --
 
-  def plan(ast: Ast): DataFrame = planFlow(ast) match {
+  /** `ast`'s DataFrame, on the session [[Execution]] picks for the input
+    * bytes of the tables it touches: bound on the interpreted twin first,
+    * and bound again on `spark` when those bytes reach the bound.
+    */
+  def plan(ast: Ast): DataFrame = {
+    tables = interpretedTables
+    val df = bind(ast)
+    if (Execution.interprets(tables.bytes)) df
+    else { tables = compiledTables; bind(ast) }
+  }
+
+  private def bind(ast: Ast): DataFrame = planFlow(ast) match {
     case Left(ctx) =>
       ctx.selection match {
         case Some(items) =>

@@ -126,8 +126,10 @@ object Catalog {
   * inferred schema, analysis and file index — and before each reuse stats
   * the table path once: if the path's modification time or length moved,
   * the table is resolved again. A `Tables` takes each table from the
-  * resolver at most once, so a query (one `Planner`, one `Tables`) stats
-  * each table it touches once and sees one state of it throughout.
+  * resolver at most once, so a query (one `Planner`, one `Tables` on the
+  * session it binds on) stats each table it touches once and sees one
+  * state of it throughout. [[bytes]] is what the execution-mode rule
+  * ([[graft.Execution]]) reads from the tables a query touched.
   *
   * What moves the stamp: a Spark write to the table (overwrite or append
   * changes the directory's entries) and an ETL commit (`graft.sources.Etl`
@@ -144,6 +146,11 @@ final class Tables(val spark: SparkSession, val dir: String,
   def apply(name: String): DataFrame =
     cache.getOrElseUpdate(name, resolver.resolve(spark, dir, name, format))
 
+  /** The input bytes of the tables taken so far: the sizes their file
+    * indexes hold from the listing resolution did (no job, no listing).
+    */
+  def bytes: Long = cache.values.map(Tables.bytes).sum
+
   def region: DataFrame = apply("region")
   def nation: DataFrame = apply("nation")
   def customer: DataFrame = apply("customer")
@@ -157,6 +164,7 @@ final class Tables(val spark: SparkSession, val dir: String,
 }
 
 object Tables {
+  import org.apache.spark.sql.execution.datasources.LogicalRelation
   import org.apache.spark.sql.functions.{col, expr}
   import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -166,6 +174,11 @@ object Tables {
     case "json" => s"$dir/$name.jsonl"
     case _ => s"$dir/$name.parquet"
   }
+
+  private def bytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case r: LogicalRelation => r.relation.sizeInBytes
+    }.sum
 
   /** Resolve table `name`: infer its schema, list its files, analyze. */
   private[model] def load(spark: SparkSession, dir: String, name: String,

@@ -213,6 +213,23 @@ object IndexMaintenance {
         java.nio.file.StandardOpenOption.CREATE_NEW)
     }
 
+  /** The owner recorded at `marker`, recording `owner` first when the
+    * file is absent: one exclusive create, so of racing claimants exactly
+    * one records itself and every one reads the same owner back. The
+    * ingests' sinks are claimed this way by their streaming query.
+    */
+  private[graft] def claimOwner(spark: SparkSession, marker: String, owner: String): String = {
+    val p = new Path(marker)
+    val f = fsOf(spark, marker)
+    try {
+      val out = createExclusive(f, p)
+      try out.write(owner.getBytes("UTF-8")) finally out.close()
+      owner
+    } catch {
+      case _: java.io.IOException if f.exists(p) => readText(f, p).trim
+    }
+  }
+
   /** Release `writerId`'s lease: delete the lock only while this writer
     * still holds it. A writer that outlived `leaseMs` may have been
     * reclaimed; the lock at the root is then its reclaimer's, and stays.
@@ -356,6 +373,16 @@ object IndexMaintenance {
       m.stores.get(store).toSeq.flatMap(_.segments.flatMap { seg =>
         seg.files.map { case (n, b) => (new Path(s"$root/$store/${seg.id}/$n"), b) }
       })
+
+    /** The live data bytes of every store: what a read of the whole
+      * generation scans, from the manifest alone.
+      */
+    def bytes: Long = m.stores.keys.toSeq.flatMap(files).map(_._2).sum
+
+    /** This generation, read through `session` (the session a reader's
+      * plans run on, [[graft.Execution.sessionFor]]).
+      */
+    def on(session: SparkSession): Snapshot = new Snapshot(session, root, m)
 
     /** The root's batch watermark: the last batch id of each streaming
       * query that landed here.

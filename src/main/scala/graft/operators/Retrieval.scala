@@ -565,6 +565,9 @@ object Retrieval {
     * if fewer than k docs match, the result is shorter than k rather than
     * padded with zero-score rows. Spec + the q_bm25_index_topk oracle pin
     * the equality on a two-batch build.
+    *
+    * The frame is planned on the session [[graft.Execution]] picks for the
+    * root's manifest bytes: `spark`'s interpreted twin under the bound.
     */
   def topKFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, terms: Seq[String], k: Int,
@@ -573,7 +576,8 @@ object Retrieval {
     require(terms.forall(_.nonEmpty), "query terms must be non-empty strings")
     requireDistinctTerms("topKFromIndex", terms)
     require(k >= 1, s"k must be positive, got $k")
-    val snap = IndexMaintenance.snapshot(spark, path)
+    val snap0 = IndexMaintenance.snapshot(spark, path)
+    val snap = snap0.on(graft.Execution.sessionFor(spark, snap0.bytes))
     val tot = snap.read("ptotals")
       .dropDuplicates("n_docs", "t_len", "min_id", "max_id")
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),

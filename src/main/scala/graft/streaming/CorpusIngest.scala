@@ -183,7 +183,9 @@ object CorpusIngest {
       if (canonicalize)
         _.withColumn(textCol, graft.operators.TextAnalysis.normalizeText(col(textCol)))
       else identity
-    Drain.run(spark0, srcDir, sinkPath, checkpointPath, shufflePartitions, prepare)(
+    val roots = Seq(indexPath) ++ maintain.postingsPath ++ maintain.gramPostingsPath ++
+      maintain.positionsPath ++ maintain.termStatsPath ++ maintain.driftGramsPath
+    Drain.run(spark0, srcDir, sinkPath, checkpointPath, shufflePartitions, roots, prepare)(
       ingestBatch(_, _, indexPath, sinkPath, idCol, textCol, jaccardThreshold,
         params, bannedNeedles, maintain, autoCompact))
   }
@@ -228,7 +230,7 @@ object CorpusIngest {
         val bad = toksF.filter(hitAny).select("id")
         batchB.join(broadcast(bad), batchB(idCol) === bad("id"), "left_anti")
       }
-    if (Drain.emptied(batch0, batch, sinkPath, b.id)) return
+    if (Drain.emptied(batch0, batch, sinkPath, b)) return
     val spark = batch.sparkSession
     // the batch signs ONCE: the staged (id, sh, sig) frame feeds the
     // pair search, and the survivor append reuses it — a standalone
@@ -237,7 +239,7 @@ object CorpusIngest {
     // first append pins them.
     val p = if (snap.params.isEmpty) params else IncrementalDedup.paramsOf(snap)
     val base = IncrementalDedup.signed(batch, idCol, textCol, p)
-    val kept = Drain.publish(batch, sinkPath, b.id) {
+    val kept = Drain.publish(batch, sinkPath, b) {
       // staged: the keep-list derivation consumes the pair set three
       // times (both drop directions + the batch-internal exemption) —
       // unpersisted, the exact-Jaccard verify join would re-run for each

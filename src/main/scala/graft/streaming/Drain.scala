@@ -16,6 +16,11 @@ import graft.operators.{IndexMaintenance, Staging}
   *     replayed batch (crash after the sink write but before the
   *     checkpoint commit — foreachBatch is at-least-once) overwrites its
   *     own output instead of duplicating it;
+  *   - a sink belongs to ONE streaming query, recorded in its hidden
+  *     `_query` marker by the first write: batch ids restart at 0 in a new
+  *     query, so a stream from a fresh checkpoint would overwrite an
+  *     earlier stream's `batch=<id>` partitions while every index keeps
+  *     their rows; a write from another query fails loudly instead;
   *   - every index root the batch appends to is guarded by its manifest's
   *     batch watermark under the batch's identity (the streaming query's
   *     persistent id, the batch id): a replayed append is skipped at the
@@ -30,9 +35,13 @@ private[streaming] object Drain {
     * id). `shufflePartitions` sizes a bounded drain's exchanges to ITS
     * data, not the cluster default — a gate-scale batch pays ~10 shuffles
     * whose per-task overhead dwarfs the rows.
+    *
+    * Each micro-batch runs in the mode [[graft.Execution]] picks for its
+    * input: the arrival's bytes plus the manifest bytes of `roots`, the
+    * index roots a batch reads or compacts (one manifest read each).
     */
   def run(spark0: SparkSession, srcDir: String, sinkPath: String,
-      checkpointPath: String, shufflePartitions: Option[Int],
+      checkpointPath: String, shufflePartitions: Option[Int], roots: Seq[String],
       prepare: DataFrame => DataFrame = identity)(
       ingest: (DataFrame, IndexMaintenance.Batch) => Unit): DataFrame = {
     val spark = shufflePartitions.fold(spark0) { n =>
@@ -52,6 +61,12 @@ private[streaming] object Drain {
         // checkpoint, new for a fresh checkpoint even at the same path
         val query = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
         require(query != null, "foreachBatch ran without a streaming query id")
+        // the batch's session is the stream's own clone of `spark`, and no
+        // plan of the batch has started yet: the batch's mode is set on it
+        val session = batch.sparkSession
+        val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes +
+          roots.map(IndexMaintenance.snapshot(session, _).bytes).sum
+        graft.Execution.setMode(session, bytes.min(Long.MaxValue).toLong)
         Staging.scoped(ingest(batch, IndexMaintenance.Batch(query, batchId)))
       }
       .option("checkpointLocation", checkpointPath)
@@ -63,6 +78,19 @@ private[streaming] object Drain {
 
   private def partition(sinkPath: String, id: Long) = s"$sinkPath/batch=$id"
 
+  /** Write `b`'s partition of the sink: only the sink's own query may.
+    * The first write records `b`'s query in the sink's `_query` marker
+    * (a hidden file, which parquet readers skip).
+    */
+  private def writePartition(df: DataFrame, sinkPath: String, b: IndexMaintenance.Batch): Unit = {
+    val owner = IndexMaintenance.claimOwner(df.sparkSession, s"$sinkPath/_query", b.query)
+    if (owner != b.query)
+      throw new IllegalStateException(
+        s"sink $sinkPath belongs to streaming query $owner, not ${b.query}: a stream " +
+          "from a new checkpoint would overwrite its batch partitions; give it a sink of its own")
+    df.write.mode("overwrite").parquet(partition(sinkPath, b.id))
+  }
+
   /** Whether the doors (banned content, needles) emptied the batch. An
     * emptied batch still overwrites its own sink partition: a replay whose
     * content was banned between the original sink write and the
@@ -72,10 +100,9 @@ private[streaming] object Drain {
     * checkpoint), so it writes nothing.
     */
   def emptied(arrived: DataFrame, admitted: DataFrame, sinkPath: String,
-      id: Long): Boolean = {
+      b: IndexMaintenance.Batch): Boolean = {
     val empty = admitted.isEmpty
-    if (empty && !arrived.isEmpty)
-      arrived.limit(0).write.mode("overwrite").parquet(partition(sinkPath, id))
+    if (empty && !arrived.isEmpty) writePartition(arrived.limit(0), sinkPath, b)
     empty
   }
 
@@ -89,10 +116,10 @@ private[streaming] object Drain {
     * 5× the tiny read); the read-back pins the batch's schema so it skips
     * footer inference.
     */
-  def publish(admitted: DataFrame, sinkPath: String, id: Long)(
+  def publish(admitted: DataFrame, sinkPath: String, b: IndexMaintenance.Batch)(
       keepList: => DataFrame): DataFrame = {
-    Staging.scoped(keepList.write.mode("overwrite").parquet(partition(sinkPath, id)))
-    admitted.sparkSession.read.schema(admitted.schema).parquet(partition(sinkPath, id))
+    Staging.scoped(writePartition(keepList, sinkPath, b))
+    admitted.sparkSession.read.schema(admitted.schema).parquet(partition(sinkPath, b.id))
   }
 
   /** Append the batch's survivors to every (root, append) pair under the

@@ -113,7 +113,8 @@ object EmbeddingIngest {
     require(numPlanes >= 1 && numPlanes <= 62,
       s"bootstrap needs an explicit banding width in [1, 62], got $numPlanes")
     ivfPath.foreach(p => IvfIndex.readParams(spark0, p)) // pre-built, loudly
-    Drain.run(spark0, srcDir, sinkPath, checkpointPath, shufflePartitions)(
+    Drain.run(spark0, srcDir, sinkPath, checkpointPath, shufflePartitions,
+      Seq(indexPath) ++ ivfPath)(
       ingestBatch(_, _, indexPath, sinkPath, idCol, vecCol, dim, threshold,
         numPlanes, numTables, ivfPath, autoCompact))
   }
@@ -135,7 +136,7 @@ object EmbeddingIngest {
     // the banned-vector door first: retracted-and-banned content drops
     // before dedup, the sink, and every index — identity when no ban
     val admitted = filterBanned(batch, vecCol, snap)
-    if (Drain.emptied(batch, admitted, sinkPath, b.id)) return
+    if (Drain.emptied(batch, admitted, sinkPath, b)) return
     val spark = admitted.sparkSession
     // the batch projects ONCE: the staged (id, vec) + full-width
     // signature frames feed the pair search AND the survivor append
@@ -150,7 +151,7 @@ object EmbeddingIngest {
     // exact-cosine-verified pairs of the batch vs the index and within
     // the batch; the greedy keep-list derivation is SHARED with the
     // document ingest (it only consumes (id_a, id_b) pairs)
-    val kept = Drain.publish(admitted, sinkPath, b.id) {
+    val kept = Drain.publish(admitted, sinkPath, b) {
       val pairs = IncrementalAnn.newBatchPairsFromSigs(d, sigsFull,
         snap, p, threshold).stagePersist()
       IncrementalDedup.keepListFromPairs(admitted, idCol, pairs)

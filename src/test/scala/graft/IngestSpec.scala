@@ -627,6 +627,35 @@ class IngestSpec extends AnyFunSuite with StagingScope {
     } finally rmTree(root)
   }
 
+  test("a sink belongs to one streaming query: a stream from a fresh checkpoint is refused") {
+    val root = scratch("sinkowner")
+    try {
+      val now = System.currentTimeMillis()
+      val src1 = s"$root/src1"; new java.io.File(src1).mkdirs()
+      writeDocFile(src1, f1, "f1.parquet", now)
+      val first = CorpusIngest.runIngestAvailableNow(spark, src1,
+        s"$root/idx", s"$root/sink", s"$root/ckpt", jaccardThreshold = tau, params = params)
+      assert(keptIds(first) == Set(1L, 2L, 4L))
+      // a new stream (the checkpoint deleted) pointed at the same sink:
+      // its batch 0 would overwrite the first stream's batch=0 partition
+      rmTree(s"$root/ckpt")
+      val src2 = s"$root/src2"; new java.io.File(src2).mkdirs()
+      writeDocFile(src2, Seq(7L -> fresh(7)), "f2.parquet", now)
+      val e = intercept[Exception](CorpusIngest.runIngestAvailableNow(spark, src2,
+        s"$root/idx", s"$root/sink", s"$root/ckpt", jaccardThreshold = tau, params = params))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => Option(c.getMessage).exists(_.contains("belongs to streaming query"))),
+        s"expected the sink's owner check, got $e")
+      val sink = keptIds(CorpusIngest.survivors(spark, s"$root/sink",
+        spark.read.parquet(src1).schema))
+      val idx = IndexMaintenance.snapshot(spark, s"$root/idx")
+      val indexed = Seq("bands", "shingles").map(idx.live(_, "id").select("id"))
+        .reduce(_ union _).distinct().collect().map(_.getLong(0)).toSet
+      assert(sink == Set(1L, 2L, 4L), s"the first stream's survivors must stay published: $sink")
+      assert(sink == indexed, s"the sink must equal the dedup index's live ids: $sink vs $indexed")
+    } finally rmTree(root)
+  }
+
   test("same-JVM index rebuild with different params is observed by later batches") {
     import spark.implicits._
     val root = scratch("rebuild")

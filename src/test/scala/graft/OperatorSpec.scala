@@ -237,6 +237,20 @@ class OperatorSpec extends AnyFunSuite with StagingScope {
     assert(offenders.isEmpty, s"persist or release outside Staging in: $offenders")
   }
 
+  test("one way to set codegen: src/main names the codegen confs only in Execution") {
+    import scala.jdk.CollectionConverters._
+    // the execution-mode rule is the one place a plan's mode is chosen
+    val confs = "spark\\.sql\\.codegen\\.(factoryMode|wholeStage)".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+    val offenders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Execution.scala")
+      .flatMap(p => confs.findFirstIn(java.nio.file.Files.readString(p))
+        .map(m => s"${p.getFileName}: $m"))
+      .toList.sorted
+    finally walk.close()
+    assert(offenders.isEmpty, s"a codegen conf outside Execution: $offenders")
+  }
+
   test("one index layout: only IndexMaintenance builds paths under an index root") {
     import scala.jdk.CollectionConverters._
     // the retired crash protocols, and any path a module builds itself

@@ -528,4 +528,111 @@ class PlanSpec extends AnyFunSuite with StagingScope {
     assert(shuffles.forall(l => !l.contains("vec")),
       s"vectors ride a shuffle:\n${shuffles.mkString("\n")}")
   }
+
+  // ---- the execution-mode rule (graft.Execution): plans under the input-size
+  // bound run on the session's interpreted twin, plans at or past it on the
+  // session itself, compiled; both modes answer alike
+
+  private def interpretedConf(s: SparkSession): Boolean =
+    s.conf.get("spark.sql.codegen.wholeStage") == "false" &&
+      s.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
+
+  test("the decision: under the bound runs interpreted, at or past it compiled") {
+    val b = Execution.InterpretBelowBytes
+    assert(Execution.interprets(b - 1) && !Execution.interprets(b))
+    val twin = Execution.sessionFor(spark, b - 1)
+    assert((twin ne spark) && interpretedConf(twin))
+    assert(Execution.sessionFor(spark, b) eq spark)
+    assert(!interpretedConf(spark), "the base session keeps Spark's compiled path")
+    assert(Execution.interpreted(twin) eq twin, "the twin of a twin is itself")
+    assert(Execution.interpreted(spark) eq twin, "one twin per session")
+    // the same plan, on each side of the rule
+    val q = (s: SparkSession) => s.read.parquet(s"$dir/orders.parquet")
+      .filter("o_totalprice > 200000").groupBy("o_orderstatus").count()
+    assert(!WholeStage(q(twin)), "the interpreted plan compiled")
+    assert(WholeStage(q(Execution.sessionFor(spark, b))), "the compiled plan has no codegen")
+    assert(q(twin).collect().toSet == q(spark).collect().toSet)
+  }
+
+  test("the twin follows the base session's runtime conf") {
+    val key = "spark.sql.files.maxRecordsPerFile"
+    try {
+      spark.conf.set(key, "12345")
+      assert(Execution.interpreted(spark).conf.get(key) == "12345")
+      spark.conf.unset(key)
+      assert(Execution.interpreted(spark).conf.get(key) == spark.conf.get(key))
+    } finally spark.conf.unset(key)
+  }
+
+  test("Planner: tables under the bound plan interpreted, tables past it compiled") {
+    val g = Graft(spark, dir)
+    // the bound between region (a few hundred bytes) and lineitem (~1 MB)
+    Execution.bound.withValue(64L << 10) {
+      val small = g.query("/region{r_regionkey, r_name}")
+      assert(interpretedConf(small.sparkSession))
+      assert(!WholeStage(small))
+      val large = g.query("/lineitem?l_orderkey<200{l_orderkey, order.o_orderpriority}")
+      assert(large.sparkSession eq spark, "past the bound the query re-binds on the session")
+      assert(WholeStage(large), "past the bound, no WholeStageCodegen")
+    }
+  }
+
+  test("topKFromIndex reads a small index on the interpreted twin") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_mode_post").toString
+    try {
+      val docs = Seq(1L -> "alpha beta", 2L -> "beta gamma", 3L -> "gamma delta")
+        .toDF("doc_id", "text")
+      graft.operators.Retrieval.buildPostingsIndex(docs, "doc_id", "text", root)
+      val small = graft.operators.Retrieval.topKFromIndex(spark, root, Seq("beta"), 2)
+      assert(interpretedConf(small.sparkSession))
+      val large = Execution.bound.withValue(0L) {
+        graft.operators.Retrieval.topKFromIndex(spark, root, Seq("beta"), 2)
+      }
+      assert(large.sparkSession eq spark)
+      assert(small.collect().toSeq == large.collect().toSeq)
+    } finally graft.queries.SessionScratch.rmTree(root)
+  }
+
+  // the benchmark's 16 HTSQL templates (perfbench/workloads.py), one
+  // literal draw each, chosen for the sf0.01 fixtures
+  private val templates = Seq(
+    "/orders?o_totalprice>300000{o_orderkey, o_custkey, o_totalprice}.sort(o_orderkey)",
+    "/customer?c_nationkey=7{c_custkey, c_name, r_name := nation.region.r_name}.sort(c_custkey)",
+    "/nation?n_regionkey=2{n_nationkey, n_name, n_cust := count(customer)}.sort(n_nationkey)",
+    "/customer?c_nationkey=7{c_custkey, n_big := count(orders?o_totalprice>300000)}.sort(c_custkey)",
+    "/region?r_regionkey>=1{r_regionkey, n_cust := count(nation.customer), " +
+      "avg_bal := avg(nation.customer.c_acctbal)}.sort(r_regionkey)",
+    "/(orders?o_orderstatus='F'^o_orderpriority){o_orderpriority, n_orders := count(^), " +
+      "sum_price := sum(^.o_totalprice)}.sort(o_orderpriority)",
+    "/{n_regions := count(region), n_big := count(orders?o_totalprice>300000), " +
+      "total := sum(orders.o_totalprice)}",
+    "/customer?c_nationkey=7&exists(orders?o_totalprice>300000){c_custkey, c_name}.sort(c_custkey)",
+    "/customer?c_nationkey=7&!exists(events){c_custkey, c_name}.sort(c_custkey)",
+    "/orders.define(net := o_totalprice*0.95)?net>285000{o_orderkey, net}.sort(o_orderkey)",
+    "/customer?c_nationkey=7{c_custkey, n_big := given(count(orders?o_totalprice>$cap), " +
+      "cap := 300000)}.sort(c_custkey)",
+    "/region{r_regionkey, r_name, n_here := count(nation), n_all := count(@nation), " +
+      "n_big_orders := count(@orders?o_totalprice>300000)}.sort(r_regionkey)",
+    "/customer{c_custkey, seg := c_mktsegment}?c_acctbal>3000&nation.region.r_name='ASIA'" +
+      ".sort(c_custkey)",
+    "/part?p_size=20{p_partkey, p_name, p_retailprice}.sort(p_retailprice-, p_partkey).limit(10)",
+    "/lineitem?l_orderkey<200{l_orderkey, l_linenumber, l_quantity, " +
+      "prio := order.o_orderpriority}.sort(l_orderkey, l_linenumber)",
+    "/orders?o_custkey=370{o_orderkey, n_lines := count(lineitem), " +
+      "qty := sum(lineitem.l_quantity)}.sort(o_orderkey)")
+
+  test("the benchmark's HTSQL templates answer identically in both modes") {
+    val g = Graft(spark, dir)
+    assert(templates.size == 16)
+    templates.foreach { text =>
+      val interpreted = g.query(text)
+      val compiled = Execution.bound.withValue(0L)(g.query(text))
+      assert(interpretedConf(interpreted.sparkSession), s"not interpreted: $text")
+      assert(compiled.sparkSession eq spark, s"not compiled: $text")
+      val (i, c) = (interpreted.collect().toSeq, compiled.collect().toSeq)
+      assert(i.nonEmpty, s"an empty answer proves nothing: $text")
+      assert(i == c, s"modes differ on $text")
+    }
+  }
 }
